@@ -42,8 +42,9 @@ def spread(
         # parallelism at all.  Measured r12 at derived sf10: firing on
         # a 3-partition scan made cube_status_priority 3.2 → 4.2 s
         # (the 15M-row exchange cost more than 3→32-way parallelism
-        # recovered), while the 1-partition sf0.1 case wins 2×.
-        if n > 1:
+        # recovered), while the 1-partition sf0.1 case wins 2×.  With
+        # one task slot there is no parallelism to recover either.
+        if n > 1 or target <= n:
             return df
     elif n >= target:
         return df

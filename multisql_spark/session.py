@@ -14,10 +14,13 @@ the reference's ``execute_parsed`` does (``src/executor/execute.rs:55-177``):
 - ``EXPLAIN`` metadata introspection (``src/executor/other/explain.rs``)
 - ``EXECUTE FILE('x.sql')`` scripts (``src/executor/procedure.rs``)
 
-Managed tables are DataFrames re-pointed on each write (INSERT = union,
-UPDATE = when/otherwise projection, DELETE = filter) — the Spark-idiomatic
-equivalent of the reference's storage mutation; persistent databases attach
-parquet/CSV directories through :mod:`multisql_spark.sources`.
+Managed tables are materialized on commit, as the reference's storages
+rewrite a table on write: every INSERT, UPDATE, DELETE, MERGE and TRUNCATE
+computes the new version (INSERT = union with the validated batch, UPDATE =
+when/otherwise projection, DELETE = filter) and stores it as one checkpoint,
+so a read scans a single stored leaf instead of replaying the table's DML
+history.  Persistent databases attach parquet/CSV directories through
+:mod:`multisql_spark.sources`; their writes go back to the file instead.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -113,17 +117,37 @@ class TableState:
     # whole-file rewrite (src/databases/csv/mutable.rs)
     persist_path: str | None = None
     persist_kind: str | None = None  # parquet | csv | json
-    # mutations since the last lineage truncation; each INSERT/UPDATE/
-    # DELETE stacks a plan node onto df, so every N mutations the plan is
-    # cut with localCheckpoint (reference tables rewrite storage per
-    # mutation — our equivalent cost, paid only every Nth statement)
-    mutations: int = 0
+    # a managed table's df is its committed version: the checkpoint that
+    # _materialize stored at the end of the last write statement (ALTER
+    # TABLE may add a projection until the next write); a write replaces
+    # it, never stacks onto it
 
     def column(self, name: str) -> ColumnDef | None:
         for c in self.columns:
             if c.name.lower() == name.lower():
                 return c
         return None
+
+
+def _materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` once and store it as the single leaf of a new plan,
+    serialized (the JVM's deserialized default holds more heap per row).
+
+    Constraint propagation is off while the checkpoint is made: Spark
+    4.1's ``LogicalRDD`` keeps the constraints of the plan it was made
+    from; across chained checkpoints these name attributes the plan no
+    longer outputs, and a later Union over the table fails in
+    ``rewriteConstraints`` with ``NoSuchElementException``."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.constraintPropagation.enabled"
+    prev = conf.get(key)
+    conf.set(key, "false")
+    try:
+        return df.localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+    finally:
+        conf.set(key, prev)
 
 
 def assign_dense_ids(
@@ -135,38 +159,28 @@ def assign_dense_ids(
     The reference reserves contiguous id blocks transactionally
     (sled/auto_increment.rs:12-55); the Spark equivalent: count rows per
     partition (one tiny aggregate, ≤#partitions rows to the driver),
-    cumulate per-partition starting offsets, then assign partition-LOCAL
-    row_numbers plus the broadcast offset.  Ids come out identical to a
-    global ``row_number() OVER (ORDER BY monotonically_increasing_id())``
-    — mono ids order by (partition, local position) — but no
-    single-reducer Window exists anywhere in the plan; every data-scale
-    operation is partition-parallel.  Same trick as scale-safe NTILE
-    (queries/core.py:911).
+    cumulate per-partition starting offsets, then give each row its
+    partition's offset plus its position within the partition.  Ids come
+    out identical to a global ``row_number() OVER (ORDER BY
+    monotonically_increasing_id())`` — mono ids order by (partition,
+    local position) — but the fill is a single narrow projection: no
+    window, no shuffle, no join.
 
-    The input is locally checkpointed first so the partition layout is
-    pinned between the count job and the fill job (a re-planned source
-    could otherwise repartition between the two)."""
-    spark = df.sparkSession
-    from pyspark.sql import Window as W
-
-    need = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
-    counts = (
-        need.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c")).collect()
-    )
-    offs, acc = [], start
+    Precondition: ``df`` is materialized — a checkpoint, or a narrow
+    deterministic plan over one — so the count job and the fill see the
+    same partitions holding the same rows in the same order."""
+    pid = F.spark_partition_id()
+    counts = df.groupBy(pid.alias("__pid")).count().collect()
+    offsets, acc = [], start
     for r in sorted(counts, key=lambda x: x["__pid"]):
-        offs.append((int(r["__pid"]), acc))
-        acc += int(r["__c"])
-    off_df = spark.createDataFrame(offs, "__pid int, __off bigint")
-    w_local = W.partitionBy("__pid").orderBy(F.monotonically_increasing_id())
-    return (
-        need.withColumn("__rn", F.row_number().over(w_local))
-        .join(F.broadcast(off_df), "__pid")
-        .withColumn(col, (F.col("__rn") + F.col("__off")).cast(dtype))
-        .drop("__pid", "__rn", "__off")
+        offsets += [F.lit(r["__pid"]), F.lit(acc).cast("bigint")]
+        acc += r["count"]
+    # mono id = (partition index << 33) + position within the partition
+    local_pos = F.monotonically_increasing_id() - F.shiftleft(
+        pid.cast("bigint"), 33
     )
+    offset = F.create_map(*offsets)[pid]
+    return df.withColumn(col, (offset + local_pos + 1).cast(dtype))
 
 
 def _spark_type(t: str) -> T.DataType:
@@ -533,6 +547,14 @@ class MultiSQLSession:
         if state.persist_path:
             self._flush(state)
 
+    def _commit(self, state: TableState, df: DataFrame) -> None:
+        """Make ``df`` the table's new version: stored by
+        :func:`_materialize`, or for an attached table written back by
+        :meth:`_flush`.  ``state.df`` changes only once the version
+        exists, so a statement failing mid-way leaves the table as is."""
+        state.df = df if state.persist_path else _materialize(df)
+        self._register(state)
+
     def _flush(self, state: TableState) -> None:
         """Write an attached table's current rows back to its file, then
         re-read so the registered view points at the new contents.
@@ -625,7 +647,7 @@ class MultiSQLSession:
         head = re.match(r"\s*([A-Za-z_]+)", stmt)
         kw = head.group(1).upper() if head else ""
         if kw in ("SELECT", "WITH", "VALUES") or stmt.strip().startswith("("):
-            return self._select_with_aqe_fallback(stmt)
+            return Payload.select(self.sql(stmt))
         if kw == "CREATE":
             return self._create(stmt)
         if kw == "INSERT":
@@ -657,26 +679,6 @@ class MultiSQLSession:
         if kw == "REFRESH":
             return self._refresh_matview(stmt)
         raise UnsupportedError(f"unsupported statement: {stmt[:60]}")
-
-    def _select_with_aqe_fallback(self, stmt: str) -> Payload:
-        """Collect a SELECT, working around a Spark 4.1 planner fault: a
-        correlated scalar subquery whose outer plan contains a Union (the
-        shape managed tables take after INSERTs) fails with an internal
-        ``NoSuchElementException: key not found``. Checkpointing each
-        managed table collapses its plan to a single scan node, which the
-        subquery planner handles; results are unaffected (the same rows,
-        one lineage cut the engine already performs every Nth mutation)."""
-        try:
-            return Payload.select(self.sql(stmt))
-        except Exception as exc:
-            if "key not found" not in str(exc):
-                raise
-            for state in self.tables.values():
-                if state.persist_path is not None:
-                    continue  # attached tables are file scans, never Unions
-                state.df = state.df.localCheckpoint(eager=True)
-                state.df.createOrReplaceTempView(state.name)
-            return Payload.select(self.sql(stmt))
 
     # -- CREATE -------------------------------------------------------------
 
@@ -737,16 +739,13 @@ class MultiSQLSession:
                 ColumnDef(f.name, f.dataType.simpleString())
                 for f in df.schema.fields
             ]
-            self._register(
-                TableState(
-                    name, columns, df,
-                    persist_path=persist_path, persist_kind=persist_kind,
-                )
+            state = TableState(
+                name, columns, df,
+                persist_path=persist_path, persist_kind=persist_kind,
             )
+            self._commit(state, df)
             if persist_path:
-                attach_to[0].tables[attach_to[1]] = (
-                    self.tables[name.lower()].df
-                )
+                attach_to[0].tables[attach_to[1]] = state.df
             return Payload.success("Create")
         columns = self._parse_columns(cols_src)
         schema = T.StructType(
@@ -853,7 +852,7 @@ class MultiSQLSession:
 
     def _create_matview(self, stmt: str) -> Payload:
         """CREATE MATERIALIZED VIEW (beyond reference): the defining query
-        is evaluated ONCE and pinned (localCheckpoint), so readers scan the
+        is evaluated ONCE and pinned (_materialize), so readers scan the
         materialized result instead of re-running the plan — the batch
         face of a continuous aggregate (`stream_rollup_sink` is the
         streaming face).  `REFRESH MATERIALIZED VIEW` re-evaluates; reads
@@ -869,7 +868,7 @@ class MultiSQLSession:
         replace, name, query = m.groups()
         if name.lower() in self.matviews and not replace:
             raise AlreadyExistsError(f"materialized view exists: {name}")
-        df = self.sql(query).localCheckpoint(eager=True)
+        df = _materialize(self.sql(query))
         df.createOrReplaceTempView(name)
         self.matviews[name.lower()] = query
         return Payload.success("CreateMaterializedView")
@@ -886,7 +885,7 @@ class MultiSQLSession:
         query = self.matviews.get(name.lower())
         if query is None:
             raise TableNotFoundError(f"materialized view not found: {name}")
-        df = self.sql(query).localCheckpoint(eager=True)
+        df = _materialize(self.sql(query))
         df.createOrReplaceTempView(name)
         return Payload.success("RefreshMaterializedView")
 
@@ -1000,21 +999,11 @@ class MultiSQLSession:
         else:
             df = self.sql(src)
             df = df.toDF(*stated)
-        if overwrite:
-            # replace-contents semantics: validate the batch against an
-            # emptied table; restore the old contents if validation fails
-            # (schema, constraints, and the auto-increment counter keep —
-            # OVERWRITE replaces data, TRUNCATE is the counter reset)
-            old_df = state.df
-            state.df = state.df.limit(0)
-            try:
-                out = self._insert_df(state, df, stated)
-            except Exception:
-                state.df = old_df
-                self._register(state)
-                raise
-            return Payload.affected("Insert", out.count)
-        return self._insert_df(state, df, stated)
+        # OVERWRITE replaces the data only: schema, constraints and the
+        # auto-increment counter keep (TRUNCATE is the counter reset)
+        return self._insert_df(
+            state, df, stated, existing=state.df.limit(0) if overwrite else None
+        )
 
     def _insert_jdbc(
         self, db, tbl: str, cols_src: str | None, source: str
@@ -1087,11 +1076,21 @@ class MultiSQLSession:
         )
 
     def _insert_df(
-        self, state: TableState, incoming: DataFrame, stated: list[str]
+        self,
+        state: TableState,
+        incoming: DataFrame,
+        stated: list[str],
+        existing: DataFrame | None = None,
     ) -> Payload:
         """Validation pipeline per reference validate.rs:46-99: position
         mapping → defaults → AUTO_INCREMENT → type coercion → NOT NULL →
-        UNIQUE → append."""
+        UNIQUE → append to ``existing`` (default: the table's rows).
+
+        The aligned batch is materialized first, so the incoming rows are
+        read once: every check, the AUTO_INCREMENT fill and the commit
+        run off that copy."""
+        if existing is None:
+            existing = state.df
         # stated columns must exist (reference ValidateError::ColumnNotFound,
         # validate.rs:30-44) and carry compatible types (value/mod.rs:232-260)
         for s, field in zip(stated, incoming.schema.fields):
@@ -1111,7 +1110,7 @@ class MultiSQLSession:
             else:
                 src = F.lit(None)
             cols.append(src.cast(state.df.schema[cdef.name].dataType).alias(cdef.name))
-        aligned = incoming.select(*cols)
+        aligned = _materialize(incoming.select(*cols))
 
         # every per-batch constraint check folds into ONE aggregation job:
         # row count, per-column NULL counts (NOT NULL), per-column
@@ -1128,11 +1127,11 @@ class MultiSQLSession:
                     ).alias(f"__nn_{nm}")
                 )
             if cdef.unique:
-                checks.append(
-                    (
-                        F.count(_uq_key(cdef)) - F.count_distinct(_uq_key(cdef))
-                    ).alias(f"__uq_{nm}")
-                )
+                key = _uq_key(cdef)
+                checks += [
+                    (F.count(key) - F.count_distinct(key)).alias(f"__uq_{nm}"),
+                    F.count(key).alias(f"__uk_{nm}"),
+                ]
             if cdef.auto_increment:
                 checks.append(
                     F.coalesce(
@@ -1153,6 +1152,8 @@ class MultiSQLSession:
                     raise UniqueViolation(
                         f"UNIQUE violated for {state.name}.{cdef.name}"
                     )
+                if not stats[f"__uk_{cdef.name}"]:
+                    continue  # no keys in the batch (e.g. AUTO_INCREMENT)
                 # collision against existing rows: one semi-join count per
                 # unique column (reference validate_unique.rs
                 # scan-sort-merge)
@@ -1161,7 +1162,7 @@ class MultiSQLSession:
                         aligned.filter(F.col(cdef.name).isNotNull())
                         .select(_uq_key(cdef).alias("__k"))
                         .join(
-                            state.df.select(_uq_key(cdef).alias("__k")),
+                            existing.select(_uq_key(cdef).alias("__k")),
                             on="__k",
                             how="left_semi",
                         )
@@ -1171,7 +1172,7 @@ class MultiSQLSession:
                     dup_old = (
                         aligned.filter(F.col(cdef.name).isNotNull())
                         .join(
-                            state.df.select(cdef.name),
+                            existing.select(cdef.name),
                             on=cdef.name,
                             how="left_semi",
                         )
@@ -1182,8 +1183,10 @@ class MultiSQLSession:
                         f"UNIQUE violated for {state.name}.{cdef.name}"
                     )
 
-        # assign AUTO_INCREMENT ids only after validation passed, so a
+        # assign AUTO_INCREMENT ids only after validation passed, and
+        # advance the counters only once the commit succeeded, so a
         # rejected insert doesn't burn counter values
+        counters = {}
         for cdef in state.columns:
             if cdef.auto_increment:
                 start = state.auto_counter.get(cdef.name, 0)
@@ -1191,36 +1194,24 @@ class MultiSQLSession:
                 # counter — explicit values don't consume it (reference
                 # sled/auto_increment.rs semantics, see the corpus test:
                 # explicit 6 then auto gives 5, then 6 again)
-                need = aligned.filter(F.col(cdef.name).isNull())
-                have = aligned.filter(F.col(cdef.name).isNotNull())
                 n_fill = stats[f"__ai_{cdef.name}"]
-                if n_fill:
-                    # block-allocated dense ids — partition-local
-                    # row_number + broadcast offsets, no single-reducer
-                    # window (see assign_dense_ids)
+                dtype = state.df.schema[cdef.name].dataType.simpleString()
+                null = F.col(cdef.name).isNull()
+                # block-allocated dense ids over the materialized batch
+                # (see assign_dense_ids); a batch with no explicit ids is
+                # filled in place, as a union would add a partition
+                if n_fill and n_fill == n_in:
+                    aligned = assign_dense_ids(aligned, cdef.name, start, dtype)
+                elif n_fill:
                     filled = assign_dense_ids(
-                        need,
-                        cdef.name,
-                        start,
-                        state.df.schema[cdef.name].dataType.simpleString(),
+                        aligned.filter(null), cdef.name, start, dtype
                     )
-                    aligned = have.unionByName(filled)
-                state.auto_counter[cdef.name] = start + n_fill
+                    aligned = aligned.filter(~null).unionByName(filled)
+                counters[cdef.name] = start + n_fill
 
-        state.df = state.df.unionByName(aligned)
-        self._bound_lineage(state)
-        self._register(state)
+        self._commit(state, existing.unionByName(aligned))
+        state.auto_counter.update(counters)
         return Payload.affected("Insert", n_in)
-
-    # plan depth grows by one node per mutation; cut it every N statements
-    # so a long statement corpus doesn't accumulate an O(statements)
-    # analysis cost per subsequent query
-    _CHECKPOINT_EVERY = 32
-
-    def _bound_lineage(self, state: TableState) -> None:
-        state.mutations += 1
-        if state.mutations % self._CHECKPOINT_EVERY == 0:
-            state.df = state.df.localCheckpoint(eager=True)
 
     # -- UPDATE / DELETE / TRUNCATE ----------------------------------------
 
@@ -1330,9 +1321,7 @@ class MultiSQLSession:
                     raise UniqueViolation(
                         f"UNIQUE violated for {state.name}.{cdef.name}"
                     )
-        state.df = candidate
-        self._bound_lineage(state)
-        self._register(state)
+        self._commit(state, candidate)
         return Payload.affected("Update", n)
 
     @classmethod
@@ -1466,9 +1455,9 @@ class MultiSQLSession:
         # dotted refs (`db.t.col` -> `db__t.col`), so aliasing the target
         # the same way keeps qualified ON/SET references resolvable
         talias = talias or state.name
-        base = state.df.withColumn(
-            "__rid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
+        base = _materialize(
+            state.df.withColumn("__rid", F.monotonically_increasing_id())
+        )
         t = base.alias(talias)
         s = src_df.withColumn("__m", F.lit(1)).alias(salias)
         cond = F.expr(self._rewrite_fragment(on_src))
@@ -1557,38 +1546,46 @@ class MultiSQLSession:
                     raise UniqueViolation(
                         f"UNIQUE violated for {state.name}.{cdef.name}"
                     )
-        state.df = candidate
-        self._bound_lineage(state)
-        self._register(state)
+        if ins_clause is None:
+            self._commit(state, candidate)
+            return Payload.affected("Merge", n_matched)
 
-        n_inserted = 0
-        if ins_clause is not None:
-            mi = re.match(
-                r"(?i)INSERT\s*(?:\(([^)]*)\)\s*)?VALUES\s*\((.*)\)\s*$",
-                ins_clause.strip(),
-                re.DOTALL,
-            )
-            if not mi:
-                raise EngineError(f"cannot parse MERGE INSERT: {ins_clause[:60]}")
-            cols_src, vals_src = mi.groups()
-            stated = (
-                [c.strip().strip('`"') for c in cols_src.split(",")]
-                if cols_src
-                else [c.name for c in state.columns]
-            )
-            exprs = self._split_top_level(vals_src)
-            if len(exprs) != len(stated):
-                raise EngineError("MERGE INSERT: column/value count mismatch")
-            anti = src_df.alias(salias).join(
-                base.alias(talias), cond, "left_anti"
-            )
-            ins_df = anti.select(
-                *[
-                    F.expr(self._rewrite_fragment(e.strip())).alias(c)
-                    for c, e in zip(stated, exprs)
-                ]
-            )
-            n_inserted = self._insert_df(state, ins_df, stated).count
+        mi = re.match(
+            r"(?i)INSERT\s*(?:\(([^)]*)\)\s*)?VALUES\s*\((.*)\)\s*$",
+            ins_clause.strip(),
+            re.DOTALL,
+        )
+        if not mi:
+            raise EngineError(f"cannot parse MERGE INSERT: {ins_clause[:60]}")
+        cols_src, vals_src = mi.groups()
+        stated = (
+            [c.strip().strip('`"') for c in cols_src.split(",")]
+            if cols_src
+            else [c.name for c in state.columns]
+        )
+        exprs = self._split_top_level(vals_src)
+        if len(exprs) != len(stated):
+            raise EngineError("MERGE INSERT: column/value count mismatch")
+        anti = src_df.alias(salias).join(
+            base.alias(talias), cond, "left_anti"
+        )
+        ins_df = anti.select(
+            *[
+                F.expr(self._rewrite_fragment(e.strip())).alias(c)
+                for c, e in zip(stated, exprs)
+            ]
+        )
+        # one commit for both branches: the inserted rows are validated
+        # against, and appended to, the target with the matched branch
+        # applied, so a rejected insert leaves the table unchanged
+        matched_applied = (
+            _materialize(candidate)
+            if upd_sets is not None or matched_delete
+            else state.df
+        )
+        n_inserted = self._insert_df(
+            state, ins_df, stated, existing=matched_applied
+        ).count
         return Payload.affected("Merge", n_matched + n_inserted)
 
     def _delete(self, stmt: str) -> Payload:
@@ -1606,12 +1603,11 @@ class MultiSQLSession:
         if where:
             cond = F.expr(self._rewrite_fragment(where))
             n = state.df.filter(cond).count()
-            state.df = state.df.filter(~F.coalesce(cond, F.lit(False)))
+            kept = state.df.filter(~F.coalesce(cond, F.lit(False)))
         else:
             n = state.df.count()
-            state.df = state.df.limit(0)
-        self._bound_lineage(state)
-        self._register(state)
+            kept = state.df.limit(0)
+        self._commit(state, kept)
         return Payload.affected("Delete", n)
 
     def _truncate(self, stmt: str) -> Payload:
@@ -1619,9 +1615,8 @@ class MultiSQLSession:
             r"\s*TRUNCATE\s+(?:TABLE\s+)?([\w.]+)", stmt, re.IGNORECASE
         )
         state = self._table(m.group(1))
-        state.df = state.df.limit(0)
+        self._commit(state, state.df.limit(0))
         state.auto_counter = {}
-        self._register(state)
         return Payload.success("TruncateTable")
 
     def _drop(self, stmt: str) -> Payload:
@@ -1991,7 +1986,7 @@ class MultiSQLSession:
                 )
                 for c in meta["columns"]
             ]
-            df = df.localCheckpoint(eager=True)
+            df = _materialize(df)
             df.createOrReplaceTempView(name)
             self.tables[name] = TableState(
                 name=name,

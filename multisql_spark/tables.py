@@ -8,7 +8,11 @@ these are runtime-settable.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger("multisql_spark")
 
 TABLE_NAMES = [
     "region",
@@ -57,7 +61,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(key, value)
         except Exception:
-            pass  # conf not settable at runtime on this build — keep going
+            # not settable at runtime on this build: keep going without it
+            log.warning("could not set %s=%s", key, value, exc_info=True)
     _enable_fast_worker(spark)
     return spark
 
@@ -102,7 +107,7 @@ def _enable_fast_worker(spark: SparkSession) -> None:
         sc.environment.setdefault("OPENBLAS_NUM_THREADS", "1")
         sc.environment.setdefault("OMP_NUM_THREADS", "1")
     except Exception:
-        pass
+        log.warning("fast Python worker not enabled", exc_info=True)
 
 
 def load_tables(

@@ -1810,3 +1810,22 @@ def test_mm_jpeg_decode_ac_matches_direct_decode(spark, sf_dir):
         corners = [d[m] + acs[m] for m in range(4)]
         assert r["corner_path"] == "-".join(str(c) for c in corners)
     assert nonzero > 50  # the corpus genuinely exercises the AC path
+
+
+def test_spread_only_if_serial_needs_more_slots(spark, monkeypatch):
+    """``spread(only_if_serial=True)`` fans a single-partition input out
+    to the session's parallelism, and leaves it as it is when that
+    parallelism is one: repartitioning 1 partition to 1 is a pure
+    exchange cost."""
+    from pyspark import SparkContext
+
+    from multisql_spark.operators import spread
+
+    df = spark.range(0, 100, 1, 1)
+    assert spark.sparkContext.defaultParallelism > 1
+    fanned = spread(df, key="id", only_if_serial=True)
+    assert "Exchange" in plans.formatted_plan(fanned)
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 1)
+    )
+    assert spread(df, key="id", only_if_serial=True) is df

@@ -314,9 +314,10 @@ def test_group_by_alias_and_ordinal(glue):
 
 
 def test_correlated_scalar_subquery(glue):
-    """Correlated scalar subquery over managed (post-INSERT union-shaped)
-    tables — exercises the checkpoint fallback for the Spark 4.1 planner
-    fault (NoSuchElementException on Union outer plans)."""
+    """Correlated scalar subquery over managed tables after INSERTs.  A
+    Union-shaped outer plan used to hit a Spark 4.1 planner fault
+    (NoSuchElementException); a committed table version is one stored
+    leaf, so the query plans directly, with no fallback."""
     _fresh(glue, "csq_p")
     _fresh(glue, "csq_c")
     glue.execute("CREATE TABLE csq_p (id INTEGER, cat INTEGER)")
@@ -674,3 +675,99 @@ def test_export_includes_dunder_named_table(glue, tmp_path, sf_dir):
     glue.execute("DROP TABLE a__b")
     glue.execute(f"IMPORT DATABASE FROM '{root}'")
     assert glue.execute("SELECT * FROM a__b").rows == [(7,)]
+
+
+def test_committed_version_is_one_leaf(glue):
+    """Every write commits a materialized version: after 40 mixed
+    single-row INSERT / UPDATE / DELETE statements the table's plan is a
+    single stored leaf, not a stack of 40 DML nodes, and its rows equal a
+    plain-Python model of the same statements."""
+    _fresh(glue, "flat")
+    glue.execute(
+        "CREATE TABLE flat (id INTEGER AUTO_INCREMENT, v INTEGER NULL)"
+    )
+    model: dict[int, int] = {}
+    next_id = 1
+    for i in range(40):
+        if i % 4 == 3 and model:
+            victim = min(model)
+            glue.execute(f"DELETE FROM flat WHERE id = {victim}")
+            del model[victim]
+        elif i % 4 == 2 and model:
+            target = max(model)
+            glue.execute(f"UPDATE flat SET v = v + 100 WHERE id = {target}")
+            model[target] += 100
+        else:
+            glue.execute(f"INSERT INTO flat (v) VALUES ({i})")
+            model[next_id] = i
+            next_id += 1
+        plan = glue.tables["flat"].df._jdf.queryExecution().analyzed()
+        assert plan.collectLeaves().length() == 1, i
+    got = sorted(glue.execute("SELECT id, v FROM flat").rows)
+    assert got == sorted(model.items())
+
+
+def test_rejected_statements_leave_table_unchanged(glue):
+    """A statement that fails validation changes nothing: the rows, the
+    AUTO_INCREMENT counter and the committed version (the same DataFrame
+    object) are all as they were before it."""
+    from multisql_spark.session import NotNullViolation, UniqueViolation
+
+    _fresh(glue, "atom")
+    _fresh(glue, "atom_src")
+    glue.execute(
+        "CREATE TABLE atom (id INTEGER AUTO_INCREMENT, k INTEGER UNIQUE,"
+        " v TEXT)"
+    )
+    glue.execute("INSERT INTO atom (k, v) VALUES (1, 'a'), (2, 'b')")
+    glue.execute("CREATE TABLE atom_src (k INTEGER, v TEXT)")
+    glue.execute("INSERT INTO atom_src VALUES (1, 'x'), (1, 'y'), (7, 'z')")
+    state = glue.tables["atom"]
+    before = (sorted(glue.execute("SELECT * FROM atom").rows),
+              dict(state.auto_counter), state.df)
+    rejected = [
+        (UniqueViolation, "INSERT INTO atom (k, v) VALUES (3, 'c'), (1, 'd')"),
+        (NotNullViolation, "INSERT INTO atom (k, v) VALUES (3, NULL)"),
+        (UniqueViolation, "UPDATE atom SET k = 1"),
+        (EngineError,
+         "MERGE INTO atom USING atom_src ON atom.k = atom_src.k"
+         " WHEN MATCHED THEN UPDATE SET v = atom_src.v"
+         " WHEN NOT MATCHED THEN INSERT (k, v) VALUES (atom_src.k, 'n')"),
+        # the matched branch alone is valid; the inserted row collides
+        (UniqueViolation,
+         "MERGE INTO atom USING (SELECT 1 AS k, 1 AS nk"
+         " UNION ALL SELECT 5, 2) AS s ON atom.k = s.k"
+         " WHEN MATCHED THEN UPDATE SET v = 'm'"
+         " WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.nk, 'n')"),
+    ]
+    for exc, sql in rejected:
+        with pytest.raises(exc):
+            glue.execute(sql)
+        after = (sorted(glue.execute("SELECT * FROM atom").rows),
+                 dict(state.auto_counter), state.df)
+        assert after[:2] == before[:2], sql
+        assert after[2] is before[2], sql
+
+
+def test_tune_session_reports_what_it_cannot_set(caplog, monkeypatch):
+    """A conf the session refuses and a failed fast-worker set-up are
+    logged on the ``multisql_spark`` logger, not dropped."""
+    from multisql_spark.tables import tune_session
+
+    class LockedConf:
+        def set(self, key, value):
+            raise RuntimeError(f"cannot set {key}")
+
+    class LockedSession:
+        conf = LockedConf()
+
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no context")
+
+    monkeypatch.delenv("SPARK_GRAFT_FAST_WORKER", raising=False)
+    with caplog.at_level("WARNING", logger="multisql_spark"):
+        tune_session(LockedSession())
+    messages = [r.getMessage() for r in caplog.records]
+    assert any("spark.sql.session.timeZone" in m for m in messages)
+    assert any("fast Python worker" in m for m in messages)

@@ -10,7 +10,9 @@ tools/time_noop.py, over the whole registry.
 
 from __future__ import annotations
 
+import argparse
 import os
+import statistics
 import sys
 import time
 
@@ -20,12 +22,12 @@ import bench  # noqa: E402
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    n = 2
-    for a in sys.argv[1:]:
-        if a.startswith("--n="):
-            n = int(a.split("=")[1])
-    sf_dir, out = args[0], args[1]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[1])
+    ap.add_argument("sf_dir")
+    ap.add_argument("out")
+    ap.add_argument("--n", type=int, default=2)
+    args = ap.parse_args()
+    sf_dir, out, n = args.sf_dir, args.out, args.n
     os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
     bench.SF_DIR = sf_dir
     spark = bench.build_session()
@@ -47,11 +49,10 @@ def main() -> None:
                 err = str(e).splitlines()[0][:120]
                 break
         if times:
-            times.sort()
-            rows.append((times[0], times[len(times) // 2], name, err))
+            rows.append((min(times), statistics.median(times), name, err))
         else:
             rows.append((float("inf"), float("inf"), name, err))
-        print(f"{name}\t{times[0] if times else 'ERR'}", flush=True)
+        print(f"{name}\t{min(times) if times else 'ERR'}", flush=True)
     rows.sort(reverse=True)
     with open(out, "w") as f:
         f.write("name\tmin_s\tmed_s\terr\n")

@@ -8,7 +8,9 @@ per query — the engine-side cost, no driver materialization.
 
 from __future__ import annotations
 
+import argparse
 import os
+import statistics
 import sys
 import time
 
@@ -18,12 +20,12 @@ import bench  # noqa: E402
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    n = 5
-    for a in sys.argv[1:]:
-        if a.startswith("--n="):
-            n = int(a.split("=")[1])
-    sf_dir, names = args[0], args[1:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[1])
+    ap.add_argument("sf_dir")
+    ap.add_argument("names", nargs="+")
+    ap.add_argument("--n", type=int, default=5)
+    args = ap.parse_args()
+    sf_dir, names, n = args.sf_dir, args.names, args.n
     os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
     bench.SF_DIR = sf_dir
     spark = bench.build_session()
@@ -41,10 +43,9 @@ def main() -> None:
             t0 = time.perf_counter()
             df._jdf.queryExecution().toRdd().count()
             times.append(time.perf_counter() - t0)
-        times.sort()
         print(
-            f"{name}: min={times[0]:.3f}s "
-            f"med={times[len(times) // 2]:.3f}s (n={n})"
+            f"{name}: min={min(times):.3f}s "
+            f"med={statistics.median(times):.3f}s (n={n})"
         )
     spark.stop()
 
