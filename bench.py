@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+Without SPARK_GRAFT_CPUS it uses every usable core (the session comes
+from ``multisql_spark.tables.local_session``).
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -25,7 +27,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
 def _parse_sf(d: str) -> float:
     import re as _re
 
@@ -37,50 +40,21 @@ SF = _parse_sf(SF_DIR)
 
 
 def build_session() -> SparkSession:
-    import tempfile
+    from multisql_spark.tables import local_session
 
-    scratch = tempfile.mkdtemp(prefix="multisql_spark_bench_")
-    b = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("multisql_spark_bench")
-        .config("spark.sql.warehouse.dir", f"{scratch}/spark-warehouse")
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Dderby.system.home={scratch}",
-        )
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # fast Python-worker entry (drops ~140 ms of fixed per-task worker
-        # bookkeeping; see pyspark_graft_worker.py + OPTIMIZATION_r11.md)
-        .config("spark.python.worker.module", "pyspark_graft_worker")
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.path.dirname(os.path.abspath(__file__)),
-        )
-        # one BLAS thread per python worker — 32 workers already cover
-        # the cores; per-worker OpenBLAS pools only thrash
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-    )
     # SPARK_GRAFT_PROFILE=cluster replays the 1000-executor profile's
     # query-planning confs (AQE skew thresholds, 64 MB broadcast ceiling,
     # 256 MB splits) in this local session — validates that the generated
     # cluster posture serves the same plans (tools/cluster_profile.py)
+    profile = {}
     if os.environ.get("SPARK_GRAFT_PROFILE") == "cluster":
         sys.path.insert(
             0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
         )
         from cluster_profile import local_shape_profile
 
-        for k, v in local_shape_profile().items():
-            b = b.config(k, v)
-    return b.getOrCreate()
+        profile = local_shape_profile()
+    return local_session("multisql_spark_bench", **profile)
 
 
 def build_cases(spark: SparkSession) -> dict:
@@ -232,7 +206,6 @@ def bench_queries(spark: SparkSession):
 
 def main() -> None:
     spark = build_session()
-    spark.sparkContext.setLogLevel("ERROR")
     timings, timings_noop = bench_queries(spark)
     total = round(sum(timings.values()), 4)
     collect_only = os.environ.get("SPARK_GRAFT_BENCH_COLLECT_ONLY") == "1"

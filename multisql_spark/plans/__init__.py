@@ -83,10 +83,9 @@ def scale_antipatterns(plan: str) -> list[str]:
     (the TakeOrdered-like global top-k shape).  A single-partition
     exchange feeding a final bounded aggregate is likewise legitimate.
 
-    Shared by ``tools/audit_plans.py`` (full-registry CLI sweep) and
-    ``tests/test_plan_audit.py`` (the in-suite regression gate); see
-    ``audit_query`` for the per-query allowlist of windows over
-    cardinality-bounded aggregates."""
+    Used by ``tests/test_plan_audit.py`` (the whole-registry regression
+    gate); see ``audit_query`` for the per-query allowlist of windows
+    over cardinality-bounded aggregates."""
     problems: list[str] = []
     if "CartesianProduct" in plan:
         problems.append("CARTESIAN")

@@ -131,7 +131,7 @@ def events_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (last + gap) touches the next event INCLUSIVELY, so an 1800 s
     gap merges — identical to the old strict ``gap > 1800`` split
     (verified on synthetic 1799/1800/1801 gaps and by the oracle at
-    all three SFs; tools/ab_sessionize.py keeps the A/B harness).
+    all three SFs).
     The gap is measured on the same floored unix seconds as before."""
     t = load_tables(spark, sf_dir, ["events"])
     ts = F.unix_timestamp("ts").cast("long")

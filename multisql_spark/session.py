@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from multisql_spark import dialect
 from multisql_spark.payload import Payload
+from multisql_spark.tables import local_session
 
 
 class EngineError(Exception):
@@ -319,14 +320,7 @@ class MultiSQLSession:
 
     def __init__(self, spark: SparkSession | None = None):
         if spark is None:
-            spark = (
-                SparkSession.builder.master("local[*]")
-                .appName("multisql_spark")
-                .config("spark.sql.shuffle.partitions", "32")
-                .config("spark.sql.adaptive.enabled", "true")
-                .config("spark.sql.session.timeZone", "UTC")
-                .getOrCreate()
-            )
+            spark = local_session("multisql_spark")
         self.spark = spark
         self.variables: dict[str, str] = {}
         self.tables: dict[str, TableState] = {}

@@ -1,14 +1,18 @@
-"""Test-data table loading and session tuning.
+"""Test-data table loading, session tuning and the local session factory.
 
 The driver hands us an arbitrary SparkSession; we pin the runtime confs we
 depend on (UTC session timezone so timestamp semantics line up with the
 DuckDB oracle, AQE on, sane shuffle parallelism for local mode) — all of
-these are runtime-settable.
+these are runtime-settable.  Sessions this repo starts itself (tests,
+tools, ``bench.py``, ``MultiSQLSession()``) come from :func:`local_session`,
+which adds the start-up confs and then applies the same runtime confs.
 """
 
 from __future__ import annotations
 
 import logging
+import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,6 +58,38 @@ _SESSION_CONFS = {
     # timezone LTZ carries identical values, so read them as TIMESTAMP.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
 }
+
+
+def local_cpus() -> int:
+    """Task slots of the sessions this repo starts: ``$SPARK_GRAFT_CPUS``,
+    else the cores this process may run on."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+
+
+def local_session(app: str, **confs: str) -> SparkSession:
+    """Start (or join) the local SparkSession every entry point in this
+    repo uses: ``local[local_cpus()]`` with the start-up confs below
+    (``confs`` overrides single entries), then :func:`tune_session`."""
+    # Derby home and the SQL warehouse go to scratch, so no derby.log or
+    # spark-warehouse lands in the working directory
+    scratch = tempfile.mkdtemp(prefix=f"{app}_")
+    startup = {
+        "spark.driver.memory": "8g",
+        "spark.ui.enabled": "false",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.warehouse.dir": f"{scratch}/spark-warehouse",
+        "spark.driver.extraJavaOptions": f"-Dderby.system.home={scratch}",
+    }
+    spark = (
+        SparkSession.builder.master(f"local[{local_cpus()}]")
+        .appName(app)
+        .config(map={**startup, **confs})
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return tune_session(spark)
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

@@ -23,8 +23,9 @@ boot/init timestamps and /proc socket queues; see OPTIMIZATION_r11.md):
    server idiom, applied to the task loop).
 
 Activated via ``spark.python.worker.module=pyspark_graft_worker`` plus
-this directory on the worker PYTHONPATH (both wired up in
-``multisql_spark.tables.tune_session`` / ``bench.build_session``).
+this directory on the worker PYTHONPATH (both wired up by
+``multisql_spark.tables.tune_session``, which the repo's session
+factory ``multisql_spark.tables.local_session`` calls).
 ``SPARK_GRAFT_FAST_WORKER=0`` disables the wiring.  The module name must
 keep its ``pyspark`` prefix: ``pyspark.daemon`` only accepts worker
 modules whose name starts with ``pyspark``.

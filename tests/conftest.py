@@ -1,36 +1,15 @@
 from __future__ import annotations
 
-import tempfile
-
 import pytest
-from pyspark.sql import SparkSession
+
+from multisql_spark.tables import local_session
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
 def spark():
-    # keep derby.log / spark-warehouse out of the repo root (VERDICT r7
-    # "What's wrong" #1): Derby homes and the SQL warehouse go to scratch
-    scratch = tempfile.mkdtemp(prefix="multisql_spark_tests_")
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("multisql_spark_tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.warehouse.dir", f"{scratch}/spark-warehouse")
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Dderby.system.home={scratch}",
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    yield spark
+    return local_session("multisql_spark_tests")
 
 
 @pytest.fixture(scope="session")

@@ -3,9 +3,9 @@
 Builds every registered non-streaming query's physical plan at sf0.001
 (plans only — nothing executes) and fails if any plan carries a 100 TB
 anti-pattern: a CartesianProduct, or a single-partition exchange feeding
-a Window.  A future query addition with either shape fails CI here
-rather than waiting for a judge run of ``tools/audit_plans.py`` (which
-shares the same ``plans.scale_antipatterns`` detector).
+a Window (``plans.scale_antipatterns``).  A future query addition with
+either shape fails CI here.  This is the whole-registry plan audit:
+run ``python -m pytest tests/test_plan_audit.py`` after adding operators.
 """
 
 from __future__ import annotations

@@ -771,3 +771,37 @@ def test_tune_session_reports_what_it_cannot_set(caplog, monkeypatch):
     messages = [r.getMessage() for r in caplog.records]
     assert any("spark.sql.session.timeZone" in m for m in messages)
     assert any("fast Python worker" in m for m in messages)
+
+
+def test_local_cpus_follows_env_then_affinity(monkeypatch):
+    from multisql_spark import tables
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert tables.local_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setattr(tables.os, "sched_getaffinity", lambda _: {0, 2, 5, 7})
+    assert tables.local_cpus() == 4
+
+
+def test_factory_tunes_session_without_load_tables(spark, monkeypatch):
+    """The suite's session comes from ``local_session``, and the factory
+    itself, not ``load_tables``, applies every runtime conf and the fast
+    worker: with both stripped, asking the factory again (which returns
+    the live session) restores all of them."""
+    from multisql_spark import tables
+
+    monkeypatch.delenv("SPARK_GRAFT_FAST_WORKER", raising=False)
+    assert spark.sparkContext.master == f"local[{tables.local_cpus()}]"
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == "8g"
+    jconf = spark.sparkContext._jsc.sc().conf()
+    try:
+        for key in tables._SESSION_CONFS:
+            spark.conf.unset(key)
+        jconf.remove("spark.python.worker.module")
+        assert tables.local_session("multisql_spark_tests") is spark
+        for key, value in tables._SESSION_CONFS.items():
+            assert spark.conf.get(key) == value, key
+        worker = jconf.get("spark.python.worker.module", "")
+        assert worker == "pyspark_graft_worker"
+    finally:
+        tables.tune_session(spark)

@@ -410,17 +410,11 @@ def test_swap_sigkill_mid_publish_converges(spark, tmp_path):
         """
 import os, signal, sys
 sys.path.insert(0, sys.argv[2])
-from pyspark.sql import SparkSession
 from multisql_spark.statedir import swap_state_dir
+from multisql_spark.tables import local_session
 
 state = sys.argv[1]
-spark = (
-    SparkSession.builder.master("local[2]")
-    .appName("swap_sigkill_victim")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
-)
+spark = local_session("swap_sigkill_victim")
 new_state = spark.range(100).selectExpr("id AS k", "id * 2 AS v")
 real_rename = os.rename
 def rename_then_die(src, dst):

@@ -23,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pandas as pd
 
 from multisql_spark.queries import load_all
+from multisql_spark.tables import local_session
 from multisql_spark.testing import duckdb_connection
 
 
@@ -131,28 +132,15 @@ def main() -> int:
     only = set(sys.argv[2:])
     big = {n for n in os.environ.get("DRIVER_SIM_BIG", "").split(",") if n}
 
-    from pyspark.sql import SparkSession
-
-    import tempfile
-
-    scratch = tempfile.mkdtemp(prefix="driver_sim_")
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        # memory-sink streaming results collect through task results;
-        # the 1g default killed stream_stateful_sessionize at sf1000
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("DRIVER_SIM_MAXRESULT", "8g"),
-        )
-        .config("spark.sql.warehouse.dir", f"{scratch}/spark-warehouse")
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Dderby.system.home={scratch}",
-        )
-        .appName("driver-sim")
-        .getOrCreate()
+    # memory-sink streaming results collect through task results; the 1g
+    # default maxResultSize killed stream_stateful_sessionize at sf1000
+    spark = local_session(
+        "driver-sim",
+        **{
+            "spark.driver.maxResultSize": os.environ.get(
+                "DRIVER_SIM_MAXRESULT", "8g"
+            )
+        },
     )
     con = duckdb_connection(sf_dir)
     registry = load_all()

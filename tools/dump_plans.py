@@ -94,8 +94,8 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = bench.build_session()
-    spark.sparkContext.setLogLevel("ERROR")
     cases = bench.build_cases(spark)
+    from multisql_spark.plans import formatted_plan
     from multisql_spark.queries import load_all
 
     registry = load_all()
@@ -105,9 +105,7 @@ def main() -> None:
     for name, df in cases.items():
         if only and name not in only:
             continue
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(df)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -671,18 +671,10 @@ def main() -> int:
             flush=True,
         )
 
-    from pyspark.sql import SparkSession
-
     from multisql_spark.queries import load_all
+    from multisql_spark.tables import local_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .appName("heavy-oracle")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("heavy-oracle")
     registry = load_all()
 
     report: dict[str, dict] = {}

@@ -44,20 +44,11 @@ def main() -> int:
     dst = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf1_derived"
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from multisql_spark.tables import tune_session
+    from multisql_spark.tables import local_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .appName("make-scaled-sf")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    tune_session(spark)
+    spark = local_session("make-scaled-sf")
     os.makedirs(dst, exist_ok=True)
 
     for name in SINGLE_COPY:

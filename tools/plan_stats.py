@@ -17,33 +17,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    import tempfile
-
-    from pyspark.sql import SparkSession
-
-    scratch = tempfile.mkdtemp(prefix="plan_stats_")
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("plan_stats")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir", f"{scratch}/wh")
-        .config(
-            "spark.driver.extraJavaOptions", f"-Dderby.system.home={scratch}"
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from multisql_spark.plans import formatted_plan
     from multisql_spark.queries import load_all
+    from multisql_spark.tables import local_session
+
+    spark = local_session("plan_stats")
 
     rows = []
     for name, spec in load_all().items():
         if name.startswith("stream_"):
             continue
         try:
-            df = spec.fn(spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = formatted_plan(spec.fn(spark, sf_dir))
         except Exception as exc:
             rows.append((name, -1, -1, -1, -1, -1, f"ERROR {str(exc)[:80]}"))
             continue

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Full-registry fresh-plan noop timing sweep (r12 triage aid).
+"""Fresh-plan noop timing of registered queries.
 
-Usage: python tools/registry_sweep.py <sf_dir> <out.tsv> [--n N]
-For every registered query: N fresh-plan noop runs
-(queryExecution().toRdd().count() on a freshly built DataFrame), min
-and median written as TSV sorted by min desc.  Same methodology as
-tools/time_noop.py, over the whole registry.
+Usage: python tools/registry_sweep.py <sf_dir> <out.tsv> [name ...] [--n N]
+For each named query (default: the whole registry): N fresh-plan noop
+runs (queryExecution().toRdd().count() on a freshly built DataFrame —
+the engine-side cost, no driver materialization), min and median
+printed per query and written as TSV sorted by min desc.
 """
 
 from __future__ import annotations
@@ -18,29 +18,32 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402
-
 
 def main() -> None:
+    from multisql_spark.queries import load_all
+    from multisql_spark.tables import local_session
+
+    registry = load_all()
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[1])
     ap.add_argument("sf_dir")
     ap.add_argument("out")
+    ap.add_argument("names", nargs="*", metavar="name")
     ap.add_argument("--n", type=int, default=2)
-    args = ap.parse_args()
-    sf_dir, out, n = args.sf_dir, args.out, args.n
-    os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
-    bench.SF_DIR = sf_dir
-    spark = bench.build_session()
-    spark.sparkContext.setLogLevel("ERROR")
-    from multisql_spark.queries import load_all
-
-    registry = load_all()
+    args = ap.parse_intermixed_args()
+    unknown = sorted(set(args.names) - set(registry))
+    if unknown:
+        ap.error(f"not registered: {', '.join(unknown)}")
+    sf_dir, n = args.sf_dir, args.n
+    spark = local_session("registry_sweep")
     rows = []
-    for name in sorted(registry):
+    for name in args.names or sorted(registry):
         times = []
         err = ""
         for _ in range(n):
             try:
+                # fresh DataFrame per run: re-executing the SAME df reuses
+                # its shuffle map outputs and times only the final stage —
+                # a fresh plan recomputes everything (page-cache warm)
                 df = registry[name].fn(spark, sf_dir)
                 t0 = time.perf_counter()
                 df._jdf.queryExecution().toRdd().count()
@@ -49,12 +52,13 @@ def main() -> None:
                 err = str(e).splitlines()[0][:120]
                 break
         if times:
-            rows.append((min(times), statistics.median(times), name, err))
+            mn, md = min(times), statistics.median(times)
         else:
-            rows.append((float("inf"), float("inf"), name, err))
-        print(f"{name}\t{min(times) if times else 'ERR'}", flush=True)
+            mn = md = float("inf")
+        rows.append((mn, md, name, err))
+        print(f"{name}\tmin={mn:.3f}s\tmed={md:.3f}s\t{err}", flush=True)
     rows.sort(reverse=True)
-    with open(out, "w") as f:
+    with open(args.out, "w") as f:
         f.write("name\tmin_s\tmed_s\terr\n")
         for mn, md, name, err in rows:
             f.write(f"{name}\t{mn:.3f}\t{md:.3f}\t{err}\n")
