@@ -21,16 +21,27 @@ when/otherwise projection, DELETE = filter) and stores it as one checkpoint,
 so a read scans a single stored leaf instead of replaying the table's DML
 history.  Persistent databases attach parquet/CSV directories through
 :mod:`multisql_spark.sources`; their writes go back to the file instead.
+
+A write makes one pass per version (``_commit``), as the reference
+validates and writes a row batch in one pass: every count and check that
+is a plain aggregate (affected rows, NULL counts, key counts, collisions
+with existing keys) is observed on the pass that builds the batch or the
+version (``DataFrame.observe``), not run as its own job.  DISTINCT counts
+cannot be observed, so they run only when they can fire: over a batch
+carrying more than one key, or over an UPDATE's version when it assigns
+a UNIQUE column.  The version replaces ``state.df`` (or the attached
+file) only after its checks pass.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -149,6 +160,12 @@ def _materialize(df: DataFrame) -> DataFrame:
         )
     finally:
         conf.set(key, prev)
+
+
+def _release(version: DataFrame) -> None:
+    """Free the blocks of a version :func:`_materialize` stored that no
+    table took (its checks rejected it)."""
+    version._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def assign_dense_ids(
@@ -541,13 +558,40 @@ class MultiSQLSession:
         if state.persist_path:
             self._flush(state)
 
-    def _commit(self, state: TableState, df: DataFrame) -> None:
-        """Make ``df`` the table's new version: stored by
-        :func:`_materialize`, or for an attached table written back by
-        :meth:`_flush`.  ``state.df`` changes only once the version
-        exists, so a statement failing mid-way leaves the table as is."""
-        state.df = df if state.persist_path else _materialize(df)
-        self._register(state)
+    def _commit(
+        self,
+        state: TableState,
+        df: DataFrame,
+        check: Callable[[DataFrame], None] | None = None,
+    ) -> None:
+        """Make ``df`` the table's new version in one pass over it: stored
+        by :func:`_materialize`, or for an attached table written back by
+        :meth:`_flush`.
+
+        ``check(version)`` reads what that pass observed and raises to
+        reject the statement.  With a check the version is materialized
+        first (an attached table then flushes from that copy), so the
+        check runs before ``state.df`` is swapped or the file written; a
+        rejected version is unpersisted.  Without one an attached table
+        is flushed straight from ``df``, and the caller reads the counts
+        observed on the write once this returns.  A failed write-back
+        leaves ``state.df`` and its view as they were."""
+        if check is not None or not state.persist_path:
+            version = _materialize(df)
+            if check is not None:
+                try:
+                    check(version)
+                except BaseException:
+                    _release(version)
+                    raise
+            df = version
+        prev, state.df = state.df, df
+        try:
+            self._register(state)
+        except BaseException:
+            state.df = prev
+            prev.createOrReplaceTempView(state.name)
+            raise
 
     def _flush(self, state: TableState) -> None:
         """Write an attached table's current rows back to its file, then
@@ -624,9 +668,11 @@ class MultiSQLSession:
         shutil.rmtree(tmp, ignore_errors=True)
         self.spark.catalog.refreshByPath(state.persist_path)
         if state.persist_kind == "parquet":
-            from multisql_spark.sources import _read_parquet
-
-            state.df = _read_parquet(self.spark, state.persist_path)
+            # the file holds exactly the rows and schema just written, so
+            # read it with that schema: no inference job
+            state.df = self.spark.read.schema(state.df.schema).parquet(
+                state.persist_path
+            )
         elif state.persist_kind == "csv":
             state.df = self.spark.read.csv(
                 state.persist_path, header=True, inferSchema=True
@@ -1080,9 +1126,13 @@ class MultiSQLSession:
         mapping → defaults → AUTO_INCREMENT → type coercion → NOT NULL →
         UNIQUE → append to ``existing`` (default: the table's rows).
 
-        The aligned batch is materialized first, so the incoming rows are
-        read once: every check, the AUTO_INCREMENT fill and the commit
-        run off that copy."""
+        One pass per stored copy.  The aligned batch is materialized once,
+        observing its row count, NULL counts, AUTO_INCREMENT fill counts
+        and UNIQUE key counts.  The commit pass builds the new version and
+        observes how many batch keys hit ``existing``; that check runs
+        before the swap (:meth:`_commit`).  The one DISTINCT count, for
+        duplicates within the batch, runs only for a UNIQUE column that
+        carries more than one key in the batch."""
         if existing is None:
             existing = state.df
         # stated columns must exist (reference ValidateError::ColumnNotFound,
@@ -1104,112 +1154,122 @@ class MultiSQLSession:
             else:
                 src = F.lit(None)
             cols.append(src.cast(state.df.schema[cdef.name].dataType).alias(cdef.name))
-        aligned = _materialize(incoming.select(*cols))
-
-        # every per-batch constraint check folds into ONE aggregation job:
-        # row count, per-column NULL counts (NOT NULL), per-column
-        # duplicate detection among non-NULLs (UNIQUE: count - countDistinct;
-        # NULLs never collide, reference validate_unique.rs skips them),
-        # and the AUTO_INCREMENT fill count
-        checks: list = [F.count(F.lit(1)).alias("__n")]
+        # one observed pass over the batch: row count, NULL counts (NOT
+        # NULL, and the AUTO_INCREMENT fill) and non-NULL key counts
+        # (UNIQUE; NULLs never collide, reference validate_unique.rs
+        # skips them)
+        metrics = [F.count(F.lit(1)).alias("n")]
         for cdef in state.columns:
-            nm = cdef.name
+            null = F.col(cdef.name).isNull()
             if cdef.not_null and not cdef.auto_increment:
-                checks.append(
-                    F.coalesce(
-                        F.sum(F.col(nm).isNull().cast("int")), F.lit(0)
-                    ).alias(f"__nn_{nm}")
-                )
-            if cdef.unique:
-                key = _uq_key(cdef)
-                checks += [
-                    (F.count(key) - F.count_distinct(key)).alias(f"__uq_{nm}"),
-                    F.count(key).alias(f"__uk_{nm}"),
-                ]
+                metrics.append(F.count_if(null).alias(f"nn_{cdef.name}"))
             if cdef.auto_increment:
-                checks.append(
-                    F.coalesce(
-                        F.sum(F.col(nm).isNull().cast("int")), F.lit(0)
-                    ).alias(f"__ai_{nm}")
-                )
-        stats = aligned.agg(*checks).collect()[0]
-        n_in = stats["__n"]
-        for cdef in state.columns:
-            if cdef.not_null and not cdef.auto_increment \
-                    and stats[f"__nn_{cdef.name}"]:
-                raise NotNullViolation(
-                    f"NOT NULL violated for {state.name}.{cdef.name}"
-                )
-        for cdef in state.columns:
+                metrics.append(F.count_if(null).alias(f"ai_{cdef.name}"))
             if cdef.unique:
-                if stats[f"__uq_{cdef.name}"]:
-                    raise UniqueViolation(
-                        f"UNIQUE violated for {state.name}.{cdef.name}"
+                metrics.append(F.count(_uq_key(cdef)).alias(f"uk_{cdef.name}"))
+        batch = Observation()
+        aligned = stored = _materialize(
+            incoming.select(*cols).observe(batch, *metrics)
+        )
+        try:
+            stats = batch.get
+            n_in = stats["n"]
+            for cdef in state.columns:
+                if cdef.not_null and not cdef.auto_increment \
+                        and stats[f"nn_{cdef.name}"]:
+                    raise NotNullViolation(
+                        f"NOT NULL violated for {state.name}.{cdef.name}"
                     )
-                if not stats[f"__uk_{cdef.name}"]:
-                    continue  # no keys in the batch (e.g. AUTO_INCREMENT)
-                # collision against existing rows: one semi-join count per
-                # unique column (reference validate_unique.rs
-                # scan-sort-merge)
-                if cdef.type_str == "variant":
-                    dup_old = (
-                        aligned.filter(F.col(cdef.name).isNotNull())
-                        .select(_uq_key(cdef).alias("__k"))
-                        .join(
-                            existing.select(_uq_key(cdef).alias("__k")),
-                            on="__k",
-                            how="left_semi",
+            keyed = [
+                c for c in state.columns if c.unique and stats[f"uk_{c.name}"]
+            ]
+            # duplicates within the batch: a DISTINCT count, which cannot be
+            # observed, so only where a column carries more than one key
+            multi = [c for c in keyed if stats[f"uk_{c.name}"] > 1]
+            if multi:
+                dups = aligned.agg(
+                    *[F.count(_uq_key(c)) - F.count_distinct(_uq_key(c))
+                      for c in multi]
+                ).first()
+                for cdef, dup in zip(multi, dups):
+                    if dup:
+                        raise UniqueViolation(
+                            f"UNIQUE violated for {state.name}.{cdef.name}"
                         )
-                        .count()
-                    )
-                else:
-                    dup_old = (
-                        aligned.filter(F.col(cdef.name).isNotNull())
-                        .join(
-                            existing.select(cdef.name),
-                            on=cdef.name,
-                            how="left_semi",
+
+            # collisions with existing rows, counted on the commit pass: the
+            # existing rows left-join the batch's (now distinct) keys, so each
+            # keeps its one output row, and the matches are observed.  Spark
+            # picks the join from the batch's size statistics: a small batch
+            # (VALUES) is broadcast and the existing rows keep their order; a
+            # large or unsized one (insert_vec, INSERT … SELECT over a source
+            # without statistics) is shuffle-joined, which moves the
+            # existing rows and leaves them in the join's order
+            probe, hit_counts = existing, []
+            for i, cdef in enumerate(keyed):
+                k = f"__uq_{i}"
+                keys = aligned.select(_uq_key(cdef).alias(k)).filter(
+                    F.col(k).isNotNull()
+                )
+                probe = probe.join(keys, _uq_key(cdef) == F.col(k), "left")
+                hit_counts.append(F.count(k).alias(cdef.name))
+            check = None
+            if keyed:
+                hits = Observation()
+                existing = probe.observe(hits, *hit_counts).select(
+                    *existing.columns
+                )
+
+                def check(_version: DataFrame) -> None:
+                    for col, n_hit in hits.get.items():
+                        if n_hit:
+                            raise UniqueViolation(
+                                f"UNIQUE violated for {state.name}.{col}"
+                            )
+
+            # assign AUTO_INCREMENT ids only after validation passed, and
+            # advance the counters only once the commit succeeded, so a
+            # rejected insert doesn't burn counter values
+            counters = {}
+            for cdef in state.columns:
+                if cdef.auto_increment:
+                    start = state.auto_counter.get(cdef.name, 0)
+                    # only NULL ids are filled and only they advance the
+                    # counter — explicit values don't consume it (reference
+                    # sled/auto_increment.rs semantics, see the corpus test:
+                    # explicit 6 then auto gives 5, then 6 again)
+                    n_fill = stats[f"ai_{cdef.name}"]
+                    dtype = state.df.schema[cdef.name].dataType.simpleString()
+                    null = F.col(cdef.name).isNull()
+                    # block-allocated dense ids over the materialized batch
+                    # (see assign_dense_ids); a batch with no explicit ids is
+                    # filled in place, as a union would add a partition
+                    if n_fill and n_fill == n_in:
+                        aligned = assign_dense_ids(aligned, cdef.name, start, dtype)
+                    elif n_fill:
+                        filled = assign_dense_ids(
+                            aligned.filter(null), cdef.name, start, dtype
                         )
-                        .count()
-                    )
-                if dup_old:
-                    raise UniqueViolation(
-                        f"UNIQUE violated for {state.name}.{cdef.name}"
-                    )
+                        aligned = aligned.filter(~null).unionByName(filled)
+                    counters[cdef.name] = start + n_fill
 
-        # assign AUTO_INCREMENT ids only after validation passed, and
-        # advance the counters only once the commit succeeded, so a
-        # rejected insert doesn't burn counter values
-        counters = {}
-        for cdef in state.columns:
-            if cdef.auto_increment:
-                start = state.auto_counter.get(cdef.name, 0)
-                # only NULL ids are filled and only they advance the
-                # counter — explicit values don't consume it (reference
-                # sled/auto_increment.rs semantics, see the corpus test:
-                # explicit 6 then auto gives 5, then 6 again)
-                n_fill = stats[f"__ai_{cdef.name}"]
-                dtype = state.df.schema[cdef.name].dataType.simpleString()
-                null = F.col(cdef.name).isNull()
-                # block-allocated dense ids over the materialized batch
-                # (see assign_dense_ids); a batch with no explicit ids is
-                # filled in place, as a union would add a partition
-                if n_fill and n_fill == n_in:
-                    aligned = assign_dense_ids(aligned, cdef.name, start, dtype)
-                elif n_fill:
-                    filled = assign_dense_ids(
-                        aligned.filter(null), cdef.name, start, dtype
-                    )
-                    aligned = aligned.filter(~null).unionByName(filled)
-                counters[cdef.name] = start + n_fill
-
-        self._commit(state, existing.unionByName(aligned))
-        state.auto_counter.update(counters)
-        return Payload.affected("Insert", n_in)
+            self._commit(state, existing.unionByName(aligned), check)
+            state.auto_counter.update(counters)
+            return Payload.affected("Insert", n_in)
+        finally:
+            # the version (or the file) holds the batch's rows now, and a
+            # rejected batch is not needed either
+            _release(stored)
 
     # -- UPDATE / DELETE / TRUNCATE ----------------------------------------
 
     def _update(self, stmt: str) -> Payload:
+        """UPDATE … SET … [WHERE …] as one CASE projection of the table,
+        computed in the commit pass, which also observes the updated-row
+        count and the assigned NOT NULL columns' NULL counts.  An assigned
+        UNIQUE column's DISTINCT count runs once over the stored version,
+        only if a row was updated, and that same version is then swapped
+        in (:meth:`_commit`)."""
         m = re.match(
             r"\s*UPDATE\s+([\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
             stmt,
@@ -1233,7 +1293,6 @@ class MultiSQLSession:
             assignments[col.strip().strip('`"').lower()] = F.expr(
                 self._rewrite_fragment(expr.strip(), state)
             )
-        n = state.df.filter(cond).count()
         # validate assignment targets and types before touching state
         # (reference update.rs runs Value::is / validate_null per row)
         probe = state.df.limit(0)
@@ -1263,6 +1322,9 @@ class MultiSQLSession:
                         raise
                 else:
                     raise
+        # the predicate is evaluated once per row, as a column that the
+        # CASE projection and the observed count share
+        hit = F.col("__hit")
         new_cols = []
         for cdef in state.columns:
             old = F.col(cdef.name)
@@ -1276,47 +1338,50 @@ class MultiSQLSession:
                         state.df.schema[cdef.name].dataType
                     )
                 new = (
-                    F.when(cond, assigned)
+                    F.when(hit, assigned)
                     .otherwise(old)
                     .cast(state.df.schema[cdef.name].dataType)
                 )
                 new_cols.append(new.alias(cdef.name))
             else:
                 new_cols.append(old)
-        candidate = state.df.select(*new_cols)
-        # all post-assignment constraint checks in ONE aggregation job
-        checks: list = []
-        for cdef in state.columns:
-            if cdef.name.lower() not in assignments:
-                continue
-            nm = cdef.name
-            if cdef.not_null:
-                checks.append(
-                    F.coalesce(
-                        F.sum(F.col(nm).isNull().cast("int")), F.lit(0)
-                    ).alias(f"__nn_{nm}")
-                )
-            if cdef.unique:
-                checks.append(
-                    (
-                        F.count(_uq_key(cdef)) - F.count_distinct(_uq_key(cdef))
-                    ).alias(f"__uq_{nm}")
-                )
-        if checks:
-            stats = candidate.agg(*checks).collect()[0]
-            for cdef in state.columns:
-                if cdef.name.lower() not in assignments:
-                    continue
-                if cdef.not_null and stats[f"__nn_{cdef.name}"]:
+        # post-assignment checks on the version's own pass: NULL counts
+        # are observed; the DISTINCT count of an assigned UNIQUE column
+        # runs over the stored version, only when a row was updated
+        assigned_cols = [
+            c for c in state.columns if c.name.lower() in assignments
+        ]
+        metrics = [F.count_if(hit).alias("n")] + [
+            F.count_if(F.col(c.name).isNull()).alias(f"nn_{c.name}")
+            for c in assigned_cols
+            if c.not_null
+        ]
+        seen = Observation()
+        candidate = (
+            state.df.select("*", F.coalesce(cond, F.lit(False)).alias("__hit"))
+            .select(*new_cols, hit)
+            .observe(seen, *metrics)
+            .drop("__hit")
+        )
+
+        def check(version: DataFrame) -> None:
+            got = seen.get
+            for cdef in assigned_cols:
+                if cdef.not_null and got[f"nn_{cdef.name}"]:
                     raise NotNullViolation(
                         f"NOT NULL violated for {state.name}.{cdef.name}"
                     )
-                if cdef.unique and stats[f"__uq_{cdef.name}"]:
+                key = _uq_key(cdef)
+                if cdef.unique and got["n"] and version.agg(
+                    F.count(key) - F.count_distinct(key)
+                ).first()[0]:
                     raise UniqueViolation(
                         f"UNIQUE violated for {state.name}.{cdef.name}"
                     )
-        self._commit(state, candidate)
-        return Payload.affected("Update", n)
+
+        checked = any(c.not_null or c.unique for c in assigned_cols)
+        self._commit(state, candidate, check if checked else None)
+        return Payload.affected("Update", seen.get["n"])
 
     @classmethod
     def _wrap_values_variant(cls, body: str, positions: list[int]) -> str:
@@ -1594,15 +1659,23 @@ class MultiSQLSession:
         if self._jdbc_target(name) is not None:
             raise EngineError("jdbc databases are insert-only")
         state = self._table(name)
-        if where:
-            cond = F.expr(self._rewrite_fragment(where))
-            n = state.df.filter(cond).count()
-            kept = state.df.filter(~F.coalesce(cond, F.lit(False)))
-        else:
-            n = state.df.count()
-            kept = state.df.limit(0)
+        cond = (
+            F.coalesce(F.expr(self._rewrite_fragment(where)), F.lit(False))
+            if where else F.lit(True)
+        )
+        # the deleted count is observed on the commit pass.  The predicate
+        # is a column projected below the observation and filtered above
+        # it: a plain filter on a WHERE that folds to a constant (1 = 1)
+        # is pruned by Catalyst, and the observation with it
+        seen = Observation()
+        kept = (
+            state.df.select("*", cond.alias("__hit"))
+            .observe(seen, F.count_if("__hit").alias("n"))
+            .filter(~F.col("__hit"))
+            .drop("__hit")
+        )
         self._commit(state, kept)
-        return Payload.affected("Delete", n)
+        return Payload.affected("Delete", seen.get["n"])
 
     def _truncate(self, stmt: str) -> Payload:
         m = re.match(

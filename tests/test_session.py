@@ -186,34 +186,82 @@ def test_execute_file(glue, tmp_path):
     assert out.rows == [(3,)]
 
 
-def test_insert_action_budget(glue, monkeypatch):
-    """Constraint validation folds into one aggregation action: an INSERT
-    into a table with NOT NULL + UNIQUE + AUTO_INCREMENT triggers at most
-    2 driver actions (stats aggregate + one semi-join count per UNIQUE
-    column).  Job counts are AQE-dependent; actions are the contract."""
-    from pyspark.sql import DataFrame
+def _jobs_of(spark, fn):
+    """The Spark jobs ``fn()`` starts, and its result: job ids from the
+    status tracker before and after, once the listener bus has drained."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    bus.waitUntilEmpty()
+    return len(set(tracker.getJobIdsForGroup(None)) - before), out
+
+
+def _attach_parquet(glue, db, path, rows):
+    """Write ``rows`` of (pk, fk, val) as ``<path>/t.parquet`` and attach
+    the directory as database ``db``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "pk": pa.array([r[0] for r in rows], pa.int64()),
+                "fk": pa.array([r[1] for r in rows], pa.int64()),
+                "val": pa.array([r[2] for r in rows], pa.float64()),
+            }
+        ),
+        str(path / "t.parquet"),
+    )
+    glue.execute(f"CREATE DATABASE {db} LOCATION '{path}'")
+
+
+def test_insert_action_budget(glue, spark, tmp_path):
+    """Each write makes one pass per version, with its counts and checks
+    observed on that pass: the Spark jobs a warm single-row statement
+    runs stay within its budget.  Managed INSERT: the batch, the
+    broadcast of its key and the commit; attached INSERT: the batch and
+    the write-back; UPDATE and DELETE: the one commit pass."""
+    from multisql_spark.session import UniqueViolation
 
     _fresh(glue, "jb")
-    glue.execute(
-        "CREATE TABLE jb (id INTEGER AUTO_INCREMENT NOT NULL,"
-        " v TEXT UNIQUE, w INTEGER NOT NULL)"
-    )
-    glue.execute("INSERT INTO jb (v, w) VALUES ('seed', 0)")
-    actions = {"n": 0}
-    orig_collect, orig_count = DataFrame.collect, DataFrame.count
+    glue.execute("CREATE TABLE jb (pk INTEGER PRIMARY KEY, fk INTEGER, val FLOAT)")
+    glue.insert_vec("jb", ["pk", "fk", "val"],
+                    [(i, i % 7, i / 8) for i in range(2000)])
+    _attach_parquet(glue, "jbatt", tmp_path / "jbatt",
+                    [(i, i % 5, i / 4) for i in range(500)])
 
-    def counting_collect(self):
-        actions["n"] += 1
-        return orig_collect(self)
+    def dup_insert():
+        with pytest.raises(UniqueViolation):
+            glue.execute("INSERT INTO jb (pk, fk, val) VALUES (5, 1, 0.5)")
+        return 0
 
-    def counting_count(self):
-        actions["n"] += 1
-        return orig_count(self)
-
-    monkeypatch.setattr(DataFrame, "collect", counting_collect)
-    monkeypatch.setattr(DataFrame, "count", counting_count)
-    glue.execute("INSERT INTO jb (v, w) VALUES ('a', 1), ('b', 2)")
-    assert actions["n"] <= 2, f"INSERT ran {actions['n']} driver actions"
+    budgets = [  # (statement, most jobs it may run)
+        ("INSERT INTO jb (pk, fk, val) VALUES ({k}, 1, 0.5)", 3),
+        ("UPDATE jb SET fk = 3, val = 0.25 WHERE pk = {k}", 1),
+        ("DELETE FROM jb WHERE pk = {k}", 1),
+        ("INSERT INTO jbatt.t (pk, fk, val) VALUES ({k}, 1, 0.5)", 2),
+        ("UPDATE jbatt.t SET fk = 3, val = 0.25 WHERE pk = {k}", 1),
+        ("DELETE FROM jbatt.t WHERE pk = {k}", 1),
+    ]
+    try:
+        for k in (9000, 9001):  # the first round warms up, the second counts
+            ran = []
+            for sql, budget in budgets:
+                stmt = sql.format(k=k)
+                n, out = _jobs_of(spark, lambda: glue.execute(stmt))
+                assert out.count == 1, stmt
+                ran.append((stmt, n, budget))
+            n, _ = _jobs_of(spark, dup_insert)
+            ran.append(("duplicate-key INSERT", n, 3))
+        for stmt, n, budget in ran:
+            assert 1 <= n <= budget, (stmt, n, ran)
+        assert glue.execute("SELECT count(*) FROM jb").rows == [(2000,)]
+        assert glue.execute("SELECT count(*) FROM jbatt.t").rows == [(500,)]
+    finally:
+        glue.execute("DROP DATABASE jbatt")
 
 
 def test_extend_reduce_api(glue, sf_dir):
@@ -739,6 +787,11 @@ def test_rejected_statements_leave_table_unchanged(glue):
          " UNION ALL SELECT 5, 2) AS s ON atom.k = s.k"
          " WHEN MATCHED THEN UPDATE SET v = 'm'"
          " WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.nk, 'n')"),
+        # one key, so only the commit pass's collision count sees it
+        (UniqueViolation, "INSERT INTO atom (k, v) VALUES (2, 'c')"),
+        # v is NOT NULL (the reference's default)
+        (NotNullViolation, "UPDATE atom SET v = NULL WHERE k = 1"),
+        (UniqueViolation, "UPDATE atom SET k = 1 WHERE k = 2"),
     ]
     for exc, sql in rejected:
         with pytest.raises(exc):
@@ -747,6 +800,129 @@ def test_rejected_statements_leave_table_unchanged(glue):
                  dict(state.auto_counter), state.df)
         assert after[:2] == before[:2], sql
         assert after[2] is before[2], sql
+
+
+def test_rejected_attached_writes_leave_file_unchanged(glue, tmp_path):
+    """On an attached table the checks run before the write-back: a
+    rejected statement leaves the parquet file's bytes, the rows and the
+    committed version as they were."""
+    from multisql_spark.session import NotNullViolation, UniqueViolation
+
+    _attach_parquet(glue, "rjatt", tmp_path / "rjatt",
+                    [(1, 10, 0.5), (2, 20, 1.5)])
+    try:
+        glue.execute("ALTER TABLE rjatt.t ADD COLUMN nn INTEGER NOT NULL DEFAULT 0")
+        glue.execute("CREATE UNIQUE INDEX rj_pk ON rjatt.t (pk)")
+        glue.execute("INSERT INTO rjatt.t (pk, fk, val, nn) VALUES (3, 30, 2.5, 7)")
+        path = tmp_path / "rjatt" / "t.parquet"
+        state = glue.tables["rjatt__t"]
+        before = (path.read_bytes(), state.df,
+                  sorted(glue.execute("SELECT * FROM rjatt.t").rows))
+        assert before[2] == [(1, 10, 0.5, 0), (2, 20, 1.5, 0), (3, 30, 2.5, 7)]
+        rejected = [
+            (NotNullViolation, "UPDATE rjatt.t SET nn = NULL WHERE pk = 2"),
+            (NotNullViolation,
+             "INSERT INTO rjatt.t (pk, fk, val, nn) VALUES (4, 40, 3.5, NULL)"),
+            (UniqueViolation,
+             "INSERT INTO rjatt.t (pk, fk, val, nn) VALUES (2, 40, 3.5, 1)"),
+            (UniqueViolation, "UPDATE rjatt.t SET pk = 1 WHERE pk = 3"),
+        ]
+        for exc, sql in rejected:
+            with pytest.raises(exc):
+                glue.execute(sql)
+            assert path.read_bytes() == before[0], sql
+            assert state.df is before[1], sql
+            rows = sorted(glue.execute("SELECT * FROM rjatt.t").rows)
+            assert rows == before[2], sql
+    finally:
+        glue.execute("DROP DATABASE rjatt")
+
+
+def test_collision_check_without_broadcast(glue, spark):
+    """With broadcast joins off, the commit pass's collision count runs
+    as a shuffle join (as it does for any unsized ``insert_vec`` batch):
+    a multi-row batch carrying one existing key is rejected, and a batch
+    with no colliding key commits exactly its rows."""
+    from multisql_spark.session import UniqueViolation
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    _fresh(glue, "nobc")
+    glue.execute("CREATE TABLE nobc (k INTEGER PRIMARY KEY, v TEXT)")
+    seed = [(i, f"s{i}") for i in range(1, 21)]
+    glue.insert_vec("nobc", ["k", "v"], seed)
+    spark.conf.set(key, "-1")
+    try:
+        with pytest.raises(UniqueViolation):
+            glue.insert_vec("nobc", ["k", "v"],
+                            [(100, "a"), (101, "b"), (7, "c"), (102, "d")])
+        with pytest.raises(UniqueViolation):
+            glue.execute("INSERT INTO nobc VALUES (200, 'x'), (3, 'y')")
+        assert sorted(glue.execute("SELECT k, v FROM nobc").rows) == seed
+        batch = [(100 + i, f"n{i}") for i in range(30)]
+        assert glue.insert_vec("nobc", ["k", "v"], batch).count == 30
+        assert glue.execute("INSERT INTO nobc VALUES (200, 'x')").count == 1
+        got = sorted(glue.execute("SELECT k, v FROM nobc").rows)
+        assert got == sorted(seed + batch + [(200, "x")])
+    finally:
+        spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("attached", [False, True], ids=["managed", "attached"])
+def test_constant_predicates_match_model(glue, tmp_path, attached):
+    """Predicates that fold to constants (WHERE 1 = 1, 1 = 0, NULL; DELETE
+    without WHERE; an INSERT … SELECT of no rows) keep the counts the
+    commit pass observes: each statement's affected count and the rows
+    after it match a Python model of the table."""
+    if attached:
+        _attach_parquet(glue, "cfatt", tmp_path / "cfatt",
+                        [(i, i * 10, i / 2) for i in range(1, 6)])
+        t = "cfatt.t"
+    else:
+        _fresh(glue, "cf")
+        glue.execute("CREATE TABLE cf (pk INTEGER PRIMARY KEY, fk INTEGER, val FLOAT)")
+        glue.execute("INSERT INTO cf VALUES " + ", ".join(
+            f"({i}, {i * 10}, {i / 2})" for i in range(1, 6)))
+        t = "cf"
+    model = {i: (i * 10, i / 2) for i in range(1, 6)}
+
+    def rows():
+        return sorted((k, *v) for k, v in model.items())
+
+    def fk_plus_one():
+        model.update({k: (fk + 1, val) for k, (fk, val) in model.items()})
+        return len(model)
+
+    def clear():
+        n = len(model)
+        model.clear()
+        return n
+
+    def refill():
+        model.update({7: (70, 3.5), 8: (80, 4.0)})
+        return 2
+
+    steps = [
+        (f"UPDATE {t} SET fk = 0 WHERE 1 = 0", lambda: 0),
+        (f"UPDATE {t} SET fk = fk + 1 WHERE 1 = 1", fk_plus_one),
+        (f"UPDATE {t} SET fk = 0 WHERE NULL", lambda: 0),
+        (f"DELETE FROM {t} WHERE 1 = 0", lambda: 0),
+        (f"DELETE FROM {t} WHERE NULL", lambda: 0),
+        (f"INSERT INTO {t} SELECT pk + 100, fk, val FROM {t} WHERE 1 = 0",
+         lambda: 0),
+        (f"DELETE FROM {t} WHERE 1 = 1", clear),
+        (f"INSERT INTO {t} VALUES (7, 70, 3.5), (8, 80, 4.0)", refill),
+        (f"DELETE FROM {t}", clear),
+    ]
+    try:
+        for sql, apply in steps:
+            want = apply()
+            assert glue.execute(sql).count == want, sql
+            got = sorted(glue.execute(f"SELECT pk, fk, val FROM {t}").rows)
+            assert got == rows(), sql
+    finally:
+        if attached:
+            glue.execute("DROP DATABASE cfatt")
 
 
 def test_tune_session_reports_what_it_cannot_set(caplog, monkeypatch):

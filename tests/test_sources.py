@@ -141,6 +141,8 @@ def test_testdata_is_write_protected(spark, sf_dir):
             "INSERT INTO rodb.region (r_regionkey, r_name)"
             " VALUES (7, 'NOPE')"
         )
+    # the refused write-back leaves the table as it was
+    assert g.execute("SELECT count(*) FROM rodb.region").rows == [(5,)]
 
 
 def test_xlsx_database_roundtrip(spark, tmp_path_factory):
