@@ -4,8 +4,9 @@
 Without SPARK_GRAFT_CPUS it uses every usable core (the session comes
 from ``multisql_spark.tables.local_session``).
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints ONE JSON line with both timing columns and their totals:
+  {"metric": "bench_headline", "value": N, "unit": "sec", "queries": {...},
+   "value_noop": N, "queries_noop": {...}, "sf": ...}
 
 The first four queries mirror BASELINE.md's metrics (filter-to-few-rows,
 point lookup, groupBy-sum into ~20k groups, join+groupBy) at the driver's
@@ -42,19 +43,7 @@ SF = _parse_sf(SF_DIR)
 def build_session() -> SparkSession:
     from multisql_spark.tables import local_session
 
-    # SPARK_GRAFT_PROFILE=cluster replays the 1000-executor profile's
-    # query-planning confs (AQE skew thresholds, 64 MB broadcast ceiling,
-    # 256 MB splits) in this local session — validates that the generated
-    # cluster posture serves the same plans (tools/cluster_profile.py)
-    profile = {}
-    if os.environ.get("SPARK_GRAFT_PROFILE") == "cluster":
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-        )
-        from cluster_profile import local_shape_profile
-
-        profile = local_shape_profile()
-    return local_session("multisql_spark_bench", **profile)
+    return local_session("multisql_spark_bench")
 
 
 def build_cases(spark: SparkSession) -> dict:
@@ -178,19 +167,11 @@ def bench_queries(spark: SparkSession):
     #   QueryExecution — the write column would measure planning.
     timings: dict[str, float] = {}
     timings_noop: dict[str, float] = {}
-    # A/B hook: SPARK_GRAFT_BENCH_COLLECT_ONLY=1 replicates the pre-r8
-    # single-column methodology (7 collect runs/query, no noop passes) to
-    # separate engine movement from the extra measurement work the second
-    # column adds to the session.
-    collect_only = os.environ.get("SPARK_GRAFT_BENCH_COLLECT_ONLY") == "1"
     for name, df in cases.items():
         runs = {
             "collect": df.collect,
             "noop": lambda d=df: d._jdf.queryExecution().toRdd().count(),
         }
-        if collect_only:
-            runs.pop("noop")
-            timings_noop[name] = 0.0
         for kind, fn in runs.items():
             fn()  # warmup
             best = float("inf")
@@ -207,47 +188,19 @@ def bench_queries(spark: SparkSession):
 def main() -> None:
     spark = build_session()
     timings, timings_noop = bench_queries(spark)
-    total = round(sum(timings.values()), 4)
-    collect_only = os.environ.get("SPARK_GRAFT_BENCH_COLLECT_ONLY") == "1"
-    noop_total = (
-        None if collect_only else round(sum(timings_noop.values()), 4)
-    )
-    # Verbose line FIRST (both per-query columns, for humans/sweep logs)...
     print(
         json.dumps(
             {
-                "metric": "bench_headline_detail",
-                "value": total,
+                "metric": "bench_headline",
+                "value": round(sum(timings.values()), 4),
                 "unit": "sec",
                 "queries": timings,
-                "value_noop": noop_total,
-                "queries_noop": None if collect_only else timings_noop,
-                "collect_only": collect_only,
+                "value_noop": round(sum(timings_noop.values()), 4),
+                "queries_noop": timings_noop,
                 "sf": SF,
             }
         )
     )
-    # ...then the canonical line LAST.  The driver parses the final JSON
-    # object out of a 2000-char stdout tail; BENCH_r08 landed with
-    # parsed:null because the two per-query maps pushed a single line past
-    # that window.  This line carries the per-query collect column plus
-    # both totals and must stay under the tail budget (asserted so a
-    # future query-count growth fails loudly here, not in the artifact).
-    canonical = json.dumps(
-        {
-            "metric": "bench_headline_total",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "value_noop": noop_total,
-            "sf": SF,
-        }
-    )
-    assert len(canonical) <= 1900, (
-        f"canonical bench line {len(canonical)}B exceeds the driver's "
-        "2000B stdout tail; trim per-query precision or split the line"
-    )
-    print(canonical)
     spark.stop()
 
 

@@ -6,9 +6,13 @@ extensions) is declared here as a named query with:
 - ``fn(spark, sf_dir) -> DataFrame`` — the Spark-first implementation;
 - ``oracle`` — an equivalent ANSI-SQL string DuckDB can run on the same
   parquet tables (``None`` for genuinely non-SQL-expressible ops, which
-  get a weaker rows-only check from the driver).
+  get a weaker rows-only check).
 
-Conventions that make the driver's hash-compare deterministic:
+``load_all()`` imports every query module and returns the registry in
+registration order; callers look specs up by name.
+
+Conventions that make the oracle hash-compare (``tools/driver_sim.py``)
+deterministic:
 - every computed column is aliased identically on both sides;
 - money aggregates are summed as DECIMAL (exact, order-independent);
 - floating aggregates are rounded to a fixed number of decimals;
@@ -73,129 +77,8 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# The driver records correctness rows for the first 50 registered
-# queries only, so registration order is load-bearing.  Rotation is
-# purely mechanical: ``load_all()`` fronts every query that has never
-# held a green official driver row (union of CORRECTNESS_r*.json plus
-# this round's ``_RECERTIFY`` semantic-change flags), then backfills
-# with every certified name ordered by certification VINTAGE — stalest
-# green row first — so spare window slots always go to the most
-# re-confirmation-worthy names.  There is no literal window list to go
-# stale: landing a CORRECTNESS file retires its green names and
-# refreshes their vintage without a code edit, and a red row keeps its
-# name fronted for re-certification after the fix.  Queries past the
-# 50-cap keep their local pytest oracle gate (strictly stronger: exact
-# multiset equality).
-
-# Names whose ENGINE OR ORACLE SEMANTICS changed in round 8 (the
-# incremental minhash probe — batch and streaming twin — moved to a
-# bucket-capped corpus band index after the uncapped probe went
-# quadratic on derived-scale mega-buckets and OOM-killed the sf10
-# streaming sweep).  Their pre-round green rows certify the OLD tree,
-# so they re-front for fresh certification — remove a name once a green
-# row from this round's tree lands.  (The r8 set — incremental-minhash
-# bucket capping — fully retired via CORRECTNESS_r08 green rows.)
-# r9: window_rank_distribution switched its pr/cd columns to micro-unit
-# integer quantization (floor(x*1e6+0.5)) after the r9 sf100 sweep hit
-# a shortest-repr rounding divergence at 15M-row partitions.
-# (retired via its CORRECTNESS_r09 green row.)
-# r10: sim_embedding_neardup moved to the ADAPTIVE LSH plane count
-# (n_planes = ceil(log2(n/64)) clamped to [8,16], from a cheap corpus
-# count, mirrored in the oracle) so bucket occupancy stays ~flat at
-# scale — at sf0.01 the clamp floor keeps the output identical, but the
-# blocking semantics changed, so it re-fronts for fresh certification.
-# r10: stream_dedup_digest's canonicalization became NULL-symmetric
-# (coalesce-to-sentinel on both sides; identical output on the NULL-free
-# fixtures, but the digest encoding changed) — re-front it too.
-# r10 (late): dedup_duplicated_spans' dup-hash digest moved from the
-# 32-char md5 hex string to its first-60-bits BIGINT prefix (engine +
-# oracle mirrored) after the variable-width string agg keys OOM'd the
-# partial-agg heap at derived sf1000 — outputs identical barring a
-# ~2^-60-per-pair collision, but the blocking digest changed.
-# name -> earliest round whose green driver row retires the flag.
-# Per-name (r10 ADVICE #2): a LATE-round semantic change must point at
-# the NEXT round instead of re-trusting a same-round row that may
-# predate the change.  dedup_duplicated_spans stays at 10 because its
-# r10 green row is confirmed to postdate the digest commit (the name
-# was fronted only after the fix landed; the r10 judge's independent
-# sf0.01 re-check of the post-fix tree was green).
-_RECERTIFY: dict[str, int] = {
-    "sim_embedding_neardup": 10,
-    "stream_dedup_digest": 10,
-    "dedup_duplicated_spans": 10,
-}
-
-
-def _row_green(row: object) -> bool:
-    """The same green predicate ``tools/sweep_report.certification()``
-    uses: hash match when the compare produced one, else rows match."""
-    if not isinstance(row, dict):
-        return False
-    return bool(row.get("hash_match", row.get("rows_match", False)))
-
-
-def _certification_vintage() -> dict[str, int]:
-    """Per-name LATEST round holding a *green* official driver
-    CORRECTNESS row: the pinned per-round sets, refreshed by whatever
-    CORRECTNESS_r*.json files exist in the repo root.  The on-disk scan
-    makes window rotation self-maintaining — once the driver lands a
-    round's CORRECTNESS file, that round's green names carry its vintage
-    without a code edit.  Red rows do NOT update the vintage: a query
-    that failed certification keeps its stale (or absent) vintage so it
-    re-fronts after the fix (consistent with ``certification()``'s
-    latest-round/green ledger)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    vintage: dict[str, int] = {}
-    for rnd, names in (
-        (1, _ROUND1_CHECKED), (2, _ROUND2_CHECKED), (3, _ROUND3_CHECKED)
-    ):
-        for n in names:
-            vintage[n] = max(vintage.get(n, 0), rnd)
-    root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    for fp in _glob.glob(_os.path.join(root, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", fp)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(fp) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            for n, r in rows.items():
-                if _row_green(r):
-                    vintage[n] = max(vintage.get(n, 0), rnd)
-    return vintage
-
-
-def _officially_checked() -> frozenset[str]:
-    """Names whose green certification still describes the CURRENT tree:
-    certified at least once, and — for names in ``_RECERTIFY`` (semantics
-    changed) — certified at or after that name's recertify round."""
-    vintage = _certification_vintage()
-    return frozenset(
-        n
-        for n, rnd in vintage.items()
-        if rnd >= _RECERTIFY.get(n, 0)
-    )
-
-
 def load_all() -> dict[str, QuerySpec]:
-    """Import all query modules (side effect: fills REGISTRY) and return
-    them with queries needing a driver row fronted — never-certified
-    names plus ``_RECERTIFY`` names whose green rows predate this
-    round's semantic change; under ANY driver cap this maximizes
-    useful driver rows per round — then every certified name ordered by
-    certification VINTAGE (stalest green row first, registration order
-    breaking ties), so the window backfill is always the most
-    re-confirmation-worthy names with no literal list to go stale."""
+    """Import every query module; return the registry in registration order."""
     from multisql_spark.queries import (  # noqa: F401
         analytics_q,
         core,
@@ -210,86 +93,4 @@ def load_all() -> dict[str, QuerySpec]:
         tpch_q,
     )
 
-    checked = _officially_checked()
-    vintage = _certification_vintage()
-    ordered: dict[str, QuerySpec] = {}
-    for name, spec in REGISTRY.items():
-        if name not in checked:
-            ordered[name] = spec
-    reg_pos = {name: i for i, name in enumerate(REGISTRY)}
-    for name in sorted(
-        (n for n in REGISTRY if n not in ordered),
-        key=lambda n: (vintage.get(n, 0), reg_pos[n]),
-    ):
-        ordered[name] = REGISTRY[name]
-    return ordered
-
-
-# The 50 queries that received a CORRECTNESS_r01 driver row (41 green +
-# 9 canonicalization-red now fixed); kept verbatim so window rotation can
-# always deprioritize already-checked names.
-_ROUND1_CHECKED: frozenset[str] = frozenset({
-    "scan_project_filter", "filter_arithmetic", "projection_case_between",
-    "pricing_summary", "agg_global", "group_having", "group_by_expr",
-    "distinct_rows", "join_inner_agg", "join_left_outer",
-    "join_right_outer", "join_full_outer", "join_cross", "join_theta",
-    "join_multi_revenue", "join_semi_anti", "order_limit_offset",
-    "order_nulls_placement", "set_union_distinct", "set_union_all",
-    "set_except", "set_except_all", "set_intersect", "set_intersect_all",
-    "values_inline", "cte_chained", "subquery_scalar_in",
-    "window_topk_per_group", "window_running_lag", "rollup_region_nation",
-    "pivot_status_by_year", "cube_status_priority", "grouping_sets_mixed",
-    "window_ntile_quartiles", "agg_collect_sorted", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard",
-    "dml_insert_values_select", "dml_update_where", "dml_delete_where",
-    "dml_auto_increment", "session_variables", "view_over_join",
-    "multi_database_join", "fn_string", "fn_concat_null_propagation",
-    "fn_math", "fn_conditional",
-})
-
-# The 50 queries that received a CORRECTNESS_r02 driver row (all green).
-_ROUND2_CHECKED: frozenset[str] = frozenset({
-    "agg_collect_sorted", "agg_percentiles_exact", "agg_salted_skew",
-    "asof_join_events", "cte_chained", "cube_status_priority",
-    "dedup_cluster_components", "embedding_component_stats",
-    "events_rollup_hourly", "fn_cast", "fn_convert_rules",
-    "fn_json_extract", "fn_like_in", "fn_regex", "fn_timestamp_arith",
-    "fn_timestamp_extract", "group_by_expr", "group_having",
-    "join_inner_agg", "join_skew_salted", "mm_metadata_stats",
-    "pricing_summary", "range_join_events", "sample_hash_split",
-    "sample_stratified", "sim_ann_ivf", "sim_ann_ivf_kmeans",
-    "sim_ann_lsh", "sim_bruteforce_topk", "sim_embedding_neardup",
-    "sim_lsh_buckets", "stream_session", "stream_sliding",
-    "stream_stateful_sessionize", "stream_stream_join",
-    "stream_tumbling", "text_edit_distance", "text_fingerprints",
-    "text_langid", "text_quality", "text_token_stats",
-    "text_vocab_topk", "tpch_brand_supplier_count",
-    "tpch_cheapest_lineitem", "tpch_cust_distribution",
-    "tpch_large_orders", "tpch_order_priority", "tpch_top_supplier",
-    "window_ntile_quartiles", "window_running_lag",
-})
-
-# The 50 queries that received a CORRECTNESS_r03 driver row (all green).
-_ROUND3_CHECKED: frozenset[str] = frozenset({
-    "dedup_bloom_prefilter", "dedup_incremental_minhash",
-    "dedup_ensemble_verdict", "sim_ann_pq", "sim_ann_ivfadc",
-    "sim_ann_recall", "stream_dedup", "stream_upsert_sink",
-    "stream_heavy_hitters_cms", "text_contamination", "text_tfidf_topk",
-    "text_bpe_pair_stats", "sample_domain_mix", "pipeline_cdc_apply",
-    "pipeline_scd2_history", "matview_incremental_merge",
-    "events_sessionize_batch", "tpch_nation_volume", "tpch_promo_share",
-    "tpch_disjunctive_revenue", "tpch_market_share",
-    "tpch_wealthy_inactive", "tpch_shipping_priority",
-    "tpch_forecast_revenue", "tpch_returned_items",
-    "tpch_local_supplier_volume", "tpch_product_profit",
-    "tpch_important_stock", "tpch_shipmode_priority",
-    "tpch_part_promotion", "tpch_waiting_suppliers",
-    "tpch_small_qty_revenue", "monitor_expectations",
-    "monitor_value_drift_ks", "monitor_value_drift_psi",
-    "monitor_lang_chisq", "monitor_lang_drift", "monitor_source_entropy",
-    "monitor_source_kl_matrix", "monitor_embedding_drift",
-    "monitor_score_auc", "monitor_ab_experiment",
-    "monitor_stale_entities", "dml_merge_upsert", "dml_matview_refresh",
-    "window_frame_stats", "window_rank_distribution", "sample_weighted",
-    "text_normalize", "stream_rollup_sink",
-})
+    return dict(REGISTRY)

@@ -717,28 +717,15 @@ def test_mm_feature_extract_matches_python(spark, sf_dir):
         assert abs(r["feat_mean"] - round(sum(feats) / 8, 4)) < 1e-12
 
 
-def test_driver_window_well_formed():
-    """Rotation guard: the registry prefix must be exactly the names
-    without a current-tree green row (registration order), then the
-    certified names stalest-vintage-first — the list-free mechanism
-    that makes certification self-maintaining."""
-    from multisql_spark.queries import (
-        REGISTRY,
-        _certification_vintage,
-        _officially_checked,
-        load_all,
-    )
+def test_load_all_returns_registration_order():
+    """``load_all()`` returns a fresh copy of the registry, in
+    registration order, on every call."""
+    from multisql_spark import queries
 
-    reg = load_all()
-    checked = _officially_checked()
-    vintage = _certification_vintage()
-    never = [n for n in REGISTRY if n not in checked]
-    assert list(reg)[: len(never)] == never
-    reg_pos = {n: i for i, n in enumerate(REGISTRY)}
-    keys = [
-        (vintage.get(n, 0), reg_pos[n]) for n in list(reg)[len(never) :]
-    ]
-    assert keys == sorted(keys)
+    first, second = load_all(), load_all()
+    assert list(first) == list(queries.REGISTRY)
+    assert first == second
+    assert first is not second and first is not queries.REGISTRY
 
 
 def test_hll_deterministic_error_bound_and_stability(spark):

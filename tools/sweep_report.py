@@ -16,7 +16,6 @@ because most of the 0.01 time is fixed job-launch overhead).
 
 Usage:
   python tools/sweep_report.py [--label r4] [sweeps_dir_or_json ...]
-  python tools/sweep_report.py --certification
 """
 
 from __future__ import annotations
@@ -40,16 +39,22 @@ def _load_segments(paths: list[str], label: str | None) -> dict[str, dict]:
         else:
             files.append(p)
     for fp in files:
+        base = os.path.basename(fp)
         with open(fp) as f:
-            data = json.load(f)
-        if "queries" in data and "sf" in data:  # segment artifact
+            # sweeps/ also holds bench.py logs and notes: skip anything
+            # that is neither a segment artifact nor a legacy report
+            try:
+                data = json.load(f)
+            except ValueError:
+                continue
+        if "n_green" in data:  # segment artifact
             if label and data.get("label") != label:
                 continue
             merged.setdefault(data["sf"], {}).update(data["queries"])
-        else:  # legacy flat report; infer sf from filename
+        elif base.startswith("driver_sim_"):  # legacy flat report
             if label:  # unlabeled evidence excluded from labeled reports
                 continue
-            base = os.path.basename(fp)
+            # infer sf from the filename
             tag = base.replace("driver_sim_", "").replace(".json", "")
             merged.setdefault(tag, {}).update(data)
     return merged
@@ -61,64 +66,8 @@ def ok(row: dict) -> bool:
     ) and not row.get("err")
 
 
-def certification() -> int:
-    """Generated official-driver-row ledger from CORRECTNESS_r*.json:
-    which round (if any) certified each registry query, plus totals.
-    Paste into COVERAGE.md (VERDICT r3 ask #9)."""
-    sys.path.insert(0, REPO)
-    from multisql_spark.queries import load_all
-
-    specs = load_all()
-    cert: dict[str, tuple[int, bool]] = {}
-    rounds = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
-    for fp in rounds:
-        rno = int(os.path.basename(fp)[len("CORRECTNESS_r"):-len(".json")])
-        with open(fp) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            green = bool(
-                row.get("hash_match", row.get("rows_match", False))
-            ) and not row.get("err")
-            # latest certification wins (r1 reds were re-certified in r2)
-            if name not in cert or rno > cert[name][0]:
-                cert[name] = (rno, green)
-    n_cert = sum(1 for n in specs if n in cert)
-    n_green = sum(1 for n in specs if cert.get(n, (0, False))[1])
-    print(f"### Official driver-row certification ledger\n")
-    print(
-        f"{n_cert}/{len(specs)} registry queries have an official "
-        f"CORRECTNESS row ({n_green} green at latest certification); "
-        f"generated by `tools/sweep_report.py --certification` from "
-        f"CORRECTNESS_r*.json.\n"
-    )
-    by_round: dict[int, list[str]] = {}
-    uncert: list[str] = []
-    for name in specs:
-        if name in cert:
-            by_round.setdefault(cert[name][0], []).append(name)
-        else:
-            uncert.append(name)
-    for rno in sorted(by_round):
-        names = by_round[rno]
-        reds = [n for n in names if not cert[n][1]]
-        line = f"- **round {rno}** ({len(names)} queries): " + ", ".join(
-            f"`{n}`" for n in sorted(names)
-        )
-        print(line)
-        if reds:
-            print(f"  - red at latest certification: {reds}")
-    if uncert:
-        print(
-            f"- **not yet certified** ({len(uncert)}): "
-            + ", ".join(f"`{n}`" for n in sorted(uncert))
-        )
-    return 0
-
-
 def main() -> int:
     args = sys.argv[1:]
-    if "--certification" in args:
-        return certification()
     label = None
     if "--label" in args:
         i = args.index("--label")
