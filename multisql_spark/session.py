@@ -649,38 +649,25 @@ class MultiSQLSession:
             )
             state.df.createOrReplaceTempView(state.name)
             return
+        kind = state.persist_kind
+        if kind not in ("parquet", "csv", "json", "orc"):
+            raise EngineError(f"unwritable backend: {kind}")
+        opts = {"header": True} if kind == "csv" else {}
         tmp = tempfile.mkdtemp(prefix="msql_flush_")
-        writer = state.df.coalesce(1).write.mode("overwrite")
-        if state.persist_kind == "parquet":
-            writer.parquet(tmp)
-        elif state.persist_kind == "csv":
-            writer.option("header", True).csv(tmp)
-        elif state.persist_kind == "json":
-            writer.json(tmp)
-        elif state.persist_kind == "orc":
-            writer.orc(tmp)
-        else:
-            raise EngineError(
-                f"unwritable backend: {state.persist_kind}"
-            )
+        state.df.coalesce(1).write.mode("overwrite").options(**opts).format(
+            kind
+        ).save(tmp)
         part = glob.glob(os.path.join(tmp, "part-*"))[0]
         shutil.move(part, state.persist_path)
         shutil.rmtree(tmp, ignore_errors=True)
         self.spark.catalog.refreshByPath(state.persist_path)
-        if state.persist_kind == "parquet":
-            # the file holds exactly the rows and schema just written, so
-            # read it with that schema: no inference job
-            state.df = self.spark.read.schema(state.df.schema).parquet(
-                state.persist_path
-            )
-        elif state.persist_kind == "csv":
-            state.df = self.spark.read.csv(
-                state.persist_path, header=True, inferSchema=True
-            )
-        elif state.persist_kind == "orc":
-            state.df = self.spark.read.orc(state.persist_path)
-        else:
-            state.df = self.spark.read.json(state.persist_path)
+        # the file holds exactly the rows and schema just written, so read
+        # it with that schema: no inference job, and the text formats'
+        # column types cannot drift with the values an update wrote
+        state.df = (
+            self.spark.read.schema(state.df.schema).options(**opts)
+            .format(kind).load(state.persist_path)
+        )
         state.df.createOrReplaceTempView(state.name)
 
     def _execute_one(self, stmt: str) -> Payload:
@@ -1121,6 +1108,7 @@ class MultiSQLSession:
         incoming: DataFrame,
         stated: list[str],
         existing: DataFrame | None = None,
+        check: Callable[[DataFrame], None] | None = None,
     ) -> Payload:
         """Validation pipeline per reference validate.rs:46-99: position
         mapping → defaults → AUTO_INCREMENT → type coercion → NOT NULL →
@@ -1130,9 +1118,10 @@ class MultiSQLSession:
         observing its row count, NULL counts, AUTO_INCREMENT fill counts
         and UNIQUE key counts.  The commit pass builds the new version and
         observes how many batch keys hit ``existing``; that check runs
-        before the swap (:meth:`_commit`).  The one DISTINCT count, for
-        duplicates within the batch, runs only for a UNIQUE column that
-        carries more than one key in the batch."""
+        before the swap (:meth:`_commit`), after the caller's ``check``
+        of what ``existing``'s own plan observed on the same pass.  The
+        one DISTINCT count, for duplicates within the batch, runs only
+        for a UNIQUE column that carries more than one key in the batch."""
         if existing is None:
             existing = state.df
         # stated columns must exist (reference ValidateError::ColumnNotFound,
@@ -1213,19 +1202,20 @@ class MultiSQLSession:
                 )
                 probe = probe.join(keys, _uq_key(cdef) == F.col(k), "left")
                 hit_counts.append(F.count(k).alias(cdef.name))
-            check = None
             if keyed:
                 hits = Observation()
                 existing = probe.observe(hits, *hit_counts).select(
                     *existing.columns
                 )
 
-                def check(_version: DataFrame) -> None:
-                    for col, n_hit in hits.get.items():
-                        if n_hit:
-                            raise UniqueViolation(
-                                f"UNIQUE violated for {state.name}.{col}"
-                            )
+            def check_all(version: DataFrame) -> None:
+                if check is not None:
+                    check(version)
+                for col, n_hit in hits.get.items() if keyed else ():
+                    if n_hit:
+                        raise UniqueViolation(
+                            f"UNIQUE violated for {state.name}.{col}"
+                        )
 
             # assign AUTO_INCREMENT ids only after validation passed, and
             # advance the counters only once the commit succeeded, so a
@@ -1253,7 +1243,8 @@ class MultiSQLSession:
                         aligned = aligned.filter(~null).unionByName(filled)
                     counters[cdef.name] = start + n_fill
 
-            self._commit(state, existing.unionByName(aligned), check)
+            self._commit(state, existing.unionByName(aligned),
+                         check_all if check or keyed else None)
             state.auto_counter.update(counters)
             return Payload.affected("Insert", n_in)
         finally:
@@ -1264,12 +1255,9 @@ class MultiSQLSession:
     # -- UPDATE / DELETE / TRUNCATE ----------------------------------------
 
     def _update(self, stmt: str) -> Payload:
-        """UPDATE … SET … [WHERE …] as one CASE projection of the table,
-        computed in the commit pass, which also observes the updated-row
-        count and the assigned NOT NULL columns' NULL counts.  An assigned
-        UNIQUE column's DISTINCT count runs once over the stored version,
-        only if a row was updated, and that same version is then swapped
-        in (:meth:`_commit`)."""
+        """UPDATE … SET … [WHERE …]: the table's rows with the predicate
+        as the ``__hit`` column, through :meth:`_assign`, committed in one
+        pass that observes the updated-row count and the checks."""
         m = re.match(
             r"\s*UPDATE\s+([\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
             stmt,
@@ -1287,15 +1275,47 @@ class MultiSQLSession:
             F.expr(self._rewrite_fragment(where, state))
             if where else F.lit(True)
         )
+        # the predicate is evaluated once per row, as a column that the
+        # CASE projection and the observed count share
+        rows = state.df.alias(state.name).select(
+            "*", F.coalesce(cond, F.lit(False)).alias("__hit")
+        )
+        new, seen, check = self._assign(state, rows, state.name, sets_src)
+        self._commit(state, new.drop("__hit"), check)
+        return Payload.affected("Update", seen.get["n"])
+
+    def _assign(
+        self,
+        state: TableState,
+        rows: DataFrame,
+        alias: str,
+        sets_src: str | None,
+    ) -> tuple[DataFrame, Observation, Callable[[DataFrame], None] | None]:
+        """Apply the ``SET`` list ``sets_src`` (UPDATE's, or a matched
+        MERGE's) to the rows of ``rows`` whose boolean ``__hit`` is true.
+        ``rows`` carries the table's columns under ``alias``.
+
+        Every assignment is resolved and type-checked before any job
+        runs (reference update.rs runs Value::is / validate_null per
+        row).  Returns the table's columns as one CASE projection plus
+        ``__hit``, observed on the pass that computes it: ``n`` hit rows,
+        ``rows`` rows, the NULL counts of assigned NOT NULL columns and
+        the fractional counts below; then the ``check(version)`` for
+        :meth:`_commit`, or None when no assignment can be rejected.  The
+        DISTINCT count of an assigned UNIQUE column runs over the stored
+        version, only when a row was hit."""
         assignments = {}
-        for part in self._split_top_level(sets_src):
+        for part in self._split_top_level(sets_src or ""):
             col, expr = part.split("=", 1)
-            assignments[col.strip().strip('`"').lower()] = F.expr(
+            col = col.strip().strip('`"').lower()
+            if col.startswith(alias.lower() + "."):
+                col = col[len(alias) + 1:]
+            assignments[col] = F.expr(
                 self._rewrite_fragment(expr.strip(), state)
             )
-        # validate assignment targets and types before touching state
-        # (reference update.rs runs Value::is / validate_null per row)
-        probe = state.df.limit(0)
+        hit = F.col("__hit")
+        probe = rows.limit(0)
+        fractional = {}  # flag column → (its value, the error it raises)
         for col, expr in assignments.items():
             cdef = state.column(col)
             if cdef is None:
@@ -1303,69 +1323,60 @@ class MultiSQLSession:
             ptype = probe.select(expr.alias("_p")).schema[0].dataType
             try:
                 _check_write_type(cdef, ptype, state.name)
-            except EngineError:
+            except EngineError as err:
                 # Reference int `/` int stays I64 (binary.rs:66-92), but the
                 # dialect's runtime-dispatch division CASE is statically
                 # DOUBLE-typed.  Accept a fractional-typed assignment into an
                 # integral column when every assigned value is integral
                 # (DIVERGENCES: `SET id = 3.0` is likewise accepted).
-                if cdef.type_str == "bigint" and isinstance(
+                if cdef.type_str != "bigint" or not isinstance(
                     ptype, (T.DoubleType, T.FloatType, T.DecimalType)
                 ):
-                    frac = (
-                        state.df.filter(cond)
-                        .select(expr.alias("_p"))
-                        .filter("_p IS NOT NULL AND _p != floor(_p)")
-                        .count()
-                    )
-                    if frac:
-                        raise
-                else:
                     raise
-        # the predicate is evaluated once per row, as a column that the
-        # CASE projection and the observed count share
-        hit = F.col("__hit")
+                fractional[f"__frac{len(fractional)}"] = (
+                    hit & expr.isNotNull() & (expr != F.floor(expr)), err
+                )
         new_cols = []
         for cdef in state.columns:
-            old = F.col(cdef.name)
-            if cdef.name.lower() in assignments:
-                assigned = assignments[cdef.name.lower()]
-                if cdef.type_str == "variant":
-                    # Any column: the CASE branches must agree in type, so
-                    # the assigned expression converts to variant FIRST —
-                    # each updated row keeps the new value's own kind
-                    assigned = assigned.cast(
-                        state.df.schema[cdef.name].dataType
-                    )
-                new = (
-                    F.when(hit, assigned)
-                    .otherwise(old)
-                    .cast(state.df.schema[cdef.name].dataType)
-                )
-                new_cols.append(new.alias(cdef.name))
-            else:
-                new_cols.append(old)
-        # post-assignment checks on the version's own pass: NULL counts
-        # are observed; the DISTINCT count of an assigned UNIQUE column
-        # runs over the stored version, only when a row was updated
+            old = F.col(f"{alias}.{cdef.name}")
+            dtype = state.df.schema[cdef.name].dataType
+            assigned = assignments.get(cdef.name.lower())
+            if assigned is None:
+                new_cols.append(old.alias(cdef.name))
+                continue
+            if cdef.type_str == "variant":
+                # Any column: the CASE branches must agree in type, so the
+                # assigned expression converts to variant FIRST — each
+                # updated row keeps the new value's own kind
+                assigned = assigned.cast(dtype)
+            new_cols.append(
+                F.when(hit, assigned).otherwise(old).cast(dtype)
+                .alias(cdef.name)
+            )
         assigned_cols = [
             c for c in state.columns if c.name.lower() in assignments
         ]
-        metrics = [F.count_if(hit).alias("n")] + [
-            F.count_if(F.col(c.name).isNull()).alias(f"nn_{c.name}")
-            for c in assigned_cols
-            if c.not_null
-        ]
+        metrics = (
+            [F.count_if(hit).alias("n"), F.count(F.lit(1)).alias("rows")]
+            + [F.count_if(F.col(c.name).isNull()).alias(f"nn_{c.name}")
+               for c in assigned_cols if c.not_null]
+            + [F.count_if(f).alias(f) for f in fractional]
+        )
         seen = Observation()
-        candidate = (
-            state.df.select("*", F.coalesce(cond, F.lit(False)).alias("__hit"))
-            .select(*new_cols, hit)
+        new = (
+            rows.select(
+                *new_cols, hit,
+                *[flag.alias(f) for f, (flag, _) in fractional.items()],
+            )
             .observe(seen, *metrics)
-            .drop("__hit")
+            .drop(*fractional)
         )
 
         def check(version: DataFrame) -> None:
             got = seen.get
+            for f, (_, err) in fractional.items():
+                if got[f]:
+                    raise err
             for cdef in assigned_cols:
                 if cdef.not_null and got[f"nn_{cdef.name}"]:
                     raise NotNullViolation(
@@ -1379,9 +1390,10 @@ class MultiSQLSession:
                         f"UNIQUE violated for {state.name}.{cdef.name}"
                     )
 
-        checked = any(c.not_null or c.unique for c in assigned_cols)
-        self._commit(state, candidate, check if checked else None)
-        return Payload.affected("Update", seen.get["n"])
+        checked = fractional or any(
+            c.not_null or c.unique for c in assigned_cols
+        )
+        return new, seen, check if checked else None
 
     @classmethod
     def _wrap_values_variant(cls, body: str, positions: list[int]) -> str:
@@ -1429,12 +1441,17 @@ class MultiSQLSession:
         WHEN MATCHED THEN UPDATE SET c = expr, ... | DELETE
         WHEN NOT MATCHED THEN INSERT [(cols)] VALUES (exprs)``
 
-        Plan shape: one left join of the target against the source for
-        the matched branch (update/delete resolved column-wise, no
-        per-row loop), one anti join for inserts (validated through the
-        standard insert pipeline: defaults, AUTO_INCREMENT, NOT NULL,
-        UNIQUE).  A target row matching multiple source rows raises, as
-        the SQL standard requires — detected with one aggregation.
+        UPDATE or DELETE over a join, plus INSERT: the target left-joins
+        the source with ``matched`` as the ``__hit`` column, and the
+        matched branch is :meth:`_assign` (UPDATE SET) or a filter on
+        ``~__hit`` (DELETE).  The source rows the anti join leaves go
+        through :meth:`_insert_df`, appended to the matched-applied rows,
+        so the statement commits once.  That pass observes the target's
+        row count below the join and the joined row count above it: a
+        left join yields more rows than the target iff some target row
+        matched several source rows, which raises, as the SQL standard
+        requires.  The affected count is the rows updated, deleted or
+        inserted.
         """
         m = re.match(
             r"\s*MERGE\s+INTO\s+([\w.]+)(?:\s+AS\s+(\w+))?\s+USING\s+(.*)$",
@@ -1514,100 +1531,33 @@ class MultiSQLSession:
         # dotted refs (`db.t.col` -> `db__t.col`), so aliasing the target
         # the same way keeps qualified ON/SET references resolvable
         talias = talias or state.name
-        base = _materialize(
-            state.df.withColumn("__rid", F.monotonically_increasing_id())
-        )
-        t = base.alias(talias)
+        target = Observation()
+        t = state.df.observe(target, F.count(F.lit(1)).alias("n"))
         s = src_df.withColumn("__m", F.lit(1)).alias(salias)
         cond = F.expr(self._rewrite_fragment(on_src))
-        joined = t.join(s, cond, "left")
-        matched = F.col(f"{salias}.__m").isNotNull()
-        dup = (
-            joined.groupBy("__rid")
-            .agg(F.coalesce(F.sum("__m"), F.lit(0)).alias("__k"))
-            .filter(F.col("__k") > 1)
-            .count()
+        rows = t.alias(talias).join(s, cond, "left").select(
+            "*", F.col(f"{salias}.__m").isNotNull().alias("__hit")
         )
-        if dup:
-            raise EngineError(
-                "MERGE: a target row matches multiple source rows"
-            )
-        n_matched = joined.filter(matched).count()
-
-        assignments: dict[str, object] = {}
-        if upd_sets is not None:
-            for part in self._split_top_level(upd_sets):
-                col, expr = part.split("=", 1)
-                col = col.strip().strip('`"').lower()
-                if col.startswith(talias.lower() + "."):
-                    col = col[len(talias) + 1:]
-                assignments[col] = F.expr(
-                    self._rewrite_fragment(expr.strip())
-                )
-            probe = joined.limit(0)
-            for col, expr in assignments.items():
-                cdef = state.column(col)
-                if cdef is None:
-                    raise ColumnNotFoundError(f"column not found: {col}")
-                ptype = probe.select(expr.alias("_p")).schema[0].dataType
-                _check_write_type(cdef, ptype, state.name)
-
-        new_cols = []
-        for cdef in state.columns:
-            old = F.col(f"{talias}.{cdef.name}")
-            if cdef.name.lower() in assignments:
-                assigned = assignments[cdef.name.lower()]
-                if cdef.type_str == "variant":
-                    # Any column: CASE branches must agree — convert first
-                    assigned = assigned.cast(
-                        state.df.schema[cdef.name].dataType
-                    )
-                new = (
-                    F.when(matched, assigned)
-                    .otherwise(old)
-                    .cast(state.df.schema[cdef.name].dataType)
-                )
-                new_cols.append(new.alias(cdef.name))
-            else:
-                new_cols.append(old.alias(cdef.name))
-        result = joined
+        new, seen, assign_check = self._assign(state, rows, talias, upd_sets)
         if matched_delete:
-            result = result.filter(~matched)
-        candidate = result.select(*new_cols)
-        # post-update constraint checks in one aggregation (as in _update)
-        checks: list = []
-        for cdef in state.columns:
-            if cdef.name.lower() not in assignments:
-                continue
-            if cdef.not_null:
-                checks.append(
-                    F.coalesce(
-                        F.sum(F.col(cdef.name).isNull().cast("int")), F.lit(0)
-                    ).alias(f"__nn_{cdef.name}")
+            new = new.filter(~F.col("__hit"))
+        candidate = new.drop("__hit")
+
+        def check(version: DataFrame) -> None:
+            if seen.get["rows"] > target.get["n"]:
+                raise EngineError(
+                    "MERGE: a target row matches multiple source rows"
                 )
-            if cdef.unique:
-                checks.append(
-                    (
-                        F.count(_uq_key(cdef))
-                        - F.count_distinct(_uq_key(cdef))
-                    ).alias(f"__uq_{cdef.name}")
-                )
-        if checks:
-            stats = candidate.agg(*checks).collect()[0]
-            for cdef in state.columns:
-                if cdef.name.lower() not in assignments:
-                    continue
-                if cdef.not_null and stats.asDict().get(f"__nn_{cdef.name}"):
-                    raise NotNullViolation(
-                        f"NOT NULL violated for {state.name}.{cdef.name}"
-                    )
-                if cdef.unique and stats.asDict().get(f"__uq_{cdef.name}"):
-                    raise UniqueViolation(
-                        f"UNIQUE violated for {state.name}.{cdef.name}"
-                    )
+            if assign_check is not None:
+                assign_check(version)
+
+        def n_changed() -> int:
+            matched = upd_sets is not None or matched_delete
+            return seen.get["n"] if matched else 0
+
         if ins_clause is None:
-            self._commit(state, candidate)
-            return Payload.affected("Merge", n_matched)
+            self._commit(state, candidate, check)
+            return Payload.affected("Merge", n_changed())
 
         mi = re.match(
             r"(?i)INSERT\s*(?:\(([^)]*)\)\s*)?VALUES\s*\((.*)\)\s*$",
@@ -1626,7 +1576,7 @@ class MultiSQLSession:
         if len(exprs) != len(stated):
             raise EngineError("MERGE INSERT: column/value count mismatch")
         anti = src_df.alias(salias).join(
-            base.alias(talias), cond, "left_anti"
+            state.df.alias(talias), cond, "left_anti"
         )
         ins_df = anti.select(
             *[
@@ -1636,16 +1586,11 @@ class MultiSQLSession:
         )
         # one commit for both branches: the inserted rows are validated
         # against, and appended to, the target with the matched branch
-        # applied, so a rejected insert leaves the table unchanged
-        matched_applied = (
-            _materialize(candidate)
-            if upd_sets is not None or matched_delete
-            else state.df
-        )
+        # applied, so a rejected statement leaves the table unchanged
         n_inserted = self._insert_df(
-            state, ins_df, stated, existing=matched_applied
+            state, ins_df, stated, existing=candidate, check=check
         ).count
-        return Payload.affected("Merge", n_matched + n_inserted)
+        return Payload.affected("Merge", n_changed() + n_inserted)
 
     def _delete(self, stmt: str) -> Payload:
         m = re.match(

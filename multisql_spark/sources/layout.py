@@ -141,6 +141,10 @@ def compact_dir(spark, path: str, n_files: int = 1) -> int:
     import tempfile
 
     df = spark.read.parquet(path)
+    # the scan packs small files into as few partitions as the cores
+    # allow, and coalesce only merges: spread fewer partitions out
+    if df.rdd.getNumPartitions() < n_files:
+        df = df.repartition(n_files)
     tmp = tempfile.mkdtemp(prefix="msql_compact_")
     df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
     old = tempfile.mkdtemp(prefix="msql_compact_old_")

@@ -223,7 +223,9 @@ def test_insert_action_budget(glue, spark, tmp_path):
     observed on that pass: the Spark jobs a warm single-row statement
     runs stay within its budget.  Managed INSERT: the batch, the
     broadcast of its key and the commit; attached INSERT: the batch and
-    the write-back; UPDATE and DELETE: the one commit pass."""
+    the write-back; UPDATE and DELETE: the one commit pass.  MERGE adds
+    the source's broadcast and, checked, the stored version; an upsert
+    adds the inserted batch and its key's broadcast."""
     from multisql_spark.session import UniqueViolation
 
     _fresh(glue, "jb")
@@ -238,21 +240,38 @@ def test_insert_action_budget(glue, spark, tmp_path):
             glue.execute("INSERT INTO jb (pk, fk, val) VALUES (5, 1, 0.5)")
         return 0
 
-    budgets = [  # (statement, most jobs it may run)
-        ("INSERT INTO jb (pk, fk, val) VALUES ({k}, 1, 0.5)", 3),
-        ("UPDATE jb SET fk = 3, val = 0.25 WHERE pk = {k}", 1),
-        ("DELETE FROM jb WHERE pk = {k}", 1),
-        ("INSERT INTO jbatt.t (pk, fk, val) VALUES ({k}, 1, 0.5)", 2),
-        ("UPDATE jbatt.t SET fk = 3, val = 0.25 WHERE pk = {k}", 1),
-        ("DELETE FROM jbatt.t WHERE pk = {k}", 1),
+    budgets = [  # (statement, most jobs it may run, rows it affects)
+        ("INSERT INTO jb (pk, fk, val) VALUES ({k}, 1, 0.5)", 3, 1),
+        ("UPDATE jb SET fk = 3, val = 0.25 WHERE pk = {k}", 1, 1),
+        ("DELETE FROM jb WHERE pk = {k}", 1, 1),
+        ("INSERT INTO jbatt.t (pk, fk, val) VALUES ({k}, 1, 0.5)", 2, 1),
+        ("UPDATE jbatt.t SET fk = 3, val = 0.25 WHERE pk = {k}", 1, 1),
+        ("DELETE FROM jbatt.t WHERE pk = {k}", 1, 1),
     ]
+    for t in ("jb", "jbatt.t"):
+        budgets += [
+            (f"INSERT INTO {t} (pk, fk, val) VALUES ({{k}}, 1, 0.5)", 3, 1),
+            (f"MERGE INTO {t} USING (SELECT {{k}} AS pk, 4 AS fk) AS s"
+             f" ON {t}.pk = s.pk WHEN MATCHED THEN UPDATE SET fk = s.fk",
+             4, 1),
+            (f"MERGE INTO {t} USING (SELECT {{k}} AS pk) AS s"
+             f" ON {t}.pk = s.pk WHEN MATCHED THEN DELETE", 4, 1),
+            (f"INSERT INTO {t} (pk, fk, val) VALUES ({{k}}, 1, 0.5)", 3, 1),
+            # an upsert: one matched row and one inserted row
+            (f"MERGE INTO {t} USING (SELECT * FROM VALUES ({{k}}, 5),"
+             f" ({{k}} + 1000, 5) AS v(pk, fk)) AS s ON {t}.pk = s.pk"
+             " WHEN MATCHED THEN UPDATE SET fk = s.fk"
+             " WHEN NOT MATCHED THEN INSERT (pk, fk, val)"
+             " VALUES (s.pk, s.fk, 0.0)", 8, 2),
+            (f"DELETE FROM {t} WHERE pk >= {{k}}", 1, 2),
+        ]
     try:
         for k in (9000, 9001):  # the first round warms up, the second counts
             ran = []
-            for sql, budget in budgets:
+            for sql, budget, affected in budgets:
                 stmt = sql.format(k=k)
                 n, out = _jobs_of(spark, lambda: glue.execute(stmt))
-                assert out.count == 1, stmt
+                assert out.count == affected, stmt
                 ran.append((stmt, n, budget))
             n, _ = _jobs_of(spark, dup_insert)
             ran.append(("duplicate-key INSERT", n, 3))
@@ -499,12 +518,25 @@ def test_merge_upsert_delete_and_errors(glue):
     assert sorted(glue.execute("SELECT * FROM m_t").rows) == [
         (1, "a", 10), (2, "B", 21), (3, "c", 30), (4, "D", 0),
     ]
-    glue.execute(
+    p = glue.execute(
         "MERGE INTO m_t USING (SELECT 4 AS id) AS s ON m_t.id = s.id"
         " WHEN MATCHED THEN DELETE"
     )
+    assert p.count == 1
     assert sorted(r[0] for r in glue.execute("SELECT id FROM m_t").rows) \
         == [1, 2, 3]
+    # the affected count is the rows updated, deleted or inserted: an
+    # insert-only MERGE does not count the matched rows it leaves alone
+    p = glue.execute(
+        "MERGE INTO m_t USING (SELECT 2 AS id, 'X' AS v UNION ALL"
+        " SELECT 5, 'e') AS s ON m_t.id = s.id"
+        " WHEN NOT MATCHED THEN INSERT (id, v, n) VALUES (s.id, s.v, 5)"
+    )
+    assert p.count == 1
+    assert sorted(glue.execute("SELECT * FROM m_t").rows) == [
+        (1, "a", 10), (2, "B", 21), (3, "c", 30), (5, "e", 5),
+    ]
+    glue.execute("DELETE FROM m_t WHERE id = 5")
     glue.execute("INSERT INTO m_s VALUES (2,'Z')")
     with pytest.raises(EngineError, match="multiple source rows"):
         glue.execute(
@@ -516,6 +548,46 @@ def test_merge_upsert_delete_and_errors(glue):
             "MERGE INTO m_t USING m_s ON m_t.id = m_s.id"
             " WHEN NOT MATCHED THEN DELETE"
         )
+
+
+def test_update_and_merge_assign_alike(glue):
+    """UPDATE and a matched MERGE UPDATE take one assignment path: the
+    same SET expression is accepted by both with equal rows when every
+    `int / int` value it assigns to an INTEGER column is integral, and
+    rejected by both with the same error when a value is fractional."""
+
+    def fresh():
+        _fresh(glue, "divp")
+        glue.execute("CREATE TABLE divp (id INTEGER, n INTEGER)")
+        glue.execute("INSERT INTO divp VALUES (1, 10), (2, 21)")
+
+    def update(expr):
+        return f"UPDATE divp SET n = {expr}"
+
+    def merge(expr):
+        return (
+            "MERGE INTO divp USING (SELECT 1 AS id UNION ALL SELECT 2) AS s"
+            f" ON divp.id = s.id WHEN MATCHED THEN UPDATE SET n = {expr}"
+        )
+
+    for expr in ("n / 2", "divp.n / 2"):
+        got = []
+        for stmt in (update(expr), merge(expr)):
+            fresh()
+            assert glue.execute(stmt).count == 2, stmt
+            got.append(sorted(glue.execute("SELECT * FROM divp").rows))
+        assert got == [[(1, 5), (2, 10)]] * 2, expr
+    errors = []
+    for stmt in (update("n / 4.0"), merge("n / 4.0")):
+        fresh()
+        with pytest.raises(EngineError) as err:
+            glue.execute(stmt)
+        errors.append(str(err.value))
+        assert sorted(glue.execute("SELECT * FROM divp").rows) == [
+            (1, 10), (2, 21),
+        ], stmt
+    assert errors[0] == errors[1], errors
+    assert "incompatible data type for divp.n" in errors[0]
 
 
 def test_insert_overwrite_replaces_contents(glue):
@@ -826,6 +898,14 @@ def test_rejected_attached_writes_leave_file_unchanged(glue, tmp_path):
             (UniqueViolation,
              "INSERT INTO rjatt.t (pk, fk, val, nn) VALUES (2, 40, 3.5, 1)"),
             (UniqueViolation, "UPDATE rjatt.t SET pk = 1 WHERE pk = 3"),
+            # MERGE's checks run on its commit pass, after the version is
+            # stored and before the write-back
+            (EngineError,
+             "MERGE INTO rjatt.t USING (SELECT 1 AS pk UNION ALL SELECT 1)"
+             " AS s ON rjatt.t.pk = s.pk WHEN MATCHED THEN UPDATE SET fk = 9"),
+            (NotNullViolation,
+             "MERGE INTO rjatt.t USING (SELECT 2 AS pk) AS s"
+             " ON rjatt.t.pk = s.pk WHEN MATCHED THEN UPDATE SET nn = NULL"),
         ]
         for exc, sql in rejected:
             with pytest.raises(exc):

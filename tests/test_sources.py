@@ -101,6 +101,26 @@ def test_attached_database_write_back(spark, sf_dir, tmp_path_factory):
     assert all(rk != 0 for rk, _ in rows)
 
 
+def test_csv_write_back_keeps_column_types(spark, tmp_path):
+    """The write-back re-reads the file with the schema it just wrote:
+    an UPDATE that leaves a text column holding only digits does not
+    retype it, so later text values still insert."""
+    p = tmp_path / "c.csv"
+    p.write_text("id,code\n1,x01\n2,x02\n")
+    g = MultiSQLSession(spark)
+    g.execute(f"CREATE DATABASE cdb LOCATION '{p}'")
+    try:
+        before = g.tables["cdb__c"].df.dtypes
+        assert g.execute("UPDATE cdb.c SET code = '7'").count == 2
+        assert g.tables["cdb__c"].df.dtypes == before
+        g.execute("INSERT INTO cdb.c VALUES (3, 'x03')")
+        assert sorted(g.execute("SELECT id, code FROM cdb.c").rows) == [
+            (1, "7"), (2, "7"), (3, "x03"),
+        ]
+    finally:
+        g.execute("DROP DATABASE cdb")
+
+
 def test_orc_database_roundtrip(spark, sf_dir, tmp_path_factory):
     """ORC backend (attach-by-extension, Spark-native columnar): scan,
     cross-source join, and DML write-back surviving a fresh attach."""
