@@ -47,7 +47,7 @@ from pyspark.sql import types as T
 
 from multisql_spark import dialect
 from multisql_spark.payload import Payload
-from multisql_spark.tables import local_session
+from multisql_spark.tables import local_session, tune_session
 
 
 class EngineError(Exception):
@@ -201,6 +201,33 @@ def assign_dense_ids(
     return df.withColumn(col, (offset + local_pos + 1).cast(dtype))
 
 
+def _local_relation(
+    spark: SparkSession, schema: T.StructType, rows: list[tuple] = ()
+) -> DataFrame:
+    """``rows`` in ``schema`` as a DataFrame whose plan is one
+    ``LocalRelation``: a stored leaf that carries its size estimate, so a
+    join over it can be planned as a broadcast and a version built from
+    it stays sized.  (``createDataFrame`` of a Python list plans a
+    ``LogicalRDD`` of unknown size instead.)  The rows go through an
+    Arrow table in the schema's types; a row of the wrong length or a
+    value its column's type cannot hold raises :class:`EngineError`."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    if any(len(r) != len(arrow) for r in rows):
+        raise EngineError(f"each row must carry {len(arrow)} values")
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    try:
+        table = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(columns, arrow)],
+            schema=arrow,
+        )
+    except (pa.ArrowException, OverflowError) as exc:
+        raise EngineError(f"incompatible data: {exc}") from exc
+    return spark.createDataFrame(table, schema)
+
+
 def _spark_type(t: str) -> T.DataType:
     return {
         "boolean": T.BooleanType(),
@@ -336,9 +363,12 @@ class MultiSQLSession:
     ``Glue``)."""
 
     def __init__(self, spark: SparkSession | None = None):
-        if spark is None:
-            spark = local_session("multisql_spark")
-        self.spark = spark
+        # a handed-in session runs the engine's runtime confs too, as
+        # load_tables does: both constructors plan with the same engine
+        self.spark = (
+            local_session("multisql_spark") if spark is None
+            else tune_session(spark)
+        )
         self.variables: dict[str, str] = {}
         self.tables: dict[str, TableState] = {}
         self.views: dict[str, str] = {}
@@ -458,20 +488,19 @@ class MultiSQLSession:
     def insert_vec(
         self, table: str, columns: list[str], rows: list[tuple]
     ) -> Payload:
-        """Programmatic bulk insert (reference src/glue/mod.rs:190-248)."""
+        """Programmatic bulk insert (reference src/glue/mod.rs:190-248).
+        The rows become a sized batch in the named columns' types; a value
+        that type cannot hold raises :class:`EngineError`."""
         state = self._table(table)
-        schema = T.StructType(
-            [
-                T.StructField(
-                    c,
-                    _spark_type(state.column(c).type_str)
-                    if state.column(c)
-                    else T.StringType(),
-                )
-                for c in columns
-            ]
-        )
-        df = self.spark.createDataFrame(rows, schema)
+        fields = []
+        for c in columns:
+            cdef = state.column(c)
+            if cdef is None:
+                raise ColumnNotFoundError(f"column not found: {c}")
+            fields.append(
+                T.StructField(c, state.df.schema[cdef.name].dataType)
+            )
+        df = _local_relation(self.spark, T.StructType(fields), rows)
         return self._insert_df(state, df, columns)
 
     def register_udf(
@@ -653,8 +682,16 @@ class MultiSQLSession:
         if kind not in ("parquet", "csv", "json", "orc"):
             raise EngineError(f"unwritable backend: {kind}")
         opts = {"header": True} if kind == "csv" else {}
+        # CSV holds no VARIANT: a discerned-ANY column is written as its
+        # cells' text and read back through the attach's parse chain, so
+        # every row keeps its own kind
+        anys = [
+            f.name for f in state.df.schema.fields
+            if kind == "csv" and isinstance(f.dataType, T.VariantType)
+        ]
+        out = state.df.withColumns({c: F.col(c).cast("string") for c in anys})
         tmp = tempfile.mkdtemp(prefix="msql_flush_")
-        state.df.coalesce(1).write.mode("overwrite").options(**opts).format(
+        out.coalesce(1).write.mode("overwrite").options(**opts).format(
             kind
         ).save(tmp)
         part = glob.glob(os.path.join(tmp, "part-*"))[0]
@@ -665,9 +702,16 @@ class MultiSQLSession:
         # it with that schema: no inference job, and the text formats'
         # column types cannot drift with the values an update wrote
         state.df = (
-            self.spark.read.schema(state.df.schema).options(**opts)
+            self.spark.read.schema(out.schema).options(**opts)
             .format(kind).load(state.persist_path)
         )
+        if anys:
+            from multisql_spark.sources import _csv_any_variant_expr
+
+            state.df = state.df.select(*[
+                _csv_any_variant_expr(c) if c in anys else F.col(c)
+                for c in state.df.columns
+            ])
         state.df.createOrReplaceTempView(state.name)
 
     def _execute_one(self, stmt: str) -> Payload:
@@ -781,7 +825,7 @@ class MultiSQLSession:
                 for c in columns
             ]
         )
-        df = self.spark.createDataFrame([], schema)
+        df = _local_relation(self.spark, schema)
         self._register(
             TableState(
                 name, columns, df,
@@ -1117,7 +1161,8 @@ class MultiSQLSession:
         One pass per stored copy.  The aligned batch is materialized once,
         observing its row count, NULL counts, AUTO_INCREMENT fill counts
         and UNIQUE key counts.  The commit pass builds the new version and
-        observes how many batch keys hit ``existing``; that check runs
+        observes how many rows of ``existing`` an anti join against the
+        batch's keys drops; that check runs
         before the swap (:meth:`_commit`), after the caller's ``check``
         of what ``existing``'s own plan observed on the same pass.  The
         one DISTINCT count, for duplicates within the batch, runs only
@@ -1187,34 +1232,37 @@ class MultiSQLSession:
                         )
 
             # collisions with existing rows, counted on the commit pass: the
-            # existing rows left-join the batch's (now distinct) keys, so each
-            # keeps its one output row, and the matches are observed.  Spark
-            # picks the join from the batch's size statistics: a small batch
-            # (VALUES) is broadcast and the existing rows keep their order; a
-            # large or unsized one (insert_vec, INSERT … SELECT over a source
-            # without statistics) is shuffle-joined, which moves the
-            # existing rows and leaves them in the join's order
-            probe, hit_counts = existing, []
+            # existing rows anti-join each UNIQUE column's batch keys, and
+            # the row count is observed below every anti join and above the
+            # last, so a row dropped is a collision.  An anti join is
+            # estimated at its left side's size, so the version's estimate
+            # stays the existing rows' plus the batch's.  While the keys are
+            # under the broadcast threshold, the existing rows stream past
+            # them and keep their order
+            probe, counted = existing, []
             for i, cdef in enumerate(keyed):
                 k = f"__uq_{i}"
                 keys = aligned.select(_uq_key(cdef).alias(k)).filter(
                     F.col(k).isNotNull()
                 )
-                probe = probe.join(keys, _uq_key(cdef) == F.col(k), "left")
-                hit_counts.append(F.count(k).alias(cdef.name))
+                counted.append(Observation())
+                probe = probe.observe(
+                    counted[-1], F.count(F.lit(1)).alias("n")
+                ).join(keys, _uq_key(cdef) == F.col(k), "left_anti")
             if keyed:
-                hits = Observation()
-                existing = probe.observe(hits, *hit_counts).select(
-                    *existing.columns
+                counted.append(Observation())
+                existing = probe.observe(
+                    counted[-1], F.count(F.lit(1)).alias("n")
                 )
 
             def check_all(version: DataFrame) -> None:
                 if check is not None:
                     check(version)
-                for col, n_hit in hits.get.items() if keyed else ():
-                    if n_hit:
+                n = [o.get["n"] for o in counted]
+                for cdef, before, after in zip(keyed, n, n[1:]):
+                    if before != after:
                         raise UniqueViolation(
-                            f"UNIQUE violated for {state.name}.{col}"
+                            f"UNIQUE violated for {state.name}.{cdef.name}"
                         )
 
             # assign AUTO_INCREMENT ids only after validation passed, and

@@ -3,7 +3,8 @@
 The driver hands us an arbitrary SparkSession; we pin the runtime confs we
 depend on (UTC session timezone so timestamp semantics line up with the
 DuckDB oracle, AQE on, sane shuffle parallelism for local mode) — all of
-these are runtime-settable.  Sessions this repo starts itself (tests,
+these are runtime-settable, and :func:`load_tables` and
+``MultiSQLSession(spark)`` set them on the session they are given.  Sessions this repo starts itself (tests,
 tools, ``bench.py``, ``MultiSQLSession()``) come from :func:`local_session`,
 which adds the start-up confs and then applies the same runtime confs.
 """

@@ -919,10 +919,11 @@ def test_rejected_attached_writes_leave_file_unchanged(glue, tmp_path):
 
 
 def test_collision_check_without_broadcast(glue, spark):
-    """With broadcast joins off, the commit pass's collision count runs
-    as a shuffle join (as it does for any unsized ``insert_vec`` batch):
-    a multi-row batch carrying one existing key is rejected, and a batch
-    with no colliding key commits exactly its rows."""
+    """With broadcast joins off, the commit pass's collision check runs
+    as a shuffled anti join (as it does for a batch whose keys are too
+    large to broadcast): a multi-row batch carrying one existing key is
+    rejected, and a batch with no colliding key commits exactly its
+    rows."""
     from multisql_spark.session import UniqueViolation
 
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -1061,3 +1062,109 @@ def test_factory_tunes_session_without_load_tables(spark, monkeypatch):
         assert worker == "pyspark_graft_worker"
     finally:
         tables.tune_session(spark)
+
+
+def test_handed_in_session_runs_engine_confs(spark):
+    """``MultiSQLSession(spark)`` sets the engine's runtime confs on the
+    session it is given, as ``load_tables`` does, so both constructors
+    plan with the same confs.  A new session starts from the defaults."""
+    from multisql_spark.tables import _SESSION_CONFS
+
+    fresh = spark.newSession()
+    assert fresh.conf.get("spark.sql.shuffle.partitions") != (
+        _SESSION_CONFS["spark.sql.shuffle.partitions"]
+    )
+    g = MultiSQLSession(fresh)
+    assert g.spark is fresh
+    for key, value in _SESSION_CONFS.items():
+        assert fresh.conf.get(key) == value, key
+
+
+def _size_in_bytes(df):
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
+def test_versions_carry_their_size(glue):
+    """A managed table's stored version carries a size estimate that
+    tracks its rows, through CREATE, an ``insert_vec`` load, single-row
+    INSERTs, an UPDATE and a DELETE: finite and at most twice Catalyst's
+    own rows × row width.  So a join of two managed tables that fit under
+    the broadcast threshold is planned as a broadcast of the smaller."""
+    _fresh(glue, "sz_a")
+    _fresh(glue, "sz_b")
+    glue.execute("CREATE TABLE sz_a (pk INTEGER PRIMARY KEY, v TEXT, f FLOAT)")
+    assert _size_in_bytes(glue.tables["sz_a"].df) < 2**63 - 1
+    glue.insert_vec("sz_a", ["pk", "v", "f"],
+                    [(i, f"s{i}", i / 3) for i in range(10_000)])
+    for i in range(20):
+        glue.execute(f"INSERT INTO sz_a VALUES ({20_000 + i}, 'x', 0.5)")
+    glue.execute("UPDATE sz_a SET v = 'u' WHERE pk = 5")
+    assert glue.execute("DELETE FROM sz_a WHERE pk = 6").count == 1
+    df = glue.tables["sz_a"].df
+    width = 8 + df._jdf.schema().defaultSize()  # Catalyst's row estimate
+    assert 0 < _size_in_bytes(df) <= 2 * 10_019 * width
+
+    glue.execute("CREATE TABLE sz_b (pk INTEGER PRIMARY KEY, fk INTEGER)")
+    for lo in (0, 50_000):
+        glue.insert_vec("sz_b", ["pk", "fk"],
+                        [(i, i % 10_000) for i in range(lo, lo + 50_000)])
+    plan = glue.sql(
+        "SELECT sz_a.pk, count(*) FROM sz_a JOIN sz_b ON sz_a.pk = sz_b.fk"
+        " GROUP BY sz_a.pk"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=false" in plan  # the initial plan, before AQE
+    join = next(ln for ln in plan.splitlines() if "Join" in ln)
+    assert "BroadcastHashJoin" in join and "BuildLeft" in join, plan
+
+
+def test_insert_vec_batches_keep_insertion_order(glue):
+    """100k rows loaded into a PK table by ``insert_vec`` in 5k-row
+    batches, at the default broadcast threshold: every batch's collision
+    check streams the stored rows against the broadcast batch keys, so
+    an unordered SELECT returns the rows in insertion order."""
+    _fresh(glue, "ordv")
+    glue.execute("CREATE TABLE ordv (pk INTEGER PRIMARY KEY, v INTEGER)")
+    keys = [(i * 7919) % 100_000 for i in range(100_000)]  # not sorted
+    for lo in range(0, 100_000, 5_000):
+        batch = [(k, lo) for k in keys[lo:lo + 5_000]]
+        assert glue.insert_vec("ordv", ["pk", "v"], batch).count == 5_000
+    got = [r[0] for r in glue.execute("SELECT pk FROM ordv").rows]
+    assert got == keys
+
+
+def test_insert_vec_rejects_values_its_types_cannot_hold(glue):
+    """``insert_vec`` builds its batch in the table's column types: a
+    value that type cannot hold, or a row of the wrong length, raises an
+    engine error and leaves the table unchanged."""
+    from multisql_spark.session import ColumnNotFoundError
+
+    _fresh(glue, "vt")
+    glue.execute("CREATE TABLE vt (a INTEGER, b TEXT NULL, c FLOAT NULL)")
+    glue.insert_vec("vt", ["a", "c"], [(1, 2)])  # an int into FLOAT widens
+    for rows in ([(2, "x", 0.5), ("three", "y", 0.5)],  # text into INTEGER
+                 [(2**63, "x", 0.5)],  # beyond the int64 range
+                 [(2, "x")]):  # a row of the wrong length
+        with pytest.raises(EngineError):
+            glue.insert_vec("vt", ["a", "b", "c"], rows)
+    with pytest.raises(ColumnNotFoundError):
+        glue.insert_vec("vt", ["a", "nope"], [(2, "x")])
+    assert glue.execute("SELECT a, b, c FROM vt").rows == [(1, None, 2.0)]
+
+
+def test_collision_names_its_unique_column(glue):
+    """With two UNIQUE columns, the commit pass's collision check names
+    the column whose key exists already, the first or the second, and a
+    rejected batch leaves the table unchanged."""
+    from multisql_spark.session import UniqueViolation
+
+    _fresh(glue, "uq2")
+    glue.execute("CREATE TABLE uq2 (a INTEGER UNIQUE, b TEXT UNIQUE)")
+    glue.insert_vec("uq2", ["a", "b"], [(1, "x"), (2, "y")])
+    with pytest.raises(UniqueViolation, match=r"uq2\.b$"):
+        glue.execute("INSERT INTO uq2 VALUES (3, 'z'), (4, 'y')")
+    with pytest.raises(UniqueViolation, match=r"uq2\.a$"):
+        glue.insert_vec("uq2", ["a", "b"], [(5, "v"), (2, "w")])
+    assert glue.execute("INSERT INTO uq2 VALUES (3, 'z')").count == 1
+    assert sorted(glue.execute("SELECT a, b FROM uq2").rows) == [
+        (1, "x"), (2, "y"), (3, "z")
+    ]

@@ -335,6 +335,27 @@ def test_csv_mixed_column_discerns_any(spark, tmp_path):
     assert all(isinstance(r[2], str) for r in out.rows)
 
 
+def test_csv_any_column_write_back(spark, tmp_path):
+    """A write to a CSV table with a discerned-ANY column goes back to
+    the file: the column is written as its cells' text and read back
+    through the attach's parse chain, so every row keeps its own kind,
+    in the session and on a fresh attach of the rewritten file."""
+    p = tmp_path / "mix.csv"
+    p.write_text("id,v\n1,7\n2,x\n")
+    g = MultiSQLSession(spark)
+    g.execute(f"CREATE DATABASE mixcsv LOCATION '{p}'")
+    assert g.execute("UPDATE mixcsv.mix SET v = 'y' WHERE id = 2").count == 1
+    assert g.execute("SELECT id, v FROM mixcsv.mix").rows == [(1, 7), (2, "y")]
+    g.execute("INSERT INTO mixcsv.mix VALUES (3, 2.5), (4, true)")
+    want = [(1, 7), (2, "y"), (3, 2.5), (4, True)]
+    assert g.execute("SELECT id, v FROM mixcsv.mix ORDER BY id").rows == want
+    fresh = MultiSQLSession(spark)
+    fresh.execute(f"CREATE DATABASE mixcsv2 LOCATION '{p}'")
+    got = fresh.execute("SELECT id, v FROM mixcsv2.mix ORDER BY id").rows
+    assert got == want
+    assert [type(v) for _, v in got] == [int, str, float, bool]
+
+
 def test_csv_any_cell_beyond_i64_degrades_to_f64(spark, tmp_path):
     """Reference parse chain (record.rs:7-15): a digit run that overflows
     i64 falls through to the f64 parse — the VARIANT conversion must
