@@ -215,6 +215,47 @@ def _split_args(tokens: list[tuple[str, str]]) -> list[list[tuple[str, str]]]:
     return [a for a in args if a or len(args) == 1]
 
 
+def _split_source(sql: str, *at: str) -> list[str]:
+    """Split ``sql`` at its depth-0 separators ``at`` into slices of its
+    source text, stripped and with comments removed (sqlparser drops
+    them too).
+
+    A separator is one punctuation token (``;``, ``,``, ``)``), which is
+    dropped, or a keyword sequence (``WHERE``, ``WHEN NOT MATCHED
+    THEN``), which begins the slice it introduces.  A paren stands at
+    the depth outside it, so ``)`` splits where a top-level group
+    closes.  Strings, quoted identifiers and comments are lexed by
+    ``_TOKEN_RE``, so a separator inside one is text; a character it
+    cannot lex passes through as text of its own (``tokenize`` is the
+    one that raises)."""
+    seps = [s.split() for s in at]
+    # every token's text (a comment is a space), and the position and
+    # upper-cased text of each one that is not blank
+    texts: list[str] = []
+    words: list[tuple[int, str]] = []
+    pos = 0
+    while pos < len(sql):
+        m = _TOKEN_RE.match(sql, pos)
+        end = m.end() if m else pos + 1
+        kind = m.lastgroup if m else "op"
+        if kind not in ("space", "comment"):
+            words.append((len(texts), sql[pos:end].upper()))
+        texts.append(" " if kind == "comment" else sql[pos:end])
+        pos = end
+    pieces: list[str] = []
+    start = depth = 0
+    for n, (i, word) in enumerate(words):
+        depth -= word == ")"
+        for sep in seps if depth == 0 else ():
+            if [w for _, w in words[n:n + len(sep)]] == sep:
+                pieces.append("".join(texts[start:i]).strip())
+                start = i if sep[0].isalpha() else i + 1
+                break
+        depth += word == "("
+    pieces.append("".join(texts[start:]).strip())
+    return pieces
+
+
 def _fmt_args(args: list[list[tuple[str, str]]]) -> list[str]:
     return [untokenize(a) for a in args]
 

@@ -14,6 +14,13 @@ the reference's ``execute_parsed`` does (``src/executor/execute.rs:55-177``):
 - ``EXPLAIN`` metadata introspection (``src/executor/other/explain.rs``)
 - ``EXECUTE FILE('x.sql')`` scripts (``src/executor/procedure.rs``)
 
+Statement text is lexed once, by the dialect's tokenizer, as the reference
+lexes it with sqlparser (``src/parse_sql.rs:6-17``): scripts split into
+statements, and statements into the clauses parsed here (column and SET
+lists, VALUES rows, WHERE, MERGE's source, ON and WHEN clauses), only at
+separators outside strings, quoted values, comments and parentheses
+(``dialect._split_source``).  Comments are dropped.
+
 Managed tables are materialized on commit, as the reference's storages
 rewrite a table on write: every INSERT, UPDATE, DELETE, MERGE and TRUNCATE
 computes the new version (INSERT = union with the validated batch, UPDATE =
@@ -327,37 +334,6 @@ def _check_write_type(
         )
 
 
-# --- statement splitting ----------------------------------------------------
-
-
-def split_statements(sql: str) -> list[str]:
-    out, cur, in_str = [], [], False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    cur.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-            cur.append(ch)
-        elif ch == ";":
-            if "".join(cur).strip():
-                out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if "".join(cur).strip():
-        out.append("".join(cur).strip())
-    return out
-
-
 class MultiSQLSession:
     """Session over a SparkSession + named storages (the reference's
     ``Glue``)."""
@@ -385,7 +361,7 @@ class MultiSQLSession:
         from pyspark.errors.exceptions.base import PySparkException
 
         out = []
-        for stmt in split_statements(sql):
+        for stmt in filter(None, dialect._split_source(sql, ";")):
             try:
                 out.append(self._execute_one(stmt))
             except (PySparkException, ValueError) as exc:
@@ -394,13 +370,10 @@ class MultiSQLSession:
                 # rejections as engine errors (the reference returns its own
                 # Error enum, not panics); well-known Spark error classes
                 # map to the matching typed family
-                cond = ""
-                for getter in ("getCondition", "getErrorClass"):
-                    try:
-                        cond = getattr(exc, getter)() or ""
-                        break
-                    except Exception:
-                        continue
+                cond = (
+                    exc.getCondition() or ""
+                    if isinstance(exc, PySparkException) else ""
+                )
                 if "TABLE_OR_VIEW_NOT_FOUND" in cond:
                     raise TableNotFoundError(str(exc)) from exc
                 if "UNRESOLVED_COLUMN" in cond or "MISSING_COLUMN" in cond:
@@ -715,9 +688,9 @@ class MultiSQLSession:
         state.df.createOrReplaceTempView(state.name)
 
     def _execute_one(self, stmt: str) -> Payload:
-        head = re.match(r"\s*([A-Za-z_]+)", stmt)
-        kw = head.group(1).upper() if head else ""
-        if kw in ("SELECT", "WITH", "VALUES") or stmt.strip().startswith("("):
+        first = dialect._TOKEN_RE.match(stmt)
+        kw = first.group().upper() if first else ""
+        if kw in ("SELECT", "WITH", "VALUES", "("):
             return Payload.select(self.sql(stmt))
         if kw == "CREATE":
             return self._create(stmt)
@@ -839,22 +812,9 @@ class MultiSQLSession:
     def _parse_columns(self, src: str) -> list[ColumnDef]:
         """Parse `name TYPE [options]` column defs (reference
         src/data/column.rs:27-79)."""
-        parts, depth, cur = [], 0, []
-        for ch in src:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-        if "".join(cur).strip():
-            parts.append("".join(cur))
         out = []
-        for part in parts:
-            tokens = part.strip().split()
+        for part in dialect._split_source(src, ","):
+            tokens = part.split()
             if not tokens:
                 continue
             col = ColumnDef(name=tokens[0].strip('`"'))
@@ -900,22 +860,14 @@ class MultiSQLSession:
             raise EngineError(f"cannot parse CREATE VIEW: {stmt[:80]}")
         name, query = m.groups()
         # reference accepts a parenthesized view body
-        # (tests/ability/alter/view/create_view.rs)
-        query = query.strip()
-        while query.startswith("(") and query.endswith(")"):
-            depth = 0
-            balanced = True
-            for i, ch in enumerate(query):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0 and i < len(query) - 1:
-                        balanced = False  # e.g. (SELECT a) UNION (SELECT b)
-                        break
-            if not balanced:
+        # (tests/ability/alter/view/create_view.rs).  A body that is one
+        # group closes its first top-level paren at its end: split there,
+        # `((q))` is ["((q)", ""] and `(a) UNION (b)` is ["(a", "UNION (b", ""]
+        while True:
+            group, *rest = dialect._split_source(query, ")")
+            if rest != [""] or not group.startswith("("):
                 break
-            query = query[1:-1].strip()
+            query = group[1:].strip()
         df = self.sql(query)
         df.createOrReplaceTempView(name)
         self.views[name.lower()] = query
@@ -1036,15 +988,25 @@ class MultiSQLSession:
         mode, name, cols_src, source = m.groups()
         overwrite = mode.upper().startswith("OVERWRITE")
         jt = self._jdbc_target(name)
-        if jt is not None:
-            if overwrite:
-                raise EngineError("jdbc databases are insert-only (append)")
-            return self._insert_jdbc(jt[0], jt[1], cols_src, source)
-        state = self._table(name)
+        if jt is None:
+            state = self._table(name)
+            declared = [c.name for c in state.columns]
+        elif overwrite:
+            raise EngineError("jdbc databases are insert-only (append)")
+        else:
+            # a JDBC target's default column list is the remote table's
+            state = None
+            remote = (
+                self.spark.read.format("jdbc")
+                .option("url", jt[0].path)
+                .option("dbtable", jt[1])
+                .load()
+            )
+            declared = remote.columns
         stated = (
             [c.strip().strip('`"') for c in cols_src.split(",")]
             if cols_src
-            else [c.name for c in state.columns]
+            else declared
         )
         src = source.strip()
         if src.upper().startswith("VALUES"):
@@ -1059,7 +1021,8 @@ class MultiSQLSession:
             variant_pos = [
                 i
                 for i, s in enumerate(stated)
-                if (c := state.column(s)) is not None
+                if state is not None
+                and (c := state.column(s)) is not None
                 and c.type_str == "variant"
             ]
             if variant_pos:
@@ -1070,6 +1033,8 @@ class MultiSQLSession:
         else:
             df = self.sql(src)
             df = df.toDF(*stated)
+        if state is None:
+            return self._insert_jdbc(jt[0], jt[1], remote, df, stated)
         # OVERWRITE replaces the data only: schema, constraints and the
         # auto-increment counter keep (TRUNCATE is the counter reset)
         return self._insert_df(
@@ -1077,35 +1042,14 @@ class MultiSQLSession:
         )
 
     def _insert_jdbc(
-        self, db, tbl: str, cols_src: str | None, source: str
+        self, db, tbl: str, remote: DataFrame, df: DataFrame,
+        stated: list[str],
     ) -> Payload:
         """JDBC (ODBC-equivalent) sink: batch append through the remote
         driver, mirroring the reference's insert-only ODBC DBMut
         (src/databases/odbc/mutable.rs — update/delete are unimplemented
         there too).  Rows are written in driver-side batches by Spark's
         JDBC writer (numPartitions × batchsize inserts)."""
-        remote = (
-            self.spark.read.format("jdbc")
-            .option("url", db.path)
-            .option("dbtable", tbl)
-            .load()
-        )
-        stated = (
-            [c.strip().strip('`"') for c in cols_src.split(",")]
-            if cols_src
-            else list(remote.columns)
-        )
-        src = source.strip()
-        if src.upper().startswith("VALUES"):
-            body = src[len("VALUES"):].strip()
-            alias_cols = ", ".join(stated)
-            df = self.spark.sql(
-                f"SELECT * FROM VALUES {self._rewrite_fragment(body)} "
-                f"AS __v({alias_cols})"
-            )
-        else:
-            df = self.sql(src)
-            df = df.toDF(*stated)
         # align to the reflected remote schema; unstated columns get NULL
         stated_lower = [s.lower() for s in stated]
         cols = []
@@ -1306,21 +1250,22 @@ class MultiSQLSession:
         """UPDATE … SET … [WHERE …]: the table's rows with the predicate
         as the ``__hit`` column, through :meth:`_assign`, committed in one
         pass that observes the updated-row count and the checks."""
+        head, *where = dialect._split_source(stmt, "WHERE")
         m = re.match(
-            r"\s*UPDATE\s+([\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
-            stmt,
+            r"\s*UPDATE\s+([\w.]+)\s+SET\s+(.*)$",
+            head,
             re.IGNORECASE | re.DOTALL,
         )
-        if not m:
+        if not m or len(where) > 1:
             raise EngineError(f"cannot parse UPDATE: {stmt[:80]}")
-        name, sets_src, where = m.groups()
+        name, sets_src = m.groups()
         if self._jdbc_target(name) is not None:
             # reference ODBC DBMut implements insert only
             # (src/databases/odbc/mutable.rs)
             raise EngineError("jdbc databases are insert-only")
         state = self._table(name)
         cond = (
-            F.expr(self._rewrite_fragment(where, state))
+            F.expr(self._rewrite_fragment(where[0][len("WHERE"):], state))
             if where else F.lit(True)
         )
         # the predicate is evaluated once per row, as a column that the
@@ -1353,7 +1298,7 @@ class MultiSQLSession:
         DISTINCT count of an assigned UNIQUE column runs over the stored
         version, only when a row was hit."""
         assignments = {}
-        for part in self._split_top_level(sets_src or ""):
+        for part in dialect._split_source(sets_src, ",") if sets_src else ():
             col, expr = part.split("=", 1)
             col = col.strip().strip('`"').lower()
             if col.startswith(alias.lower() + "."):
@@ -1443,43 +1388,21 @@ class MultiSQLSession:
         )
         return new, seen, check if checked else None
 
-    @classmethod
-    def _wrap_values_variant(cls, body: str, positions: list[int]) -> str:
+    @staticmethod
+    def _wrap_values_variant(body: str, positions: list[int]) -> str:
         """Rewrite a VALUES body ``(e, …), (e, …)`` wrapping the
         expressions at ``positions`` in CAST(… AS VARIANT)."""
-        tuples = cls._split_top_level(body)
         out_tuples = []
-        for tup in tuples:
-            t = tup.strip()
+        for t in dialect._split_source(body, ","):
             if not (t.startswith("(") and t.endswith(")")):
-                out_tuples.append(tup)
+                out_tuples.append(t)
                 continue
-            exprs = cls._split_top_level(t[1:-1])
+            exprs = dialect._split_source(t[1:-1], ",")
             for p in positions:
                 if p < len(exprs):
                     exprs[p] = f"CAST(({exprs[p]}) AS VARIANT)"
-            out_tuples.append("(" + ", ".join(e.strip() for e in exprs) + ")")
+            out_tuples.append("(" + ", ".join(exprs) + ")")
         return ", ".join(out_tuples)
-
-    @staticmethod
-    def _split_top_level(src: str) -> list[str]:
-        parts, depth, cur, in_str = [], 0, [], False
-        for ch in src:
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    parts.append("".join(cur))
-                    cur = []
-                    continue
-            cur.append(ch)
-        if cur:
-            parts.append("".join(cur))
-        return parts
 
     def _merge(self, stmt: str) -> Payload:
         """MERGE INTO (upsert) — beyond-reference DML the ingestion
@@ -1501,63 +1424,40 @@ class MultiSQLSession:
         requires.  The affected count is the rows updated, deleted or
         inserted.
         """
+        head, *clauses = dialect._split_source(
+            stmt, "ON", "WHEN MATCHED THEN", "WHEN NOT MATCHED THEN"
+        )
         m = re.match(
-            r"\s*MERGE\s+INTO\s+([\w.]+)(?:\s+AS\s+(\w+))?\s+USING\s+(.*)$",
-            stmt,
+            r"\s*MERGE\s+INTO\s+([\w.]+)(?:\s+AS\s+(\w+))?\s+USING\s+"
+            r"(.+?)(?:\s+(?:AS\s+)?(\w+))?$",
+            head,
             re.IGNORECASE | re.DOTALL,
         )
         if not m:
             raise EngineError(f"cannot parse MERGE: {stmt[:80]}")
-        tname, talias, rest = m.groups()
-        rest = rest.strip()
-        if rest.startswith("("):
-            depth = 0
-            end = None
-            in_str = False
-            for i, ch in enumerate(rest):
-                if ch == "'":
-                    in_str = not in_str
-                elif not in_str:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth == 0:
-                            end = i
-                            break
-            if end is None:
+        tname, talias, source, salias = m.groups()
+        if source.startswith("("):
+            if not source.endswith(")"):
                 raise EngineError("MERGE: unbalanced USING subquery")
-            src_df = self.sql(rest[1:end])
-            rest = rest[end + 1:]
-            salias_default = "s"
+            src_df = self.sql(source[1:-1])
+            salias = salias or "s"
         else:
-            m2 = re.match(r"([\w.]+)", rest)
-            if not m2:
-                raise EngineError("MERGE: missing USING source")
-            src_name = m2.group(1)
-            src_df = self._table(src_name).df
-            rest = rest[m2.end():]
-            salias_default = src_name.split(".")[-1]
-        m3 = re.match(
-            r"\s*(?:AS\s+)?(\w+)?\s*\bON\b(.*)$", rest, re.IGNORECASE | re.DOTALL
-        )
-        if not m3 or (m3.group(1) and m3.group(1).upper() == "ON"):
-            m3 = re.match(r"\s*ON\b(.*)$", rest, re.IGNORECASE | re.DOTALL)
-            if not m3:
-                raise EngineError("MERGE: missing ON condition")
-            salias, tail = None, m3.group(1)
-        else:
-            salias, tail = m3.group(1), m3.group(2)
-        salias = salias or salias_default
-        parts = re.split(
-            r"(?i)\bWHEN\s+(NOT\s+)?MATCHED\s+THEN\s+", tail
-        )
-        on_src = parts[0].strip()
+            src_df = self._table(source).df
+            salias = salias or source.split(".")[-1]
+        if not clauses or not re.match(r"(?i)ON\b", clauses[0]):
+            raise EngineError("MERGE: missing ON condition")
+        on_src = clauses[0][len("ON"):]
         upd_sets: str | None = None
         matched_delete = False
         ins_clause: str | None = None
-        for neg, action in zip(parts[1::2], parts[2::2]):
-            action = action.strip()
+        for clause in clauses[1:]:
+            w = re.match(
+                r"(?i)WHEN\s+(NOT\s+)?MATCHED\s+THEN\s*(.*)$", clause,
+                re.DOTALL,
+            )
+            if not w:
+                raise EngineError(f"cannot parse MERGE: {stmt[:80]}")
+            neg, action = w.groups()
             if neg:
                 if not re.match(r"(?i)INSERT\b", action):
                     raise EngineError("MERGE: NOT MATCHED supports INSERT only")
@@ -1620,7 +1520,7 @@ class MultiSQLSession:
             if cols_src
             else [c.name for c in state.columns]
         )
-        exprs = self._split_top_level(vals_src)
+        exprs = dialect._split_source(vals_src, ",")
         if len(exprs) != len(stated):
             raise EngineError("MERGE INSERT: column/value count mismatch")
         anti = src_df.alias(salias).join(
@@ -1628,7 +1528,7 @@ class MultiSQLSession:
         )
         ins_df = anti.select(
             *[
-                F.expr(self._rewrite_fragment(e.strip())).alias(c)
+                F.expr(self._rewrite_fragment(e)).alias(c)
                 for c, e in zip(stated, exprs)
             ]
         )
@@ -1723,11 +1623,7 @@ class MultiSQLSession:
         self.databases.pop(match)
         prefix = f"{match.lower()}__"
         for key in [k for k in self.tables if k.startswith(prefix)]:
-            state = self.tables.pop(key)
-            try:
-                self.spark.catalog.dropTempView(state.name)
-            except Exception:
-                pass
+            self.spark.catalog.dropTempView(self.tables.pop(key).name)
         return True
 
     # -- ALTER TABLE (reference src/executor/alter_table/) ------------------

@@ -58,12 +58,12 @@ def attach_database(
 
 
 def _read_parquet(spark: SparkSession, fpath: str):
-    """Parquet read that tolerates TIMESTAMP(NANOS) columns (stored as
-    long, converted to microsecond timestamps)."""
+    """Parquet read that tolerates TIMESTAMP(NANOS) columns: a tuned
+    session (``tables._SESSION_CONFS``) reads them as long, and they are
+    converted here to microsecond timestamps."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(fpath)
     try:
         arrow_schema = pq.read_schema(fpath)

@@ -529,3 +529,36 @@ def test_label_rule_bails_on_subqueries():
     ):
         out = rewrite(sql, int_division=True, schema=label_schema)
         assert "AS `" not in out, out
+
+
+# --- cluster 7: statement splitting (pure lexing, no Spark) ----------------
+
+_LITERAL_TEXT = st.lists(
+    st.sampled_from(
+        [";", ",", "'", '"', "--", "/*", "*/", "(", ")", "WHERE", " ", "\n",
+         "a"]
+    ),
+    max_size=12,
+).map("".join)
+
+
+def _quote(text: str, q: str) -> str:
+    return q + text.replace(q, q + q) + q
+
+
+@settings(max_examples=200, **SETTINGS)
+@given(
+    literals=st.lists(
+        st.tuples(_LITERAL_TEXT, st.sampled_from(["'", '"'])),
+        min_size=1,
+        max_size=5,
+    ),
+)
+def test_split_keeps_literals_whole(literals):
+    """A script of n ``SELECT <literal> AS c`` statements splits into n
+    statements, each carrying its literal unchanged, whatever separators,
+    quotes, comment openers, parens or keywords the literal holds."""
+    from multisql_spark.dialect import _split_source
+
+    stmts = [f"SELECT {_quote(t, q)} AS c" for t, q in literals]
+    assert _split_source(";\n".join(stmts), ";") == stmts

@@ -178,12 +178,65 @@ def test_execute_file(glue, tmp_path):
     _fresh(glue, "ef")
     script = tmp_path / "s.sql"
     script.write_text(
-        "CREATE TABLE ef (a INTEGER);"
-        "INSERT INTO ef (a) VALUES (1),(2);"
+        "-- header: builds ef; sums it\n"
+        "CREATE TABLE ef (a INTEGER, t TEXT);\n"
+        "/* two rows; one INSERT */\n"
+        "INSERT INTO ef (a, t) VALUES (1, \"x;y\"),(2, 'z'); -- a; b\n"
         "SELECT SUM(a) AS s FROM ef;"
     )
     out = glue.execute(f"EXECUTE FILE('{script}')")
     assert out.rows == [(3,)]
+    assert glue.execute("SELECT t FROM ef WHERE a = 1").rows == [("x;y",)]
+
+
+# Statements whose strings, quoted values or comments hold a separator
+# (`;`, `,`, `)`, WHERE, WHEN MATCHED THEN): each is split and parsed as
+# the reference's sqlparser lexes it.  The last three are guards on text
+# the engine already split right.
+_LEXED = [
+    ('INSERT INTO lx VALUES (1, "a;b"); SELECT s FROM lx',
+     ["s"], [("a;b",), ("x",), ("y",)]),
+    ("-- header\nSELECT 1 AS one", ["one"], [(1,)]),
+    ("SELECT 1 AS one -- a; b", ["one"], [(1,)]),
+    ("CREATE TABLE lx2 (id INTEGER, s TEXT DEFAULT 'a,b');"
+     " INSERT INTO lx2 (id) VALUES (1); SELECT * FROM lx2",
+     ["id", "s"], [(1, "a,b")]),
+    ("UPDATE lx SET s = 'p WHERE q' WHERE id = 2; SELECT * FROM lx",
+     ["id", "s"], [(1, "x"), (2, "p WHERE q")]),
+    ('UPDATE lx SET s = "c,d" WHERE id = 1; SELECT * FROM lx',
+     ["id", "s"], [(1, "c,d"), (2, "y")]),
+    ('MERGE INTO lx USING (SELECT 1 AS id, "e)f" AS s) AS src'
+     " ON lx.id = src.id WHEN MATCHED THEN UPDATE SET s = src.s;"
+     " SELECT * FROM lx",
+     ["id", "s"], [(1, "e)f"), (2, "y")]),
+    ("MERGE INTO lx USING (SELECT 2 AS id) AS src ON lx.id = src.id"
+     " WHEN MATCHED THEN UPDATE SET s = 'x WHEN MATCHED THEN y';"
+     " SELECT * FROM lx",
+     ["id", "s"], [(1, "x"), (2, "x WHEN MATCHED THEN y")]),
+    ("MERGE INTO lx USING (SELECT 1 AS id) AS src ON lx.id = src.id"
+     " WHEN MATCHED THEN UPDATE SET"
+     " s = CASE WHEN lx.id = 1 THEN 'one' ELSE 'other' END;"
+     " SELECT * FROM lx",
+     ["id", "s"], [(1, "one"), (2, "y")]),
+    ("UPDATE lx SET s = 'it''s, ok', id = id + 10 WHERE id = 1;"
+     " SELECT * FROM lx",
+     ["id", "s"], [(2, "y"), (11, "it's, ok")]),
+    ("CREATE VIEW lxv AS (SELECT 1 AS a) UNION (SELECT 2);"
+     " SELECT * FROM lxv",
+     ["a"], [(1,), (2,)]),
+]
+
+
+@pytest.mark.parametrize(
+    "script, labels, rows", _LEXED, ids=[f"lex{i}" for i in range(len(_LEXED))]
+)
+def test_statements_lex_like_the_reference(glue, script, labels, rows):
+    glue.execute("DROP TABLE IF EXISTS lx; DROP TABLE IF EXISTS lx2;"
+                 " DROP VIEW IF EXISTS lxv")
+    glue.execute("CREATE TABLE lx (id INTEGER, s TEXT);"
+                 " INSERT INTO lx VALUES (1, 'x'), (2, 'y')")
+    out = glue.execute(script)
+    assert (out.labels, sorted(out.rows)) == (labels, rows)
 
 
 def _jobs_of(spark, fn):

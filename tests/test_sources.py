@@ -300,6 +300,9 @@ def test_jdbc_scan_and_insert_roundtrip(spark, tmp_path):
     assert sorted(g.execute("SELECT a, b FROM remote.rt").rows) == [
         (1, "x"), (2, "y"), (3, "z"), (4, None)
     ]
+    # a double-quoted value is a string literal, and its `;` is text
+    g.execute('INSERT INTO remote.rt (a, b) VALUES (5, "p;q")')
+    assert g.execute("SELECT b FROM remote.rt WHERE a = 5").rows == [("p;q",)]
     with _pytest.raises(EngineError):
         g.execute("UPDATE remote.rt SET b = 'q'")
     with _pytest.raises(EngineError):
