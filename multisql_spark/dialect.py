@@ -196,22 +196,36 @@ def strftime_to_java(fmt: str) -> str:
     return fmt
 
 
-# --- call transforms -------------------------------------------------------
+# --- paren nesting ---------------------------------------------------------
+
+
+def _top(tokens: list[tuple[str, str]], start: int = 0):
+    """Yield ``(i, kind, text)`` for each token from ``start`` on that
+    stands at paren depth 0, a group's own parens included.  After a
+    stray ``)`` the depth is negative, so nothing is yielded until a
+    ``(`` brings it back to 0."""
+    depth = 0
+    for i in range(start, len(tokens)):
+        kind, text = tokens[i]
+        depth -= text == ")"
+        if depth == 0:
+            yield i, kind, text
+        depth += text == "("
+
+
+def _close(tokens: list[tuple[str, str]], i: int) -> int:
+    """The index of the ``)`` that closes the ``(`` at ``i``, or
+    ``len(tokens)`` if it never closes."""
+    # from the `(` on, the next depth-0 token is its `)`
+    top = _top(tokens, i)
+    next(top)
+    return next(top, (len(tokens),))[0]
 
 
 def _split_args(tokens: list[tuple[str, str]]) -> list[list[tuple[str, str]]]:
     """Split a paren-free-depth token list on top-level commas."""
-    args: list[list[tuple[str, str]]] = [[]]
-    depth = 0
-    for tok in tokens:
-        if tok[1] == "(":
-            depth += 1
-        elif tok[1] == ")":
-            depth -= 1
-        if tok[1] == "," and depth == 0:
-            args.append([])
-        else:
-            args[-1].append(tok)
+    cuts = [i for i, _, text in _top(tokens) if text == ","]
+    args = [tokens[a + 1:b] for a, b in zip([-1] + cuts, cuts + [len(tokens)])]
     return [a for a in args if a or len(args) == 1]
 
 
@@ -254,6 +268,9 @@ def _split_source(sql: str, *at: str) -> list[str]:
         depth += word == "("
     pieces.append("".join(texts[start:]).strip())
     return pieces
+
+
+# --- call transforms -------------------------------------------------------
 
 
 def _fmt_args(args: list[list[tuple[str, str]]]) -> list[str]:
@@ -395,15 +412,6 @@ def _xform_nullif(args: list[str]) -> str:
     return f"nullif(({args[0]}), ({args[1]}))"
 
 
-# Reference ValueType kind of each IIF branch, resolved statically:
-# - literals: quoted string, int, float, bool;
-# - bare columns (and alias.col paths): the reference kind of the
-#   column's Spark type from the session schema snapshot, installed by
-#   rewrite() for the duration of the statement's transform pass.
-# The engine rewrites on the driver thread only, so a module-level slot
-# (reset per rewrite() call) is safe.
-_IIF_COL_KINDS: dict[str, str] = {}
-
 _SPARK_KIND = {
     "boolean": "bool",
     "tinyint": "i64", "smallint": "i64", "int": "i64", "bigint": "i64",
@@ -455,8 +463,10 @@ class _KindTyper:
     column branches.  Any construct it does not understand types as
     None (unknown) — the dispatch then leaves the plain ``if()``."""
 
-    def __init__(self, tokens: list[tuple[str, str]]):
+    def __init__(self, tokens: list[tuple[str, str]],
+                 col_kinds: dict[str, str]):
         self.toks = tokens
+        self.col_kinds = col_kinds
         self.i = 0
 
     def peek(self) -> tuple[str, str] | None:
@@ -502,18 +512,6 @@ class _KindTyper:
             self.next()
             return self.factor()
         return self.primary()
-
-    def _skip_parens(self) -> None:
-        """Consume a balanced ``( ... )`` group (opening paren current)."""
-        depth = 0
-        while (t := self.next()) is not None:
-            if t[1] == "(":
-                depth += 1
-            elif t[1] == ")":
-                depth -= 1
-                if depth == 0:
-                    return
-        raise ValueError("unbalanced parens")
 
     def _call_args(self) -> list[str | None]:
         """Type each top-level comma-separated argument of a call whose
@@ -580,36 +578,31 @@ class _KindTyper:
                 if n2 is None or n2[0] not in ("ident", "qident"):
                     raise ValueError("bad column path")
                 path += "." + n2[1]
-            return _IIF_COL_KINDS.get(path.lower())
+            return self.col_kinds.get(path.lower())
         raise ValueError(f"untypeable token {text!r}")
 
     def _cast_kind(self) -> str | None:
         """CAST ( expr AS type ) — opening paren is next."""
-        assert self.next()[1] == "("
-        depth = 1
-        as_at = None
-        start = self.i
-        while depth and (t := self.next()) is not None:
-            if t[1] == "(":
-                depth += 1
-            elif t[1] == ")":
-                depth -= 1
-            elif depth == 1 and t[0] == "ident" and t[1].upper() == "AS":
-                as_at = self.i - 1
-        if depth:
+        as_i, close = _cast_as(self.toks, self.i)
+        if close == len(self.toks):
             raise ValueError("unbalanced CAST")
-        if as_at is None:
+        self.i = close + 1
+        if as_i is None:
             return None
-        ty = self.toks[as_at + 1]
+        ty = self.toks[as_i + 1]
         return _CAST_KINDS.get(ty[1].upper()) if ty[0] == "ident" else None
 
 
-def _iif_branch_kind(arg: str) -> str | None:
+def _iif_branch_kind(arg: str, col_kinds: dict[str, str]) -> str | None:
+    """The reference ValueType kind of one IIF branch, resolved
+    statically: literals, computed expressions, and bare columns (and
+    ``alias.col`` paths), whose kinds ``col_kinds`` gives from the
+    caller's schema snapshot (``_visible_schema``)."""
     s = arg.strip()
     if not s:
         return None
     try:
-        typer = _KindTyper(tokenize(s))
+        typer = _KindTyper(tokenize(s), col_kinds)
         kind = typer.expr()
         # a trailing unconsumed token means the fragment holds syntax the
         # typer does not model (CASE, BETWEEN, comparisons, ...) — unknown
@@ -618,7 +611,7 @@ def _iif_branch_kind(arg: str) -> str | None:
         return None
 
 
-def _xform_iif(args: list[str]) -> str:
+def _xform_iif(args: list[str], col_kinds: dict[str, str]) -> str:
     """Reference IIF (function.rs) over ``Value::Any``: the two branches
     may carry DIFFERENT types and the result takes the chosen branch's
     type per row (``IIF(1=1, 'String', 1)`` → Str, ``IIF(0=1, 'String',
@@ -636,7 +629,8 @@ def _xform_iif(args: list[str]) -> str:
     cond = args[0].strip()
     if cond.upper() == "NULL":
         raise ValueError("IIF condition must be BOOLEAN, found NULL")
-    ka, kb = _iif_branch_kind(args[1]), _iif_branch_kind(args[2])
+    ka = _iif_branch_kind(args[1], col_kinds)
+    kb = _iif_branch_kind(args[2], col_kinds)
     # a declared-Any (VARIANT) branch forces the wrap even when the other
     # branch's kind is unresolvable — plain if() cannot coerce VARIANT
     # against any other Spark type, while the reference succeeds
@@ -676,7 +670,7 @@ _CALL_TRANSFORMS = {
     "RAND": _xform_rand,
     "POW": _xform_pow,
     "NULLIF": _xform_nullif,
-    "IIF": _xform_iif,
+    "IIF": _xform_iif,  # also takes the statement's column kinds
 }
 
 _SIMPLE_RENAMES = {
@@ -686,7 +680,9 @@ _SIMPLE_RENAMES = {
 }
 
 
-def _transform(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+def _transform(
+    tokens: list[tuple[str, str]], col_kinds: dict[str, str]
+) -> list[tuple[str, str]]:
     out: list[tuple[str, str]] = []
     i = 0
     while i < len(tokens):
@@ -699,20 +695,13 @@ def _transform(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
             and (upper in _CALL_TRANSFORMS or upper in _SIMPLE_RENAMES)
         )
         if is_call:
-            depth = 0
-            j = i + 1
-            while j < len(tokens):
-                if tokens[j][1] == "(":
-                    depth += 1
-                elif tokens[j][1] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            inner = _transform(tokens[i + 2:j])
+            j = _close(tokens, i + 1)
+            inner = _transform(tokens[i + 2:j], col_kinds)
             if upper in _CALL_TRANSFORMS:
                 args = _fmt_args(_split_args(inner))
-                replacement = _CALL_TRANSFORMS[upper](args)
+                xf = _CALL_TRANSFORMS[upper]
+                replacement = (xf(args, col_kinds) if xf is _xform_iif
+                               else xf(args))
                 out.extend(tokenize(replacement))
             else:
                 out.append(("ident", _SIMPLE_RENAMES[upper]))
@@ -820,44 +809,17 @@ def _take_operand_forward(
     tokens: list[tuple[str, str]], i: int
 ) -> tuple[list[tuple[str, str]], int]:
     """Read the primary expression starting at ``i``."""
-    operand: list[tuple[str, str]] = []
+    start = i
     if i < len(tokens) and tokens[i][1] in ("+", "-"):
-        operand.append(tokens[i])
         i += 1
-    if i < len(tokens) and tokens[i][1] == "(":
-        depth = 0
-        while i < len(tokens):
-            tok = tokens[i]
-            operand.append(tok)
-            i += 1
-            if tok[1] == "(":
-                depth += 1
-            elif tok[1] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        return operand, i
     if i < len(tokens) and tokens[i][0] in ("ident", "number", "string"):
-        operand.append(tokens[i])
         i += 1
         # dotted name and/or call
         while i + 1 < len(tokens) and tokens[i][1] == "." and tokens[i + 1][0] == "ident":
-            operand.append(tokens[i])
-            operand.append(tokens[i + 1])
             i += 2
-        if i < len(tokens) and tokens[i][1] == "(":
-            depth = 0
-            while i < len(tokens):
-                tok = tokens[i]
-                operand.append(tok)
-                i += 1
-                if tok[1] == "(":
-                    depth += 1
-                elif tok[1] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-    return operand, i
+    if i < len(tokens) and tokens[i][1] == "(":
+        i = min(_close(tokens, i) + 1, len(tokens))
+    return tokens[start:i], i
 
 
 def _is_static_int(expr: str, int_cols: frozenset[str] | set[str]) -> bool:
@@ -913,145 +875,70 @@ _CAST_TYPE_MAP = {
 }
 
 
-def _rewrite_cast_timestamp(
-    tokens: list[tuple[str, str]]
-) -> list[tuple[str, str]]:
-    """``CAST(x AS TIMESTAMP)`` follows the reference's rule-less
-    fallback chain (cast.rs:249-252): epoch seconds, then every
-    DATETIME/DATE/TIME parse format — so ``CAST('03/02/2001 04:05' AS
-    TIMESTAMP)`` parses like the reference instead of erroring on
-    Spark's single ISO format."""
+def _cast_as(
+    tokens: list[tuple[str, str]], i: int
+) -> tuple[int | None, int]:
+    """For the CAST whose ``(`` is at ``i``: the index of its last
+    depth-1 ``AS`` (None if it has none) and of its closing paren."""
+    close = _close(tokens, i)
+    as_i = None
+    for j, kind, text in _top(tokens[i + 1:close]):
+        if kind == "ident" and text.upper() == "AS":
+            as_i = i + 1 + j
+    return as_i, close
+
+
+def _rewrite_casts(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Map each ``CAST``/``TRY_CAST(x AS T)`` to Spark, operand first:
+
+    - ``TIMESTAMP`` follows the reference's rule-less fallback chain
+      (cast.rs:249-252): epoch seconds, then every DATETIME/DATE/TIME
+      parse format — so ``CAST('03/02/2001 04:05' AS TIMESTAMP)`` parses
+      like the reference instead of erroring on Spark's single ISO
+      format;
+    - ``ANY`` is the identity in the reference — casting to
+      ``ValueType::Any`` returns the value unchanged
+      (value_type/cast.rs:14) — so only the parenthesized operand stays;
+    - reference type names (``_CAST_TYPE_MAP``) get their Spark names.
+
+    Only CAST argument lists are touched, so ``SELECT x AS float``
+    aliases stay as they are."""
     out: list[tuple[str, str]] = []
     i = 0
     while i < len(tokens):
         kind, text = tokens[i]
-        if (
+        if not (
             kind == "ident"
             and text.upper() in ("CAST", "TRY_CAST")
             and i + 1 < len(tokens)
             and tokens[i + 1][1] == "("
-        ):
-            # find the matching close paren and the depth-1 AS
-            depth = 0
-            as_i = close_i = -1
-            for j in range(i + 1, len(tokens)):
-                if tokens[j][1] == "(":
-                    depth += 1
-                elif tokens[j][1] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close_i = j
-                        break
-                elif (
-                    depth == 1
-                    and tokens[j][0] == "ident"
-                    and tokens[j][1].upper() == "AS"
-                ):
-                    as_i = j
-            if (
-                as_i > 0
-                and close_i == as_i + 2
-                and tokens[as_i + 1][1].upper() == "TIMESTAMP"
-            ):
-                inner = _rewrite_cast_timestamp(tokens[i + 2:as_i])
-                out.extend(
-                    tokenize(
-                        _ts_any_chain(
-                            untokenize(inner),
-                            try_=text.upper() == "TRY_CAST",
-                        )
-                    )
-                )
-                i = close_i + 1
-                continue
-        out.append((kind, text))
-        i += 1
-    return out
-
-
-def _strip_cast_any(
-    tokens: list[tuple[str, str]]
-) -> list[tuple[str, str]]:
-    """``CAST(x AS ANY)`` is the identity in the reference — casting to
-    ``ValueType::Any`` returns the value unchanged (value_type/cast.rs:14)
-    — so drop the CAST wrapper and keep the parenthesized operand."""
-    out: list[tuple[str, str]] = []
-    i, n = 0, len(tokens)
-    while i < n:
-        kind, text = tokens[i]
-        if (
-            kind == "ident"
-            and text.upper() in ("CAST", "TRY_CAST")
-            and i + 1 < n
-            and tokens[i + 1][1] == "("
-        ):
-            depth, j = 0, i + 1
-            while j < n:
-                if tokens[j][1] == "(":
-                    depth += 1
-                elif tokens[j][1] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if (
-                j < n
-                and j - 2 > i + 1
-                and tokens[j - 1][0] == "ident"
-                and tokens[j - 1][1].upper() == "ANY"
-                and tokens[j - 2][0] == "ident"
-                and tokens[j - 2][1].upper() == "AS"
-            ):
-                out.append(("punct", "("))
-                out.extend(_strip_cast_any(tokens[i + 2:j - 2]))
-                out.append(("punct", ")"))
-                i = j + 1
-                continue
-        out.append((kind, text))
-        i += 1
-    return out
-
-
-def _rewrite_cast_types(
-    tokens: list[tuple[str, str]]
-) -> list[tuple[str, str]]:
-    """Map reference type names inside CAST(… AS T) to Spark types.
-    Only rewrites within CAST/TRY_CAST argument lists so `SELECT x AS
-    float` aliases stay untouched."""
-    out: list[tuple[str, str]] = []
-    cast_depths: list[int] = []
-    depth = 0
-    i = 0
-    while i < len(tokens):
-        kind, text = tokens[i]
-        if text == "(":
-            prev = out[-1] if out else None
-            if (
-                prev
-                and prev[0] == "ident"
-                and prev[1].upper() in ("CAST", "TRY_CAST")
-            ):
-                cast_depths.append(depth + 1)
-            depth += 1
-        elif text == ")":
-            if cast_depths and cast_depths[-1] == depth:
-                cast_depths.pop()
-            depth -= 1
-        elif (
-            kind == "ident"
-            and text.upper() == "AS"
-            and cast_depths
-            and depth == cast_depths[-1]
-            and i + 1 < len(tokens)
-            and tokens[i + 1][0] == "ident"
-            and tokens[i + 1][1].upper() in _CAST_TYPE_MAP
         ):
             out.append((kind, text))
-            out.append(("ident", _CAST_TYPE_MAP[tokens[i + 1][1].upper()]))
-            i += 2
+            i += 1
             continue
-        out.append((kind, text))
-        i += 1
+        as_i, close = _cast_as(tokens, i + 1)
+        end = tokens[close:close + 1]  # the `)`, if the CAST closes
+        if as_i is None:
+            out += tokens[i:i + 2] + _rewrite_casts(tokens[i + 2:close]) + end
+            i = close + 1
+            continue
+        operand = _rewrite_casts(tokens[i + 2:as_i])
+        target = tokens[as_i + 1:close]
+        ty = target[0][1].upper() if end and len(target) == 1 else ""
+        if ty == "TIMESTAMP":
+            out += tokenize(_ts_any_chain(
+                untokenize(operand), try_=text.upper() == "TRY_CAST"
+            ))
+        elif ty == "ANY" and operand:
+            out += [("op", "("), *operand, ("op", ")")]
+        else:
+            if target and target[0][0] == "ident" and \
+                    target[0][1].upper() in _CAST_TYPE_MAP:
+                target = [("ident", _CAST_TYPE_MAP[target[0][1].upper()]),
+                          *target[1:]]
+            out += tokens[i:i + 2] + operand + [tokens[as_i]]
+            out += _rewrite_casts(target) + end
+        i = close + 1
     return out
 
 
@@ -1151,16 +1038,8 @@ def _visible_schema(
             return empty
     # collect FROM/JOIN relations (with aliases) at paren depth 0
     rels: list[tuple[str, str]] = []  # (alias, table_name)
-    i, depth, in_from = 0, 0, False
-    while i < len(tokens):
-        kind, text = tokens[i]
-        if text == "(":
-            depth += 1
-        elif text == ")":
-            depth -= 1
-        if depth:
-            i += 1
-            continue
+    in_from = False
+    for i, kind, text in _top(tokens):
         up = text.upper() if kind == "ident" else ""
         if up in ("FROM", "JOIN") or (in_from and text == ","):
             j = i + 1
@@ -1183,7 +1062,6 @@ def _visible_schema(
             in_from = up == "FROM" or (in_from and text == ",")
         elif in_from and up in _CLAUSE_KWS and up != "FROM":
             in_from = False
-        i += 1
     if not rels:
         return empty
     lowered = {k.lower(): v for k, v in schema.items()}
@@ -1260,17 +1138,9 @@ def _bare_join_on_true(
         # copy the table reference: name(.name)* or (subquery), + alias
         j = i
         if j < len(tokens) and tokens[j][1] == "(":
-            depth = 0
-            while j < len(tokens):
-                out.append(tokens[j])
-                if tokens[j][1] == "(":
-                    depth += 1
-                elif tokens[j][1] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        j += 1
-                        break
-                j += 1
+            close = _close(tokens, j)
+            out.extend(tokens[j:close + 1])
+            j = close + 1
         else:
             while j < len(tokens) and tokens[j][0] == "ident":
                 if tokens[j][1].upper() in _JOIN_TERMINATORS:
@@ -1322,14 +1192,9 @@ def _loose_group_by(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     rewrites items that are plain (possibly dotted) identifiers."""
     if not tokens or tokens[0][1].upper() != "SELECT":
         return tokens
-    depth = 0
     from_i = group_i = -1
-    for i, (kind, text) in enumerate(tokens):
-        if text == "(":
-            depth += 1
-        elif text == ")":
-            depth -= 1
-        elif depth == 0 and kind == "ident":
+    for i, kind, text in _top(tokens):
+        if kind == "ident":
             up = text.upper()
             if up == "FROM" and from_i < 0:
                 from_i = i
@@ -1340,17 +1205,9 @@ def _loose_group_by(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
                 return tokens
     if from_i < 0 or group_i < 0:
         return tokens
-    group_end = len(tokens)
-    depth = 0
-    for i in range(group_i + 2, len(tokens)):
-        kind, text = tokens[i]
-        if text == "(":
-            depth += 1
-        elif text == ")":
-            depth -= 1
-        elif depth == 0 and kind == "ident" and text.upper() in _GROUP_END_KWS:
-            group_end = i
-            break
+    group_end = next((i for i, kind, text in _top(tokens, group_i + 2)
+                      if kind == "ident" and text.upper() in _GROUP_END_KWS),
+                     len(tokens))
     norm = lambda toks: untokenize(toks).lower().replace(" ", "")
     group_exprs = {norm(g) for g in
                    _split_args(tokens[group_i + 2:group_end])}
@@ -1370,14 +1227,8 @@ def _loose_group_by(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
         # is wrapped (``i AS g`` must become ``first(i) AS g``, never
         # ``first(i AS g)``)
         expr, label = item, None
-        d = 0
-        for j, (kind, text) in enumerate(item):
-            if text == "(":
-                d += 1
-            elif text == ")":
-                d -= 1
-            elif d == 0 and kind == "ident" and text.upper() == "AS" \
-                    and j + 1 < len(item):
+        for j, kind, text in _top(item):
+            if kind == "ident" and text.upper() == "AS" and j + 1 < len(item):
                 expr, label = item[:j], item[j + 1][1]
                 break
         is_bare = all(t[0] == "ident" or t[1] == "." for t in expr) and \
@@ -1422,31 +1273,21 @@ def _rewrite_values_statement(
     original operator structure."""
     operands: list[list[tuple[str, str]]] = []
     ops: list[str] = []
-    depth = 0
-    cur: list[tuple[str, str]] = []
-    i = 0
-    while i < len(tokens):
-        kind, text = tokens[i]
-        if text == "(":
-            depth += 1
-        elif text == ")":
-            depth -= 1
-        if depth == 0 and kind == "ident" and text.upper() in _SET_OP_KWS:
-            op = text.upper()
-            if (
-                i + 1 < len(tokens)
-                and tokens[i + 1][0] == "ident"
-                and tokens[i + 1][1].upper() in ("ALL", "DISTINCT")
-            ):
-                op += " " + tokens[i + 1][1].upper()
-                i += 1
-            operands.append(cur)
-            ops.append(op)
-            cur = []
-        else:
-            cur.append((kind, text))
-        i += 1
-    operands.append(cur)
+    start = 0  # where the current operand begins
+    for i, kind, text in _top(tokens):
+        if kind != "ident" or text.upper() not in _SET_OP_KWS:
+            continue
+        operands.append(tokens[start:i])
+        op, start = text.upper(), i + 1
+        if (
+            start < len(tokens)
+            and tokens[start][0] == "ident"
+            and tokens[start][1].upper() in ("ALL", "DISTINCT")
+        ):
+            op += " " + tokens[start][1].upper()
+            start += 1
+        ops.append(op)
+    operands.append(tokens[start:])
 
     def rewrite_one(opnd: list[tuple[str, str]]) -> str | None:
         if not (
@@ -1493,14 +1334,9 @@ def _has_values_operand(tokens: list[tuple[str, str]]) -> bool:
     """True when any depth-0 set-operation operand starts with VALUES."""
     if tokens and tokens[0][0] == "ident" and tokens[0][1].upper() == "VALUES":
         return True
-    depth = 0
     expect_operand = False
-    for kind, text in tokens:
-        if text == "(":
-            depth += 1
-        elif text == ")":
-            depth -= 1
-        elif depth == 0 and kind == "ident":
+    for _, kind, text in _top(tokens):
+        if kind == "ident":
             up = text.upper()
             if up in _SET_OP_KWS:
                 expect_operand = True
@@ -1530,22 +1366,15 @@ def _rewrite_nested_values(
             and i + 1 < n
             and tokens[i + 1][0] == "ident"
             and tokens[i + 1][1].upper() == "VALUES"
+            and (j := _close(tokens, i)) < n  # an unclosed group stays
         ):
-            depth = 1
-            j = i + 1
-            while j < n and depth:
-                if tokens[j][1] == "(":
-                    depth += 1
-                elif tokens[j][1] == ")":
-                    depth -= 1
-                j += 1
-            inner = tokens[i + 1:j - 1]
+            inner = tokens[i + 1:j]
             rewritten = _rewrite_values_statement(inner)
             if rewritten is not inner:
-                out.append(("punct", "("))
+                out.append(("op", "("))
                 out.extend(_rewrite_nested_values(rewritten))
-                out.append(("punct", ")"))
-                i = j
+                out.append(("op", ")"))
+                i = j + 1
                 continue
         out.append((kind, text))
         i += 1
@@ -1579,19 +1408,13 @@ def _label_select_items(
     implicit alias are left untouched."""
     if not tokens or tokens[0][1].upper() != "SELECT":
         return tokens
-    depth = 0
     list_start = 1
     if len(tokens) > 1 and tokens[1][1].upper() in ("DISTINCT", "ALL"):
         list_start = 2
     list_end = len(tokens)
     from_i = -1
-    for i in range(list_start, len(tokens)):
-        kind, text = tokens[i]
-        if text == "(":
-            depth += 1
-        elif text == ")":
-            depth -= 1
-        elif depth == 0 and kind == "ident" and text.upper() in _CLAUSE_KWS:
+    for i, kind, text in _top(tokens, list_start):
+        if kind == "ident" and text.upper() in _CLAUSE_KWS:
             list_end = i
             if text.upper() == "FROM":
                 from_i = i
@@ -1599,21 +1422,14 @@ def _label_select_items(
     # multi-table iff the depth-0 FROM clause holds >1 relation
     multi_table = False
     if from_i >= 0:
-        d = 0
-        for i in range(from_i + 1, len(tokens)):
-            kind, text = tokens[i]
-            if text == "(":
-                d += 1
-            elif text == ")":
-                d -= 1
-            elif d == 0:
-                up = text.upper()
-                if kind == "ident" and up in (
-                    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET",
-                ):
-                    break
-                if text == "," or (kind == "ident" and up == "JOIN"):
-                    multi_table = True
+        for _, kind, text in _top(tokens, from_i + 1):
+            up = text.upper()
+            if kind == "ident" and up in (
+                "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET",
+            ):
+                break
+            if text == "," or (kind == "ident" and up == "JOIN"):
+                multi_table = True
     items = _split_args(tokens[list_start:list_end])
     rebuilt: list[tuple[str, str]] = tokens[:list_start]
     changed = False
@@ -1623,17 +1439,8 @@ def _label_select_items(
         if not item or any(t[1] == "*" for t in item):
             rebuilt.extend(item)
             continue
-        # explicit alias?
-        d = 0
-        has_alias = False
-        for j, (kind, text) in enumerate(item):
-            if text == "(":
-                d += 1
-            elif text == ")":
-                d -= 1
-            elif d == 0 and kind == "ident" and text.upper() == "AS":
-                has_alias = True
-                break
+        has_alias = any(kind == "ident" and text.upper() == "AS"
+                        for _, kind, text in _top(item))
         # implicit alias: trailing ident directly after a value token or
         # closing paren (`COUNT(1) c`, `num total`); `t . c` stays a path
         if (
@@ -1726,14 +1533,9 @@ def _rewrite_qualify(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     select-item aliases (``QUALIFY rn = 1``).  Depth-0 only; the tail
     ORDER BY/LIMIT stays on the outer query so it orders the filtered
     rows."""
-    depth = 0
     qidx = from_idx = None
-    for i, (kind, text) in enumerate(tokens):
-        if text == "(":
-            depth += 1
-        elif text == ")":
-            depth -= 1
-        elif depth == 0 and kind == "ident":
+    for i, kind, text in _top(tokens):
+        if kind == "ident":
             up = text.upper()
             if up == "FROM" and from_idx is None:
                 from_idx = i
@@ -1743,18 +1545,9 @@ def _rewrite_qualify(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     if qidx is None or from_idx is None or from_idx > qidx:
         return tokens
     # predicate runs to the first depth-0 tail keyword (or end)
-    pend = len(tokens)
-    depth = 0
-    for i in range(qidx + 1, len(tokens)):
-        kind, text = tokens[i]
-        if text == "(":
-            depth += 1
-        elif text == ")":
-            depth -= 1
-        elif depth == 0 and kind == "ident" \
-                and text.upper() in _QUALIFY_TAIL_KWS:
-            pend = i
-            break
+    pend = next((i for i, kind, text in _top(tokens, qidx + 1)
+                 if kind == "ident" and text.upper() in _QUALIFY_TAIL_KWS),
+                len(tokens))
     pred = tokens[qidx + 1:pend]
     inner = (
         tokens[:from_idx]
@@ -1792,19 +1585,12 @@ def rewrite(
     unique_owner, int_cols, alias_real, col_kinds = _visible_schema(
         tokens, schema, db_names
     )
-    tokens = _rewrite_cast_timestamp(tokens)
-    tokens = _strip_cast_any(tokens)
-    tokens = _rewrite_cast_types(tokens)
+    tokens = _rewrite_casts(tokens)
     tokens = _rewrite_nested_values(tokens)
     tokens = _bare_join_on_true(tokens)
     tokens = _label_select_items(tokens, unique_owner, alias_real)
     tokens = _loose_group_by(tokens)
-    global _IIF_COL_KINDS
-    _IIF_COL_KINDS = col_kinds
-    try:
-        tokens = _transform(tokens)
-    finally:
-        _IIF_COL_KINDS = {}
+    tokens = _transform(tokens, col_kinds)
     tokens = _floatify_literals(tokens)
     if int_division:
         tokens = _rewrite_division(tokens, int_cols)

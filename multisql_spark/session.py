@@ -91,6 +91,10 @@ class UnsupportedError(EngineError):
 
 # --- schema model (reference src/data/column.rs:13-20) ----------------------
 
+# column options that end a DEFAULT expression
+_COLUMN_OPTIONS = ("NOT NULL", "NULL", "UNIQUE", "PRIMARY KEY",
+                   "AUTO_INCREMENT", "AUTOINCREMENT", "CHECK", "DEFAULT")
+
 _TYPE_MAP = {
     "BOOLEAN": "boolean",
     "BOOL": "boolean",
@@ -400,27 +404,36 @@ class MultiSQLSession:
             for m in re.finditer(
                 rf"\b{re.escape(dname)}__(\w+)\b", sql_text, re.IGNORECASE
             ):
-                tbl = m.group(1)
-                if tbl in db.tables:
-                    continue
-                df = (
-                    self.spark.read.format("jdbc")
-                    .option("url", db.path)
-                    .option("dbtable", tbl)
-                    .load()
-                )
-                df.createOrReplaceTempView(f"{dname}__{tbl}")
-                db.tables[tbl] = df
+                self._jdbc_relation(db, m.group(1))
+
+    def _jdbc_relation(self, db, tbl: str) -> DataFrame:
+        """The lazy relation of jdbc table ``tbl``: read, cached in
+        ``db.tables`` and registered as view ``db__tbl`` on first use."""
+        if tbl not in db.tables:
+            df = (
+                self.spark.read.format("jdbc")
+                .option("url", db.path)
+                .option("dbtable", tbl)
+                .load()
+            )
+            # quoted, so a schema-qualified `APP.rt` is one view name
+            df.createOrReplaceTempView(f"`{db.name}__{tbl}`")
+            db.tables[tbl] = df
+        return db.tables[tbl]
+
+    def _database(self, name: str):
+        """The attached database called ``name`` (any case), or None."""
+        return next(
+            (db for dn, db in self.databases.items()
+             if dn.lower() == name.lower()),
+            None,
+        )
 
     def _jdbc_target(self, name: str):
         """(SourceDatabase, table) when name addresses a jdbc database."""
-        if "." not in name:
-            return None
-        dbname, _, tbl = name.partition(".")
-        for dname, db in self.databases.items():
-            if dname.lower() == dbname.lower() and db.kind == "jdbc":
-                return db, tbl
-        return None
+        dbname, dot, tbl = name.partition(".")
+        db = self._database(dbname) if dot else None
+        return (db, tbl) if db is not None and db.kind == "jdbc" else None
 
     # -- SELECT-only converters (reference src/glue/select.rs:14-82) -------
 
@@ -445,7 +458,7 @@ class MultiSQLSession:
         extension (reference Glue::try_extend_from_path,
         glue/mod.rs:108-129). Returns whether action was taken — False if
         the name is already attached."""
-        if any(d.lower() == database_name.lower() for d in self.databases):
+        if self._database(database_name) is not None:
             return False
         self._create_database(
             f"CREATE DATABASE {database_name}"
@@ -536,19 +549,14 @@ class MultiSQLSession:
         """Catalog snapshot {table: {col: spark_type}} for the dialect's
         schema-aware rewrites (reference label parity for bare columns,
         static I64 int-division typing — DIVERGENCES #3/#21)."""
-        snap: dict[str, dict[str, str]] = {}
-        for name, state in self.tables.items():
-            try:
-                snap[name] = dict(state.df.dtypes)
-            except Exception:
-                continue
-        return snap
+        return {name: dict(state.df.dtypes)
+                for name, state in self.tables.items()}
 
     def _table(self, name: str) -> TableState:
         key = name.lower()
         if key not in self.tables and "." in key:
             db, _, tbl = key.partition(".")
-            if any(d.lower() == db for d in self.databases):
+            if self._database(db) is not None:
                 key = f"{db}__{tbl}"
         if key not in self.tables:
             raise TableNotFoundError(f"table not found: {name}")
@@ -755,14 +763,7 @@ class MultiSQLSession:
             if dbname.lower() == "main":
                 name = tbl
             else:
-                db = next(
-                    (
-                        d
-                        for dn, d in self.databases.items()
-                        if dn.lower() == dbname.lower()
-                    ),
-                    None,
-                )
+                db = self._database(dbname)
                 if db is None:
                     raise EngineError(f"database not found: {dbname}")
                 if db.kind != "parquet":
@@ -811,42 +812,51 @@ class MultiSQLSession:
 
     def _parse_columns(self, src: str) -> list[ColumnDef]:
         """Parse `name TYPE [options]` column defs (reference
-        src/data/column.rs:27-79)."""
+        src/data/column.rs:27-79).  Options are read from the column's
+        depth-0 tokens, so a string literal never holds one; a DEFAULT
+        expression is its source text up to the next option."""
         out = []
         for part in dialect._split_source(src, ","):
-            tokens = part.split()
-            if not tokens:
+            if not part:
                 continue
-            col = ColumnDef(name=tokens[0].strip('`"'))
-            rest = " ".join(tokens[1:]).upper()
-            rest_orig = " ".join(tokens[1:])
+            name, rest = (part.split(None, 1) + [""])[:2]
+            col = ColumnDef(name=name.strip('`"'))
+            words = [
+                text.upper()
+                for _, kind, text in dialect._top(dialect.tokenize(rest))
+                if kind != "string"
+            ]
+            pairs = list(zip([""] + words, words))
             # reference AlterError::UnsupportedColumnOption
             # (tests/ability/alter/table/create_table.rs CHECK case)
-            if re.search(r"\bCHECK\b", rest):
-                raise EngineError(
+            if "CHECK" in words:
+                raise UnsupportedError(
                     f"unsupported column option in {col.name}: CHECK"
                 )
-            type_m = re.match(r"(UNSIGNED\s+INT|[A-Z]+)", rest)
-            if type_m and type_m.group(1) in _TYPE_MAP:
-                col.type_str = _TYPE_MAP[type_m.group(1)]
-            elif type_m:
+            ty = "UNSIGNED INT" if words[:2] == ["UNSIGNED", "INT"] else (
+                words[0] if words else "")
+            if ty not in _TYPE_MAP:
                 # reference AlterError::UnsupportedDataType
                 raise UnsupportedError(
-                    f"unsupported data type: {type_m.group(1)}"
+                    f"unsupported data type in {col.name}: {ty or 'none'}"
                 )
+            col.type_str = _TYPE_MAP[ty]
+            primary = ("PRIMARY", "KEY") in pairs
             # reference nullability (src/data/column.rs:36-38): columns are
             # NOT NULL unless an explicit bare NULL option is present
-            col.not_null = (
-                "NOT NULL" in rest
-                or "PRIMARY KEY" in rest
-                or not re.search(r"(?<!NOT )\bNULL\b", rest)
-            )
-            col.unique = "UNIQUE" in rest or "PRIMARY KEY" in rest
-            col.auto_increment = "AUTO_INCREMENT" in rest or "AUTOINCREMENT" in rest
-            dm = re.search(r"DEFAULT\s+(.+?)(?:\s+(?:NOT\s+NULL|UNIQUE|PRIMARY|AUTO_INCREMENT)|$)",
-                           rest_orig, re.IGNORECASE)
-            if dm:
-                col.default = dm.group(1).strip()
+            col.not_null = primary or ("NOT", "NULL") in pairs or not any(
+                w == "NULL" and p != "NOT" for p, w in pairs)
+            col.unique = primary or "UNIQUE" in words
+            col.auto_increment = (
+                "AUTO_INCREMENT" in words or "AUTOINCREMENT" in words)
+            if "DEFAULT" in words:
+                tail = dialect._split_source(rest, "DEFAULT")[1][len("DEFAULT"):]
+                # the expression is at least one token (`DEFAULT NULL`)
+                col.default = next(
+                    (p for p in dialect._split_source(tail, *_COLUMN_OPTIONS)
+                     if p),
+                    None,
+                )
             out.append(col)
         return out
 
@@ -944,7 +954,7 @@ class MultiSQLSession:
         if not m:
             raise EngineError(f"cannot parse CREATE DATABASE: {stmt[:80]}")
         if_not_exists, name, path = m.groups()
-        if any(d.lower() == name.lower() for d in self.databases):
+        if self._database(name) is not None:
             # reference create/database error shape
             # (tests/ability/alter/database/create_database.rs)
             if if_not_exists:
@@ -996,12 +1006,7 @@ class MultiSQLSession:
         else:
             # a JDBC target's default column list is the remote table's
             state = None
-            remote = (
-                self.spark.read.format("jdbc")
-                .option("url", jt[0].path)
-                .option("dbtable", jt[1])
-                .load()
-            )
+            remote = self._jdbc_relation(*jt)
             declared = remote.columns
         stated = (
             [c.strip().strip('`"') for c in cols_src.split(",")]
@@ -1073,15 +1078,10 @@ class MultiSQLSession:
     def _rewrite_fragment(
         self, fragment: str, table: TableState | None = None
     ) -> str:
-        schema = None
-        if table is not None:
-            try:
-                # "" = ambient fragment columns (no FROM clause): lets the
-                # division rewrite type int columns statically in UPDATE
-                # SET / WHERE expressions (reference binary.rs int-`/`)
-                schema = {"": dict(table.df.dtypes)}
-            except Exception:
-                schema = None
+        # "" = ambient fragment columns (no FROM clause): lets the
+        # division rewrite type int columns statically in UPDATE
+        # SET / WHERE expressions (reference binary.rs int-`/`)
+        schema = {"": dict(table.df.dtypes)} if table is not None else None
         return dialect.rewrite(
             fragment,
             variables=self.variables,
@@ -1615,13 +1615,11 @@ class MultiSQLSession:
     def _detach_database(self, name: str) -> bool:
         """Remove an attached database and every table state / temp view
         registered under it (reference Glue::reduce, glue/mod.rs:143-149)."""
-        match = next(
-            (d for d in self.databases if d.lower() == name.lower()), None
-        )
-        if match is None:
+        db = self._database(name)
+        if db is None:
             return False
-        self.databases.pop(match)
-        prefix = f"{match.lower()}__"
+        self.databases.pop(db.name)
+        prefix = f"{db.name.lower()}__"
         for key in [k for k in self.tables if k.startswith(prefix)]:
             self.spark.catalog.dropTempView(self.tables.pop(key).name)
         return True
@@ -1661,19 +1659,10 @@ class MultiSQLSession:
             return Payload.success("AlterTable")
         m2 = re.match(r"ADD\s+(?:COLUMN\s+)?(.*)$", au, re.IGNORECASE | re.DOTALL)
         if m2 and not au.upper().startswith("ADD CONSTRAINT"):
-            src = m2.group(1).strip()
-            # reference AlterError::UnsupportedColumnOption (alter_table.rs)
-            if re.search(r"\bCHECK\b", src, re.IGNORECASE):
-                raise UnsupportedError("unsupported column option: CHECK")
-            # reference AlterError::UnsupportedDataType
-            tm = re.match(
-                r'"?\w+"?\s+(UNSIGNED\s+INT|\w+)', src, re.IGNORECASE
-            )
-            if not tm or tm.group(1).upper() not in _TYPE_MAP:
-                raise UnsupportedError(
-                    f"unsupported data type in ADD COLUMN: {src[:40]}"
-                )
-            cdef = self._parse_columns(src)[0]
+            cdefs = self._parse_columns(m2.group(1))
+            if not cdefs:
+                raise EngineError(f"cannot parse ALTER: {stmt[:80]}")
+            cdef = cdefs[0]
             # reference AlterTableError::AddingColumnAlreadyExists
             if state.column(cdef.name) is not None:
                 raise AlreadyExistsError(f"column already exists: {cdef.name}")
@@ -1808,14 +1797,7 @@ class MultiSQLSession:
             if f"{dbname}__{tbl}" in self.tables:
                 tl = f"{dbname}__{tbl}"
             else:
-                db = next(
-                    (
-                        d
-                        for dn, d in self.databases.items()
-                        if dn.lower() == dbname
-                    ),
-                    None,
-                )
+                db = self._database(dbname)
                 if db is not None:
                     if db.kind == "jdbc" and tbl not in db.tables:
                         self._resolve_jdbc_views(f"{dbname}__{tbl}")

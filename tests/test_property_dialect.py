@@ -10,7 +10,7 @@ tokenizer/regex bug would silently change semantics:
   divide-by-zero → NULL, literal-vs-runtime dispatch) —
   dialect._rewrite_division / _div_case;
 - the CAST type-map (TEXT/INT/FLOAT renames, float→int truncation,
-  bool→int) — dialect._rewrite_cast_types;
+  bool→int) — dialect._rewrite_casts;
 - the math call transforms (POW int^int→I64 static dispatch, ROUND /
   FLOOR / CEIL / ABS / SQRT / %);
 - the timestamp transforms (DATEADD unit plumbing, DATEFROMPARTS,

@@ -345,6 +345,37 @@ def test_misc_func_cast(glue):
     ) == (None,)
 
 
+def test_nested_casts(glue):
+    """Nested CAST forms keep each level's rewrite: ANY is the identity,
+    TIMESTAMP runs the fallback chain over the rewritten operand, type
+    names map inside CAST only, and schema-typed IIF branches of mixed
+    kinds keep their own kinds."""
+    import decimal
+
+    glue.execute("DROP TABLE IF EXISTS NestCast")
+    glue.execute(
+        "CREATE TABLE NestCast (id INTEGER, s TEXT, n INTEGER, f FLOAT)"
+    )
+    glue.execute(
+        "INSERT INTO NestCast VALUES (1, '03/02/2001 04:05', 981173100, 2.5)"
+    )
+    cases = [
+        ("CAST(CAST(s AS ANY) AS TIMESTAMP)", ts(2001, 2, 3, 4, 5)),
+        ("CAST(CAST('03/02/2001 04:05' AS TEXT) AS TIMESTAMP)",
+         ts(2001, 2, 3, 4, 5)),
+        ("TRY_CAST('junk' AS TIMESTAMP)", None),
+        ("CAST(CAST(1.9 AS INT) AS TEXT)", "1"),
+        ("CAST(f AS DECIMAL(10, 2))", decimal.Decimal("2.50")),
+        ("IIF(id = 1, s, n)", "03/02/2001 04:05"),
+        ("IIF(id = 2, s, n)", 981173100),
+    ]
+    for expr, want in cases:
+        got = one(glue, f"SELECT {expr} AS c FROM NestCast")
+        assert got == (want,) and type(got[0]) is type(want), expr
+    out = glue.execute("SELECT 1 AS float FROM NestCast")
+    assert (out.labels, out.rows) == (["float"], [(1,)])
+
+
 # --- tests/api/cast_any.rs --------------------------------------------------
 
 

@@ -239,6 +239,22 @@ def test_statements_lex_like_the_reference(glue, script, labels, rows):
     assert (out.labels, sorted(out.rows)) == (labels, rows)
 
 
+@pytest.mark.parametrize("coldef, not_null, unique, default", [
+    ("s TEXT NULL DEFAULT 'unique  key'", False, False, "'unique  key'"),
+    ("t TEXT DEFAULT 'x NOT NULL y'", True, False, "'x NOT NULL y'"),
+    ("u TEXT DEFAULT 'check'", True, False, "'check'"),
+    ("w TEXT NULL DEFAULT 'primary key'", False, False, "'primary key'"),
+], ids=["unique", "not_null", "check", "primary_key"])
+def test_column_options_skip_string_literals(
+    glue, coldef, not_null, unique, default
+):
+    """A column option inside a DEFAULT string literal is text, and the
+    literal keeps its own spacing."""
+    glue.execute(f"DROP TABLE IF EXISTS co; CREATE TABLE co ({coldef})")
+    c = glue.tables["co"].columns[0]
+    assert (c.not_null, c.unique, c.default) == (not_null, unique, default)
+
+
 def _jobs_of(spark, fn):
     """The Spark jobs ``fn()`` starts, and its result: job ids from the
     status tracker before and after, once the listener bus has drained."""
@@ -406,6 +422,14 @@ def test_typed_error_classes(glue):
         glue.execute("INSERT INTO terr (a, b) VALUES (2, 1)")
     with pytest.raises(UnsupportedError):
         glue.execute("COMMIT")
+    # reference AlterError: CHECK and unknown types, on CREATE and ALTER
+    for stmt in ("CREATE TABLE terr2 (a INTEGER CHECK (a > 0))",
+                 "CREATE TABLE terr2 (a SOMEWHAT)",
+                 "ALTER TABLE terr ADD COLUMN c INTEGER CHECK (c > 0)",
+                 "ALTER TABLE terr ADD COLUMN c SOMEWHAT",
+                 "ALTER TABLE terr ADD COLUMN c"):
+        with pytest.raises(UnsupportedError):
+            glue.execute(stmt)
 
 
 def test_group_by_alias_and_ordinal(glue):
