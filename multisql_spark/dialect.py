@@ -157,12 +157,15 @@ def _ts_format_chain(val: str, formats: list[str], try_: bool) -> str:
 
 def _ts_any_chain(val: str, try_: bool) -> str:
     """Rule-less string→timestamp: epoch seconds, then every DATETIME /
-    DATE / TIME format (cast.rs:249-252 Value::Null fallback chain)."""
+    DATE / TIME format (cast.rs:249-252 Value::Null fallback chain).
+    The format arms parse the operand's text, so a number reaches them as
+    a string (``try_to_timestamp`` of a number fails analysis) and
+    resolves through the epoch-seconds arm."""
     parts = [f"try_cast(try_cast(({val}) AS BIGINT) AS TIMESTAMP)",
              f"try_cast(({val}) AS TIMESTAMP)"]
     for fams in ("DATETIME", "DATE", "TIME"):
         parts += [
-            f"try_to_timestamp(({val}), '{f}')"
+            f"try_to_timestamp(CAST(({val}) AS STRING), '{f}')"
             for f in _NAMED_RULE_FORMATS[fams]
         ]
     if not try_:

@@ -362,18 +362,20 @@ class MultiSQLSession:
         return payloads[-1] if payloads else Payload.success()
 
     def execute_many(self, sql: str) -> list[Payload]:
+        from py4j.protocol import Py4JJavaError
         from pyspark.errors.exceptions.base import PySparkException
 
         out = []
         for stmt in filter(None, dialect._split_source(sql, ";")):
             try:
                 out.append(self._execute_one(stmt))
-            except (PySparkException, ValueError) as exc:
+            except (PySparkException, Py4JJavaError, ValueError) as exc:
                 # surface Spark analysis/parse/runtime failures (ANSI cast
-                # and datetime-parse errors included) and dialect-rewrite
-                # rejections as engine errors (the reference returns its own
-                # Error enum, not panics); well-known Spark error classes
-                # map to the matching typed family
+                # and datetime-parse errors included), JVM failures PySpark
+                # does not convert, and dialect-rewrite rejections as engine
+                # errors (the reference returns its own Error enum, not
+                # panics); well-known Spark error classes map to the
+                # matching typed family
                 cond = (
                     exc.getCondition() or ""
                     if isinstance(exc, PySparkException) else ""

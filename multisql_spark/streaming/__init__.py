@@ -7,6 +7,19 @@ DuckDB oracle; :func:`run_stream_to_memory` drives the identical
 transformation through a real ``readStream`` → memory-sink query with
 watermarking, proving the streaming plumbing.
 
+Every stream runs through three helpers:
+
+- :func:`_read_stream` opens a parquet file stream (tuned session, the
+  source's batch schema, optional ``maxFilesPerTrigger``, nanos-as-long
+  ``ts`` converted by :func:`multisql_spark.tables.ts_micros`);
+- :func:`_run` is the one ``writeStream``: a memory table, a parquet
+  directory or a ``foreachBatch`` body, run to completion by
+  :func:`_drain`;
+- :func:`_fold` folds a stream into a fresh state dir
+  (:mod:`multisql_spark.statedir`) through a ``merge(spark, state_dir,
+  batch_df, batch_id)`` body per micro-batch — the rollup, upsert, CMS,
+  HLL and bottom-k sinks.
+
 Scale notes: tumbling/sliding windows are map-side bucketable (window
 start is a pure function of ts) — state is only needed for lateness;
 session windows keep per-key state bounded by the watermark horizon.
@@ -14,10 +27,16 @@ session windows keep per-key state bounded by the watermark horizon.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from multisql_spark.statedir import init_state_dir, swap_state_dir
+from multisql_spark.tables import ts_micros, tune_session
 
 DEC = "decimal(18,2)"
 
@@ -71,12 +90,18 @@ def _scratch_dir(prefix: str) -> str:
     ``stream_dedup_digest`` run leaves an EVENT-SCALE parquet table
     under /tmp (ADVICE r9: at derived sf1000 that's GBs per run).
     atexit-rmtree bounds the leak to one process lifetime."""
-    import atexit
-    import shutil
-
     d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
+
+
+def _parts(src: str) -> list[str]:
+    """The part files of a Spark-written parquet directory, sorted."""
+    return sorted(
+        f
+        for f in os.listdir(src)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
 
 
 def _stage_source(src: str, stream_dir: str, name: str) -> None:
@@ -91,21 +116,87 @@ def _stage_source(src: str, stream_dir: str, name: str) -> None:
     directory symlinks each part file as ``{name}_partNNN.parquet``
     (which also makes ``maxFilesPerTrigger`` yield real multi-batch
     execution on derived data)."""
-    import os
-
     if os.path.isdir(src):
-        parts = sorted(
-            f
-            for f in os.listdir(src)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        for i, p in enumerate(parts):
+        for i, p in enumerate(_parts(src)):
             os.symlink(
                 os.path.join(src, p),
                 os.path.join(stream_dir, f"{name}_part{i:03d}.parquet"),
             )
     else:
         os.symlink(src, os.path.join(stream_dir, f"{name}.parquet"))
+
+
+def _staged(src: str, prefix: str, *names: str) -> str:
+    """A fresh scratch directory exposing ``src`` once under each of
+    ``names`` — the file-stream source wants a directory, and staging
+    keeps the other tables' files out of it."""
+    stream_dir = _scratch_dir(prefix)
+    for name in names:
+        _stage_source(src, stream_dir, name)
+    return stream_dir
+
+
+def _read_stream(
+    spark: SparkSession,
+    src: str,
+    stream_dir: str,
+    files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The parquet file stream over ``stream_dir`` with ``src``'s batch
+    schema.  Tunes ``spark`` first (nanos-as-long + UTC): the operators
+    own their confs."""
+    tune_session(spark)
+    reader = spark.readStream.schema(spark.read.parquet(src).schema)
+    if files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return ts_micros(reader.parquet(stream_dir))
+
+
+def _run(
+    df: DataFrame,
+    mode: str,
+    *,
+    name: str | None = None,
+    path: str | None = None,
+    batch=None,
+) -> None:
+    """Run the bounded stream ``df`` to completion in output ``mode``
+    into exactly one sink: memory table ``name``, parquet directory
+    ``path``, or the ``foreachBatch`` body ``batch``.  The checkpoint
+    lives only as long as the run."""
+    w = df.writeStream.outputMode(mode)
+    if name is not None:
+        w = w.format("memory").queryName(name)
+    elif path is not None:
+        w = w.format("parquet").option("path", path)
+    else:
+        # drain fully: a fixed awaitTermination cap silently truncated
+        # the sink at 10x data (round-5 sf1 sweep) — availableNow +
+        # _drain blocks until the bounded source is done, then surfaces
+        # any masked stream failure
+        w = w.foreachBatch(batch).trigger(availableNow=True)
+    with tempfile.TemporaryDirectory() as ckpt:
+        _drain(w.option("checkpointLocation", ckpt).start())
+
+
+def _fold(stream: DataFrame, mode: str, seed, merge) -> str:
+    """Fold ``stream`` into a fresh state dir and return its path.  The
+    state starts as an empty table of schema ``seed`` (so the first merge
+    has a table to read), and ``merge(spark, state_dir, batch_df,
+    batch_id)`` publishes each micro-batch's new state."""
+    spark = stream.sparkSession
+    # the state path is a symlink beside its version dirs: keep both in
+    # one scratch dir so its process-exit cleanup removes them all
+    state_dir = os.path.join(_scratch_dir("stream_state_"), "state")
+    init_state_dir(spark.createDataFrame([], seed), state_dir)
+    _run(
+        stream,
+        mode,
+        batch=lambda batch_df, batch_id: merge(
+            spark, state_dir, batch_df, batch_id
+        ),
+    )
+    return state_dir
 
 
 def tumbling_counts(events: DataFrame, minutes: int = 5) -> DataFrame:
@@ -190,14 +281,12 @@ def stateful_sessionize(
     timeout; the sentinel user is filtered from the output.
     """
     import decimal
-    import os
 
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
+    import pyspark.sql.types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from multisql_spark.tables import tune_session
 
     tune_session(spark)  # nanos-as-long + UTC; the operator owns its confs
 
@@ -205,9 +294,7 @@ def stateful_sessionize(
     wm_ns = 10 * 60 * 10**9  # keep in sync with ``watermark``
 
     src = f"{sf_dir}/events.parquet"
-    batch_schema = spark.read.parquet(src).schema
-    stream_dir = _scratch_dir("events_stateful_")
-    _stage_source(src, stream_dir, "events")
+    stream_dir = _staged(src, "events_stateful_", "events")
 
     # sentinel: one event far past max(ts) + gap + watermark so every real
     # session times out before the stream drains.  Unit-aware across the
@@ -217,8 +304,6 @@ def stateful_sessionize(
     # are Spark-written (INT96/micros; Spark expects a real timestamp —
     # writing the sentinel as nanos there produced the r6
     # PARQUET_COLUMN_DATA_TYPE_MISMATCH red at sf1-derived).
-    import pyspark.sql.types as T
-
     tbl = pq.read_table(src, columns=["ts"])
     ts_arrow = tbl.schema.field("ts").type
     unit_per_sec = (
@@ -233,19 +318,10 @@ def stateful_sessionize(
     # directories of part files — take the first part's schema
     schema_src = src
     if os.path.isdir(src):
-        schema_src = os.path.join(
-            src,
-            sorted(
-                f
-                for f in os.listdir(src)
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )[0],
-        )
+        schema_src = os.path.join(src, _parts(src)[0])
     arrow_schema = pq.read_schema(schema_src)
-    spark_ts_type = next(
-        f.dataType for f in batch_schema.fields if f.name == "ts"
-    )
-    if isinstance(spark_ts_type, T.TimestampType):
+    ts_type = spark.read.parquet(src).schema["ts"].dataType
+    if isinstance(ts_type, T.TimestampType):
         # Spark expects a true timestamp column: write MICROS so the
         # nanosAsLong session conf cannot re-type the sentinel as LONG
         idx = arrow_schema.get_field_index("ts")
@@ -265,17 +341,7 @@ def stateful_sessionize(
         schema=arrow_schema,
     )
     pq.write_table(sentinel, os.path.join(stream_dir, "sentinel.parquet"))
-
-    out_dir = _scratch_dir("upsert_table_")
-
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(stream_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    stream = _read_stream(spark, src, stream_dir, max_files_per_trigger)
 
     def cents(v: float) -> int:
         # mirror Spark/DuckDB CAST(double AS DECIMAL(18,2)): shortest
@@ -351,15 +417,7 @@ def stateful_sessionize(
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stateful_sessions")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _drain(q)
+    _run(sessions, "append", name="stateful_sessions")
     return spark.table("stateful_sessions").filter(F.col("user_id") >= 0)
 
 
@@ -378,22 +436,13 @@ def stream_stream_join(
     This is THE streaming primitive the reference architecture (pull-based
     full materialization) cannot express at all.
     """
-    import os
-
-    from multisql_spark.tables import tune_session
-
-    tune_session(spark)
     src = f"{sf_dir}/events.parquet"
-    batch_schema = spark.read.parquet(src).schema
-    stream_dir = _scratch_dir("events_ssj_")
-    _stage_source(src, stream_dir, "events")
+    stream_dir = _staged(src, "events_ssj_", "events")
 
     def read_side(event_type: str, prefix: str) -> DataFrame:
-        s = spark.readStream.schema(batch_schema).parquet(stream_dir)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return (
-            s.filter(F.col("event_type") == event_type)
+            _read_stream(spark, src, stream_dir)
+            .filter(F.col("event_type") == event_type)
             .select(
                 F.col("user_id").alias(f"{prefix}_user"),
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -417,15 +466,7 @@ def stream_stream_join(
         F.unix_timestamp("p_ts").alias("purchase_ts"),
         F.unix_timestamp("c_ts").alias("click_ts"),
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("ssj_out")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _drain(q)
+    _run(joined, "append", name="ssj_out")
     return spark.table("ssj_out")
 
 
@@ -443,29 +484,10 @@ def run_stream_to_memory(
     In production the source is Kafka/files and the sink is a Delta
     table with checkpointing; the transformation is identical.
     """
-    import os
-
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the file-stream source wants a directory; expose just events.parquet
-    # through a symlink dir so the other tables' schemas don't mix in
-    stream_dir = _scratch_dir("events_stream_")
-    _stage_source(f"{sf_dir}/events.parquet", stream_dir, "events")
-    stream = spark.readStream.schema(batch_schema).parquet(stream_dir)
-    # nanos-as-long conversion mirror of tables.load_tables
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    src = f"{sf_dir}/events.parquet"
+    stream = _read_stream(spark, src, _staged(src, "events_stream_", "events"))
     agg = transform(stream.withWatermark("ts", watermark))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _drain(q)
+    _run(agg, "complete", name=query_name)
     return spark.table(query_name)
 
 
@@ -494,26 +516,9 @@ def stream_dedup_exactly_once(
     exactly-once path certifies at extreme scale (via the bounded
     ``stream_dedup_digest`` twin).
     """
-    import os
-
-    from multisql_spark.tables import tune_session
-
-    tune_session(spark)
     src = f"{sf_dir}/events.parquet"
-    batch_schema = spark.read.parquet(src).schema
-    stream_dir = _scratch_dir("events_dedup_")
-    _stage_source(src, stream_dir, "delivery1")
-    _stage_source(src, stream_dir, "delivery2")
-
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    stream_dir = _staged(src, "events_dedup_", "delivery1", "delivery2")
+    stream = _read_stream(spark, src, stream_dir, 1)
     deduped = (
         stream.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -527,25 +532,9 @@ def stream_dedup_exactly_once(
     )
     if sink == "parquet":
         out_dir = _scratch_dir("dedup_sink_")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                deduped.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            _drain(q)
+        _run(deduped, "append", path=out_dir)
         return spark.read.parquet(out_dir)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("dedup_out")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _drain(q)
+    _run(deduped, "append", name="dedup_out")
     return spark.table("dedup_out")
 
 
@@ -569,16 +558,8 @@ def stream_static_incremental_dedup(
     output equals the batch `dedup_incremental` query, which is the
     shared oracle.
     """
-    import os
-
-    from multisql_spark.tables import tune_session
-
-    tune_session(spark)
     src = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(src).schema
-    stream_dir = _scratch_dir("docs_ingest_")
-    _stage_source(src, stream_dir, "batch1")
-
+    stream = _read_stream(spark, src, _staged(src, "docs_ingest_", "batch1"))
     content_hash = F.md5(F.lower(F.trim(F.col("text"))))
     corpus = spark.read.parquet(src).filter(F.col("doc_id") % 10 != 0)
     index = (
@@ -586,26 +567,17 @@ def stream_static_incremental_dedup(
         .groupBy("h")
         .agg(F.min("doc_id").alias("canonical_id"))
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .filter(F.col("doc_id") % 10 == 0)
+    joined = (
+        stream.filter(F.col("doc_id") % 10 == 0)
         .select(F.col("doc_id"), content_hash.alias("h"))
-    )
-    joined = stream.join(index, "h", "left").select(
-        F.col("doc_id").cast("long"),
-        F.col("canonical_id").isNotNull().alias("is_dup"),
-        F.col("canonical_id").cast("long"),
-    )
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("ingest_dedup_out")
-            .option("checkpointLocation", ckpt)
-            .start()
+        .join(index, "h", "left")
+        .select(
+            F.col("doc_id").cast("long"),
+            F.col("canonical_id").isNotNull().alias("is_dup"),
+            F.col("canonical_id").cast("long"),
         )
-        _drain(q)
+    )
+    _run(joined, "append", name="ingest_dedup_out")
     return spark.table("ingest_dedup_out")
 
 
@@ -626,23 +598,8 @@ def stream_rollup_to_table(
     input volume; with update-mode + partitioned overwrite only changed
     hours would rewrite.
     """
-    import os
-    import shutil
-
-    from multisql_spark.tables import tune_session
-
-    tune_session(spark)
     src = f"{sf_dir}/events.parquet"
-    batch_schema = spark.read.parquet(src).schema
-    stream_dir = _scratch_dir("events_sink_")
-    _stage_source(src, stream_dir, "events")
-    out_dir = _scratch_dir("rollup_table_")
-
-    stream = spark.readStream.schema(batch_schema).parquet(stream_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    stream = _read_stream(spark, src, _staged(src, "events_sink_", "events"))
     rollup = (
         stream.groupBy(
             F.window("ts", f"{minutes} minutes").alias("w"), "event_type"
@@ -658,21 +615,14 @@ def stream_rollup_to_table(
             F.col("total_value").cast("double").alias("total_value"),
         )
     )
-
-    _init_state(spark.createDataFrame([], rollup.schema), out_dir)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _swap_state(out_dir, batch_df, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            rollup.writeStream.outputMode("complete")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _drain(q)
-    return spark.read.parquet(out_dir)
+    # complete mode: each micro-batch is the whole rollup and replaces it
+    state_dir = _fold(
+        rollup,
+        "complete",
+        rollup.schema,
+        lambda _spark, d, batch_df, _batch_id: swap_state_dir(d, batch_df),
+    )
+    return spark.read.parquet(state_dir)
 
 
 def upsert_merge_batch(
@@ -684,15 +634,12 @@ def upsert_merge_batch(
     is IDEMPOTENT under Structured Streaming's batch redelivery — if the
     sink applied a batch but the checkpoint commit was lost, re-applying
     the same (key, latest-state) rows replaces them with themselves."""
-    import os
-    import shutil
-
     updates = batch_df.localCheckpoint(eager=True)
     existing = spark.read.parquet(out_dir)
     merged = existing.join(
         updates.select("user_id"), "user_id", "left_anti"
     ).unionByName(updates)
-    _swap_state(out_dir, merged, batch_id)
+    swap_state_dir(out_dir, merged)
 
 
 def stream_upsert_to_table(
@@ -713,35 +660,19 @@ def stream_upsert_to_table(
     key-partitioned target only affected partitions rewrite.  The
     latest-row choice is ``max_by`` over the total (ts, event_id)
     order, so the result is redelivery- and reorder-independent."""
-    import os
-    import shutil
-
-    from multisql_spark.tables import tune_session
-
-    tune_session(spark)
     src = f"{sf_dir}/events.parquet"
-    batch_schema = spark.read.parquet(src).schema
-    stream_dir = _scratch_dir("events_upsert_src_")
     if n_source_files <= 1:
-        _stage_source(src, stream_dir, "events")
+        stream_dir = _staged(src, "events_upsert_src_", "events")
     else:
         # split the source so maxFilesPerTrigger yields REAL multi-batch
         # execution — later batches must override earlier keys through
         # the foreachBatch merge, not within one aggregation
+        tune_session(spark)  # nanos-as-long before the batch read
+        stream_dir = _scratch_dir("events_upsert_src_")
         spark.read.parquet(src).repartition(n_source_files).write.mode(
             "overwrite"
         ).parquet(stream_dir)
-
-    out_dir = _scratch_dir("upsert_table_")
-
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(stream_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    stream = _read_stream(spark, src, stream_dir, max_files_per_trigger)
     ord_struct = F.struct(
         F.unix_timestamp("ts").cast("long").alias("ts_sec"),
         F.col("event_id").alias("event_id"),
@@ -759,26 +690,9 @@ def stream_upsert_to_table(
             F.col("last.event_type").alias("last_type"),
         )
     )
-    # seed an empty target so the first merge has a table to read
-    _init_state(spark.createDataFrame([], latest.schema), out_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_merge_batch(spark, out_dir, batch_df, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            latest.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # drain fully: a fixed awaitTermination cap silently truncated
-        # the sink at 10x data (round-5 sf1 sweep) — availableNow +
-        # _drain blocks until the bounded source is done, then surfaces
-        # any masked stream failure
-        _drain(q)
-    out = spark.read.parquet(out_dir)
+    out = spark.read.parquet(
+        _fold(latest, "update", latest.schema, upsert_merge_batch)
+    )
     out.createOrReplaceTempView("upsert_sink_out")
     return out
 
@@ -803,32 +717,6 @@ def _cms_bucket(tok_col, r_col):
     )
 
 
-def _init_state(seed: DataFrame, state_dir: str) -> None:
-    """Create versioned sink state (see :mod:`multisql_spark.statedir`):
-    ``state_dir`` is a SYMLINK to the current version directory.  Every
-    reader — production merges and tests alike — just reads
-    ``state_dir`` as parquet; the symlink is transparent."""
-    from multisql_spark.statedir import init_state_dir
-
-    init_state_dir(seed, state_dir)
-
-
-def _swap_state(state_dir: str, merged: DataFrame, batch_id: int) -> None:
-    """Publish ``merged`` as the new state at ``state_dir`` — ATOMIC
-    (one symlink rename; see :mod:`multisql_spark.statedir` for why the
-    old two-rename swap's crash window is gone, VERDICT r6 ask #6)."""
-    from multisql_spark.statedir import swap_state_dir
-
-    swap_state_dir(state_dir, merged)
-
-
-def _read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """State reader. No healing branch: ``state_dir`` is a symlink that
-    ``_swap_state`` republishes atomically, so it always resolves to a
-    complete state."""
-    return spark.read.parquet(state_dir)
-
-
 def cms_merge_batch(
     spark: SparkSession, state_dir: str, batch_df: DataFrame, batch_id: int
 ) -> None:
@@ -838,7 +726,7 @@ def cms_merge_batch(
     as the merged cells, so a batch whose apply succeeded but whose
     checkpoint commit was lost is detected by id and skipped — additive
     sketch cells would otherwise double-count."""
-    state = _read_state(spark, state_dir)
+    state = spark.read.parquet(state_dir)
     if state.filter(F.col("bid") == batch_id).limit(1).count() > 0:
         return  # redelivered batch: already applied
     toks = batch_df.select(
@@ -870,7 +758,7 @@ def cms_merge_batch(
         "bid",
     )
     merged = cells.unionByName(ledger)
-    _swap_state(state_dir, merged, batch_id)
+    swap_state_dir(state_dir, merged)
 
 
 def stream_cms_heavy_hitters(
@@ -891,48 +779,16 @@ def stream_cms_heavy_hitters(
     like the batch `text_heavy_hitters_cms`, so the result hash-matches
     the same DuckDB oracle — streaming ingestion provably converges to
     the batch sketch."""
-    import os
-    import shutil
-
-    from multisql_spark.tables import tune_session
-
-    tune_session(spark)
     src = f"{sf_dir}/documents.parquet"
-    batch_schema = spark.read.parquet(src).schema
-    if stream_src_dir is None:
-        stream_dir = _scratch_dir("docs_cms_")
-        _stage_source(src, stream_dir, "documents")
-    else:
-        # pre-split source (tests): one file per desired microbatch
-        stream_dir = stream_src_dir
-    state_dir = _scratch_dir("cms_state_")
-    # seed empty state: (r, bucket, cell) + applied-batch ledger (bid)
-    _init_state(
-        spark.createDataFrame([], "r INT, bucket LONG, cell LONG, bid LONG"),
-        state_dir,
+    # a pre-split source (tests) gives one file per desired microbatch
+    stream_dir = stream_src_dir or _staged(src, "docs_cms_", "documents")
+    # state: (r, bucket, cell) cells + applied-batch ledger rows (bid)
+    state_dir = _fold(
+        _read_stream(spark, src, stream_dir, 1),
+        "append",
+        "r INT, bucket LONG, cell LONG, bid LONG",
+        cms_merge_batch,
     )
-
-    stream = spark.readStream.schema(batch_schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(stream_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cms_merge_batch(spark, state_dir, batch_df, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # drain fully: a fixed awaitTermination cap silently truncated
-        # the sink at 10x data (round-5 sf1 sweep) — availableNow +
-        # _drain blocks until the bounded source is done, then surfaces
-        # any masked stream failure
-        _drain(q)
-
     sketch = spark.read.parquet(state_dir).filter(
         F.col("bid").isNull()
     ).select("r", "bucket", "cell")
@@ -980,24 +836,19 @@ def stream_minhash_ingest(
     its DuckDB oracle.  At scale the corpus band index is a bucketed
     table built once and appended to; per microbatch only new-doc
     signatures are computed."""
-    import os
-
     from multisql_spark.operators import dedup as dd
-    from multisql_spark.tables import tune_session
 
     tune_session(spark)
     src = f"{sf_dir}/documents.parquet"
     docs = spark.read.parquet(src)
     corpus = docs.filter(~(F.col("doc_id") % 10 == 0))
-    if stream_src_dir is None:
+    stream_dir = stream_src_dir
+    if stream_dir is None:
         stream_dir = _scratch_dir("docs_mh_")
         docs.filter(F.col("doc_id") % 10 == 0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(stream_dir)
-    else:
-        stream_dir = stream_src_dir
     out_dir = _scratch_dir("mh_ingest_out_")
-    schema = docs.schema
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         un = corpus.withColumn("_new", F.lit(False)).unionByName(
@@ -1014,22 +865,7 @@ def stream_minhash_ingest(
             os.path.join(out_dir, f"batch={batch_id}")
         )
 
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(stream_dir)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(probe_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # drain fully: a fixed awaitTermination cap silently truncated
-        # the sink at 10x data (round-5 sf1 sweep) — availableNow +
-        # _drain blocks until the bounded source is done, then surfaces
-        # any masked stream failure
-        _drain(q)
+    _run(_read_stream(spark, src, stream_dir, 1), "append", batch=probe_batch)
     # explicit schema (derived from the batch plan, no job): a zero-batch
     # sink stays a total empty result instead of UNABLE_TO_INFER_SCHEMA
     res_schema = dd.incremental_minhash_dedup(
@@ -1055,13 +891,13 @@ def hll_merge_batch(
     algebra, not the sink plumbing, decides the exactly-once cost."""
     from multisql_spark.operators import sketch as sk
 
-    state = _read_state(spark, state_dir)
+    state = spark.read.parquet(state_dir)
     partial = sk.hll_merge(
         sk.hll_registers(batch_df, "user_id"),
         sk.hll_registers(batch_df, "event_id"),
     )
     merged = sk.hll_merge(state, partial)
-    _swap_state(state_dir, merged, batch_id)
+    swap_state_dir(state_dir, merged)
 
 
 def stream_hll_sink(
@@ -1078,43 +914,17 @@ def stream_hll_sink(
     ≤8,192-row merge, independent of history size — the incremental
     distinct-count shape for 100 TB ingest.  Crash/redelivery safety is
     free (see ``hll_merge_batch``)."""
-    import os
-
     from multisql_spark.operators import sketch as sk
-    from multisql_spark.tables import tune_session
 
-    tune_session(spark)
     src = f"{sf_dir}/events.parquet"
-    batch_schema = spark.read.parquet(src).schema
-    if stream_src_dir is None:
-        stream_dir = _scratch_dir("events_hll_")
-        _stage_source(src, stream_dir, "events")
-    else:
-        stream_dir = stream_src_dir
-    state_dir = _scratch_dir("hll_state_")
-    _init_state(
-        spark.createDataFrame([], "col_name STRING, bucket INT, rho INT"),
-        state_dir,
+    stream_dir = stream_src_dir or _staged(src, "events_hll_", "events")
+    state_dir = _fold(
+        _read_stream(spark, src, stream_dir, 1),
+        "append",
+        "col_name STRING, bucket INT, rho INT",
+        hll_merge_batch,
     )
-
-    stream = spark.readStream.schema(batch_schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(stream_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hll_merge_batch(spark, state_dir, batch_df, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-
-    registers = _read_state(spark, state_dir)
+    registers = spark.read.parquet(state_dir)
     est = sk.hll_estimate(registers)
     events = spark.read.parquet(src)
     exact = (
@@ -1149,7 +959,7 @@ def bottomk_merge_batch(
     keys.  Like the HLL registers (and unlike additive CMS cells), the
     min-k monoid is idempotent — re-applying a redelivered batch re-mins
     to the identical state, so no applied-batch ledger is needed."""
-    state = _read_state(spark, state_dir)
+    state = spark.read.parquet(state_dir)
     cand = batch_df.select(
         "value",
         "event_id",
@@ -1165,7 +975,7 @@ def bottomk_merge_batch(
         .orderBy("h", "event_id")
         .limit(1024)
     )
-    _swap_state(state_dir, merged, batch_id)
+    swap_state_dir(state_dir, merged)
 
 
 def stream_quantile_sink(
@@ -1180,50 +990,24 @@ def stream_quantile_sink(
     Per-microbatch cost is one bounded TakeOrdered over (standing k +
     batch candidates) — independent of history size."""
     import math
-    import os
 
     from pyspark.sql import Window as W
 
-    from multisql_spark.tables import tune_session
-
-    tune_session(spark)
     src = f"{sf_dir}/events.parquet"
-    batch_schema = spark.read.parquet(src).schema
-    if stream_src_dir is None:
-        stream_dir = _scratch_dir("events_bk_")
-        _stage_source(src, stream_dir, "events")
-    else:
-        stream_dir = stream_src_dir
-    state_dir = _scratch_dir("bk_state_")
-    _init_state(
-        spark.createDataFrame([], "value DOUBLE, event_id LONG, h STRING"),
-        state_dir,
+    stream_dir = stream_src_dir or _staged(src, "events_bk_", "events")
+    state_dir = _fold(
+        _read_stream(spark, src, stream_dir, 1),
+        "append",
+        "value DOUBLE, event_id LONG, h STRING",
+        bottomk_merge_batch,
     )
-
-    stream = spark.readStream.schema(batch_schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(stream_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bottomk_merge_batch(spark, state_dir, batch_df, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-
     events = spark.read.parquet(src)
     n_rows = events.count()
     k_eff = min(1024, n_rows)
     # the rank-within-sample window runs over the <=1024-row standing
     # state (bounded); the full-table exact_q column the r5 judge flagged
     # is gone — ground truth lives in the pytest harness at test scale
-    sample = _read_state(spark, state_dir).select(
+    sample = spark.read.parquet(state_dir).select(
         "value",
         F.row_number().over(W.orderBy("value", "event_id")).alias("rv"),
     )

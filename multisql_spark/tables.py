@@ -16,6 +16,7 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 log = logging.getLogger("multisql_spark")
 
@@ -159,13 +160,16 @@ def load_tables(
     tune_session(spark)
     out: dict[str, DataFrame] = {}
     for name in names or TABLE_NAMES:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-            # nanos-as-long → microsecond TimestampType (truncation matches
-            # DuckDB's TIMESTAMP_NS → TIMESTAMP cast)
-            from pyspark.sql import functions as F
-
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        df = ts_micros(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def ts_micros(df: DataFrame) -> DataFrame:
+    """``df`` with a ``ts`` read as nanos-as-long converted to a
+    microsecond timestamp (truncation matches DuckDB's TIMESTAMP_NS →
+    TIMESTAMP cast); any other ``df`` unchanged."""
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))

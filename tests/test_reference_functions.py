@@ -308,6 +308,8 @@ def test_convert_timestamp_rules(glue):
         # bare CAST runs the full fallback chain (cast.rs:249-252)
         ("CAST('03/02/2001 04:05' AS TIMESTAMP)", ts(2001, 2, 3, 4, 5)),
         ("CAST('981173100' AS TIMESTAMP)", ts(2001, 2, 3, 4, 5)),
+        # an integer is epoch seconds (cast.rs rule 000)
+        ("CAST(981173100 AS TIMESTAMP)", ts(2001, 2, 3, 4, 5)),
     ]
     for expr, want in cases:
         assert one(glue, f"VALUES ({expr})") == (want,), expr
@@ -364,6 +366,8 @@ def test_nested_casts(glue):
         ("CAST(CAST('03/02/2001 04:05' AS TEXT) AS TIMESTAMP)",
          ts(2001, 2, 3, 4, 5)),
         ("TRY_CAST('junk' AS TIMESTAMP)", None),
+        ("CAST(n AS TIMESTAMP)", ts(2001, 2, 3, 4, 5)),
+        ("CAST(CAST(n AS ANY) AS TIMESTAMP)", ts(2001, 2, 3, 4, 5)),
         ("CAST(CAST(1.9 AS INT) AS TEXT)", "1"),
         ("CAST(f AS DECIMAL(10, 2))", decimal.Decimal("2.50")),
         ("IIF(id = 1, s, n)", "03/02/2001 04:05"),

@@ -432,6 +432,20 @@ def test_typed_error_classes(glue):
             glue.execute(stmt)
 
 
+def test_unconverted_jvm_failure_is_engine_error(glue, monkeypatch):
+    """A JVM failure PySpark does not convert (a raw ``Py4JJavaError``)
+    reaches the caller as an ``EngineError`` with the cause chained."""
+    from py4j.protocol import Py4JJavaError
+
+    # IndexOutOfBoundsException is not among the JVM exceptions PySpark
+    # converts, so the call raises a raw Py4JJavaError
+    empty = glue.spark._jvm.java.util.ArrayList()
+    monkeypatch.setattr(glue, "_execute_one", lambda stmt: empty.get(0))
+    with pytest.raises(EngineError) as info:
+        glue.execute("SELECT 1")
+    assert isinstance(info.value.__cause__, Py4JJavaError)
+
+
 def test_group_by_alias_and_ordinal(glue):
     """Spark-native GROUP BY forms must not be mangled by the
     loose-group-by rewrite (reference has neither form; strict

@@ -26,11 +26,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from multisql_spark.streaming import (
-    _init_state,
-    cms_merge_batch,
-    upsert_merge_batch,
-)
+from multisql_spark.statedir import init_state_dir
+from multisql_spark.streaming import cms_merge_batch, upsert_merge_batch
 from multisql_spark.tables import tune_session
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -106,7 +103,7 @@ def test_upsert_sink_restart_recovery(spark, tmp_path):
         )
 
     latest = make_stream()
-    _init_state(spark.createDataFrame([], latest.schema), out_dir)
+    init_state_dir(spark.createDataFrame([], latest.schema), out_dir)
     merger = lambda df, bid: upsert_merge_batch(spark, out_dir, df, bid)  # noqa: E731
 
     # phase 1: crash AFTER batch 1's apply, before its checkpoint commit
@@ -150,7 +147,7 @@ def test_cms_sink_restart_recovery_no_double_count(spark, tmp_path):
     spark.read.parquet(src).repartition(3).write.parquet(stream_dir)
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    _init_state(spark.createDataFrame([], "r INT, bucket LONG, cell LONG, bid LONG"), state_dir)
+    init_state_dir(spark.createDataFrame([], "r INT, bucket LONG, cell LONG, bid LONG"), state_dir)
 
     def make_stream():
         return (
@@ -218,7 +215,7 @@ def test_hll_sink_restart_recovery_idempotent_without_ledger(spark, tmp_path):
     spark.read.parquet(src).repartition(3).write.parquet(stream_dir)
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    _init_state(spark.createDataFrame([], "col_name STRING, bucket INT, rho INT"), state_dir)
+    init_state_dir(spark.createDataFrame([], "col_name STRING, bucket INT, rho INT"), state_dir)
 
     def make_stream():
         return (
@@ -255,7 +252,7 @@ def test_bottomk_sink_restart_recovery_idempotent_without_ledger(spark, tmp_path
     spark.read.parquet(src).repartition(3).write.parquet(stream_dir)
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    _init_state(spark.createDataFrame([], "value DOUBLE, event_id LONG, h STRING"), state_dir)
+    init_state_dir(spark.createDataFrame([], "value DOUBLE, event_id LONG, h STRING"), state_dir)
 
     def make_stream():
         return (
@@ -295,13 +292,13 @@ def test_state_swap_is_atomic_no_crash_window(spark, tmp_path):
     import os
 
     from multisql_spark.operators import sketch as sk
-    from multisql_spark.streaming import _read_state, hll_merge_batch
+    from multisql_spark.streaming import hll_merge_batch
 
     tune_session(spark)
     src = f"{SF_DIR}/events.parquet"
     events = spark.read.parquet(src)
     state_dir = str(tmp_path / "state")
-    _init_state(
+    init_state_dir(
         spark.createDataFrame([], "col_name STRING, bucket INT, rho INT"),
         state_dir,
     )
@@ -328,7 +325,7 @@ def test_state_swap_is_atomic_no_crash_window(spark, tmp_path):
     # no repair, no healing: the pointer still resolves to the complete
     # pre-swap state
     assert os.readlink(state_dir) == published
-    assert _sorted_rows(_read_state(spark, state_dir)) == _sorted_rows(
+    assert _sorted_rows(spark.read.parquet(state_dir)) == _sorted_rows(
         expected
     )
 
@@ -456,3 +453,91 @@ os._exit(1)  # unreachable: the SIGKILL must have fired
         if p.startswith("state.__v") and str(tmp_path / p) != live
     ]
     assert leftovers == []
+
+
+def test_run_surfaces_batch_failure_and_stops(spark, tmp_path):
+    """``_run`` is the one place a stream starts and drains: a failing
+    ``foreachBatch`` body surfaces as the run's own failure, no query is
+    left running after it, and a memory-sink run over a staged 3-file
+    source returns every row."""
+    from pyspark.errors import StreamingQueryException
+
+    from multisql_spark.streaming import _read_stream, _run, _staged
+
+    src = str(tmp_path / "ids.parquet")
+    spark.range(30).selectExpr("id AS event_id").repartition(3).write.parquet(
+        src
+    )
+    stream_dir = _staged(src, "run_contract_", "ids")
+
+    def fail(batch_df, batch_id):
+        raise _CrashAfterApply(f"batch body failed at {batch_id}")
+
+    with pytest.raises(StreamingQueryException, match="batch body failed"):
+        _run(_read_stream(spark, src, stream_dir), "append", batch=fail)
+    assert spark.streams.active == []
+
+    _run(_read_stream(spark, src, stream_dir, 1), "append", name="run_out")
+    rows = spark.table("run_out").collect()
+    assert sorted(r.event_id for r in rows) == list(range(30))
+
+
+def test_fold_keeps_state_versions_in_its_scratch_dir(spark, tmp_path):
+    """``_fold`` seeds a state dir and publishes one merge per
+    micro-batch; every version of that state lives inside the state's
+    own scratch directory, so removing that directory (its process-exit
+    cleanup) removes them all.  ``rmtree`` does not follow a symlink, so
+    a state path that was itself the scratch directory left its last
+    version behind."""
+    from multisql_spark.statedir import swap_state_dir
+    from multisql_spark.streaming import _fold, _read_stream, _staged
+
+    src = str(tmp_path / "ids.parquet")
+    spark.range(30).selectExpr("id AS event_id").repartition(3).write.parquet(
+        src
+    )
+
+    def append(spark_, state_dir, batch_df, batch_id):
+        state = spark_.read.parquet(state_dir)
+        swap_state_dir(state_dir, state.unionByName(batch_df))
+
+    stream = _read_stream(spark, src, _staged(src, "fold_", "ids"), 1)
+    state_dir = _fold(stream, "append", "event_id LONG", append)
+    rows = spark.read.parquet(state_dir).collect()
+    assert sorted(r.event_id for r in rows) == list(range(30))
+
+    version = os.path.realpath(state_dir)
+    assert os.path.basename(version) == "state.__v3"  # seed + 3 batches
+    shutil.rmtree(os.path.dirname(state_dir))
+    assert not os.path.exists(version)
+
+
+def test_nanos_ts_reads_as_micros_in_batch_and_stream(spark, tmp_path):
+    """A TIMESTAMP(NANOS) ``ts``, as an ``events`` file may store it,
+    reads as nanos-as-long and is converted by one helper,
+    ``tables.ts_micros``, on the batch path and on the stream path
+    alike: truncated to microseconds, as DuckDB casts TIMESTAMP_NS to
+    TIMESTAMP."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from multisql_spark.streaming import _read_stream, _run, _staged
+    from multisql_spark.tables import ts_micros
+
+    src = str(tmp_path / "events.parquet")
+    ts_ns = [981173100_123456789, 981173160_000000999]
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array(ts_ns, pa.timestamp("ns"))}),
+        src,
+    )
+    tune_session(spark)
+    batch = ts_micros(spark.read.parquet(src))
+    _run(
+        _read_stream(spark, src, _staged(src, "nanos_", "events")),
+        "append",
+        name="nanos_out",
+    )
+    for df in (batch, spark.table("nanos_out")):
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = df.orderBy("event_id").selectExpr("unix_micros(ts)").collect()
+        assert [r[0] for r in got] == [t // 1000 for t in ts_ns]
