@@ -1,20 +1,30 @@
 """Multimodal column plumbing (beyond-reference, BASELINE.json).
 
 Images/audio/video are opaque ``binary`` columns plus a typed metadata
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages.  The AUDIO codec is REAL:
-RIFF/WAVE PCM16 needs only the stdlib (``wave``/``struct``), so
-:func:`decode_wav` / :func:`wav_energy` run a genuine decode, validated
-against an independent fixture oracle (tools/make_wav_fixture.py) and
-cross-checked against ``audio_chunk_plan``'s decode-free byte proxy.
-Three IMAGE codecs are REAL too: uncompressed 24-bit BMP
-(:func:`decode_bmp`, ``struct``), compressed PNG (:func:`decode_png`,
-``zlib`` inflate + all five scanline filters + chunk CRCs), and
-baseline-sequential JPEG (:func:`decode_jpeg`, from-scratch Huffman
-entropy decode + dequant + IDCT + YCbCr).  ``decode_image`` (the
-generic any-format entry) still requires PIL for real-world inputs the
-scoped decoders don't cover (progressive/subsampled JPEG, palette PNG,
-WebP, ...) and raises honestly without it.
+struct.  Six container formats have REAL codecs here, each written once
+as one encoder and one decoder: RIFF/WAVE PCM16 (``wave``/``struct``),
+uncompressed 24-bit BMP, PNG (``zlib`` inflate, all five scanline
+filters, chunk CRCs), GIF (a from-scratch LZW), RIFF/AVI (container
+walk and frame index; codec payloads stay opaque) and baseline JPEG
+(Huffman entropy decode, dequantize, IDCT, YCbCr→RGB).  Each is pinned
+by an independent reference in the tests (a WAV fixture, hand-built PNG
+and GIF streams, a textbook IDCT).  :func:`decode_image` stays a
+deterministic stub; formats the codecs here do not cover need PIL.
+
+The stages run exactly these codecs.  Every per-asset stage goes
+through :func:`_per_asset`, the module's one Arrow-batched
+``mapInPandas`` stage, which applies a module-level row function to
+each row; synthesized assets take their bytes from :func:`_md5_pair`.
+JPEG has one batch stage of its own, because :func:`_jpeg_decode`
+decodes a whole batch at once: each asset's entropy stream is decoded
+in Python, then one numpy dequantize/IDCT/colour pass covers every
+block in the batch (:func:`decode_jpeg` is that decoder on one asset).
+
+Executors import this package: the row functions are pickled by
+reference, so ``multisql_spark`` must be importable on every Python
+worker.  ``tables.tune_session`` puts the repository root on the worker
+``PYTHONPATH`` of the sessions it tunes; on a cluster, ship the package
+with ``--py-files`` or ``SparkContext.addPyFile``.
 
 Scale notes: binary payloads dominate row size, so every plan here keeps
 them out of shuffles — features are extracted in the scan stage
@@ -26,12 +36,14 @@ own parquet column chunk, so metadata-only queries never read bytes
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import io
-import math
 import struct
 import wave
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -106,12 +118,37 @@ def attach_audio_blobs(docs: DataFrame) -> DataFrame:
     )
 
 
+def _md5_pair(text: str | None) -> bytes:
+    """The 32 synthesized asset bytes of a document: ``md5(text) +
+    md5("x" + text)``, the bytes :func:`attach_blobs` builds in SQL."""
+    t = (text or "").encode()
+    return hashlib.md5(t).digest() + hashlib.md5(b"x" + t).digest()
+
+
+def _per_asset(df: DataFrame, fn: Callable, schema: str) -> DataFrame:
+    """Run ``fn`` over ``df`` in one Arrow-batched ``mapInPandas`` stage:
+    ``fn(*row)`` gets each row's values in ``df.columns`` order and
+    returns that row's output tuples, in ``schema``'s column order.
+    ``fn`` must be a module-level function (workers import it)."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for row in zip(*(pdf[c] for c in pdf.columns))
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
 # ------------------------------------------------------------------ WAV codec
 #
 # The one modality whose REAL codec is pure stdlib (VERDICT r7 missing
 # #2): RIFF/WAVE PCM16 decodes with `wave` + `struct`, no third-party
-# dependency — so for audio the stub below is replaced by a genuine
-# decode path, while image decode keeps its honest NotImplementedError.
+# dependency.
 
 def encode_wav_pcm16(samples_le: bytes, sample_rate: int) -> bytes:
     """Wrap raw little-endian PCM16 mono bytes in a canonical 44-byte
@@ -133,8 +170,7 @@ def encode_wav_pcm16(samples_le: bytes, sample_rate: int) -> bytes:
 def decode_wav(blob: bytes) -> tuple[int, list[int]]:
     """REAL audio decode on the stdlib: parse the RIFF container with
     ``wave`` and unpack the PCM16 frames.  Returns (sample_rate_hz,
-    samples).  Only PCM16 mono is in scope — anything else raises, like
-    the image path does without PIL."""
+    samples).  Only PCM16 mono is in scope — anything else raises."""
     with wave.open(io.BytesIO(blob), "rb") as w:
         if w.getsampwidth() != 2 or w.getnchannels() != 1:
             raise NotImplementedError(
@@ -146,6 +182,11 @@ def decode_wav(blob: bytes) -> tuple[int, list[int]]:
     return rate, list(struct.unpack(f"<{n}h", raw))
 
 
+def _wav_asset(doc_id: int, text: str, n_chars: int) -> list[tuple]:
+    rate = (n_chars % 4) * 4000 + 8000
+    return [(doc_id, encode_wav_pcm16(_md5_pair(text), rate))]
+
+
 def attach_wav_blobs(docs: DataFrame) -> DataFrame:
     """Synthesize REAL RIFF/WAVE PCM16 mono assets from documents: the
     data section is the same 32 md5-chain bytes as
@@ -154,89 +195,44 @@ def attach_wav_blobs(docs: DataFrame) -> DataFrame:
     byte-identical to the ``fake_pcm`` blob and ``audio_chunk_plan``'s
     decode-free proxy can be cross-checked against a true decode.
 
-    Encoding runs as an Arrow-batched ``mapInPandas`` stage with a
-    self-contained worker (executors never import this package); the
-    44-byte header is per-asset because the rate varies."""
+    :func:`encode_wav_pcm16` runs per asset in a :func:`_per_asset`
+    stage; the 44-byte header is per-asset because the rate varies."""
+    return _per_asset(
+        spread(
+            docs.select(
+                F.col("doc_id").cast("long"), "text",
+                F.col("n_chars").cast("int"),
+            )
+        ),
+        _wav_asset,
+        "doc_id long, blob binary",
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import struct as _struct
 
-        for pdf in batches:
-            blobs = []
-            for text, n_chars in zip(pdf["text"], pdf["n_chars"]):
-                t = (text or "").encode()
-                data = (
-                    hashlib.md5(t).digest()
-                    + hashlib.md5(b"x" + t).digest()
-                )
-                rate = (int(n_chars) % 4) * 4000 + 8000
-                blobs.append(
-                    b"RIFF"
-                    + _struct.pack("<I", 36 + len(data))
-                    + b"WAVE"
-                    + b"fmt "
-                    + _struct.pack(
-                        "<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16
-                    )
-                    + b"data"
-                    + _struct.pack("<I", len(data))
-                    + data
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return spread(
-        docs.select(
-            F.col("doc_id").cast("long"), "text", F.col("n_chars").cast("int")
-        )
-    ).mapInPandas(run, "doc_id long, blob binary")
+def _wav_energy(doc_id: int, blob: bytes) -> list[tuple]:
+    rate, samples = decode_wav(blob)
+    # the data bytes' sum, from the little-endian bytes of each sample
+    byte_sum = sum((s & 0xFF) + (s >> 8 & 0xFF) for s in samples)
+    return [
+        (doc_id, rate, len(samples), sum(s * s for s in samples), byte_sum)
+    ]
 
 
 def wav_energy(mm_wav: DataFrame) -> DataFrame:
     """True waveform statistics from a REAL decode of each WAV blob
-    (stdlib ``wave`` in an Arrow-batched ``mapInPandas`` stage): sample
-    rate and count FROM THE HEADER (not from metadata someone attached),
-    exact integer sample energy (sum of s²), and the raw data byte-sum
-    that bridges to ``audio_chunk_plan``'s decode-free energy proxy.
+    (:func:`decode_wav` in a :func:`_per_asset` stage): sample rate and
+    count FROM THE HEADER (not from metadata someone attached), exact
+    integer sample energy (sum of s²), and the raw data byte-sum that
+    bridges to ``audio_chunk_plan``'s decode-free energy proxy.
 
     Scale shape: the codec runs in the scan stage before any exchange —
     only five ints per asset ever move; blobs never shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import struct as _struct
-        import wave as _wave
-
-        for pdf in batches:
-            rates, counts, energies, byte_sums = [], [], [], []
-            for b in pdf["blob"]:
-                with _wave.open(_io.BytesIO(bytes(b)), "rb") as w:
-                    if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                        raise NotImplementedError(
-                            "only PCM16 mono WAV decode is in scope"
-                        )
-                    rates.append(w.getframerate())
-                    n = w.getnframes()
-                    raw = w.readframes(n)
-                samples = _struct.unpack(f"<{n}h", raw)
-                counts.append(n)
-                energies.append(sum(s * s for s in samples))
-                byte_sums.append(sum(raw))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate_hz": pd.Series(rates, dtype="int64"),
-                    "n_samples": pd.Series(counts, dtype="int64"),
-                    "energy_sq": pd.Series(energies, dtype="int64"),
-                    "byte_sum": pd.Series(byte_sums, dtype="int64"),
-                }
-            )
-
-    schema = (
+    return _per_asset(
+        mm_wav.select("doc_id", "blob"),
+        _wav_energy,
         "doc_id long, sample_rate_hz long, n_samples long, "
-        "energy_sq long, byte_sum long"
+        "energy_sq long, byte_sum long",
     )
-    return mm_wav.select("doc_id", "blob").mapInPandas(run, schema)
 
 
 # ------------------------------------------------------------------ BMP codec
@@ -244,8 +240,6 @@ def wav_energy(mm_wav: DataFrame) -> DataFrame:
 # Like WAV for audio, UNCOMPRESSED 24-bit BMP is the image container the
 # stdlib can genuinely decode (struct only): file header offsets, DIB
 # dimensions, 4-byte row stride, BGR channel order, bottom-up raster.
-# So the image codec stub below is real for BMP; PIL remains required —
-# and honestly absent — only for COMPRESSED formats (PNG/JPEG).
 
 BMP_W, BMP_H = 4, 2  # synthesized asset grid: 4x2 px, 24 bytes of pixels
 
@@ -274,7 +268,7 @@ def decode_bmp(blob: bytes) -> tuple[int, int, list[list[int]]]:
     [r, g, b] triples — i.e. the decoder must undo both the bottom-up
     row order and the BGR channel order, so a wrong parse cannot pass
     the oracle.  Only uncompressed 24-bit is in scope; anything else
-    raises, like the PIL-less path does for PNG/JPEG."""
+    raises."""
     if blob[:2] != b"BM":
         raise ValueError("not a BMP file")
     (off,) = struct.unpack_from("<I", blob, 10)
@@ -302,106 +296,48 @@ def decode_bmp(blob: bytes) -> tuple[int, int, list[list[int]]]:
     return width, height, [px for row in rows for px in row]
 
 
+def _bmp_asset(doc_id: int, text: str) -> list[tuple]:
+    pixels = _md5_pair(text)[: BMP_W * 3 * BMP_H]
+    return [(doc_id, encode_bmp24(pixels, BMP_W, BMP_H))]
+
+
 def attach_bmp_blobs(docs: DataFrame) -> DataFrame:
     """Synthesize REAL 4x2 24-bit BMP assets from documents: the pixel
     payload is the first 24 md5-chain bytes (stride 12 = width*3, no
-    padding needed), wrapped in genuine BMP headers by an Arrow-batched
-    ``mapInPandas`` stage with a self-contained worker."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import struct as _struct
-
-        w, h = 4, 2
-        head = (
-            b"BM"
-            + _struct.pack("<IHHI", 54 + w * 3 * h, 0, 0, 54)
-            + _struct.pack(
-                "<IiiHHIIiiII",
-                40, w, h, 1, 24, 0, w * 3 * h, 2835, 2835, 0, 0,
-            )
-        )
-        for pdf in batches:
-            blobs = []
-            for text in pdf["text"]:
-                t = (text or "").encode()
-                data = (
-                    hashlib.md5(t).digest()
-                    + hashlib.md5(b"x" + t).digest()
-                )
-                blobs.append(head + data[: w * 3 * h])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return spread(docs.select(F.col("doc_id").cast("long"), "text")).mapInPandas(
-        run, "doc_id long, blob binary"
+    padding needed), wrapped in genuine BMP headers by
+    :func:`encode_bmp24` in a :func:`_per_asset` stage."""
+    return _per_asset(
+        spread(docs.select(F.col("doc_id").cast("long"), "text")),
+        _bmp_asset,
+        "doc_id long, blob binary",
     )
+
+
+def _rgb_sums(pixels: list[list[int]]) -> tuple[int, int, int]:
+    return tuple(sum(p[c] for p in pixels) for c in range(3))
+
+
+def _bmp_stats(doc_id: int, blob: bytes) -> list[tuple]:
+    w, h, px = decode_bmp(blob)
+    return [(doc_id, w, h, *_rgb_sums(px), "-".join(map(str, px[0])))]
 
 
 def bmp_pixel_stats(mm_bmp: DataFrame) -> DataFrame:
     """True per-asset pixel statistics from a REAL decode of each BMP
-    blob (stdlib ``struct`` in an Arrow-batched ``mapInPandas`` stage):
-    dimensions FROM THE HEADER, exact per-channel sums, and the
-    top-left pixel — whose value depends on undoing the bottom-up row
-    order and BGR channel order, pinning that the parse is real.
+    blob (:func:`decode_bmp` in a :func:`_per_asset` stage): dimensions
+    FROM THE HEADER, exact per-channel sums, and the top-left pixel —
+    whose value depends on undoing the row order (bottom-up, or
+    top-down for a negative height) and BGR channel order, pinning that
+    the parse is real.
 
     Scale shape: codec in the scan stage before any exchange; six ints
     and a short string per asset move, blobs never shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        for pdf in batches:
-            ws, hs, rsum, gsum, bsum, tl = [], [], [], [], [], []
-            for b in pdf["blob"]:
-                blob = bytes(b)
-                (off,) = _struct.unpack_from("<I", blob, 10)
-                _sz, w, h, _p, bpp, comp = _struct.unpack_from(
-                    "<IiiHHI", blob, 14
-                )
-                if bpp != 24 or comp != 0:
-                    raise NotImplementedError(
-                        "only uncompressed 24-bit BMP decode is in scope"
-                    )
-                h = abs(h)
-                stride = ((w * 3 + 3) // 4) * 4
-                data = blob[off : off + stride * h]
-                # channel sums are row-order-free; BGR order matters
-                bsum.append(sum(
-                    data[r * stride + 3 * c]
-                    for r in range(h) for c in range(w)
-                ))
-                gsum.append(sum(
-                    data[r * stride + 3 * c + 1]
-                    for r in range(h) for c in range(w)
-                ))
-                rsum.append(sum(
-                    data[r * stride + 3 * c + 2]
-                    for r in range(h) for c in range(w)
-                ))
-                # top-left pixel: LAST stored row (bottom-up), first col
-                base = off + (h - 1) * stride
-                tl.append(
-                    f"{blob[base + 2]}-{blob[base + 1]}-{blob[base]}"
-                )
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "sum_r": pd.Series(rsum, dtype="int64"),
-                    "sum_g": pd.Series(gsum, dtype="int64"),
-                    "sum_b": pd.Series(bsum, dtype="int64"),
-                    "top_left_rgb": tl,
-                }
-            )
-
-    schema = (
+    return _per_asset(
+        mm_bmp.select("doc_id", "blob"),
+        _bmp_stats,
         "doc_id long, width long, height long, sum_r long, sum_g long, "
-        "sum_b long, top_left_rgb string"
+        "sum_b long, top_left_rgb string",
     )
-    return mm_bmp.select("doc_id", "blob").mapInPandas(run, schema)
 
 
 # ------------------------------------------------------------------ PNG codec
@@ -409,8 +345,7 @@ def bmp_pixel_stats(mm_bmp: DataFrame) -> DataFrame:
 # The COMPRESSED image container the stdlib can also genuinely decode:
 # PNG's DEFLATE stream is `zlib`, its chunk CRCs are `zlib.crc32`, and
 # the five scanline filters (None/Sub/Up/Average/Paeth) are pure byte
-# algebra — so the "PIL required for compressed formats" stub narrows to
-# JPEG only.  Synthesized assets pick a REAL filter per scanline from
+# algebra.  Synthesized assets pick a REAL filter per scanline from
 # the pixel bytes, so across a corpus every filter type (including
 # Paeth) is exercised; a decoder that inflates but skips unfiltering, or
 # implements Paeth's tie-breaking order wrong, cannot reproduce the
@@ -570,211 +505,41 @@ def decode_png(blob: bytes) -> tuple[int, int, list[int], list[list[int]]]:
     return width, height, filters, pixels
 
 
-def _png_attach_run():
-    """Build the self-contained synth kernel for :func:`attach_png_blobs`
-    (r11: factored out so the fused decode path can compose it with the
-    stats kernel inside ONE Python stage — guide §4.1)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import struct as _struct
-        import zlib as _zlib
-
-        w, h, bpp = PNG_W, PNG_H, 3
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            return b if pb <= pc else c
-
-        def filt(ft, row, prior):
-            out = bytearray(len(row))
-            for i, x in enumerate(row):
-                left = row[i - bpp] if i >= bpp else 0
-                up = prior[i]
-                ul = prior[i - bpp] if i >= bpp else 0
-                pred = (0, left, up, (left + up) // 2,
-                        paeth(left, up, ul))[ft]
-                out[i] = (x - pred) & 0xFF
-            return bytes(out)
-
-        def chunk(ct, data):
-            return (
-                _struct.pack(">I", len(data)) + ct + data
-                + _struct.pack(">I", _zlib.crc32(ct + data))
-            )
-
-        ihdr = chunk(b"IHDR", _struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        for pdf in batches:
-            blobs = []
-            for text in pdf["text"]:
-                t = (text or "").encode()
-                data = (
-                    hashlib.md5(t).digest()
-                    + hashlib.md5(b"x" + t).digest()
-                )[: w * h * bpp]
-                raw = bytearray()
-                prior = bytes(w * bpp)
-                for r in range(h):
-                    row = data[r * w * bpp:(r + 1) * w * bpp]
-                    ft = data[12 * r] % 5
-                    raw.append(ft)
-                    raw += filt(ft, row, prior)
-                    prior = row
-                blobs.append(
-                    b"\x89PNG\r\n\x1a\n" + ihdr
-                    + chunk(b"IDAT", _zlib.compress(bytes(raw)))
-                    + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return run
-
-
-def attach_png_blobs(docs: DataFrame) -> DataFrame:
-    """Synthesize REAL 4x2 RGB8 PNG assets from documents: the pixel
-    payload is the 24 md5-chain bytes top-down RGB, and each scanline's
-    filter type is ``data[12*r] % 5`` — deterministic, SQL-derivable,
-    and uniform over all five filters across a corpus.  Encoding
-    (filtering + DEFLATE + CRC) runs in an Arrow-batched ``mapInPandas``
-    stage with a self-contained worker."""
-    return spread(docs.select(F.col("doc_id").cast("long"), "text")).mapInPandas(
-        _png_attach_run(), "doc_id long, blob binary"
+def _png_stats(doc_id: int, text: str) -> list[tuple]:
+    pixels = _md5_pair(text)[: PNG_W * 3 * PNG_H]
+    filters = [pixels[r * PNG_W * 3] % 5 for r in range(PNG_H)]
+    w, h, used, px = decode_png(
+        encode_png_rgb8(pixels, PNG_W, PNG_H, filters)
     )
-
-
-_PNG_STATS_SCHEMA = (
-    "doc_id long, width long, height long, sum_r long, sum_g long, "
-    "sum_b long, filters_used string, top_left_rgb string"
-)
-
-
-def _png_stats_run():
-    """Build the self-contained decode kernel for
-    :func:`png_pixel_stats` (r11: factored out for the fused path —
-    guide §4.1)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
-
-        bpp = 3
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            return b if pb <= pc else c
-
-        def unfilt(ft, row, prior):
-            for i in range(len(row)):
-                left = row[i - bpp] if i >= bpp else 0
-                up = prior[i]
-                ul = prior[i - bpp] if i >= bpp else 0
-                pred = (0, left, up, (left + up) // 2,
-                        paeth(left, up, ul))[ft]
-                row[i] = (row[i] + pred) & 0xFF
-
-        for pdf in batches:
-            ws, hs, rsum, gsum, bsum, fsig, tl = [], [], [], [], [], [], []
-            for b in pdf["blob"]:
-                blob = bytes(b)
-                if blob[:8] != b"\x89PNG\r\n\x1a\n":
-                    raise ValueError("not a PNG file")
-                pos, ihdr, idat = 8, None, bytearray()
-                while pos < len(blob):
-                    (ln,) = _struct.unpack_from(">I", blob, pos)
-                    ct = blob[pos + 4:pos + 8]
-                    data = blob[pos + 8:pos + 8 + ln]
-                    (crc,) = _struct.unpack_from(">I", blob, pos + 8 + ln)
-                    if _zlib.crc32(ct + data) != crc:
-                        raise ValueError(f"bad CRC in {ct!r} chunk")
-                    if ct == b"IHDR":
-                        ihdr = _struct.unpack(">IIBBBBB", data)
-                    elif ct == b"IDAT":
-                        idat += data
-                    elif ct == b"IEND":
-                        break
-                    pos += 12 + ln
-                w, h, depth, ctn, comp, filt_m, il = ihdr
-                if (depth, ctn, comp, filt_m, il) != (8, 2, 0, 0, 0):
-                    raise NotImplementedError(
-                        "only 8-bit truecolor non-interlaced PNG decode "
-                        "is in scope"
-                    )
-                raw = _zlib.decompress(bytes(idat))
-                stride = w * bpp
-                sr = sg = sb = 0
-                fts = []
-                prior = bytes(stride)
-                first_row = None
-                for r in range(h):
-                    base = r * (stride + 1)
-                    ft = raw[base]
-                    fts.append(ft)
-                    row = bytearray(raw[base + 1:base + 1 + stride])
-                    unfilt(ft, row, prior)
-                    prior = bytes(row)
-                    if r == 0:
-                        first_row = bytes(row)
-                    for c in range(w):
-                        sr += row[3 * c]
-                        sg += row[3 * c + 1]
-                        sb += row[3 * c + 2]
-                ws.append(w)
-                hs.append(h)
-                rsum.append(sr)
-                gsum.append(sg)
-                bsum.append(sb)
-                fsig.append("-".join(str(f) for f in fts))
-                tl.append(
-                    f"{first_row[0]}-{first_row[1]}-{first_row[2]}"
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "sum_r": pd.Series(rsum, dtype="int64"),
-                    "sum_g": pd.Series(gsum, dtype="int64"),
-                    "sum_b": pd.Series(bsum, dtype="int64"),
-                    "filters_used": fsig,
-                    "top_left_rgb": tl,
-                }
-            )
-
-    return run
-
-
-def png_pixel_stats(mm_png: DataFrame) -> DataFrame:
-    """True per-asset pixel statistics from a REAL decode of each PNG
-    blob (stdlib ``zlib`` + ``struct`` in an Arrow-batched
-    ``mapInPandas`` stage): dimensions FROM THE HEADER, per-channel
-    sums, the top-left pixel, and the per-scanline filter signature
-    READ FROM THE COMPRESSED STREAM — reproducing the pixel sums
-    requires a correct inflate AND a correct unfilter of whichever of
-    the five filter types each row used (Paeth included).
-
-    Scale shape: codec in the scan stage before any exchange; six ints
-    and two short strings per asset move, blobs never shuffle."""
-    return mm_png.select("doc_id", "blob").mapInPandas(
-        _png_stats_run(), _PNG_STATS_SCHEMA
-    )
+    return [
+        (
+            doc_id, w, h, *_rgb_sums(px), "-".join(map(str, used)),
+            "-".join(map(str, px[0])),
+        )
+    ]
 
 
 def png_decode_stats(docs: DataFrame) -> DataFrame:
-    """Fused PNG synth + decode in ONE Arrow/`mapInPandas` stage (r11,
-    guide §4.1): blobs are produced and consumed inside the same Python
-    worker and never cross the JVM↔Python boundary.  Composes the exact
-    kernels :func:`attach_png_blobs` / :func:`png_pixel_stats` run."""
-    attach, decode = _png_attach_run(), _png_stats_run()
-    return spread(
-        docs.select(F.col("doc_id").cast("long"), "text")
-    ).mapInPandas(
-        lambda batches: decode(attach(batches)), _PNG_STATS_SCHEMA
+    """Synthesize and decode REAL 4x2 RGB8 PNG assets in ONE
+    :func:`_per_asset` stage (r11, guide §4.1: blobs never cross the
+    JVM↔Python boundary).  Each asset's pixel payload is the 24
+    md5-chain bytes top-down RGB, and scanline r's filter type is the
+    first byte of that row ``% 5`` — deterministic, SQL-derivable, and
+    uniform over all five filters across a corpus.  :func:`encode_png_rgb8`
+    filters, DEFLATEs and CRCs it; :func:`decode_png` reads it back.
+    Per asset: dimensions FROM THE HEADER, per-channel sums, the
+    per-scanline filter signature READ FROM THE COMPRESSED STREAM, and
+    the top-left pixel — reproducing the sums requires a correct inflate
+    AND a correct unfilter of whichever filter each row used (Paeth
+    included).
+
+    Scale shape: codec in the scan stage before any exchange; six ints
+    and two short strings per asset move."""
+    return _per_asset(
+        spread(docs.select(F.col("doc_id").cast("long"), "text")),
+        _png_stats,
+        "doc_id long, width long, height long, sum_r long, sum_g long, "
+        "sum_b long, filters_used string, top_left_rgb string",
     )
 
 
@@ -985,227 +750,43 @@ def decode_gif(blob: bytes) -> tuple[int, int, bytes]:
     raise ValueError("no image descriptor found")
 
 
+def _gif_asset(doc_id: int, text: str) -> list[tuple]:
+    line = _md5_pair(text)[:GIF_W]
+    return [(doc_id, encode_gif87a(line * GIF_H, GIF_W, GIF_H))]
+
+
 def attach_gif_blobs(docs: DataFrame) -> DataFrame:
     """Synthesize REAL GIF87a assets from documents: the 24 md5-chain
     bytes as one indexed scanline repeated 32 times (24x32), so the LZW
-    dictionary genuinely crosses the 9-bit width boundary.  Encoding
-    runs in an Arrow-batched ``mapInPandas`` stage with a self-contained
-    worker (executors never import this package; the roundtrip test pins
-    this copy of the LZW encoder to the module-level one)."""
-    w, h = GIF_W, GIF_H
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import struct as _struct
-
-        def lzw(indices, mcs):
-            clear, eoi = 1 << mcs, (1 << mcs) + 1
-            out = bytearray()
-            buf = cnt = 0
-
-            def emit(code, width):
-                nonlocal buf, cnt
-                buf |= code << cnt
-                cnt += width
-                while cnt >= 8:
-                    out.append(buf & 0xFF)
-                    buf >>= 8
-                    cnt -= 8
-
-            def fresh():
-                return (
-                    {bytes([i]): i for i in range(1 << mcs)},
-                    eoi + 1, mcs + 1,
-                )
-
-            table, nxt, width = fresh()
-            emit(clear, width)
-            wseq = b""
-            for b in indices:
-                wk = wseq + bytes([b])
-                if wk in table:
-                    wseq = wk
-                    continue
-                emit(table[wseq], width)
-                if nxt < 4096:
-                    table[wk] = nxt
-                    nxt += 1
-                    if nxt - 1 == (1 << width) and width < 12:
-                        width += 1
-                else:
-                    emit(clear, width)
-                    table, nxt, width = fresh()
-                wseq = bytes([b])
-            if wseq:
-                emit(table[wseq], width)
-            emit(eoi, width)
-            if cnt:
-                out.append(buf & 0xFF)
-            return bytes(out)
-
-        gct = bytes(v for i in range(256) for v in (i, i, i))
-        head = (
-            b"GIF87a" + _struct.pack("<HHBBB", w, h, 0xF7, 0, 0) + gct
-            + b"\x2C" + _struct.pack("<HHHHB", 0, 0, w, h, 0)
-            + bytes([8])
-        )
-        for pdf in batches:
-            blobs = []
-            for text in pdf["text"]:
-                t = (text or "").encode()
-                line = (
-                    hashlib.md5(t).digest()
-                    + hashlib.md5(b"x" + t).digest()
-                )[:w]
-                z = lzw(line * h, 8)
-                blocks = bytearray()
-                for i in range(0, len(z), 255):
-                    chunk = z[i:i + 255]
-                    blocks.append(len(chunk))
-                    blocks += chunk
-                blocks.append(0)
-                blobs.append(head + bytes(blocks) + b"\x3B")
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return spread(docs.select(F.col("doc_id").cast("long"), "text")).mapInPandas(
-        run, "doc_id long, blob binary"
+    dictionary genuinely crosses the 9-bit width boundary.
+    :func:`encode_gif87a` runs per asset in a :func:`_per_asset`
+    stage."""
+    return _per_asset(
+        spread(docs.select(F.col("doc_id").cast("long"), "text")),
+        _gif_asset,
+        "doc_id long, blob binary",
     )
+
+
+def _gif_stats(doc_id: int, blob: bytes) -> list[tuple]:
+    w, h, idx = decode_gif(blob)
+    return [(doc_id, w, h, sum(idx), min(idx), max(idx), idx[0])]
 
 
 def gif_index_stats(mm_gif: DataFrame) -> DataFrame:
     """True per-asset index statistics from a REAL decode of each GIF
-    blob (the LZW decompressor above, in an Arrow-batched
-    ``mapInPandas`` stage): dimensions FROM THE DESCRIPTOR, exact index
-    sum / min / max over the full raster, and the top-left index.
+    blob (:func:`decode_gif` in a :func:`_per_asset` stage): dimensions
+    FROM THE DESCRIPTOR, exact index sum / min / max over the full
+    raster, and the top-left index.
 
     Scale shape: codec in the scan stage before any exchange; six ints
     per asset move, blobs never shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        def unlzw(data, mcs):
-            clear, eoi = 1 << mcs, (1 << mcs) + 1
-            pos = buf = cnt = 0
-            out = bytearray()
-
-            def read(width):
-                nonlocal pos, buf, cnt
-                while cnt < width:
-                    if pos >= len(data):
-                        return None
-                    buf |= data[pos] << cnt
-                    pos += 1
-                    cnt += 8
-                code = buf & ((1 << width) - 1)
-                buf >>= width
-                cnt -= width
-                return code
-
-            def fresh():
-                return (
-                    {i: bytes([i]) for i in range(1 << mcs)},
-                    eoi + 1, mcs + 1,
-                )
-
-            table, nxt, width = fresh()
-            prev = None
-            while True:
-                code = read(width)
-                if code is None or code == eoi:
-                    break
-                if code == clear:
-                    table, nxt, width = fresh()
-                    prev = None
-                    continue
-                if code in table:
-                    entry = table[code]
-                elif code == nxt and prev is not None:
-                    entry = prev + prev[:1]
-                else:
-                    raise ValueError(f"corrupt LZW stream: code {code}")
-                out += entry
-                if prev is not None and nxt < 4096:
-                    table[nxt] = prev + entry[:1]
-                    nxt += 1
-                    if nxt == (1 << width) and width < 12:
-                        width += 1
-                prev = entry
-            return bytes(out)
-
-        def dec(blob):
-            if blob[:6] not in (b"GIF87a", b"GIF89a"):
-                raise ValueError("not a GIF file")
-            _sw, _sh, packed, _bg, _ar = _struct.unpack_from(
-                "<HHBBB", blob, 6
-            )
-            pos = 13
-            if packed & 0x80:
-                pos += 3 * (2 << (packed & 0x07))
-            while pos < len(blob):
-                marker = blob[pos]
-                if marker == 0x21:
-                    pos += 2
-                    while blob[pos]:
-                        pos += 1 + blob[pos]
-                    pos += 1
-                elif marker == 0x2C:
-                    _l, _t, w, h, ipacked = _struct.unpack_from(
-                        "<HHHHB", blob, pos + 1
-                    )
-                    if ipacked & 0xC0:
-                        raise NotImplementedError(
-                            "local color tables / interlace out of scope"
-                        )
-                    pos += 10
-                    mcs = blob[pos]
-                    pos += 1
-                    z = bytearray()
-                    while blob[pos]:
-                        n = blob[pos]
-                        z += blob[pos + 1:pos + 1 + n]
-                        pos += 1 + n
-                    idx = unlzw(bytes(z), mcs)
-                    if len(idx) != w * h:
-                        raise ValueError(
-                            "LZW payload does not fill the raster"
-                        )
-                    return w, h, idx
-                elif marker == 0x3B:
-                    break
-                else:
-                    raise ValueError(
-                        f"unexpected GIF block marker {marker:#x}"
-                    )
-            raise ValueError("no image descriptor found")
-
-        for pdf in batches:
-            ws, hs, sums, mins, maxs, tls = [], [], [], [], [], []
-            for b in pdf["blob"]:
-                w, h, idx = dec(bytes(b))
-                ws.append(w)
-                hs.append(h)
-                sums.append(sum(idx))
-                mins.append(min(idx))
-                maxs.append(max(idx))
-                tls.append(idx[0])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "idx_sum": pd.Series(sums, dtype="int64"),
-                    "idx_min": pd.Series(mins, dtype="int64"),
-                    "idx_max": pd.Series(maxs, dtype="int64"),
-                    "top_left_idx": pd.Series(tls, dtype="int64"),
-                }
-            )
-
-    schema = (
+    return _per_asset(
+        mm_gif.select("doc_id", "blob"),
+        _gif_stats,
         "doc_id long, width long, height long, idx_sum long, "
-        "idx_min long, idx_max long, top_left_idx long"
+        "idx_min long, idx_max long, top_left_idx long",
     )
-    return mm_gif.select("doc_id", "blob").mapInPandas(run, schema)
 
 
 # ------------------------------------------------------------------ AVI codec
@@ -1294,191 +875,69 @@ def parse_avi(blob: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
     return us_per_frame, total, entries
 
 
-def _avi_attach_run():
-    """Build the self-contained synth kernel for :func:`attach_avi_blobs`
-    (r11: factored out for the fused path — guide §4.1)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import struct as _struct
-
-        nf, fb = 8, 4
-
-        for pdf in batches:
-            blobs = []
-            for text, n_chars in zip(pdf["text"], pdf["n_chars"]):
-                t = (text or "").encode()
-                data = (
-                    hashlib.md5(t).digest()
-                    + hashlib.md5(b"x" + t).digest()
-                )
-                upf = (int(n_chars) % 4 + 1) * 10000
-                avih = _struct.pack(
-                    "<IIIIIIIIII4I",
-                    upf, 0, 0, 0, nf, 0, 1, 0, 4, 2, 0, 0, 0, 0,
-                )
-                hdrl = (
-                    b"LIST" + _struct.pack("<I", 4 + 8 + len(avih))
-                    + b"hdrl" + b"avih"
-                    + _struct.pack("<I", len(avih)) + avih
-                )
-                movi_body = bytearray()
-                idx = bytearray()
-                for i in range(nf):
-                    idx += b"00dc" + _struct.pack(
-                        "<III", 0x10, 4 + len(movi_body), fb
-                    )
-                    movi_body += (
-                        b"00dc" + _struct.pack("<I", fb)
-                        + data[i * fb:(i + 1) * fb]
-                    )
-                movi = (
-                    b"LIST" + _struct.pack("<I", 4 + len(movi_body))
-                    + b"movi" + bytes(movi_body)
-                )
-                idx1 = b"idx1" + _struct.pack("<I", len(idx)) + bytes(idx)
-                body = b"AVI " + hdrl + movi + idx1
-                blobs.append(b"RIFF" + _struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return run
+def _avi_plan(
+    stride: int, doc_id: int, text: str, n_chars: int
+) -> list[tuple]:
+    data = _md5_pair(text)
+    blob = encode_avi_frames(
+        [
+            data[i * AVI_FRAME_BYTES:(i + 1) * AVI_FRAME_BYTES]
+            for i in range(AVI_FRAMES)
+        ],
+        (n_chars % 4 + 1) * 10000,
+    )
+    us_per_frame, _total, entries = parse_avi(blob)
+    return [
+        (doc_id, i, i * us_per_frame, off, size, sum(blob[off:off + size]))
+        for i, off, size in entries[::stride]
+    ]
 
 
-def attach_avi_blobs(docs: DataFrame) -> DataFrame:
-    """Synthesize REAL RIFF/AVI assets from documents: 8 frames of 4
-    bytes each — the 32 md5-chain bytes — with per-asset frame timing
-    ``(n_chars % 4 + 1) * 10000`` µs/frame, built by an Arrow-batched
-    ``mapInPandas`` stage with a self-contained worker."""
-    return spread(
-        docs.select(
-            F.col("doc_id").cast("long"), "text", F.col("n_chars").cast("int")
-        )
-    ).mapInPandas(_avi_attach_run(), "doc_id long, blob binary")
-
-
-_AVI_PLAN_SCHEMA = (
-    "doc_id long, frame_id long, ts_us long, byte_off long, "
-    "byte_len long, payload_sum long"
-)
-
-
-def _avi_plan_run(stride: int = 3):
-    """Build the self-contained index-walk kernel for
-    :func:`avi_frame_plan` (r11: factored out for the fused path —
-    guide §4.1)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "frame_id": [], "ts_us": [],
-                "byte_off": [], "byte_len": [], "payload_sum": [],
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(b)
-                if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-                    raise ValueError("not a RIFF/AVI file")
-                pos, upf, movi_pos, raw_idx = 12, None, None, None
-                while pos + 8 <= len(blob):
-                    ck = blob[pos:pos + 4]
-                    (sz,) = _struct.unpack_from("<I", blob, pos + 4)
-                    if ck == b"LIST":
-                        lt = blob[pos + 8:pos + 12]
-                        if lt == b"hdrl":
-                            ipos, end = pos + 12, pos + 8 + sz
-                            while ipos + 8 <= end:
-                                ick = blob[ipos:ipos + 4]
-                                (isz,) = _struct.unpack_from(
-                                    "<I", blob, ipos + 4
-                                )
-                                if ick == b"avih":
-                                    (upf,) = _struct.unpack_from(
-                                        "<I", blob, ipos + 8
-                                    )
-                                ipos += 8 + isz + (isz & 1)
-                        elif lt == b"movi":
-                            movi_pos = pos + 8
-                    elif ck == b"idx1":
-                        n = sz // 16
-                        raw_idx = [
-                            _struct.unpack_from(
-                                "<4sIII", blob, pos + 8 + 16 * i
-                            )
-                            for i in range(n)
-                        ]
-                    pos += 8 + sz + (sz & 1)
-                if upf is None or movi_pos is None or raw_idx is None:
-                    raise ValueError("missing avih, movi, or idx1")
-                for i, (_ck, _fl, off, size) in enumerate(raw_idx):
-                    if i % stride:
-                        continue
-                    abs_off = movi_pos + off + 8
-                    payload = blob[abs_off:abs_off + size]
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(i)
-                    out["ts_us"].append(i * upf)
-                    out["byte_off"].append(abs_off)
-                    out["byte_len"].append(size)
-                    out["payload_sum"].append(sum(payload))
-            yield pd.DataFrame(
-                {
-                    k: pd.Series(v, dtype="int64")
-                    for k, v in out.items()
-                }
-            )
-
-    return run
-
-
-def avi_frame_plan(mm_avi: DataFrame, stride: int = 3) -> DataFrame:
-    """Frame-sampling plan from a REAL parse of each AVI's `idx1` index
-    (stdlib ``struct`` in an Arrow-batched ``mapInPandas`` stage): every
-    ``stride``-th frame's absolute byte range — resolved against the
-    `movi` position the chunk walk actually found — its timestamp from
-    the `avih` frame timing, and the payload byte-sum READ AT THE
-    PLANNED OFFSET, which is only right if the index walk was.
+def avi_frame_plan_fused(docs: DataFrame, stride: int = 3) -> DataFrame:
+    """Synthesize REAL RIFF/AVI assets and plan their frame sampling in
+    ONE :func:`_per_asset` stage (r11, guide §4.1: container bytes never
+    cross the JVM↔Python boundary).  Each asset is 8 frames of 4 bytes —
+    the 32 md5-chain bytes — with frame timing ``(n_chars % 4 + 1) *
+    10000`` µs/frame, built by :func:`encode_avi_frames`.  From a REAL
+    parse of its `idx1` index (:func:`parse_avi`), every ``stride``-th
+    frame's absolute byte range — resolved against the `movi` position
+    the chunk walk actually found — its timestamp from the `avih` frame
+    timing, and the payload byte-sum READ AT THE PLANNED OFFSET, which
+    is only right if the index walk was.
 
     Scale shape: the plan never decodes codec payloads and never
     shuffles blob bytes — one row per sampled frame carrying offsets +
     ints; a fetch stage later reads exactly its byte range."""
-    return mm_avi.select("doc_id", "blob").mapInPandas(
-        _avi_plan_run(stride), _AVI_PLAN_SCHEMA
-    )
-
-
-def avi_frame_plan_fused(docs: DataFrame, stride: int = 3) -> DataFrame:
-    """Fused AVI synth + index walk in ONE Arrow/`mapInPandas` stage
-    (r11, guide §4.1): container bytes are produced and consumed inside
-    the same Python worker and never cross the JVM↔Python boundary.
-    Composes the exact kernels :func:`attach_avi_blobs` /
-    :func:`avi_frame_plan` run."""
-    attach, plan = _avi_attach_run(), _avi_plan_run(stride)
-    return spread(
-        docs.select(
-            F.col("doc_id").cast("long"), "text", F.col("n_chars").cast("int")
-        )
-    ).mapInPandas(
-        lambda batches: plan(attach(batches)), _AVI_PLAN_SCHEMA
+    return _per_asset(
+        spread(
+            docs.select(
+                F.col("doc_id").cast("long"), "text",
+                F.col("n_chars").cast("int"),
+            )
+        ),
+        functools.partial(_avi_plan, stride),
+        "doc_id long, frame_id long, ts_us long, byte_off long, "
+        "byte_len long, payload_sum long",
     )
 
 
 # ------------------------------------------------------------------ JPEG codec
 #
 # The last codec stub closed (VERDICT r8 ask #5): a from-scratch
-# BASELINE-SEQUENTIAL JPEG (ITU-T T.81) decoder on the stdlib — marker
-# walk, DHT-driven Huffman entropy decode with 0xFF00 byte unstuffing,
-# DC differential prediction, AC run-length/EOB/ZRL, dequantization,
-# zigzag, float IDCT, level shift, and YCbCr→RGB — plus the matching
-# deterministic encoder the corpus queries use.  Synthesized assets are
-# DC-ONLY (every AC coefficient zero) with Q[0]=8: the IDCT of a
-# DC-only block is the exact constant dc·Q00/8 + 128, so the decoded
-# truth is recomputable in pure SQL (the lossless-path oracle, same
-# playbook as GIF/PNG) even though the decoder itself is the general
-# baseline pipeline.  The AC/IDCT general path is pinned by property
-# tests against an independent naive IDCT.  Scope: SOF0, 8-bit, 4:4:4
-# (h=v=1), no restart intervals — progressive/subsampled/arithmetic
-# inputs raise, like the other codecs' out-of-scope branches.
+# BASELINE-SEQUENTIAL JPEG (ITU-T T.81) decoder on the stdlib and numpy
+# — marker walk, DHT-driven Huffman entropy decode with 0xFF00 byte
+# unstuffing, DC differential prediction, AC run-length/EOB/ZRL,
+# dequantization, zigzag, float IDCT, level shift, and YCbCr→RGB — plus
+# the matching deterministic encoder the corpus queries use. Synthesized
+# assets are DC-ONLY (every AC coefficient zero) with Q[0]=8: the IDCT
+# of a DC-only block is the exact constant dc·Q00/8 + 128, so the
+# decoded truth is recomputable in pure SQL (the lossless-path oracle,
+# same playbook as GIF/PNG) even though the decoder itself is the
+# general baseline pipeline.  The AC/IDCT general path is pinned by
+# property tests against an independent naive IDCT.  Scope: SOF0, 8-bit,
+# 4:4:4 (h=v=1), no restart intervals —
+# progressive/subsampled/arithmetic inputs raise, like the other codecs'
+# out-of-scope branches.
 
 # Synthesized asset grid: 16x16 px = 2x2 MCUs, 3 components 4:4:4,
 # Y DC per MCU = one md5-chain byte, Cb=Cr=0 (so decoded R=G=B=byte
@@ -1676,104 +1135,27 @@ def encode_jpeg_ac(
         + b"\xff\xd9"
 
 
-class _JBitReader:
-    """MSB-first entropy bit reader with 0xFF00 unstuffing; any other
-    marker (or end of data) ends the stream."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self._acc = 0
-        self._n = 0
-
-    def bit(self) -> int:
-        if self._n == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG entropy stream")
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                if self.pos >= len(self.data):
-                    raise ValueError("truncated JPEG entropy stream")
-                nxt = self.data[self.pos]
-                if nxt == 0x00:
-                    self.pos += 1  # stuffed byte
-                else:
-                    raise ValueError("marker inside entropy stream")
-            self._acc = b
-            self._n = 8
-        self._n -= 1
-        return (self._acc >> self._n) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-
-def _jpeg_build_decode(bits, vals) -> dict:
-    """(length, code) -> symbol, for bit-serial Huffman decode."""
-    table = {}
-    for sym, (code, length) in _jpeg_huff_codes(bits, vals).items():
-        table[(length, code)] = sym
-    return table
-
-
-def _jpeg_decode_huff(r: _JBitReader, table: dict) -> int:
-    code, length = 0, 0
-    while length < 17:
-        code = (code << 1) | r.bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code in entropy stream")
-
-
 def _jpeg_extend(v: int, t: int) -> int:
     """T.81 F.12: sign-extend a magnitude-category value."""
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def _jpeg_idct_block(coef: list) -> list:
-    """Naive separable-equivalent 2-D IDCT (T.81 A.3.3) + level shift +
-    clamp — the reference-correct slow path (the Arrow worker uses a
-    numpy basis matmul with identical arithmetic)."""
-    out = []
-    cos, pi = math.cos, math.pi
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for v in range(8):
-                for u in range(8):
-                    cu = 0.7071067811865476 if u == 0 else 1.0
-                    cv = 0.7071067811865476 if v == 0 else 1.0
-                    s += (
-                        cu * cv * coef[v * 8 + u]
-                        * cos((2 * x + 1) * u * pi / 16)
-                        * cos((2 * y + 1) * v * pi / 16)
-                    )
-            p = int(round(s / 4.0)) + 128
-            out.append(0 if p < 0 else 255 if p > 255 else p)
-    return out
+def _jpeg_header_state(blob: bytes, cache: dict) -> dict:
+    """Parse ``blob``'s SOI..SOS header: marker walk, DQT, DHT, SOF0 and
+    SOS.  Returns the decode state: ``hdr_len``, the Huffman decode
+    tables ``huff[(class, id)]`` mapping ``(code, length)`` to a symbol,
+    ``dims``, the ``scan`` components, and ``qrows``, each scan
+    component's zigzag-order quant row.  Out-of-scope inputs raise.
 
-
-def decode_jpeg(blob: bytes) -> tuple[int, int, int, list]:
-    """REAL baseline JPEG decode on the stdlib: marker walk, DQT/DHT/
-    SOF0/SOS parsing, Huffman entropy decode (DC differential, AC
-    run-length with EOB/ZRL, byte unstuffing), dequantize, de-zigzag,
-    IDCT, level shift, YCbCr→RGB.  Returns (width, height,
-    n_components, pixels) with pixels a row-major list of [r, g, b].
-    Scope: SOF0 8-bit 4:4:4 without restart intervals — progressive
-    (SOF2), subsampled, 12-bit, or arithmetic-coded inputs raise."""
-    if blob[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG file (no SOI)")
-    pos = 2
-    qts: dict[int, list] = {}
-    huff: dict[tuple, dict] = {}
-    dims = comps = None
-    scan = None
+    ``cache`` lives for one task: a corpus shares its header bytes, so
+    after the first asset the walk is one ``startswith`` per cached
+    header, and each DHT payload builds its table once."""
+    headers = cache.setdefault("headers", [])
+    for hdr, state in headers:
+        if blob.startswith(hdr):
+            return state
+    tables = cache.setdefault("huff", {})
+    pos, qts, huff, dims, comps, scan = 2, {}, {}, None, None, None
     while pos + 4 <= len(blob):
         if blob[pos] != 0xFF:
             raise ValueError("marker expected")
@@ -1794,19 +1176,19 @@ def decode_jpeg(blob: bytes) -> tuple[int, int, int, list]:
         elif marker == 0xC4:  # DHT
             i = 0
             while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 15
-                bits = list(body[i + 1:i + 17])
-                n = sum(bits)
-                vals = list(body[i + 17:i + 17 + n])
-                huff[(tc, th)] = _jpeg_build_decode(bits, vals)
+                n = sum(body[i + 1:i + 17])
+                payload = bytes(body[i + 1:i + 17 + n])
+                if payload not in tables:
+                    codes = _jpeg_huff_codes(payload[:16], payload[16:])
+                    tables[payload] = {v: s for s, v in codes.items()}
+                huff[(body[i] >> 4, body[i] & 15)] = tables[payload]
                 i += 17 + n
         elif marker == 0xC0:  # SOF0 baseline
             if body[0] != 8:
                 raise NotImplementedError("only 8-bit precision")
             h, w = struct.unpack_from(">HH", body, 1)
-            nc = body[5]
             comps = []
-            for c in range(nc):
+            for c in range(body[5]):
                 cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
                 if hv != 0x11:
                     raise NotImplementedError("only 4:4:4 (h=v=1)")
@@ -1821,652 +1203,296 @@ def decode_jpeg(blob: bytes) -> tuple[int, int, int, list]:
             if struct.unpack_from(">H", body, 0)[0]:
                 raise NotImplementedError("restart intervals")
         elif marker == 0xDA:  # SOS
-            ns = body[0]
             scan = [
                 (body[1 + 2 * c], body[2 + 2 * c] >> 4, body[2 + 2 * c] & 15)
-                for c in range(ns)
+                for c in range(body[0])
             ]
-            pos = pos + 2 + seg
+            pos += 2 + seg
             break
         pos += 2 + seg
     if dims is None or scan is None:
         raise ValueError("missing SOF0 or SOS")
-    w, h = dims
     tq_of = dict(comps)
-    r = _JBitReader(blob, pos)
-    mcux, mcuy = (w + 7) // 8, (h + 7) // 8
+    state = {
+        "hdr_len": pos,
+        "huff": huff,
+        "dims": dims,
+        "scan": scan,
+        "qrows": np.array(
+            [qts[tq_of[cid]] for cid, _td, _ta in scan], dtype=np.float64
+        ),
+    }
+    headers.append((bytes(blob[:pos]), state))
+    return state
+
+
+def _jpeg_entropy(blob: bytes, state: dict, out_rows: list) -> int:
+    """Entropy-decode ``blob`` (MSB-first bits with 0xFF00 unstuffing,
+    Huffman symbols, DC differential prediction, AC run-length with
+    EOB/ZRL) and append each block's zigzag coefficients to
+    ``out_rows``.  Returns the number of blocks appended."""
+    huff, scan = state["huff"], state["scan"]
+    w, h = state["dims"]
+    pos, acc, nb = state["hdr_len"], 0, 0
+
+    def bit() -> int:
+        nonlocal pos, acc, nb
+        if nb == 0:
+            if pos >= len(blob):
+                raise ValueError("truncated JPEG entropy stream")
+            b = blob[pos]
+            pos += 1
+            if b == 0xFF:
+                if pos >= len(blob):
+                    raise ValueError("truncated JPEG entropy stream")
+                if blob[pos] != 0x00:
+                    # a real marker (RSTn, an early EOI): decoding it as
+                    # data would be silently wrong
+                    raise ValueError("marker inside entropy stream")
+                pos += 1  # stuffed byte
+            acc, nb = b, 8
+        nb -= 1
+        return (acc >> nb) & 1
+
+    def bits(n: int) -> int:
+        v = 0
+        for _ in range(n):
+            v = (v << 1) | bit()
+        return v
+
+    def symbol(table: dict) -> int:
+        code = 0
+        for length in range(1, 17):
+            code = (code << 1) | bit()
+            sym = table.get((code, length))
+            if sym is not None:
+                return sym
+        raise ValueError("invalid Huffman code in entropy stream")
+
     pred = {cid: 0 for cid, _td, _ta in scan}
-    planes = {cid: [0] * (mcux * 8 * mcuy * 8) for cid, _td, _ta in scan}
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for cid, td, ta in scan:
-                zz = [0] * 64
-                t = _jpeg_decode_huff(r, huff[(0, td)])
-                diff = _jpeg_extend(r.bits(t), t) if t else 0
-                pred[cid] += diff
-                zz[0] = pred[cid]
-                k = 1
-                while k < 64:
-                    rs = _jpeg_decode_huff(r, huff[(1, ta)])
-                    if rs == 0x00:  # EOB
-                        break
-                    if rs == 0xF0:  # ZRL: 16 zeros
-                        k += 16
-                        continue
-                    k += rs >> 4
-                    if k > 63:
-                        raise ValueError("AC run past end of block")
-                    zz[k] = _jpeg_extend(r.bits(rs & 15), rs & 15)
-                    k += 1
-                q = qts[tq_of[cid]]
-                coef = [0] * 64
-                for i in range(64):
-                    coef[_JZIGZAG[i]] = zz[i] * q[i]
-                px = _jpeg_idct_block(coef)
-                plane = planes[cid]
-                base = (my * 8) * (mcux * 8) + mx * 8
-                for yy in range(8):
-                    row = base + yy * (mcux * 8)
-                    plane[row:row + 8] = px[yy * 8:yy * 8 + 8]
-    # crop to (w, h) and convert
-    stride = mcux * 8
-    cids = [cid for cid, _td, _ta in scan]
-    pixels = []
-    for y in range(h):
-        for x in range(w):
-            i = y * stride + x
-            if len(cids) == 1:
-                g = planes[cids[0]][i]
-                pixels.append([g, g, g])
-            else:
-                yv = planes[cids[0]][i]
-                cb = planes[cids[1]][i] - 128
-                cr = planes[cids[2]][i] - 128
-                rr = int(round(yv + 1.402 * cr))
-                gg = int(round(yv - 0.344136 * cb - 0.714136 * cr))
-                bb = int(round(yv + 1.772 * cb))
-                pixels.append([
-                    min(255, max(0, rr)),
-                    min(255, max(0, gg)),
-                    min(255, max(0, bb)),
-                ])
-    return w, h, len(cids), pixels
+    n_mcu = ((w + 7) // 8) * ((h + 7) // 8)
+    for _ in range(n_mcu):
+        for cid, td, ta in scan:
+            zz = [0] * 64
+            t = symbol(huff[(0, td)])
+            pred[cid] += _jpeg_extend(bits(t), t) if t else 0
+            zz[0] = pred[cid]
+            k = 1
+            while k < 64:
+                rs = symbol(huff[(1, ta)])
+                if rs == 0x00:  # EOB
+                    break
+                if rs == 0xF0:  # ZRL: 16 zeros
+                    k += 16
+                    continue
+                k += rs >> 4
+                if k > 63:
+                    raise ValueError("AC run past end of block")
+                zz[k] = _jpeg_extend(bits(rs & 15), rs & 15)
+                k += 1
+            out_rows.append(zz)
+    return n_mcu * len(scan)
 
 
-def _jpeg_attach_run():
-    """Build the self-contained synth kernel for :func:`attach_jpeg_blobs`
-    (r11: factored out so the fused decode path can compose it with the
-    stats kernel inside ONE Python stage — guide §4.1)."""
-    header = _jpeg_header(JPEG_W, JPEG_H)
-    dc_codes = _jpeg_huff_codes(_JDC_BITS, _JDC_VALS)
-    ac_eob = _jpeg_huff_codes(_JAC_BITS, _JAC_VALS)[0x00]
-    n_mcu = (JPEG_W // 8) * (JPEG_H // 8)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        def entropy(dcs: bytes) -> bytes:
-            buf, acc, n = bytearray(), 0, 0
-
-            def put(code: int, length: int) -> None:
-                nonlocal acc, n
-                for i in range(length - 1, -1, -1):
-                    acc = (acc << 1) | ((code >> i) & 1)
-                    n += 1
-                    if n == 8:
-                        buf.append(acc)
-                        if acc == 0xFF:
-                            buf.append(0x00)
-                        acc = n = 0
-
-            pred = [0, 0, 0]
-            for m in range(n_mcu):
-                for comp, dc in enumerate((dcs[m] - 128, 0, 0)):
-                    diff = dc - pred[comp]
-                    pred[comp] = dc
-                    t = abs(diff).bit_length()
-                    code, ln = dc_codes[t]
-                    put(code, ln)
-                    if t:
-                        put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-                    put(*ac_eob)
-            while n:
-                put(1, 1)
-            return bytes(buf)
-
-        for pdf in batches:
-            blobs = [
-                header
-                + entropy(hashlib.md5((text or "").encode()).digest()[:4])
-                + b"\xff\xd9"
-                for text in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "blob": blobs}
-            )
-
-    return run
+@functools.cache
+def _jpeg_idct_t() -> np.ndarray:
+    """The transposed 64x64 IDCT basis (T.81 A.3.3 with its 1/4 scale):
+    pixel p(y,x) = sum_uv basis[yx, vu] * coef[vu]."""
+    basis = np.zeros((64, 64))
+    for y in range(8):
+        for x in range(8):
+            for v in range(8):
+                for u in range(8):
+                    cu = 0.7071067811865476 if u == 0 else 1.0
+                    cv = 0.7071067811865476 if v == 0 else 1.0
+                    basis[y * 8 + x, v * 8 + u] = (
+                        cu * cv
+                        * np.cos((2 * x + 1) * u * np.pi / 16)
+                        * np.cos((2 * y + 1) * v * np.pi / 16)
+                        / 4.0
+                    )
+    basis_t = np.ascontiguousarray(basis.T)
+    basis_t.setflags(write=False)  # cached: one array for every caller
+    return basis_t
 
 
-def attach_jpeg_blobs(docs: DataFrame) -> DataFrame:
-    """Synthesize REAL baseline JPEG assets from documents: 16x16 px,
-    3 components 4:4:4, four DC-only MCUs whose Y levels are the first
-    four md5(text) bytes — real Huffman entropy coding, DC differential
-    prediction, byte stuffing.  The constant header (DQT/SOF0/DHT/SOS)
-    is built once on the driver; the Arrow-batched ``mapInPandas``
-    worker is self-contained (executors never import this package) and
-    only writes each asset's entropy stream."""
-    return spread(docs.select("doc_id", "text")).mapInPandas(
-        _jpeg_attach_run(), "doc_id long, blob binary"
+def _jpeg_decode(blobs: list[bytes], cache: dict) -> Iterator[tuple]:
+    """REAL baseline JPEG decode of a batch: each asset's header and
+    entropy stream are decoded in Python, then ONE numpy dequantize,
+    de-zigzag, IDCT, level shift, clamp and YCbCr→RGB pass covers every
+    block of the batch (r11, guide §4.2: per-asset numpy calls and
+    header re-parses dominated).  Yields ``(n, width, height,
+    n_components, r, g, b)`` per run of ``n`` consecutive assets sharing
+    a header, in input order; each channel is an ``(n, height, width)``
+    array of integral floats.  Scope: SOF0 8-bit 4:4:4 without restart
+    intervals — progressive (SOF2), subsampled, 12-bit or
+    arithmetic-coded inputs raise."""
+    zz_rows, runs = [], []  # runs: [state, n_assets, n_blocks]
+    for blob in blobs:
+        if blob[:2] != b"\xff\xd8":
+            raise ValueError("not a JPEG file (no SOI)")
+        state = _jpeg_header_state(blob, cache)
+        n_blocks = _jpeg_entropy(blob, state, zz_rows)
+        if runs and runs[-1][0] is state:
+            runs[-1][1] += 1
+            runs[-1][2] += n_blocks
+        else:
+            runs.append([state, 1, n_blocks])
+    if not runs:
+        return
+    zz = np.array(zz_rows, dtype=np.float64).reshape(-1, 64)
+    q = np.concatenate(
+        [np.tile(s["qrows"], (nb // len(s["scan"]), 1)) for s, _n, nb in runs]
     )
+    coef = np.zeros_like(zz)
+    coef[:, np.asarray(_JZIGZAG)] = zz * q
+    px = coef @ _jpeg_idct_t()
+    np.rint(px, out=px)
+    px += 128
+    np.clip(px, 0, 255, out=px)
+    off = 0
+    for state, n, n_blocks in runs:
+        w, h = state["dims"]
+        ncomp = len(state["scan"])
+        mcux, mcuy = (w + 7) // 8, (h + 7) // 8
+        planes = (
+            px[off:off + n_blocks]
+            .reshape(n, mcuy, mcux, ncomp, 8, 8)
+            .transpose(0, 3, 1, 4, 2, 5)
+            .reshape(n, ncomp, mcuy * 8, mcux * 8)[:, :, :h, :w]
+        )
+        off += n_blocks
+        y = planes[:, 0]
+        if ncomp == 1:
+            yield n, w, h, ncomp, y, y, y
+            continue
+        cb, cr = planes[:, 1] - 128, planes[:, 2] - 128
+        yield (
+            n, w, h, ncomp,
+            np.clip(np.rint(y + 1.402 * cr), 0, 255),
+            np.clip(np.rint(y - 0.344136 * cb - 0.714136 * cr), 0, 255),
+            np.clip(np.rint(y + 1.772 * cb), 0, 255),
+        )
 
 
-def _jpeg_ac_attach_run():
-    """Synth kernel factory for :func:`attach_jpeg_ac_blobs` (r11: see
-    :func:`_jpeg_attach_run`)."""
-    header = _jpeg_header(JPEG_W, JPEG_H, ac_rich=True)
-    dc_codes = _jpeg_huff_codes(_JDC_BITS, _JDC_VALS)
-    ac_codes = _jpeg_huff_codes(_JAC_BITS_AC, _JAC_VALS_AC)
-    n_mcu = (JPEG_W // 8) * (JPEG_H // 8)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        def entropy(d: bytes) -> bytes:
-            buf, acc, n = bytearray(), 0, 0
-
-            def put(code: int, length: int) -> None:
-                nonlocal acc, n
-                for i in range(length - 1, -1, -1):
-                    acc = (acc << 1) | ((code >> i) & 1)
-                    n += 1
-                    if n == 8:
-                        buf.append(acc)
-                        if acc == 0xFF:
-                            buf.append(0x00)
-                        acc = n = 0
-
-            pred = [0, 0, 0]
-            for m in range(n_mcu):
-                mag = min(d[4 + m] % 16, d[m], 255 - d[m])
-                ac = -mag if d[4 + m] >= 128 else mag
-                for comp, dc in enumerate((d[m] - 128, 0, 0)):
-                    diff = dc - pred[comp]
-                    pred[comp] = dc
-                    t = abs(diff).bit_length()
-                    put(*dc_codes[t])
-                    if t:
-                        put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-                    if comp == 0 and ac:
-                        put(*ac_codes[0xF0])
-                        put(*ac_codes[0xF0])
-                        t = abs(ac).bit_length()
-                        put(*ac_codes[(6 << 4) | t])
-                        put(ac if ac >= 0 else ac + (1 << t) - 1, t)
-                    put(*ac_codes[0x00])
-            while n:
-                put(1, 1)
-            return bytes(buf)
-
-        for pdf in batches:
-            blobs = [
-                header
-                + entropy(hashlib.md5((text or "").encode()).digest()[:8])
-                + b"\xff\xd9"
-                for text in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "blob": blobs}
-            )
-
-    return run
+def decode_jpeg(blob: bytes) -> tuple[int, int, int, list]:
+    """REAL baseline JPEG decode of one asset (:func:`_jpeg_decode`):
+    marker walk, DQT/DHT/SOF0/SOS parsing, Huffman entropy decode (DC
+    differential, AC run-length with EOB/ZRL, byte unstuffing),
+    dequantize, de-zigzag, IDCT, level shift, YCbCr→RGB.  Returns
+    (width, height, n_components, pixels) with pixels a row-major list
+    of [r, g, b]."""
+    ((_n, w, h, ncomp, r, g, b),) = _jpeg_decode([blob], {})
+    rgb = np.stack([r[0], g[0], b[0]], axis=-1).reshape(-1, 3)
+    return w, h, ncomp, rgb.astype(np.int64).tolist()
 
 
-def attach_jpeg_ac_blobs(docs: DataFrame) -> DataFrame:
-    """Synthesize AC-exercising baseline JPEGs (VERDICT r9 ask #5):
-    like :func:`attach_jpeg_blobs` but MCU m also carries one signed AC
-    coefficient at zigzag 39 (raster (4,4)) — magnitude
-    ``min(d[4+m] % 16, d[m], 255 - d[m])`` (clip-safe, size ≤ 4) and
-    sign from ``d[4+m]``'s high bit, where d = md5(text) bytes.  The
-    (4,4) IDCT basis is exactly ±1/8, so with Q[39]=8 every pixel
-    decodes to the exact integer ``d[m] ± ac`` — nonzero AC
-    coefficients with a pure-SQL oracle.  The entropy stream exercises
-    ZRL runs, AC magnitude/sign extension, de-zigzag, and the full
-    IDCT, not just the DC predictor."""
-    return spread(docs.select("doc_id", "text")).mapInPandas(
-        _jpeg_ac_attach_run(), "doc_id long, blob binary"
-    )
+def _jpeg_asset(text: str, ac_corpus: bool) -> bytes:
+    """The synthesized 16x16 JPEG of a document: MCU m's Y DC level is
+    byte m of ``md5(text)``; the AC corpus adds one signed coefficient
+    at zigzag 39 per MCU, magnitude ``min(d[4+m] % 16, d[m], 255 -
+    d[m])`` (clip-safe) and sign from ``d[4+m]``'s high bit."""
+    d = hashlib.md5((text or "").encode()).digest()
+    if not ac_corpus:
+        return encode_jpeg_dconly(d[:4], JPEG_W, JPEG_H)
+    acs = []
+    for m in range(4):
+        mag = min(d[4 + m] % 16, d[m], 255 - d[m])
+        acs.append(-mag if d[4 + m] >= 128 else mag)
+    return encode_jpeg_ac(d[:4], acs, JPEG_W, JPEG_H)
 
 
-def _jpeg_stats_schema(stats: str) -> str:
-    return (
+def _jpeg_dc_rows(doc_ids: list, w: int, h: int, r, g, b) -> list[tuple]:
+    """Per asset: channel sums, top-left Y and the four MCU corner
+    values (the DC path signature)."""
+    n = len(doc_ids)
+    corners = r[:, : (h // 8) * 8 : 8, : (w // 8) * 8 : 8].reshape(n, -1)
+    sums = [c.sum(axis=(1, 2)).astype(np.int64).tolist() for c in (r, g, b)]
+    return [
+        (d, w, h, sr, sg, sb, tl, "-".join(map(str, cs)))
+        for d, sr, sg, sb, tl, cs in zip(
+            doc_ids, *sums, r[:, 0, 0].astype(np.int64).tolist(),
+            corners.astype(np.int64).tolist(),
+        )
+    ]
+
+
+def _jpeg_ac_rows(doc_ids: list, w: int, h: int, r, _g, _b) -> list[tuple]:
+    """Per asset: channel sum, top-left Y, the per-MCU mean-deviation
+    energy Σ|px − mean| (= 64·|ac| for the (4,4)-coefficient corpus) and
+    the per-MCU corner values, which pin each MCU's AC magnitude AND
+    sign."""
+    n = len(doc_ids)
+    blks = r[:, : (h // 8) * 8, : (w // 8) * 8].reshape(
+        n, h // 8, 8, w // 8, 8
+    ).transpose(0, 1, 3, 2, 4)
+    # the corpus block mean is the exact DC byte (the ±ac pattern
+    # cancels); int-truncation is applied per block
+    means = blks.mean(axis=(3, 4), keepdims=True)
+    energy = np.abs(blks - means).sum(axis=(3, 4)).astype(np.int64)
+    corners = blks[:, :, :, 0, 0].astype(np.int64).reshape(n, -1)
+    return [
+        (d, w, h, sy, tl, e, "-".join(map(str, cs)))
+        for d, sy, tl, e, cs in zip(
+            doc_ids,
+            r.sum(axis=(1, 2)).astype(np.int64).tolist(),
+            r[:, 0, 0].astype(np.int64).tolist(),
+            energy.reshape(n, -1).sum(axis=1).tolist(),
+            corners.tolist(),
+        )
+    ]
+
+
+def jpeg_decode_stats(
+    docs: DataFrame, stats: str = "dc", ac_corpus: bool = False
+) -> DataFrame:
+    """Synthesize and decode REAL baseline JPEGs in ONE Arrow-batched
+    ``mapInPandas`` stage (r11, guide §4.1: blobs never cross the
+    JVM↔Python boundary).  Assets are 16x16 px, 3 components 4:4:4,
+    four MCUs from :func:`_jpeg_asset` — real Huffman entropy coding,
+    DC differential prediction, byte stuffing; ``ac_corpus`` assets also
+    carry one AC coefficient per MCU whose (4,4) IDCT basis is exactly
+    ±1/8, so with Q[39]=8 every pixel decodes to the exact integer
+    ``d[m] ± ac`` (nonzero AC coefficients with a pure-SQL oracle).
+    Each batch is decoded by :func:`_jpeg_decode`.
+
+    ``stats="dc"`` emits per-channel sums, the top-left Y and the DC
+    path signature; ``stats="ac"`` the AC-corpus signature
+    (:func:`_jpeg_ac_rows`).  Only fixed-width values per asset cross
+    any exchange.  Measured at sf0.1/local[32]: 0.140 s → ~0.085 s warm
+    noop against the two-stage pipeline."""
+    rows_of = _jpeg_ac_rows if stats == "ac" else _jpeg_dc_rows
+    schema = (
         "doc_id long, width long, height long, sum_y long, "
         "top_left_y long, ac_energy long, corner_path string"
         if stats == "ac"
         else "doc_id long, width long, height long, sum_r long, "
         "sum_g long, sum_b long, top_left_y long, dc_path string"
     )
-
-
-def _jpeg_stats_run(stats: str = "dc"):
-    """Build the self-contained decode kernel for
-    :func:`jpeg_pixel_stats` (r11: factored out so the fused path can
-    compose synth + decode in ONE Python stage — guide §4.1)."""
+    names = [field.split()[0] for field in schema.split(",")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import numpy as np
-
-        ZIG = (
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        )
-        # 64x64 IDCT basis: pixel p(y,x) = sum_uv basis[yx, vu] * coef[vu]
-        basis = np.zeros((64, 64))
-        for y in range(8):
-            for x in range(8):
-                for v in range(8):
-                    for u in range(8):
-                        cu = 0.7071067811865476 if u == 0 else 1.0
-                        cv = 0.7071067811865476 if v == 0 else 1.0
-                        basis[y * 8 + x, v * 8 + u] = (
-                            cu * cv
-                            * np.cos((2 * x + 1) * u * np.pi / 16)
-                            * np.cos((2 * y + 1) * v * np.pi / 16)
-                            / 4.0
-                        )
-
-        huff_cache: dict = {}  # DHT payload bytes -> decode table (the
-        # corpus shares one table set; rebuilding per asset dominated)
-        hdr_cache: list = []  # [(exact header bytes, parsed state)] — a
-        # corpus shares its DQT/SOF0/DHT/SOS bytes, so after the first
-        # asset the marker walk is one startswith() memcmp (r11: the
-        # per-asset re-parse and the per-asset numpy calls dominated;
-        # both now run once per batch, guide §4.2)
-
-        def huffdec(payload):
-            table = huff_cache.get(payload)
-            if table is None:
-                bits = list(payload[:16])
-                vals = list(payload[16:16 + sum(bits)])
-                table, code, k = {}, 0, 0
-                for ln in range(1, 17):
-                    for _ in range(bits[ln - 1]):
-                        table[(ln, code)] = vals[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                huff_cache[payload] = table
-            return table
-
-        ZIG_ARR = np.array(ZIG, dtype=np.int64)
-        BASIS_T = np.ascontiguousarray(basis.T)
-
-        def parse_header(blob):
-            # Guards mirror the module-level decode_jpeg (ADVICE r9): an
-            # out-of-scope or corrupt blob must RAISE here exactly like
-            # the decoder the tests pin against, never decode silently
-            # wrong.
-            pos, qts, huff, dims, comps, scan = 2, {}, {}, None, None, None
-            while pos + 4 <= len(blob):
-                if blob[pos] != 0xFF:
-                    raise ValueError("marker expected")
-                marker = blob[pos + 1]
-                if marker == 0xD9:
-                    break
-                (seg,) = _struct.unpack_from(">H", blob, pos + 2)
-                body = blob[pos + 4:pos + 2 + seg]
-                if len(body) != seg - 2:
-                    raise ValueError("truncated JPEG segment")
-                if marker == 0xDB:
-                    i = 0
-                    while i < len(body):
-                        if body[i] >> 4:
-                            raise NotImplementedError("16-bit quant tables")
-                        qts[body[i] & 15] = list(body[i + 1:i + 65])
-                        i += 65
-                elif marker == 0xC4:
-                    i = 0
-                    while i < len(body):
-                        tc, th = body[i] >> 4, body[i] & 15
-                        n = sum(body[i + 1:i + 17])
-                        huff[(tc, th)] = huffdec(
-                            bytes(body[i + 1:i + 17 + n])
-                        )
-                        i += 17 + n
-                elif marker == 0xC0:
-                    if body[0] != 8:
-                        raise NotImplementedError("only 8-bit precision")
-                    h, w = _struct.unpack_from(">HH", body, 1)
-                    for c in range(body[5]):
-                        if body[7 + 3 * c] != 0x11:
-                            raise NotImplementedError("only 4:4:4 (h=v=1)")
-                    comps = [
-                        (body[6 + 3 * c], body[8 + 3 * c])
-                        for c in range(body[5])
-                    ]
-                    dims = (w, h)
-                elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                                0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                    raise NotImplementedError(
-                        "only baseline sequential (SOF0) is in scope"
-                    )
-                elif marker == 0xDD:
-                    if _struct.unpack_from(">H", body, 0)[0]:
-                        raise NotImplementedError("restart intervals")
-                elif marker == 0xDA:
-                    ns = body[0]
-                    scan = [
-                        (
-                            body[1 + 2 * c],
-                            body[2 + 2 * c] >> 4,
-                            body[2 + 2 * c] & 15,
-                        )
-                        for c in range(ns)
-                    ]
-                    pos += 2 + seg
-                    break
-                pos += 2 + seg
-            if dims is None or scan is None:
-                raise ValueError("missing SOF0 or SOS")
-            tq_of = dict(comps)
-            return {
-                "hdr_len": pos,
-                "huff": huff,
-                "dims": dims,
-                "scan": scan,
-                # zigzag-order quant rows per scan component, ready for
-                # the batched dequant below
-                "qrows": np.array(
-                    [qts[tq_of[cid]] for cid, _t, _a in scan],
-                    dtype=np.float64,
-                ),
-            }
-
-        def header_state(blob):
-            for hdr, state in hdr_cache:
-                if blob.startswith(hdr):
-                    return state
-            state = parse_header(blob)
-            hdr_cache.append((bytes(blob[: state["hdr_len"]]), state))
-            return state
-
-        def entropy_blocks(blob, state, out_rows):
-            # bit-identical entropy decode to the r9 per-asset path; it
-            # appends each block's RAW zigzag coefficient row — dequant,
-            # de-zigzag, IDCT and color math run batched afterwards
-            huff, scan = state["huff"], state["scan"]
-            w, h = state["dims"]
-            data, pos, acc, nb = blob, state["hdr_len"], 0, 0
-
-            def bit():
-                nonlocal pos, acc, nb
-                if nb == 0:
-                    if pos >= len(data):
-                        raise ValueError("truncated entropy data")
-                    b = data[pos]
-                    pos += 1
-                    if b == 0xFF:
-                        if pos >= len(data):
-                            raise ValueError("truncated entropy data")
-                        if data[pos] == 0x00:
-                            pos += 1
-                        else:
-                            # a real marker inside the entropy stream
-                            # (e.g. RSTn or premature EOI) — decoding it
-                            # as data would be silently wrong
-                            raise ValueError(
-                                f"unexpected marker 0xFF{data[pos]:02X} "
-                                "in entropy data"
-                            )
-                    acc, nb = b, 8
-                nb -= 1
-                return (acc >> nb) & 1
-
-            def bits_(n):
-                v = 0
-                for _ in range(n):
-                    v = (v << 1) | bit()
-                return v
-
-            def hval(table):
-                code, ln = 0, 0
-                while ln < 17:
-                    code = (code << 1) | bit()
-                    ln += 1
-                    s = table.get((ln, code))
-                    if s is not None:
-                        return s
-                raise ValueError("bad Huffman code")
-
-            def ext(v, t):
-                return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-            mcux, mcuy = (w + 7) // 8, (h + 7) // 8
-            pred = {cid: 0 for cid, _t, _a in scan}
-            n_out = 0
-            for _my in range(mcuy):
-                for _mx in range(mcux):
-                    for cid, td, ta in scan:
-                        zz = [0] * 64
-                        t = hval(huff[(0, td)])
-                        pred[cid] += ext(bits_(t), t) if t else 0
-                        zz[0] = pred[cid]
-                        k = 1
-                        while k < 64:
-                            rs = hval(huff[(1, ta)])
-                            if rs == 0x00:
-                                break
-                            if rs == 0xF0:
-                                k += 16
-                                continue
-                            k += rs >> 4
-                            if k > 63:
-                                raise ValueError("AC run past end of block")
-                            zz[k] = ext(bits_(rs & 15), rs & 15)
-                            k += 1
-                        out_rows.append(zz)
-                        n_out += 1
-            return n_out
-
-        def decoded_groups(pdf):
-            """Entropy-decode every asset in the batch, then run ONE
-            dequant/de-zigzag/IDCT/color pipeline over the whole batch
-            (r11, guide §4.2 — the per-asset numpy-call overhead and the
-            per-asset header re-parse dominated the r9 kernel).  Yields
-            (doc_ids, w, h, r, g, b) per run of same-header assets, with
-            the channel arrays batched (ndocs, h, w); math and guard
-            behavior are bit-identical to the per-asset path."""
-            zz_rows, metas = [], []
-            for blob in pdf["blob"]:
-                blob = bytes(blob)
-                if blob[:2] != b"\xff\xd8":
-                    raise ValueError("not a JPEG")
-                state = header_state(blob)
-                metas.append((state, entropy_blocks(blob, state, zz_rows)))
-            if not zz_rows:
-                return
-            Z = np.array(zz_rows, dtype=np.float64)
-            q_parts, i = [], 0
-            while i < len(metas):
-                state, j, total = metas[i][0], i, 0
-                while j < len(metas) and metas[j][0] is state:
-                    total += metas[j][1]
-                    j += 1
-                q_parts.append(
-                    np.tile(state["qrows"], (total // len(state["scan"]), 1))
-                )
-                i = j
-            Q = q_parts[0] if len(q_parts) == 1 else np.concatenate(q_parts)
-            C = np.zeros_like(Z)
-            C[:, ZIG_ARR] = Z * Q
-            PX = C @ BASIS_T
-            np.rint(PX, out=PX)
-            PX += 128
-            np.clip(PX, 0, 255, out=PX)
-            doc_ids = list(pdf["doc_id"])
-            off = i = 0
-            while i < len(metas):
-                state, j = metas[i][0], i
-                while j < len(metas) and metas[j][0] is state:
-                    j += 1
-                ndocs = j - i
-                w, h = state["dims"]
-                ncomp = len(state["scan"])
-                mcux, mcuy = (w + 7) // 8, (h + 7) // 8
-                nblk = mcux * mcuy * ncomp
-                grp = PX[off:off + ndocs * nblk].reshape(
-                    ndocs, mcuy, mcux, ncomp, 8, 8
-                )
-                off += ndocs * nblk
-                planes = grp.transpose(0, 3, 1, 4, 2, 5).reshape(
-                    ndocs, ncomp, mcuy * 8, mcux * 8
-                )[:, :, :h, :w]
-                yp = planes[:, 0]
-                if ncomp == 1:
-                    r = g = b = yp
-                else:
-                    cb = planes[:, 1] - 128
-                    cr = planes[:, 2] - 128
-                    r = np.clip(np.rint(yp + 1.402 * cr), 0, 255)
-                    g = np.clip(
-                        np.rint(yp - 0.344136 * cb - 0.714136 * cr), 0, 255
-                    )
-                    b = np.clip(np.rint(yp + 1.772 * cb), 0, 255)
-                yield doc_ids[i:j], w, h, r, g, b
-                i = j
-
-        if stats == "ac":
-            for pdf in batches:
-                out = {
-                    "doc_id": [], "width": [], "height": [], "sum_y": [],
-                    "top_left_y": [], "ac_energy": [], "corner_path": [],
-                }
-                for doc_ids, w, h, r, _g, _b in decoded_groups(pdf):
-                    n = len(doc_ids)
-                    blks = r[:, : (h // 8) * 8, : (w // 8) * 8].reshape(
-                        n, h // 8, 8, w // 8, 8
-                    ).transpose(0, 1, 3, 2, 4)
-                    # the (4,4)-corpus block mean is the exact DC byte
-                    # (the ±ac pattern cancels), so the deviation sum is
-                    # exactly 64·|ac|; int-truncation applied PER BLOCK
-                    # exactly like the r9 loop's int(...)
-                    means = blks.mean(axis=(3, 4), keepdims=True)
-                    e_blk = (
-                        np.abs(blks - means)
-                        .sum(axis=(3, 4))
-                        .astype(np.int64)
-                    )
-                    corners = (
-                        blks[:, :, :, 0, 0].astype(np.int64).reshape(n, -1)
-                    )
-                    out["doc_id"].extend(int(d) for d in doc_ids)
-                    out["width"].extend([w] * n)
-                    out["height"].extend([h] * n)
-                    out["sum_y"].extend(
-                        r.sum(axis=(1, 2)).astype(np.int64).tolist()
-                    )
-                    out["top_left_y"].extend(
-                        r[:, 0, 0].astype(np.int64).tolist()
-                    )
-                    out["ac_energy"].extend(
-                        e_blk.reshape(n, -1).sum(axis=1).tolist()
-                    )
-                    out["corner_path"].extend(
-                        "-".join(map(str, row))
-                        for row in corners.tolist()
-                    )
-                yield pd.DataFrame(
-                    {
-                        k: pd.Series(
-                            v,
-                            dtype="object" if k == "corner_path"
-                            else "int64",
-                        )
-                        for k, v in out.items()
-                    }
-                )
-            return
+        cache: dict = {}
         for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [],
-                "sum_r": [], "sum_g": [], "sum_b": [],
-                "top_left_y": [], "dc_path": [],
-            }
-            for doc_ids, w, h, r, g, b in decoded_groups(pdf):
-                n = len(doc_ids)
-                corners = (
-                    r[:, : (h // 8) * 8 : 8, : (w // 8) * 8 : 8]
-                    .astype(np.int64)
-                    .reshape(n, -1)
-                )
-                out["doc_id"].extend(int(d) for d in doc_ids)
-                out["width"].extend([w] * n)
-                out["height"].extend([h] * n)
-                out["sum_r"].extend(r.sum(axis=(1, 2)).astype(np.int64).tolist())
-                out["sum_g"].extend(g.sum(axis=(1, 2)).astype(np.int64).tolist())
-                out["sum_b"].extend(b.sum(axis=(1, 2)).astype(np.int64).tolist())
-                out["top_left_y"].extend(r[:, 0, 0].astype(np.int64).tolist())
-                out["dc_path"].extend(
-                    "-".join(map(str, row)) for row in corners.tolist()
-                )
-            yield pd.DataFrame(
-                {
-                    k: pd.Series(
-                        v, dtype="object" if k == "dc_path" else "int64"
-                    )
-                    for k, v in out.items()
-                }
-            )
+            doc_ids = list(pdf["doc_id"])
+            blobs = [_jpeg_asset(t, ac_corpus) for t in pdf["text"]]
+            rows, i = [], 0
+            for n, w, h, _nc, r, g, b in _jpeg_decode(blobs, cache):
+                rows += rows_of(doc_ids[i:i + n], w, h, r, g, b)
+                i += n
+            yield pd.DataFrame.from_records(rows, columns=names)
 
-    return run
-
-
-def jpeg_pixel_stats(mm_jpeg: DataFrame, stats: str = "dc") -> DataFrame:
-    """REAL baseline JPEG decode in the scan stage: per asset, marker
-    walk + DHT Huffman entropy decode + dequant + de-zigzag + IDCT
-    (numpy basis matmul — same arithmetic as :func:`_jpeg_idct_block`)
-    + YCbCr→RGB, then per-channel sums, the top-left Y, and the four
-    MCU corner values (the DC path signature).  Only eight fixed-width
-    values per asset cross any exchange; blobs never shuffle.
-
-    ``stats="ac"`` (r10) emits the AC-corpus signature instead: channel
-    sum, top-left Y, per-MCU mean-deviation energy Σ|px − mean| (= 64·|ac|
-    for the (4,4)-coefficient corpus), and the per-MCU corner values —
-    which pin the decoded AC magnitude AND sign per MCU."""
-    return mm_jpeg.select("doc_id", "blob").mapInPandas(
-        _jpeg_stats_run(stats), _jpeg_stats_schema(stats)
-    )
-
-
-def jpeg_decode_stats(
-    docs: DataFrame, stats: str = "dc", ac_corpus: bool = False
-) -> DataFrame:
-    """Fused synth + decode in ONE Arrow/`mapInPandas` stage (r11,
-    guide §4.1): the blob bytes are produced and consumed inside the
-    same Python worker, so they never cross the JVM↔Python boundary at
-    all — the old two-stage pipeline serialized every blob out of the
-    synth worker and back into the decode worker.  Kernels are the
-    exact generators the unfused :func:`attach_jpeg_blobs` /
-    :func:`jpeg_pixel_stats` run, composed; math is bit-identical.
-    Measured at sf0.1/local[32]: 0.140 s → ~0.085 s warm noop."""
-    attach = _jpeg_ac_attach_run() if ac_corpus else _jpeg_attach_run()
-    decode = _jpeg_stats_run(stats)
-    return spread(docs.select("doc_id", "text")).mapInPandas(
-        lambda batches: decode(attach(batches)), _jpeg_stats_schema(stats)
-    )
+    return spread(docs.select("doc_id", "text")).mapInPandas(run, schema)
 
 
 def decode_image(blob: bytes, fake: bool = False) -> list[float]:
-    """Decode an image blob to pixels. REAL decode needs PIL — not in this
-    container — only for JPEG now: uncompressed 24-bit BMP decodes for
-    real via :func:`decode_bmp`, and compressed PNG decodes for real via
-    :func:`decode_png` (stdlib ``zlib``).  The deterministic fake
-    derives FEATURE_DIM floats from the byte content (stable across
-    engines/runs)."""
+    """The deterministic image stub: FEATURE_DIM floats derived from
+    the byte content (stable across engines and runs).  Real decodes go
+    through the per-format codecs (:func:`decode_bmp`,
+    :func:`decode_png`, :func:`decode_gif`, :func:`decode_jpeg`);
+    formats and variants they do not cover (progressive or subsampled
+    JPEG, palette PNG, WebP, ...) need PIL, so without ``fake=True``
+    this raises when PIL is absent."""
     if not fake:
         try:
             import PIL.Image  # noqa: F401
@@ -2482,43 +1508,21 @@ def decode_image(blob: bytes, fake: bool = False) -> list[float]:
     ]
 
 
+def _features(doc_id: int, blob: bytes) -> list[tuple]:
+    feats = decode_image(blob, fake=True)
+    return [(doc_id, len(blob), feats, round(sum(feats) / len(feats), 4))]
+
+
 def extract_features(mm: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the blob column
-    (mapInPandas: pandas DataFrames in, pandas DataFrames out — the
-    batch shape a real decoder would use).
-
-    The worker function is fully self-contained (no references to this
-    module's globals): executors unpickle it by value, so the engine does
-    not need to be importable on worker Python paths — the driver process
-    may be the only place the package is installed."""
-    dim = FEATURE_DIM
-
-    def decode(blob: bytes) -> list[float]:
-        # deterministic fake decode (mirrors decode_image(fake=True))
-        chunk = max(1, len(blob) // dim)
-        return [
-            float(sum(blob[i * chunk:(i + 1) * chunk]) % 256)
-            for i in range(dim)
-        ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["blob"].map(lambda b: decode(bytes(b)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["blob"].map(len).astype("int32"),
-                    "features": feats,
-                    "feat_mean": feats.map(
-                        lambda xs: round(sum(xs) / len(xs), 4)
-                    ),
-                }
-            )
-
-    schema = (
-        "doc_id long, n_bytes int, features array<float>, feat_mean double"
+    """Feature extraction over the blob column in a :func:`_per_asset`
+    stage (pandas batches in and out — the batch shape a real decoder
+    would use), with :func:`decode_image`'s deterministic stub as the
+    decoder."""
+    return _per_asset(
+        mm.select("doc_id", "blob"),
+        _features,
+        "doc_id long, n_bytes int, features array<float>, feat_mean double",
     )
-    return mm.select("doc_id", "blob").mapInPandas(run, schema)
 
 
 def frame_sample(mm: DataFrame, every: int = 4) -> DataFrame:
@@ -2548,45 +1552,30 @@ def frame_sample(mm: DataFrame, every: int = 4) -> DataFrame:
     )
 
 
+def _pool(doc_id: int, blob: bytes) -> list[tuple]:
+    # 8 wide x 4 high, row-major; 2x2 average pool -> 4x2
+    pooled = [
+        (blob[j] + blob[j + 1] + blob[j + 8] + blob[j + 9]) // 4
+        for j in (16 * (k // 4) + 2 * (k % 4) for k in range(8))
+    ]
+    return [(doc_id, "-".join(map(str, pooled)), len(blob), len(pooled))]
+
+
 def resize_pool(mm: DataFrame) -> DataFrame:
     """'Resize' via 2×2 average pooling over the fake-decoded pixel grid
     (the 32 blob bytes as an 8×4 row-major scanline → a 4×2 pooled
-    image) — the real-resize batch shape as an Arrow-batched
-    ``mapInPandas`` stage.  A real decoder+PIL resize slots into the
-    same worker function; everything Spark-side (schema, batching,
-    keeping the binary out of any exchange) is identical.
+    image) — the real-resize batch shape as a :func:`_per_asset` stage.
+    A real decoder+PIL resize slots into the same row function;
+    everything Spark-side (schema, batching, keeping the binary out of
+    any exchange) is identical.
 
     The pooled bytes are integer algebra on the blob content, so the
     DuckDB oracle reproduces them exactly (see ``mm_resize_pool``)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def pool(blob: bytes) -> list[int]:
-            # 8 wide x 4 high, row-major; 2x2 average pool -> 4x2
-            out = []
-            for k in range(8):
-                r, c = k // 4, k % 4
-                j1 = 16 * r + 2 * c
-                out.append(
-                    (blob[j1] + blob[j1 + 1] + blob[j1 + 8] + blob[j1 + 9])
-                    // 4
-                )
-            return out
-
-        for pdf in batches:
-            pooled = pdf["blob"].map(lambda b: pool(bytes(b)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "resized_csv": pooled.map(
-                        lambda xs: "-".join(str(x) for x in xs)
-                    ),
-                    "n_px_in": pdf["blob"].map(len).astype("int32"),
-                    "n_px_out": pooled.map(len).astype("int32"),
-                }
-            )
-
-    schema = "doc_id long, resized_csv string, n_px_in int, n_px_out int"
-    return mm.select("doc_id", "blob").mapInPandas(run, schema)
+    return _per_asset(
+        mm.select("doc_id", "blob"),
+        _pool,
+        "doc_id long, resized_csv string, n_px_in int, n_px_out int",
+    )
 
 
 def audio_chunk_plan(

@@ -10,8 +10,9 @@ per task, no driver involvement. At 100 TB each group is a few GB and
 groups pack in parallel across executors; determinism comes from the
 hash group key + doc_id order, not from partition layout.
 
-The pandas worker is self-contained (imports its own deps) so executors
-need no access to this package.
+Executors import this package as the driver does:
+``tables.tune_session`` puts the repository root on the worker
+``PYTHONPATH``.
 """
 
 from __future__ import annotations

@@ -396,8 +396,8 @@ def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     per asset cross any exchange; blobs never shuffle."""
     t = load_tables(spark, sf_dir, ["documents"])
     # r11: fused synth+decode — one Python stage, blobs never cross
-    # the JVM boundary (guide §4.1); kernels identical to the unfused
-    # attach_png_blobs → png_pixel_stats pipeline
+    # the JVM boundary (guide §4.1); each asset runs encode_png_rgb8
+    # then decode_png
     return mm.png_decode_stats(t["documents"])
 
 

@@ -106,33 +106,34 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
 
 def _enable_fast_worker(spark: SparkSession) -> None:
-    """Route Python workers through :mod:`pyspark_graft_worker` (repo
-    root), which removes two fixed per-task worker costs — the
-    per-task ``importlib.invalidate_caches()`` zip-directory rescan and
-    the full-heap ``gc.collect()`` between reused tasks (~140 ms/task
-    combined on this install; measured, see OPTIMIZATION_r11.md).
+    """Put the repository root on the Python workers' ``PYTHONPATH`` and
+    route them through :mod:`pyspark_graft_worker` (repo root).
+
+    Executors import ``multisql_spark`` (the multimodal stages and the
+    text UDFs pickle module-level functions by reference), so the root
+    must be importable on every worker, whatever directory the driver
+    runs from.  The worker module removes two fixed per-task worker
+    costs — the per-task ``importlib.invalidate_caches()`` zip-directory
+    rescan and the full-heap ``gc.collect()`` between reused tasks
+    (~140 ms/task combined on this install; measured, see
+    OPTIMIZATION_r11.md).
 
     The worker-module conf is read by the JVM's PythonWorkerFactory at
     first Python-stage execution, so setting it on the live SparkConf
-    before any Python job still applies; the repo root is appended to
-    the worker PYTHONPATH via the context's executor environment (the
+    before any Python job still applies; the root is appended to the
+    worker PYTHONPATH via the context's executor environment (the
     factory cache keys on (module, env), so existing sessions simply
-    build a fresh daemon).  Best-effort: any failure leaves the stock
-    worker path untouched, and ``SPARK_GRAFT_FAST_WORKER=0`` opts out.
+    build a fresh daemon).  A failure is logged and leaves the stock
+    worker path untouched.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FAST_WORKER") == "0":
-        return
     try:
         root = os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))
         )
-        if not os.path.exists(os.path.join(root, "pyspark_graft_worker.py")):
-            return
         sc = spark.sparkContext
-        jconf = sc._jsc.sc().conf()
-        jconf.set("spark.python.worker.module", "pyspark_graft_worker")
+        if os.path.exists(os.path.join(root, "pyspark_graft_worker.py")):
+            jconf = sc._jsc.sc().conf()
+            jconf.set("spark.python.worker.module", "pyspark_graft_worker")
         current = sc.environment.get("PYTHONPATH", "")
         if root not in current.split(":"):
             sc.environment["PYTHONPATH"] = (

@@ -25,9 +25,8 @@ boot/init timestamps and /proc socket queues; see OPTIMIZATION_r11.md):
 Activated via ``spark.python.worker.module=pyspark_graft_worker`` plus
 this directory on the worker PYTHONPATH (both wired up by
 ``multisql_spark.tables.tune_session``, which the repo's session
-factory ``multisql_spark.tables.local_session`` calls).
-``SPARK_GRAFT_FAST_WORKER=0`` disables the wiring.  The module name must
-keep its ``pyspark`` prefix: ``pyspark.daemon`` only accepts worker
+factory ``multisql_spark.tables.local_session`` calls).  The module
+name must keep its ``pyspark`` prefix: ``pyspark.daemon`` only accepts worker
 modules whose name starts with ``pyspark``.
 """
 

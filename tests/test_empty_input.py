@@ -70,6 +70,20 @@ REPRESENTATIVES = [
     "events_rollup_hourly",
     "mm_metadata_stats",
 ]
+# the multimodal codec stages: each runs a Python worker over every
+# asset (``multimodal._per_asset``, and ``_jpeg_decode`` for JPEG);
+# these pin the workers on no assets and on a single asset
+CODEC_STAGES = [
+    "mm_bmp_decode",
+    "mm_png_decode",
+    "mm_gif_decode",
+    "mm_jpeg_decode",
+    "mm_jpeg_decode_ac",
+    "mm_video_frame_plan",
+    "mm_wav_energy",
+    "mm_feature_extract",
+    "mm_resize_pool",
+]
 
 
 @pytest.fixture(scope="module")
@@ -95,7 +109,7 @@ def one_row_sf_dir(tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "name", FIXED_IN_R5 + FIXED_IN_R5_ONE_ROW + REPRESENTATIVES
+    "name", FIXED_IN_R5 + FIXED_IN_R5_ONE_ROW + REPRESENTATIVES + CODEC_STAGES
 )
 def test_query_total_on_empty_input(spark, empty_sf_dir, name):
     spec = load_all()[name]
@@ -105,7 +119,7 @@ def test_query_total_on_empty_input(spark, empty_sf_dir, name):
     assert len(rows) <= 1
 
 
-@pytest.mark.parametrize("name", FIXED_IN_R5_ONE_ROW)
+@pytest.mark.parametrize("name", FIXED_IN_R5_ONE_ROW + CODEC_STAGES)
 def test_query_total_on_one_row_input(spark, one_row_sf_dir, name):
     spec = load_all()[name]
     spec.fn(spark, one_row_sf_dir).collect()  # must not raise

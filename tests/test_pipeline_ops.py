@@ -1120,6 +1120,37 @@ def test_mm_bmp_decode_matches_direct_decode(spark, sf_dir):
         assert r["top_left_rgb"] == "-".join(str(v) for v in px[0])
 
 
+def test_bmp_stage_reads_blobs_as_decode_bmp_does(spark):
+    """bmp_pixel_stats reads each blob exactly as decode_bmp does: a
+    top-down BMP (negative height) reports decode_bmp's top-left pixel,
+    and a blob that is not a BMP fails the stage with decode_bmp's
+    error instead of yielding stats."""
+    import struct
+
+    import pytest as _pytest
+
+    from multisql_spark.operators import multimodal as mm
+
+    # stored rows (BGR + 2 pad bytes); with a negative height the FIRST
+    # stored row is the top one, so the top-left pixel is RGB 3-2-1
+    stored = bytes([1, 2, 3, 4, 5, 6, 0, 0, 7, 8, 9, 10, 11, 12, 0, 0])
+    top_down = bytearray(mm.encode_bmp24(stored, 2, 2))
+    struct.pack_into("<i", top_down, 22, -2)
+    assert mm.decode_bmp(bytes(top_down))[2][0] == [3, 2, 1]
+
+    def stats(blob):
+        df = spark.createDataFrame([(1, blob)], "doc_id long, blob binary")
+        return mm.bmp_pixel_stats(df).collect()
+
+    (row,) = stats(bytes(top_down))
+    assert (row["width"], row["height"]) == (2, 2)
+    assert row["top_left_rgb"] == "3-2-1"
+    with _pytest.raises(ValueError):
+        mm.decode_bmp(b"XX" + bytes(top_down[2:]))
+    with _pytest.raises(Exception, match="not a BMP file"):
+        stats(b"XX" + bytes(top_down[2:]))
+
+
 def test_png_codec_roundtrip_all_filters():
     """The stdlib PNG codec must round-trip every scanline filter type
     (None/Sub/Up/Average/Paeth), report the filters it read from the
@@ -1517,9 +1548,8 @@ def test_gif_lzw_roundtrip_property():
 
 def test_mm_gif_decode_matches_direct_decode(spark, sf_dir):
     """mm_gif_decode's mapInPandas stats must equal a direct decode_gif
-    of the rebuilt asset row-for-row — pinning the self-contained worker
-    copies of the LZW codec to the module-level pair the unit tests
-    exercise."""
+    of the rebuilt asset row-for-row — pinning the stage's synthesized
+    assets and their decode to the LZW pair the unit tests exercise."""
     import hashlib
 
     from multisql_spark.operators import multimodal as mm
@@ -1700,9 +1730,9 @@ def test_jpeg_decode_guards():
 
 def test_mm_jpeg_decode_matches_direct_decode(spark, sf_dir):
     """mm_jpeg_decode's mapInPandas stats must equal a direct
-    decode_jpeg of the rebuilt asset row-for-row — pinning the
-    self-contained worker's numpy-IDCT decoder to the module-level
-    pure-Python one the unit tests exercise."""
+    decode_jpeg of the rebuilt asset row-for-row — pinning the stage's
+    batched decode (many assets per numpy pass) to the one-asset decode
+    the unit tests exercise."""
     import hashlib
 
     from multisql_spark.operators import multimodal as mm
@@ -1768,8 +1798,8 @@ def test_jpeg_ac_encoder_guards():
 
 def test_mm_jpeg_decode_ac_matches_direct_decode(spark, sf_dir):
     """mm_jpeg_decode_ac's worker stats must equal a direct decode_jpeg
-    of the rebuilt AC asset — pinning the worker's numpy path to the
-    module-level decoder on a corpus with nonzero AC coefficients."""
+    of the rebuilt AC asset — pinning the stage's batched decode to the
+    one-asset decode on a corpus with nonzero AC coefficients."""
     import hashlib
 
     from multisql_spark.operators import multimodal as mm

@@ -1097,7 +1097,7 @@ def test_constant_predicates_match_model(glue, tmp_path, attached):
             glue.execute("DROP DATABASE cfatt")
 
 
-def test_tune_session_reports_what_it_cannot_set(caplog, monkeypatch):
+def test_tune_session_reports_what_it_cannot_set(caplog):
     """A conf the session refuses and a failed fast-worker set-up are
     logged on the ``multisql_spark`` logger, not dropped."""
     from multisql_spark.tables import tune_session
@@ -1113,7 +1113,6 @@ def test_tune_session_reports_what_it_cannot_set(caplog, monkeypatch):
         def sparkContext(self):
             raise RuntimeError("no context")
 
-    monkeypatch.delenv("SPARK_GRAFT_FAST_WORKER", raising=False)
     with caplog.at_level("WARNING", logger="multisql_spark"):
         tune_session(LockedSession())
     messages = [r.getMessage() for r in caplog.records]
@@ -1131,14 +1130,17 @@ def test_local_cpus_follows_env_then_affinity(monkeypatch):
     assert tables.local_cpus() == 4
 
 
-def test_factory_tunes_session_without_load_tables(spark, monkeypatch):
+def test_factory_tunes_session_without_load_tables(spark):
     """The suite's session comes from ``local_session``, and the factory
     itself, not ``load_tables``, applies every runtime conf and the fast
     worker: with both stripped, asking the factory again (which returns
-    the live session) restores all of them."""
+    the live session) restores all of them.  The package root is on the
+    workers' ``PYTHONPATH``, since executors import ``multisql_spark``."""
+    import os
+
+    import multisql_spark
     from multisql_spark import tables
 
-    monkeypatch.delenv("SPARK_GRAFT_FAST_WORKER", raising=False)
     assert spark.sparkContext.master == f"local[{tables.local_cpus()}]"
     assert spark.sparkContext.getConf().get("spark.driver.memory") == "8g"
     jconf = spark.sparkContext._jsc.sc().conf()
@@ -1151,6 +1153,9 @@ def test_factory_tunes_session_without_load_tables(spark, monkeypatch):
             assert spark.conf.get(key) == value, key
         worker = jconf.get("spark.python.worker.module", "")
         assert worker == "pyspark_graft_worker"
+        root = os.path.dirname(os.path.dirname(multisql_spark.__file__))
+        pythonpath = spark.sparkContext.environment["PYTHONPATH"]
+        assert root in pythonpath.split(":")
     finally:
         tables.tune_session(spark)
 

@@ -240,17 +240,20 @@ def main() -> int:
     tag = os.path.basename(sf_dir.rstrip("/"))
     with open(f"/tmp/driver_sim_{tag}.json", "w") as f:
         json.dump(report, f, indent=1, default=str)
-    # Durable, repo-tracked sweep evidence (VERDICT r3 ask #2): every run
-    # also lands a segment artifact under sweeps/, keyed by the sweep
-    # label (SWEEP_LABEL, e.g. "r4"), the sf tag, and a digest of the
+    # Every run also lands a segment artifact, keyed by the sweep label
+    # (SWEEP_LABEL, e.g. "r4"), the sf tag, and a digest of the
     # query-name set — so re-running the same segment overwrites its own
-    # file instead of clobbering other segments, and the full per-round
-    # record is auditable from git without rerunning Spark.
-    label = os.environ.get("SWEEP_LABEL", "adhoc")
+    # file instead of clobbering other segments.  A labeled sweep is
+    # durable, repo-tracked evidence under sweeps/ (VERDICT r3 ask #2);
+    # an unlabeled gate run goes to the git-ignored .sweeps/, so it never
+    # overwrites tracked evidence.
+    label = os.environ.get("SWEEP_LABEL")
     seg = hashlib.sha256("\n".join(sorted(names)).encode()).hexdigest()[:8]
     sweeps_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sweeps"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "sweeps" if label else ".sweeps",
     )
+    label = label or "adhoc"
     os.makedirs(sweeps_dir, exist_ok=True)
     out = os.path.join(sweeps_dir, f"{label}_{tag}_{len(names)}q_{seg}.json")
     with open(out, "w") as f:

@@ -28,8 +28,9 @@ Usage:
 
 Runs each engine query (registry fn) on Spark, compares to the Python
 ground truth with the driver's canonicalization (sorted columns, sorted
-rows, repr-hash), prints ok/RED, and writes a sweeps/ segment artifact
-tagged ``oracle: python-fixture``.
+rows, repr-hash), prints ok/RED, and writes a segment artifact tagged
+``oracle: python-fixture`` (under sweeps/ when ``SWEEP_LABEL`` is set,
+else under the git-ignored .sweeps/).
 """
 
 from __future__ import annotations
@@ -724,11 +725,15 @@ def main() -> int:
 
     print(f"\n{len(names) - n_red}/{len(names)} green")
     tag = os.path.basename(sf_dir.rstrip("/"))
-    label = os.environ.get("SWEEP_LABEL", "adhoc")
+    # labeled sweeps are tracked evidence (sweeps/); unlabeled runs go
+    # to the git-ignored .sweeps/ (see tools/driver_sim.py)
+    label = os.environ.get("SWEEP_LABEL")
     seg = hashlib.sha256("\n".join(sorted(names)).encode()).hexdigest()[:8]
     sweeps_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sweeps"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "sweeps" if label else ".sweeps",
     )
+    label = label or "adhoc"
     os.makedirs(sweeps_dir, exist_ok=True)
     out = os.path.join(
         sweeps_dir, f"{label}_{tag}_heavyfix_{len(names)}q_{seg}.json"
