@@ -15,7 +15,7 @@ import logging
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 log = logging.getLogger("multisql_spark")
@@ -169,8 +169,13 @@ def load_tables(
 
 def ts_micros(df: DataFrame) -> DataFrame:
     """``df`` with a ``ts`` read as nanos-as-long converted to a
-    microsecond timestamp (truncation matches DuckDB's TIMESTAMP_NS →
-    TIMESTAMP cast); any other ``df`` unchanged."""
+    microsecond timestamp; any other ``df`` unchanged."""
     if dict(df.dtypes).get("ts") != "bigint":
         return df
-    return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df.withColumn("ts", _micros("ts"))
+
+
+def _micros(col: str) -> Column:
+    """Nanos-as-long column ``col`` as a microsecond timestamp (truncation
+    matches DuckDB's TIMESTAMP_NS → TIMESTAMP cast)."""
+    return F.expr(f"timestamp_micros(`{col}` div 1000)")

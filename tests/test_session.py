@@ -865,7 +865,7 @@ def test_export_import_database(glue, tmp_path):
 
 def test_export_includes_dunder_named_table(glue, tmp_path, sf_dir):
     """A managed table legitimately named a__b must survive the dump:
-    attached-db shadow entries are excluded structurally (persist_path),
+    attached-db shadow entries are excluded structurally (their source),
     not by a '__' name substring (ADVICE r2 #3)."""
     _fresh(glue, "a__b")
     glue.execute("CREATE TABLE a__b (id INTEGER)")

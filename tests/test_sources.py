@@ -224,7 +224,191 @@ def test_xlsx_flush_rejects_oversized_sheet(spark, tmp_path_factory):
     state = g.tables["xlbig__t"]
     state.df = spark.range(1_200_000).select(F.col("id").cast("long"))
     with pytest.raises(UnsupportedError, match="1,048,576"):
-        g._flush(state)
+        state.source.write(spark, state.source_table, state.df)
+
+
+def test_renamed_sheet_writes_back_its_own_sheet(spark, tmp_path):
+    """A renamed attached table keeps writing its source table: ALTER
+    TABLE RENAME on an xlsx sheet and a following INSERT rewrite sheet
+    ``t`` and keep the sibling sheet, as a renamed parquet table keeps
+    writing its own file."""
+    from multisql_spark.sources import xlsx
+
+    book = str(tmp_path / "rn.xlsx")
+    xlsx.write_workbook(book, {"t": [["id"], [1]], "s": [["tag"], ["x"]]})
+    g = MultiSQLSession(spark)
+    g.execute(f"CREATE DATABASE xlrn LOCATION '{book}'")
+    g.execute("ALTER TABLE xlrn.t RENAME TO renamed")
+    g.execute("INSERT INTO renamed VALUES (2)")
+    assert sorted(g.execute("SELECT id FROM renamed").rows) == [(1,), (2,)]
+    assert xlsx.read_workbook(book) == {
+        "t": [["id"], [1], [2]], "s": [["tag"], ["x"]],
+    }
+
+
+def test_write_back_keeps_one_copy_of_the_table(spark, tmp_path):
+    """The database's table is the session's table: after a write,
+    ``db.tables`` holds the version the session reads, not the rows read
+    at attach."""
+    d = tmp_path / "one"
+    d.mkdir()
+    g = MultiSQLSession(spark)
+    g.execute(f"CREATE DATABASE one LOCATION '{d}'")
+    g.execute("CREATE TABLE one.t (id INTEGER)")
+    g.execute("INSERT INTO one.t VALUES (1)")
+    state = g.tables["one__t"]
+    assert g.databases["one"].tables["t"] is state.df
+    assert state.source.file("t") == str(d / "t.parquet")
+
+
+def test_write_back_publishes_beside_the_file(spark, tmp_path, monkeypatch):
+    """The write-back writes its temp entry beside the attached file,
+    not under ``$TMPDIR``, and removes it whether the publish succeeds
+    or fails; a failed publish leaves the file as it was."""
+    import os
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from multisql_spark.sources import xlsx
+
+    d = tmp_path / "tmpdb"
+    d.mkdir()
+    book = str(tmp_path / "tmpbook.xlsx")
+    xlsx.write_workbook(book, {"t": [["id"], [1]]})
+    g = MultiSQLSession(spark)
+    g.execute(f"CREATE DATABASE tmpdb LOCATION '{d}'")
+    g.execute(f"CREATE DATABASE tmpbook LOCATION '{book}'")
+    g.execute("CREATE TABLE tmpdb.t (id INTEGER)")
+    not_a_dir = tmp_path / "not_a_dir"
+    not_a_dir.write_text("")
+    monkeypatch.setattr(tempfile, "tempdir", str(not_a_dir))
+    g.execute("INSERT INTO tmpdb.t VALUES (1)")
+    g.execute("INSERT INTO tmpbook.t VALUES (2)")
+    assert pq.read_table(d / "t.parquet").column("id").to_pylist() == [1]
+    assert xlsx.read_workbook(book)["t"] == [["id"], [1], [2]]
+
+    def fail(src, dst):
+        raise OSError("publish failed")
+
+    monkeypatch.setattr(os, "replace", fail)
+    with pytest.raises(OSError, match="publish failed"):
+        g.execute("INSERT INTO tmpdb.t VALUES (2)")
+    with pytest.raises(OSError, match="publish failed"):
+        g.execute("INSERT INTO tmpbook.t VALUES (3)")
+    monkeypatch.undo()
+    assert pq.read_table(d / "t.parquet").column("id").to_pylist() == [1]
+    assert xlsx.read_workbook(book)["t"] == [["id"], [1], [2]]
+    assert os.listdir(d) == ["t.parquet"]
+    assert sorted(os.listdir(tmp_path)) == [
+        "not_a_dir", "tmpbook.xlsx", "tmpdb",
+    ]
+    assert g.execute("SELECT id FROM tmpdb.t").rows == [(1,)]
+
+
+def test_write_back_rejects_a_directory_table(spark, tmp_path):
+    """A table stored as a directory of part files is readable but not
+    writable: one rename cannot replace it, so a write is refused with
+    a typed error and the directory keeps its rows."""
+    from multisql_spark.session import EngineError
+
+    d = tmp_path / "dirdb"
+    spark.range(3).repartition(2).write.parquet(str(d / "t.parquet"))
+    g = MultiSQLSession(spark)
+    g.execute(f"CREATE DATABASE dirdb LOCATION '{d}'")
+    with pytest.raises(EngineError, match="is a directory"):
+        g.execute("INSERT INTO dirdb.t VALUES (10)")
+    assert g.execute("SELECT count(*) FROM dirdb.t").rows == [(3,)]
+    assert spark.read.parquet(str(d / "t.parquet")).count() == 3
+    g.execute("DROP DATABASE dirdb")
+
+
+def test_write_back_sigkill_at_publish_leaves_file_intact(spark, tmp_path):
+    """A real SIGKILL of the writing process at the publish of an
+    attached table's new file: every step up to the ``os.replace`` has
+    run, no cleanup runs, and the file still holds the pre-write rows.
+    A fresh attach of the directory lists the same tables."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "killdb"
+    d.mkdir()
+    target = d / "t.parquet"
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int64())}), target)
+    pq.write_table(pa.table({"k": pa.array([7], pa.int64())}), d / "u.parquet")
+
+    victim = tmp_path / "victim.py"
+    victim.write_text(
+        """
+import os, signal, sys
+sys.path.insert(0, sys.argv[3])
+from multisql_spark.session import MultiSQLSession
+from multisql_spark.tables import local_session
+
+dbdir, target = sys.argv[1], os.path.abspath(sys.argv[2])
+g = MultiSQLSession(local_session("write_back_sigkill_victim"))
+g.execute(f"CREATE DATABASE kd LOCATION '{dbdir}'")
+real_replace = os.replace
+def replace_then_die(src, dst):
+    if os.path.abspath(dst) == target:
+        os.kill(os.getpid(), signal.SIGKILL)  # dies AT the publish
+    return real_replace(src, dst)
+os.replace = replace_then_die
+g.execute("INSERT INTO kd.t VALUES (3)")
+os._exit(1)  # unreachable: the SIGKILL must have fired
+"""
+    )
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, str(victim), str(d), str(target), repo_root],
+        capture_output=True,
+        timeout=300,
+    )
+    assert proc.returncode == -signal.SIGKILL, (
+        proc.returncode,
+        proc.stderr.decode()[-2000:],
+    )
+    # the new file was written whole beside the old one, never published
+    (left,) = [f for f in os.listdir(d) if f.endswith(".tmp")]
+    assert left.startswith(".t.parquet.")
+    assert pq.read_table(target).column("id").to_pylist() == [1, 2]
+    g = MultiSQLSession(spark)
+    g.execute(f"CREATE DATABASE kd LOCATION '{d}'")
+    assert g.execute("EXPLAIN kd").rows == [("t",), ("u",)]
+    assert sorted(g.execute("SELECT id FROM kd.t").rows) == [(1,), (2,)]
+    g.execute("DROP DATABASE kd")
+
+
+def test_attached_nanos_column_reads_as_micros(spark, tmp_path):
+    """An attached parquet file's TIMESTAMP(NANOS) column, whatever its
+    name, reads back as microsecond timestamps (truncated)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "nsdb"
+    d.mkdir()
+    ns = 1_700_000_000_123_456_789
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1], pa.int64()),
+            "seen_at": pa.array([ns], pa.timestamp("ns")),
+        }),
+        d / "t.parquet",
+    )
+    g = MultiSQLSession(spark)
+    g.execute(f"CREATE DATABASE nsdb LOCATION '{d}'")
+    assert dict(g.tables["nsdb__t"].df.dtypes)["seen_at"] == "timestamp"
+    assert g.execute("SELECT seen_at FROM nsdb.t").rows == [
+        (dt.datetime(2023, 11, 14, 22, 13, 20, 123456),)
+    ]
+    g.execute("DROP DATABASE nsdb")
 
 
 def test_xlsx_shared_strings_and_mixed_types(spark, tmp_path_factory):
