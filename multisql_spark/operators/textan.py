@@ -116,9 +116,10 @@ def fingerprints(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (lexicographic-min md5 over 3-token shingles — a 1-row winnowing
     sketch).
 
-    Precondition: ``id_col`` is unique per input row (the documents PK).
-    With duplicate ids the shingle aggregate would pool shingles across
-    the duplicates and the fingerprint join would multiply rows."""
+    Every input row keeps exactly one output row.  The min-shingle is
+    aggregated per ``id_col`` value (NULL is one value), so rows that
+    share an id share the minimum over all their shingles; with the
+    documents PK as the id it is each document's own."""
     # r11 (guide §1.3): the token array is split ONCE into a column —
     # referencing the split() expression inside the transform() lambda
     # re-evaluated it per shingle (O(len²) characters per doc).
@@ -162,9 +163,12 @@ def fingerprints(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         .groupBy(id_col)
         .agg(F.min("_sh").alias("fp_min_shingle"))
     )
-    return fps.join(sh, id_col).select(
-        id_col, "fp_exact", "fp_set", "fp_min_shingle"
-    )
+    # a left join from the per-row side, null-safe on the id: a NULL id
+    # matches its own group, and each row meets one aggregate row
+    f, s = fps.alias("f"), sh.alias("s")
+    return f.join(
+        s, F.col(f"f.{id_col}").eqNullSafe(F.col(f"s.{id_col}")), "left"
+    ).select(f"f.{id_col}", "fp_exact", "fp_set", "fp_min_shingle")
 
 
 def normalize_text(df: DataFrame, id_col: str = "doc_id",

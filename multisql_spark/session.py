@@ -32,12 +32,17 @@ history.  Persistent databases attach parquet/CSV directories through
 A write makes one pass per version (``_commit``), as the reference
 validates and writes a row batch in one pass: every count and check that
 is a plain aggregate (affected rows, NULL counts, key counts, collisions
-with existing keys) is observed on the pass that builds the batch or the
-version (``DataFrame.observe``), not run as its own job.  DISTINCT counts
-cannot be observed, so they run only when they can fire: over a batch
-carrying more than one key, or over an UPDATE's version when it assigns
-a UNIQUE column.  The version replaces ``state.df`` (or the attached
-file) only after its checks pass.
+with existing keys) is observed on the pass that builds the version
+(``DataFrame.observe``), not run as its own job.  A literal batch (an
+``insert_vec`` batch, or INSERT VALUES that the optimizer turns into a
+``LocalRelation``) is counted on the driver, which holds its rows, and is
+never stored: the version is its one stored copy.  Only a batch computed
+from tables (``INSERT … SELECT``, MERGE's inserted rows) is stored first,
+observing its counts.  DISTINCT counts cannot be observed, so they run
+only when they can fire: over such a batch carrying more than one key,
+or over an UPDATE's version when it assigns a UNIQUE column.  The
+version replaces ``state.df`` (or the attached file) only after its
+checks pass.
 """
 
 from __future__ import annotations
@@ -46,6 +51,7 @@ import os
 import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -56,6 +62,9 @@ from multisql_spark import dialect
 from multisql_spark.payload import Payload
 from multisql_spark.sources import SourceDatabase, attach_database
 from multisql_spark.tables import local_session, tune_session
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 class EngineError(Exception):
@@ -144,6 +153,14 @@ class TableState:
     # _materialize stored at the end of the last write statement (ALTER
     # TABLE may add a projection until the next write); a write replaces
     # it, never stacks onto it
+    # df's schema, kept here because each ``DataFrame.schema`` access is
+    # a JVM round trip: a write keeps the column types, so it changes
+    # only where the table is created, altered or read back from its file
+    schema: T.StructType | None = None
+
+    def __post_init__(self) -> None:
+        if self.schema is None:
+            self.schema = self.df.schema
 
     def column(self, name: str) -> ColumnDef | None:
         for c in self.columns:
@@ -171,6 +188,29 @@ def _materialize(df: DataFrame) -> DataFrame:
         )
     finally:
         conf.set(key, prev)
+
+
+def _sized(version: DataFrame, rows: int) -> DataFrame:
+    """``version``, a table version :func:`_materialize` stored, as the
+    same stored leaf with the size estimate of ``rows`` rows: Catalyst
+    sizes a ``LIMIT rows`` over it at ``rows`` times its row width."""
+    spark = version.sparkSession
+    jvm = spark._jvm
+    plan = version._jdf.queryExecution().logical()
+    limited = version.limit(max(rows, 1))._jdf.queryExecution()
+    leaf = plan.copy(
+        plan.output(), plan.rdd(), plan.outputPartitioning(),
+        plan.outputOrdering(), plan.isStreaming(), plan.stream(),
+        spark._jsparkSession, jvm.scala.Some(limited.optimizedPlan().stats()),
+        # no constraints, as _materialize stores none
+        jvm.scala.Option.apply(None),
+    )
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, leaf
+        ),
+        spark,
+    )
 
 
 def _release(version: DataFrame) -> None:
@@ -212,16 +252,27 @@ def assign_dense_ids(
     return df.withColumn(col, (offset + local_pos + 1).cast(dtype))
 
 
-def _local_relation(
-    spark: SparkSession, schema: T.StructType, rows: list[tuple] = ()
+def _in_order_ids(
+    df: DataFrame, col: str, start: int, dtype: str
 ) -> DataFrame:
-    """``rows`` in ``schema`` as a DataFrame whose plan is one
+    """Fill ``col`` of a literal batch with ``start+1 .. start+n`` in row
+    order, in the plan that reads it: coalesced into one partition,
+    ``monotonically_increasing_id`` counts the rows from 0 in the order
+    they were given, so the ids do not depend on the core count."""
+    return df.coalesce(1).withColumn(
+        col, F.expr(f"CAST(monotonically_increasing_id() + {start + 1}"
+                    f" AS {dtype})")
+    )
+
+
+def _arrow_batch(schema: T.StructType, rows: list[tuple] = ()) -> pa.Table:
+    """``rows`` as an Arrow table in ``schema``'s types; a row of the
+    wrong length or a value its column's type cannot hold raises
+    :class:`EngineError`.  ``createDataFrame`` plans the table as one
     ``LocalRelation``: a stored leaf that carries its size estimate, so a
     join over it can be planned as a broadcast and a version built from
     it stays sized.  (``createDataFrame`` of a Python list plans a
-    ``LogicalRDD`` of unknown size instead.)  The rows go through an
-    Arrow table in the schema's types; a row of the wrong length or a
-    value its column's type cannot hold raises :class:`EngineError`."""
+    ``LogicalRDD`` of unknown size instead.)"""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -230,13 +281,24 @@ def _local_relation(
         raise EngineError(f"each row must carry {len(arrow)} values")
     columns = list(zip(*rows)) or [()] * len(arrow)
     try:
-        table = pa.Table.from_arrays(
+        return pa.Table.from_arrays(
             [pa.array(c, f.type) for c, f in zip(columns, arrow)],
             schema=arrow,
         )
     except (pa.ArrowException, OverflowError) as exc:
         raise EngineError(f"incompatible data: {exc}") from exc
-    return spark.createDataFrame(table, schema)
+
+
+def _is_literal(df: DataFrame) -> bool:
+    """Whether the optimizer turns ``df`` into one ``LocalRelation``: rows
+    the driver holds, which a collect reads without a job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def _dtypes(schema: T.StructType) -> dict[str, str]:
+    """``DataFrame.dtypes`` of a schema already fetched."""
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
 
 
 def _spark_type(t: str) -> T.DataType:
@@ -282,41 +344,101 @@ _VALUETYPE_DISPLAY = {
 }
 
 
-def _uq_key(cdef: ColumnDef):
-    """Equality key for UNIQUE checks: variant (declared-Any) columns are
-    not comparable/groupable in Spark, but their JSON rendering is a
-    faithful per-kind equality key, so Any-typed UNIQUE dedups on it.
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _uq_key(cdef: ColumnDef) -> str:
+    """SQL text of the equality key for UNIQUE checks: variant
+    (declared-Any) columns are not comparable/groupable in Spark, but
+    their JSON rendering is a faithful per-kind equality key, so
+    Any-typed UNIQUE dedups on it.  The key is NULL exactly where the
+    column is.
 
     Numeric kinds are normalized first: the reference's default
     ``implicit_float_conversion`` treats ``I64(1)`` and ``F64(1.0)`` as
     equal in ``validate_unique`` (value/mod.rs:159), while their JSON
     renderings ``1`` vs ``1.0`` differ — so integral-valued doubles and
-    ints both key as the canonical integer string.  The kind probe uses
-    ``schema_of_variant`` (not a value cast) so a STRING variant ``'1'``
-    never collides with the number 1."""
+    ints both key as the canonical integer string (within the f64 2^53
+    exact-integer range).  The kind probe uses ``schema_of_variant`` (not
+    a value cast) so a STRING variant ``'1'`` never collides with the
+    number 1."""
+    c = _quote(cdef.name)
     if cdef.type_str != "variant":
-        return F.col(cdef.name)
-    c = F.col(cdef.name)
-    kind = F.schema_of_variant(c)
-    big = F.try_variant_get(c, "$", "bigint")
-    dbl = F.try_variant_get(c, "$", "double")
-    # doubles that are exactly representable integers (within the f64
-    # 2^53 exact-integer range) render as the integer string
-    integral_dbl = (
-        dbl.isNotNull()
-        & (dbl == F.floor(dbl))
-        & (F.abs(dbl) <= F.lit(9007199254740992.0))
-    )
+        return c
+    kind = f"schema_of_variant({c})"
+    big = f"try_variant_get({c}, '$', 'bigint')"
+    dbl = f"try_variant_get({c}, '$', 'double')"
+    floating = f"{kind} IN ('DOUBLE', 'FLOAT')"
     return (
-        F.when(kind.isin("BIGINT", "INT", "SMALLINT", "TINYINT"),
-               big.cast("string"))
-        .when(
-            kind.isin("DOUBLE", "FLOAT") & integral_dbl,
-            dbl.cast("bigint").cast("string"),
-        )
-        .when(kind.isin("DOUBLE", "FLOAT"), dbl.cast("string"))
-        .otherwise(F.to_json(c))
+        f"CASE WHEN {kind} IN ('BIGINT', 'INT', 'SMALLINT', 'TINYINT')"
+        f" THEN CAST({big} AS STRING)"
+        f" WHEN {floating} AND {dbl} = floor({dbl})"
+        f" AND abs({dbl}) <= 9007199254740992D"
+        f" THEN CAST(CAST({dbl} AS BIGINT) AS STRING)"
+        f" WHEN {floating} THEN CAST({dbl} AS STRING)"
+        f" ELSE to_json({c}) END"
     )
+
+
+def _literal_counts(
+    columns: list[ColumnDef],
+    aligned: DataFrame,
+    stated: dict[str, str],
+    held: pa.Table | None = None,
+) -> tuple[dict[str, int], dict[str, int]]:
+    """The batch counts of a literal batch, read from the rows the driver
+    holds, with no job: the row count ``n``, NOT NULL violations
+    ``nn_<c>``, AUTO_INCREMENT NULLs ``ai_<c>``, non-NULL UNIQUE keys
+    ``uk_<c>``, and per UNIQUE column the keys the batch repeats.
+
+    ``stated`` maps a lower-cased column name to its stated name.  A
+    column stated in ``held``, the Arrow table ``insert_vec`` built, is
+    read there; an unstated column with no DEFAULT is NULL; every other
+    checked column (all of them for an INSERT's VALUES) is collected
+    from ``aligned``, a ``LocalRelation``, as its UNIQUE key or a marker
+    that is NULL where the column is."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    checked = [c for c in columns
+               if c.unique or c.auto_increment or c.not_null]
+    arrays, collect = {}, []
+    for cdef in checked:
+        s = stated.get(cdef.name.lower())
+        if held is not None and s is not None and cdef.type_str != "variant":
+            arrays[cdef.name] = held.column(s)
+        elif s is None and (cdef.auto_increment or cdef.default is None):
+            arrays[cdef.name] = None  # NULL in every row
+        else:
+            q = _quote(cdef.name)
+            collect.append((cdef.name, _uq_key(cdef) if cdef.unique
+                            else f"nvl2({q}, true, NULL)"))
+    if held is not None:
+        n = held.num_rows
+    if collect or held is None:
+        rows = aligned.selectExpr(
+            *[e for _, e in collect] or ["NULL"]
+        ).collect()
+        n = len(rows)
+        for i, (name, _) in enumerate(collect):
+            arrays[name] = pa.array([r[i] for r in rows])
+    stats, dups = {"n": n}, {}
+    for cdef in checked:
+        arr = arrays[cdef.name]
+        nulls = n if arr is None else arr.null_count
+        if cdef.auto_increment:
+            stats[f"ai_{cdef.name}"] = nulls
+        elif cdef.not_null:
+            stats[f"nn_{cdef.name}"] = nulls
+        if cdef.unique:
+            keys = stats[f"uk_{cdef.name}"] = n - nulls
+            if keys > 1:
+                if pa.types.is_floating(arr.type):
+                    arr = pc.add(arr, 0.0)  # -0.0 keys as 0.0, as in Spark
+                distinct = pc.count_distinct(arr, mode="only_valid")
+                dups[cdef.name] = keys - distinct.as_py()
+    return stats, dups
 
 
 def _check_write_type(
@@ -477,19 +599,20 @@ class MultiSQLSession:
         self, table: str, columns: list[str], rows: list[tuple]
     ) -> Payload:
         """Programmatic bulk insert (reference src/glue/mod.rs:190-248).
-        The rows become a sized batch in the named columns' types; a value
-        that type cannot hold raises :class:`EngineError`."""
+        The rows become an Arrow table in the named columns' types (a
+        value that type cannot hold raises :class:`EngineError`), which
+        the driver counts and the commit reads as a sized batch."""
         state = self._table(table)
         fields = []
         for c in columns:
             cdef = state.column(c)
             if cdef is None:
                 raise ColumnNotFoundError(f"column not found: {c}")
-            fields.append(
-                T.StructField(c, state.df.schema[cdef.name].dataType)
-            )
-        df = _local_relation(self.spark, T.StructType(fields), rows)
-        return self._insert_df(state, df, columns)
+            fields.append(T.StructField(c, state.schema[cdef.name].dataType))
+        schema = T.StructType(fields)
+        held = _arrow_batch(schema, rows)
+        df = self.spark.createDataFrame(held, schema)
+        return self._insert_df(state, df, columns, held=held)
 
     def register_udf(
         self, name: str, fn, return_type: str = "string", pandas: bool = False
@@ -551,7 +674,7 @@ class MultiSQLSession:
         """Catalog snapshot {table: {col: spark_type}} for the dialect's
         schema-aware rewrites (reference label parity for bare columns,
         static I64 int-division typing — DIVERGENCES #3/#21)."""
-        return {name: dict(state.df.dtypes)
+        return {name: _dtypes(state.schema)
                 for name, state in self.tables.items()}
 
     def _table(self, name: str) -> TableState:
@@ -568,10 +691,17 @@ class MultiSQLSession:
         self.tables[state.name.lower()] = state
         state.df.createOrReplaceTempView(state.name)
         if state.source is not None:
+            # the file's reader may type the rows it reads back anew
             state.df = state.source.write(
                 self.spark, state.source_table, state.df
             )
+            state.schema = state.df.schema
             state.df.createOrReplaceTempView(state.name)
+
+    def _reshape(self, state: TableState, df: DataFrame) -> None:
+        """ALTER TABLE's new shape of the table: ``df``, with its schema."""
+        state.df, state.schema = df, df.schema
+        self._register(state)
 
     def _commit(
         self,
@@ -707,7 +837,7 @@ class MultiSQLSession:
                 for c in columns
             ]
         )
-        df = _local_relation(self.spark, schema)
+        df = self.spark.createDataFrame(_arrow_batch(schema), schema)
         self._register(
             TableState(
                 name, columns, df, source=source, source_table=source_table
@@ -869,12 +999,15 @@ class MultiSQLSession:
         # writable (reference DBMut): DML on db.table routes through the
         # managed-table pipeline and writes back to the table's file
         for tname, df in db.tables.items():
+            schema = df.schema
             self.tables[f"{name}__{tname}".lower()] = TableState(
                 name=f"{name}__{tname}",
-                columns=[ColumnDef(name=f, type_str=t) for f, t in df.dtypes],
+                columns=[ColumnDef(name=f, type_str=t)
+                         for f, t in _dtypes(schema).items()],
                 df=df,
                 source=db,
                 source_table=tname,
+                schema=schema,
             )
         return Payload.success("CreateDatabase")
 
@@ -976,7 +1109,7 @@ class MultiSQLSession:
         # "" = ambient fragment columns (no FROM clause): lets the
         # division rewrite type int columns statically in UPDATE
         # SET / WHERE expressions (reference binary.rs int-`/`)
-        schema = {"": dict(table.df.dtypes)} if table is not None else None
+        schema = {"": _dtypes(table.schema)} if table is not None else None
         return dialect.rewrite(
             fragment,
             variables=self.variables,
@@ -992,20 +1125,29 @@ class MultiSQLSession:
         stated: list[str],
         existing: DataFrame | None = None,
         check: Callable[[DataFrame], None] | None = None,
+        held: pa.Table | None = None,
     ) -> Payload:
         """Validation pipeline per reference validate.rs:46-99: position
         mapping → defaults → AUTO_INCREMENT → type coercion → NOT NULL →
         UNIQUE → append to ``existing`` (default: the table's rows).
 
-        One pass per stored copy.  The aligned batch is materialized once,
-        observing its row count, NULL counts, AUTO_INCREMENT fill counts
-        and UNIQUE key counts.  The commit pass builds the new version and
-        observes how many rows of ``existing`` an anti join against the
-        batch's keys drops; that check runs
-        before the swap (:meth:`_commit`), after the caller's ``check``
-        of what ``existing``'s own plan observed on the same pass.  The
-        one DISTINCT count, for duplicates within the batch, runs only
-        for a UNIQUE column that carries more than one key in the batch."""
+        The batch counts (row count, NULL counts, AUTO_INCREMENT fill
+        counts, UNIQUE key counts and the keys repeated within the batch)
+        come from one of two places; the checks, their order and the
+        commit are shared.  A literal batch, ``held`` by ``insert_vec`` as
+        an Arrow table or an INSERT's VALUES that the optimizer turns into
+        a ``LocalRelation``, is counted on the driver with no job
+        (:func:`_literal_counts`) and is never stored: the commit is its
+        only stored copy.  Any other batch (``INSERT … SELECT``, MERGE's
+        inserted rows) is materialized once, observing its counts; its
+        duplicate count, a DISTINCT count, runs only for a UNIQUE column
+        that carries more than one key.
+
+        The commit pass builds the new version and observes how many rows
+        of ``existing`` an anti join against the batch's keys drops; that
+        check runs before the swap (:meth:`_commit`), after the caller's
+        ``check`` of what ``existing``'s own plan observed on the same
+        pass."""
         if existing is None:
             existing = state.df
         # stated columns must exist (reference ValidateError::ColumnNotFound,
@@ -1015,37 +1157,47 @@ class MultiSQLSession:
             if cdef is None:
                 raise ColumnNotFoundError(f"column not found: {s}")
             _check_write_type(cdef, field.dataType, state.name)
-        cols = []
-        stated_lower = [s.lower() for s in stated]
+        named = {}
+        for s in stated:
+            named.setdefault(s.lower(), s)
+        exprs = []
         for cdef in state.columns:
-            if cdef.name.lower() in stated_lower:
-                src = F.col(stated[stated_lower.index(cdef.name.lower())])
-            elif cdef.auto_increment:
-                src = F.lit(None)
-            elif cdef.default is not None:
-                src = F.expr(self._rewrite_fragment(cdef.default))
+            s = named.get(cdef.name.lower())
+            if s is not None:
+                src = _quote(s)
+            elif cdef.default is not None and not cdef.auto_increment:
+                src = f"({self._rewrite_fragment(cdef.default)})"
             else:
-                src = F.lit(None)
-            cols.append(src.cast(state.df.schema[cdef.name].dataType).alias(cdef.name))
-        # one observed pass over the batch: row count, NULL counts (NOT
-        # NULL, and the AUTO_INCREMENT fill) and non-NULL key counts
-        # (UNIQUE; NULLs never collide, reference validate_unique.rs
-        # skips them)
-        metrics = [F.count(F.lit(1)).alias("n")]
-        for cdef in state.columns:
-            null = F.col(cdef.name).isNull()
-            if cdef.not_null and not cdef.auto_increment:
-                metrics.append(F.count_if(null).alias(f"nn_{cdef.name}"))
-            if cdef.auto_increment:
-                metrics.append(F.count_if(null).alias(f"ai_{cdef.name}"))
-            if cdef.unique:
-                metrics.append(F.count(_uq_key(cdef)).alias(f"uk_{cdef.name}"))
-        batch = Observation()
-        aligned = stored = _materialize(
-            incoming.select(*cols).observe(batch, *metrics)
-        )
-        try:
+                src = "NULL"
+            dtype = state.schema[cdef.name].dataType.simpleString()
+            exprs.append(f"CAST({src} AS {dtype}) AS {_quote(cdef.name)}")
+        aligned = incoming.selectExpr(*exprs)
+        stored = dups = None
+        if held is not None or _is_literal(aligned):
+            stats, dups = _literal_counts(state.columns, aligned, named, held)
+        else:
+            # one observed pass over the batch: row count, NULL counts (NOT
+            # NULL, and the AUTO_INCREMENT fill) and non-NULL key counts
+            # (UNIQUE; NULLs never collide, reference validate_unique.rs
+            # skips them)
+            metrics = ["count(1) AS n"]
+            for cdef in state.columns:
+                q = _quote(cdef.name)
+                if cdef.auto_increment:
+                    metrics.append(f"count_if({q} IS NULL)"
+                                   f" AS {_quote('ai_' + cdef.name)}")
+                elif cdef.not_null:
+                    metrics.append(f"count_if({q} IS NULL)"
+                                   f" AS {_quote('nn_' + cdef.name)}")
+                if cdef.unique:
+                    metrics.append(f"count({_uq_key(cdef)})"
+                                   f" AS {_quote('uk_' + cdef.name)}")
+            batch = Observation()
+            aligned = stored = _materialize(
+                aligned.observe(batch, *map(F.expr, metrics))
+            )
             stats = batch.get
+        try:
             n_in = stats["n"]
             for cdef in state.columns:
                 if cdef.not_null and not cdef.auto_increment \
@@ -1056,19 +1208,21 @@ class MultiSQLSession:
             keyed = [
                 c for c in state.columns if c.unique and stats[f"uk_{c.name}"]
             ]
-            # duplicates within the batch: a DISTINCT count, which cannot be
-            # observed, so only where a column carries more than one key
+            # duplicates within the batch, only where a column carries more
+            # than one key
             multi = [c for c in keyed if stats[f"uk_{c.name}"] > 1]
-            if multi:
-                dups = aligned.agg(
-                    *[F.count(_uq_key(c)) - F.count_distinct(_uq_key(c))
-                      for c in multi]
-                ).first()
-                for cdef, dup in zip(multi, dups):
-                    if dup:
-                        raise UniqueViolation(
-                            f"UNIQUE violated for {state.name}.{cdef.name}"
-                        )
+            if multi and dups is None:
+                # over a stored batch: a DISTINCT count, which cannot be
+                # observed
+                dups = dict(zip([c.name for c in multi], stored.selectExpr(*[
+                    f"count({_uq_key(c)}) - count(DISTINCT {_uq_key(c)})"
+                    for c in multi
+                ]).first()))
+            for cdef in multi:
+                if dups[cdef.name]:
+                    raise UniqueViolation(
+                        f"UNIQUE violated for {state.name}.{cdef.name}"
+                    )
 
             # collisions with existing rows, counted on the commit pass: the
             # existing rows anti-join each UNIQUE column's batch keys, and
@@ -1081,18 +1235,16 @@ class MultiSQLSession:
             probe, counted = existing, []
             for i, cdef in enumerate(keyed):
                 k = f"__uq_{i}"
-                keys = aligned.select(_uq_key(cdef).alias(k)).filter(
-                    F.col(k).isNotNull()
+                keys = aligned.selectExpr(f"{_uq_key(cdef)} AS {k}").filter(
+                    f"{k} IS NOT NULL"
                 )
                 counted.append(Observation())
                 probe = probe.observe(
-                    counted[-1], F.count(F.lit(1)).alias("n")
-                ).join(keys, _uq_key(cdef) == F.col(k), "left_anti")
+                    counted[-1], F.expr("count(1) AS n")
+                ).join(keys, F.expr(f"{_uq_key(cdef)} = {k}"), "left_anti")
             if keyed:
                 counted.append(Observation())
-                existing = probe.observe(
-                    counted[-1], F.count(F.lit(1)).alias("n")
-                )
+                existing = probe.observe(counted[-1], F.expr("count(1) AS n"))
 
             def check_all(version: DataFrame) -> None:
                 if check is not None:
@@ -1116,18 +1268,23 @@ class MultiSQLSession:
                     # sled/auto_increment.rs semantics, see the corpus test:
                     # explicit 6 then auto gives 5, then 6 again)
                     n_fill = stats[f"ai_{cdef.name}"]
-                    dtype = state.df.schema[cdef.name].dataType.simpleString()
-                    null = F.col(cdef.name).isNull()
-                    # block-allocated dense ids over the materialized batch
-                    # (see assign_dense_ids); a batch with no explicit ids is
+                    dtype = state.schema[cdef.name].dataType.simpleString()
+                    fill = (assign_dense_ids if stored is not None
+                            else _in_order_ids)
+                    null = f"{_quote(cdef.name)} IS NULL"
+                    # dense ids in row order: block-allocated over the
+                    # stored batch (see assign_dense_ids), or counted in
+                    # the literal batch; a batch with no explicit ids is
                     # filled in place, as a union would add a partition
                     if n_fill and n_fill == n_in:
-                        aligned = assign_dense_ids(aligned, cdef.name, start, dtype)
+                        aligned = fill(aligned, cdef.name, start, dtype)
                     elif n_fill:
-                        filled = assign_dense_ids(
+                        filled = fill(
                             aligned.filter(null), cdef.name, start, dtype
                         )
-                        aligned = aligned.filter(~null).unionByName(filled)
+                        aligned = aligned.filter(f"NOT ({null})").unionByName(
+                            filled
+                        )
                     counters[cdef.name] = start + n_fill
 
             self._commit(state, existing.unionByName(aligned),
@@ -1137,7 +1294,8 @@ class MultiSQLSession:
         finally:
             # the version (or the file) holds the batch's rows now, and a
             # rejected batch is not needed either
-            _release(stored)
+            if stored is not None:
+                _release(stored)
 
     # -- UPDATE / DELETE / TRUNCATE ----------------------------------------
 
@@ -1227,7 +1385,7 @@ class MultiSQLSession:
         new_cols = []
         for cdef in state.columns:
             old = F.col(f"{alias}.{cdef.name}")
-            dtype = state.df.schema[cdef.name].dataType
+            dtype = state.schema[cdef.name].dataType
             assigned = assignments.get(cdef.name.lower())
             if assigned is None:
                 new_cols.append(old.alias(cdef.name))
@@ -1271,8 +1429,8 @@ class MultiSQLSession:
                         f"NOT NULL violated for {state.name}.{cdef.name}"
                     )
                 key = _uq_key(cdef)
-                if cdef.unique and got["n"] and version.agg(
-                    F.count(key) - F.count_distinct(key)
+                if cdef.unique and got["n"] and version.selectExpr(
+                    f"count({key}) - count(DISTINCT {key})"
                 ).first()[0]:
                     raise UniqueViolation(
                         f"UNIQUE violated for {state.name}.{cdef.name}"
@@ -1394,13 +1552,24 @@ class MultiSQLSession:
             if assign_check is not None:
                 assign_check(version)
 
-        def n_changed() -> int:
+        def done(n_inserted: int) -> Payload:
+            hit = seen.get["n"]
+            if state.source is None:
+                # the left join is estimated at the product of the target's
+                # and the source's sizes, which would compound on every
+                # MERGE; the version holds the target's rows, less the
+                # deleted, plus the inserted
+                rows = seen.get["rows"] - (hit if matched_delete else 0)
+                state.df = _sized(state.df, rows + n_inserted)
+                state.df.createOrReplaceTempView(state.name)
             matched = upd_sets is not None or matched_delete
-            return seen.get["n"] if matched else 0
+            return Payload.affected(
+                "Merge", (hit if matched else 0) + n_inserted
+            )
 
         if ins_clause is None:
             self._commit(state, candidate, check)
-            return Payload.affected("Merge", n_changed())
+            return done(0)
 
         mi = re.match(
             r"(?i)INSERT\s*(?:\(([^)]*)\)\s*)?VALUES\s*\((.*)\)\s*$",
@@ -1430,10 +1599,9 @@ class MultiSQLSession:
         # one commit for both branches: the inserted rows are validated
         # against, and appended to, the target with the matched branch
         # applied, so a rejected statement leaves the table unchanged
-        n_inserted = self._insert_df(
+        return done(self._insert_df(
             state, ins_df, stated, existing=candidate, check=check
-        ).count
-        return Payload.affected("Merge", n_changed() + n_inserted)
+        ).count)
 
     def _delete(self, stmt: str) -> Payload:
         m = re.match(
@@ -1549,8 +1717,7 @@ class MultiSQLSession:
             if not cdef:
                 raise ColumnNotFoundError(f"column not found: {old}")
             cdef.name = new
-            state.df = state.df.withColumnRenamed(old, new)
-            self._register(state)
+            self._reshape(state, state.df.withColumnRenamed(old, new))
             return Payload.success("AlterTable")
         m2 = re.match(r"ADD\s+(?:COLUMN\s+)?(.*)$", au, re.IGNORECASE | re.DOTALL)
         if m2 and not au.upper().startswith("ADD CONSTRAINT"):
@@ -1578,10 +1745,9 @@ class MultiSQLSession:
                 else F.lit(None)
             )
             state.columns.append(cdef)
-            state.df = state.df.withColumn(
+            self._reshape(state, state.df.withColumn(
                 cdef.name, default.cast(_spark_type(cdef.type_str))
-            )
-            self._register(state)
+            ))
             return Payload.success("AlterTable")
         m2 = re.match(
             r"DROP\s+(?:COLUMN\s+)?(IF\s+EXISTS\s+)?(\w+)", au, re.IGNORECASE
@@ -1596,8 +1762,7 @@ class MultiSQLSession:
             state.columns = [
                 c for c in state.columns if c.name.lower() != col.lower()
             ]
-            state.df = state.df.drop(col)
-            self._register(state)
+            self._reshape(state, state.df.drop(col))
             return Payload.success("AlterTable")
         raise UnsupportedError(f"unsupported ALTER action: {au[:60]}")
 

@@ -1846,3 +1846,34 @@ def test_spread_only_if_serial_needs_more_slots(spark, monkeypatch):
         SparkContext, "defaultParallelism", property(lambda self: 1)
     )
     assert spread(df, key="id", only_if_serial=True) is df
+
+
+def test_fingerprints_keep_one_row_per_input_row(spark):
+    """A NULL id and a duplicated id keep one output row per input row:
+    each row's exact and set fingerprints are its own, and its
+    min-shingle is the minimum over the shingles of the rows that share
+    its id."""
+    import hashlib
+
+    from multisql_spark.operators.textan import fingerprints
+
+    docs = [(1, "a b c d"), (2, "x y z"), (2, "p q r s"), (None, "m n o")]
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+    got = sorted(fingerprints(df).collect(), key=lambda r: r.fp_exact)
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    def shingles(text):
+        tk = text.split(" ")
+        return {md5(" ".join(tk[i:i + 3])) for i in range(max(len(tk) - 2, 1))}
+
+    by_id = {}
+    for i, text in docs:
+        by_id.setdefault(i, set()).update(shingles(text))
+    want = sorted(
+        ((i, md5(text), md5(" ".join(sorted(set(text.split(" "))))),
+          min(by_id[i])) for i, text in docs),
+        key=lambda r: r[1],
+    )
+    assert [tuple(r) for r in got] == want

@@ -267,6 +267,31 @@ def _jobs_of(spark, fn):
     return len(set(tracker.getJobIdsForGroup(None)) - before), out
 
 
+def _py4j_calls_of(fn):
+    """The py4j commands ``fn()`` sends to the JVM from this thread, and
+    its result: ``GatewayClient.send_command`` wrapped while it runs.
+    (The deletes py4j sends for collected Java objects come from another
+    thread, at times the statement does not set, so they are not
+    counted.)"""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    me, calls = threading.get_ident(), [0]
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls[0] += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    GatewayClient.send_command = counted
+    try:
+        out = fn()
+    finally:
+        GatewayClient.send_command = send
+    return calls[0], out
+
+
 def _attach_parquet(glue, db, path, rows):
     """Write ``rows`` of (pk, fk, val) as ``<path>/t.parquet`` and attach
     the directory as database ``db``."""
@@ -290,11 +315,17 @@ def _attach_parquet(glue, db, path, rows):
 def test_insert_action_budget(glue, spark, tmp_path):
     """Each write makes one pass per version, with its counts and checks
     observed on that pass: the Spark jobs a warm single-row statement
-    runs stay within its budget.  Managed INSERT: the batch, the
-    broadcast of its key and the commit; attached INSERT: the batch and
-    the write-back; UPDATE and DELETE: the one commit pass.  MERGE adds
-    the source's broadcast and, checked, the stored version; an upsert
-    adds the inserted batch and its key's broadcast."""
+    runs stay within its budget.  A VALUES batch is counted on the
+    driver and never stored.  Managed INSERT, accepted or a duplicate
+    key: the broadcast of its key and the commit; attached INSERT: the
+    write-back; UPDATE and DELETE: the one commit pass.  MERGE adds the
+    source's broadcast and, checked, the stored version; an upsert adds
+    the inserted batch and its key's broadcast.
+
+    A warm single-row managed INSERT also sends at most half the py4j
+    commands it sent when the batch was stored and its plan built one
+    ``Column`` per column per check: 477 from the calling thread then
+    (on this table, with Spark 4.1.2), 81 now."""
     from multisql_spark.session import UniqueViolation
 
     _fresh(glue, "jb")
@@ -310,22 +341,24 @@ def test_insert_action_budget(glue, spark, tmp_path):
         return 0
 
     budgets = [  # (statement, most jobs it may run, rows it affects)
-        ("INSERT INTO jb (pk, fk, val) VALUES ({k}, 1, 0.5)", 3, 1),
+        ("INSERT INTO jb (pk, fk, val) VALUES ({k}, 1, 0.5)", 2, 1),
         ("UPDATE jb SET fk = 3, val = 0.25 WHERE pk = {k}", 1, 1),
         ("DELETE FROM jb WHERE pk = {k}", 1, 1),
-        ("INSERT INTO jbatt.t (pk, fk, val) VALUES ({k}, 1, 0.5)", 2, 1),
+        ("INSERT INTO jbatt.t (pk, fk, val) VALUES ({k}, 1, 0.5)", 1, 1),
         ("UPDATE jbatt.t SET fk = 3, val = 0.25 WHERE pk = {k}", 1, 1),
         ("DELETE FROM jbatt.t WHERE pk = {k}", 1, 1),
     ]
-    for t in ("jb", "jbatt.t"):
+    for t, insert in (("jb", 2), ("jbatt.t", 1)):
         budgets += [
-            (f"INSERT INTO {t} (pk, fk, val) VALUES ({{k}}, 1, 0.5)", 3, 1),
+            (f"INSERT INTO {t} (pk, fk, val) VALUES ({{k}}, 1, 0.5)",
+             insert, 1),
             (f"MERGE INTO {t} USING (SELECT {{k}} AS pk, 4 AS fk) AS s"
              f" ON {t}.pk = s.pk WHEN MATCHED THEN UPDATE SET fk = s.fk",
              4, 1),
             (f"MERGE INTO {t} USING (SELECT {{k}} AS pk) AS s"
              f" ON {t}.pk = s.pk WHEN MATCHED THEN DELETE", 4, 1),
-            (f"INSERT INTO {t} (pk, fk, val) VALUES ({{k}}, 1, 0.5)", 3, 1),
+            (f"INSERT INTO {t} (pk, fk, val) VALUES ({{k}}, 1, 0.5)",
+             insert, 1),
             # an upsert: one matched row and one inserted row
             (f"MERGE INTO {t} USING (SELECT * FROM VALUES ({{k}}, 5),"
              f" ({{k}} + 1000, 5) AS v(pk, fk)) AS s ON {t}.pk = s.pk"
@@ -343,13 +376,33 @@ def test_insert_action_budget(glue, spark, tmp_path):
                 assert out.count == affected, stmt
                 ran.append((stmt, n, budget))
             n, _ = _jobs_of(spark, dup_insert)
-            ran.append(("duplicate-key INSERT", n, 3))
+            ran.append(("duplicate-key INSERT", n, 2))
         for stmt, n, budget in ran:
             assert 1 <= n <= budget, (stmt, n, ran)
+        calls, out = _py4j_calls_of(lambda: glue.execute(
+            "INSERT INTO jb (pk, fk, val) VALUES (9002, 1, 0.5)"))
+        assert out.count == 1 and calls <= 477 // 2, calls
+        glue.execute("DELETE FROM jb WHERE pk = 9002")
         assert glue.execute("SELECT count(*) FROM jb").rows == [(2000,)]
         assert glue.execute("SELECT count(*) FROM jbatt.t").rows == [(500,)]
     finally:
         glue.execute("DROP DATABASE jbatt")
+
+
+def test_insert_vec_load_budget(glue, spark):
+    """A 10k-row ``insert_vec`` batch into a warm PK table is counted on
+    the driver: it runs the broadcast of its keys and the commit, at
+    most 2 jobs, where storing the batch, its DISTINCT count and its
+    key broadcast ran 6."""
+    _fresh(glue, "lb")
+    glue.execute("CREATE TABLE lb (pk INTEGER PRIMARY KEY, v FLOAT)")
+    glue.insert_vec("lb", ["pk", "v"], [(i, i / 2) for i in range(10_000)])
+    rows = [(i, i / 4) for i in range(10_000, 20_000)]
+    n, out = _jobs_of(spark, lambda: glue.insert_vec("lb", ["pk", "v"], rows))
+    assert out.count == 10_000 and n <= 2, n
+    assert glue.execute("SELECT count(*), max(pk) FROM lb").rows == [
+        (20_000, 19_999)
+    ]
 
 
 def test_extend_reduce_api(glue, sf_dir):
@@ -1211,6 +1264,147 @@ def test_versions_carry_their_size(glue):
     assert "isFinalPlan=false" in plan  # the initial plan, before AQE
     join = next(ln for ln in plan.splitlines() if "Join" in ln)
     assert "BroadcastHashJoin" in join and "BuildLeft" in join, plan
+
+
+def test_merge_versions_keep_their_size(glue):
+    """MERGE's left join is estimated at the product of the target's and
+    the source's sizes; the version it commits carries its own rows'
+    size instead, so after three two-row upserts the table's estimate is
+    at most twice rows × row width, and a join with a larger managed
+    table still broadcasts it."""
+    _fresh(glue, "mz")
+    _fresh(glue, "mz_big")
+    glue.execute("CREATE TABLE mz (pk INTEGER PRIMARY KEY, fk INTEGER, val FLOAT)")
+    glue.insert_vec("mz", ["pk", "fk", "val"],
+                    [(i, i % 7, i / 8) for i in range(2000)])
+    for k in range(3):
+        assert glue.execute(
+            f"MERGE INTO mz USING (SELECT * FROM VALUES ({k}, 5),"
+            f" ({k} + 5000, 5) AS v(pk, fk)) AS s ON mz.pk = s.pk"
+            " WHEN MATCHED THEN UPDATE SET fk = s.fk"
+            " WHEN NOT MATCHED THEN INSERT (pk, fk, val)"
+            " VALUES (s.pk, s.fk, 0.0)"
+        ).count == 2
+    assert glue.execute(
+        "MERGE INTO mz USING (SELECT 1 AS pk) AS s ON mz.pk = s.pk"
+        " WHEN MATCHED THEN DELETE"
+    ).count == 1
+    df = glue.tables["mz"].df
+    width = 8 + df._jdf.schema().defaultSize()
+    assert 0 < _size_in_bytes(df) <= 2 * 2002 * width
+    assert glue.execute("SELECT count(*), sum(fk) FROM mz").rows == [
+        (2002, sum(i % 7 for i in range(3, 2000)) + 5 * 5)
+    ]
+
+    glue.execute("CREATE TABLE mz_big (pk INTEGER PRIMARY KEY, fk INTEGER)")
+    glue.insert_vec("mz_big", ["pk", "fk"],
+                    [(i, i % 2000) for i in range(50_000)])
+    plan = glue.sql(
+        "SELECT mz.pk, count(*) FROM mz JOIN mz_big ON mz.pk = mz_big.fk"
+        " GROUP BY mz.pk"
+    )._jdf.queryExecution().executedPlan().toString()
+    join = next(ln for ln in plan.splitlines() if "Join" in ln)
+    assert "BroadcastHashJoin" in join and "BuildLeft" in join, plan
+
+
+def test_literal_batches_keep_their_types(glue, tmp_path):
+    """INSERT VALUES and ``insert_vec`` batches, counted on the driver
+    and never stored, accept and reject exactly what a stored batch did:
+    DECIMAL, DATE and TIMESTAMP values (into managed FLOAT and TIMESTAMP
+    columns and into an attached file's decimal, date and timestamp
+    columns), all-NULL columns, integers beyond int64, ANY columns, a
+    UNIQUE one among them (whose keys UPDATE checks too), and batches
+    that mix explicit and NULL AUTO_INCREMENT ids."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from multisql_spark.session import UniqueViolation
+
+    for t in ("lt", "lva", "lai"):
+        _fresh(glue, t)
+    glue.execute("CREATE TABLE lt (k INTEGER, f FLOAT NULL, ts TIMESTAMP NULL,"
+                 " n TEXT NULL)")
+    glue.execute("CREATE TABLE lva (k INTEGER, a ANY NULL, u ANY NULL UNIQUE)")
+    glue.execute("CREATE TABLE lai (id INTEGER AUTO_INCREMENT, v TEXT)")
+    (tmp_path / "ltdb").mkdir()
+    pq.write_table(pa.table({
+        "k": pa.array([1], pa.int64()),
+        "d": pa.array([Decimal("1.25")], pa.decimal128(10, 2)),
+        "dt": pa.array([dt.date(2020, 1, 2)], pa.date32()),
+        "ts": pa.array([dt.datetime(2020, 1, 2, 3, 4, 5)], pa.timestamp("us")),
+    }), str(tmp_path / "ltdb" / "t.parquet"))
+    glue.execute(f"CREATE DATABASE ltdb LOCATION '{tmp_path / 'ltdb'}'")
+    ts = dt.datetime(2020, 1, 2, 3, 4, 5, 123456)
+    cases = [  # (statement or insert_vec arguments, error or None)
+        ("INSERT INTO lt VALUES (1, 1.25,"
+         " TIMESTAMP '2020-01-02 03:04:05.123456', NULL)", None),
+        ("INSERT INTO lt VALUES (2, NULL, DATE '2020-01-02', NULL)",
+         EngineError),
+        ("INSERT INTO lt VALUES (3, NULL, NULL, NULL), (4, NULL, NULL, NULL)",
+         None),
+        ("INSERT INTO lt VALUES (9223372036854775808, NULL, NULL, NULL)",
+         EngineError),
+        (("lt", ["k", "f"], [(5, Decimal("1.25"))]), EngineError),
+        (("lt", ["k", "ts"], [(6, ts)]), None),
+        (("lt", ["k", "ts"], [(7, dt.date(2020, 1, 2))]), EngineError),
+        (("lt", ["k", "f", "ts", "n"], [(8, None, None, None),
+                                        (9, None, None, None)]), None),
+        (("lt", ["k"], [(2**63,)]), EngineError),
+        ("INSERT INTO ltdb.t VALUES (2, 3.5, DATE '2021-03-04',"
+         " TIMESTAMP '2021-03-04 05:06:07')", None),
+        (("ltdb.t", ["k", "d", "dt", "ts"],
+          [(3, Decimal("7.75"), dt.date(2022, 1, 1),
+            dt.datetime(2022, 1, 1, 1, 1, 1))]), None),
+        (("ltdb.t", ["k", "d"], [(4, 7.5)]), EngineError),
+        ("INSERT INTO lva VALUES (1, 1, 1), (2, 'x', 'x'), (3, 2.5, 2.5),"
+         " (4, NULL, NULL)", None),
+        ("INSERT INTO lva VALUES (5, 1, 7), (6, 1, 7.0)", UniqueViolation),
+        ("INSERT INTO lva VALUES (7, 1, '1')", None),
+        ("INSERT INTO lva VALUES (8, 1, 1.0)", UniqueViolation),
+        # the same keys on UPDATE's check of its stored version
+        ("UPDATE lva SET u = 1.0 WHERE k = 2", UniqueViolation),
+        (("lva", ["k", "a"], [(9, 5)]), EngineError),
+        (("lva", ["k", "a", "u"], [(10, None, None)]), None),
+        ("INSERT INTO lai VALUES (10, 'a'), (NULL, 'b'), (NULL, 'c')", None),
+        (("lai", ["id", "v"], [(None, "d"), (30, "e"), (None, "f")]), None),
+    ]
+    try:
+        for case, err in cases:
+            run = (lambda: glue.execute(case)) if isinstance(case, str) \
+                else (lambda: glue.insert_vec(*case))
+            if err is None:
+                run()
+            else:
+                with pytest.raises(err):
+                    run()
+        assert sorted(glue.execute("SELECT * FROM lt").rows) == [
+            (1, 1.25, dt.datetime(2020, 1, 2, 3, 4, 5, 123456), None),
+            (3, None, None, None), (4, None, None, None),
+            (6, None, ts, None), (8, None, None, None), (9, None, None, None),
+        ]
+        assert sorted(glue.execute("SELECT * FROM ltdb.t").rows) == [
+            (1, Decimal("1.25"), dt.date(2020, 1, 2),
+             dt.datetime(2020, 1, 2, 3, 4, 5)),
+            (2, Decimal("3.50"), dt.date(2021, 3, 4),
+             dt.datetime(2021, 3, 4, 5, 6, 7)),
+            (3, Decimal("7.75"), dt.date(2022, 1, 1),
+             dt.datetime(2022, 1, 1, 1, 1, 1)),
+        ]
+        assert sorted(glue.execute("SELECT * FROM lva").rows) == [
+            (1, 1, 1), (2, "x", "x"), (3, 2.5, 2.5), (4, None, None),
+            (7, 1, "1"), (10, None, None),
+        ]
+        # explicit ids first, then the NULL ones filled in order; explicit
+        # ids do not consume the counter
+        assert glue.execute("SELECT id, v FROM lai").rows == [
+            (10, "a"), (1, "b"), (2, "c"), (30, "e"), (3, "d"), (4, "f"),
+        ]
+        assert glue.tables["lai"].auto_counter == {"id": 4}
+    finally:
+        glue.execute("DROP DATABASE ltdb")
 
 
 def test_insert_vec_batches_keep_insertion_order(glue):
