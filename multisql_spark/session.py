@@ -219,46 +219,16 @@ def _release(version: DataFrame) -> None:
     version._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def assign_dense_ids(
-    df: DataFrame, col: str, start: int, dtype: str
-) -> DataFrame:
-    """Fill ``col`` with dense sequential ids ``start+1 .. start+n`` via
-    block allocation — the scale path for AUTO_INCREMENT.
-
-    The reference reserves contiguous id blocks transactionally
-    (sled/auto_increment.rs:12-55); the Spark equivalent: count rows per
-    partition (one tiny aggregate, ≤#partitions rows to the driver),
-    cumulate per-partition starting offsets, then give each row its
-    partition's offset plus its position within the partition.  Ids come
-    out identical to a global ``row_number() OVER (ORDER BY
-    monotonically_increasing_id())`` — mono ids order by (partition,
-    local position) — but the fill is a single narrow projection: no
-    window, no shuffle, no join.
-
-    Precondition: ``df`` is materialized — a checkpoint, or a narrow
-    deterministic plan over one — so the count job and the fill see the
-    same partitions holding the same rows in the same order."""
-    pid = F.spark_partition_id()
-    counts = df.groupBy(pid.alias("__pid")).count().collect()
-    offsets, acc = [], start
-    for r in sorted(counts, key=lambda x: x["__pid"]):
-        offsets += [F.lit(r["__pid"]), F.lit(acc).cast("bigint")]
-        acc += r["count"]
-    # mono id = (partition index << 33) + position within the partition
-    local_pos = F.monotonically_increasing_id() - F.shiftleft(
-        pid.cast("bigint"), 33
-    )
-    offset = F.create_map(*offsets)[pid]
-    return df.withColumn(col, (offset + local_pos + 1).cast(dtype))
-
-
 def _in_order_ids(
     df: DataFrame, col: str, start: int, dtype: str
 ) -> DataFrame:
-    """Fill ``col`` of a literal batch with ``start+1 .. start+n`` in row
-    order, in the plan that reads it: coalesced into one partition,
+    """Fill ``col`` with ``start+1 .. start+n`` in row order, in the plan
+    that reads it, with no job: coalesced into one partition,
     ``monotonically_increasing_id`` counts the rows from 0 in the order
-    they were given, so the ids do not depend on the core count."""
+    they were given (a literal batch) or partition by partition (a
+    stored one), so the ids are dense and do not depend on the core
+    count.  The reference allocates AUTO_INCREMENT ids one batch at a
+    time too (sled/auto_increment.rs:12-55)."""
     return df.coalesce(1).withColumn(
         col, F.expr(f"CAST(monotonically_increasing_id() + {start + 1}"
                     f" AS {dtype})")
@@ -382,7 +352,7 @@ def _uq_key(cdef: ColumnDef) -> str:
 
 
 def _literal_counts(
-    columns: list[ColumnDef],
+    state: TableState,
     aligned: DataFrame,
     stated: dict[str, str],
     held: pa.Table | None = None,
@@ -397,11 +367,14 @@ def _literal_counts(
     read there; an unstated column with no DEFAULT is NULL; every other
     checked column (all of them for an INSERT's VALUES) is collected
     from ``aligned``, a ``LocalRelation``, as its UNIQUE key or a marker
-    that is NULL where the column is."""
+    that is NULL where the column is.  A TIMESTAMP key is collected as
+    its microseconds since the epoch: PySpark returns a TIMESTAMP as a
+    naive local-time ``datetime``, and two instants of a repeated
+    daylight-saving hour would be one key."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    checked = [c for c in columns
+    checked = [c for c in state.columns
                if c.unique or c.auto_increment or c.not_null]
     arrays, collect = {}, []
     for cdef in checked:
@@ -412,8 +385,14 @@ def _literal_counts(
             arrays[cdef.name] = None  # NULL in every row
         else:
             q = _quote(cdef.name)
-            collect.append((cdef.name, _uq_key(cdef) if cdef.unique
-                            else f"nvl2({q}, true, NULL)"))
+            if not cdef.unique:
+                key = f"nvl2({q}, true, NULL)"
+            elif isinstance(state.schema[cdef.name].dataType,
+                            T.TimestampType):
+                key = f"unix_micros({q})"
+            else:
+                key = _uq_key(cdef)
+            collect.append((cdef.name, key))
     if held is not None:
         n = held.num_rows
     if collect or held is None:
@@ -1174,7 +1153,7 @@ class MultiSQLSession:
         aligned = incoming.selectExpr(*exprs)
         stored = dups = None
         if held is not None or _is_literal(aligned):
-            stats, dups = _literal_counts(state.columns, aligned, named, held)
+            stats, dups = _literal_counts(state, aligned, named, held)
         else:
             # one observed pass over the batch: row count, NULL counts (NOT
             # NULL, and the AUTO_INCREMENT fill) and non-NULL key counts
@@ -1269,17 +1248,14 @@ class MultiSQLSession:
                     # explicit 6 then auto gives 5, then 6 again)
                     n_fill = stats[f"ai_{cdef.name}"]
                     dtype = state.schema[cdef.name].dataType.simpleString()
-                    fill = (assign_dense_ids if stored is not None
-                            else _in_order_ids)
                     null = f"{_quote(cdef.name)} IS NULL"
-                    # dense ids in row order: block-allocated over the
-                    # stored batch (see assign_dense_ids), or counted in
-                    # the literal batch; a batch with no explicit ids is
-                    # filled in place, as a union would add a partition
+                    # dense ids in row order; a batch with no explicit ids
+                    # is filled in place, as a union would add a partition
                     if n_fill and n_fill == n_in:
-                        aligned = fill(aligned, cdef.name, start, dtype)
+                        aligned = _in_order_ids(aligned, cdef.name, start,
+                                                dtype)
                     elif n_fill:
-                        filled = fill(
+                        filled = _in_order_ids(
                             aligned.filter(null), cdef.name, start, dtype
                         )
                         aligned = aligned.filter(f"NOT ({null})").unionByName(

@@ -523,26 +523,25 @@ def test_q6_full_pushdown_and_heap_topk(spark):
 
 
 def test_auto_increment_fill_has_no_global_window(spark):
-    """Block-allocated AUTO_INCREMENT (reference
-    sled/auto_increment.rs:12-55 reserves contiguous blocks): the fill
-    is one narrow projection (per-partition offset + position within the
-    partition) — no window and no exchange of any kind — and still
-    produces exactly the dense sequential ids of the global
-    ``row_number() OVER (ORDER BY monotonically_increasing_id())``."""
-    from multisql_spark.session import assign_dense_ids
+    """AUTO_INCREMENT fill (reference sled/auto_increment.rs:12-55 hands
+    out one batch's ids in order): coalesced into one partition, the fill
+    is one narrow projection — no window and no exchange of any kind —
+    and gives the dense ids ``start+1 .. start+n`` in row order, over a
+    multi-partition plan and over the stored batch an ``INSERT … SELECT``
+    checks (its partitions carry block locations), with no job."""
+    from multisql_spark.session import _in_order_ids, _materialize
 
     base = spark.range(0, 1000, 1, 8).select(
         F.lit(None).cast("long").alias("id"), F.col("id").alias("payload")
     )
-    filled = assign_dense_ids(base, "id", 100, "bigint")
-    rows = filled.collect()
-    ids = sorted(r.id for r in rows)
-    assert ids == list(range(101, 1101))  # dense, gap-free, offset by start
-    # payload↔id pairing follows (partition, local position) order, i.e.
-    # identical to row_number over monotonically_increasing_id
-    by_payload = {r.payload: r.id for r in rows}
-    assert by_payload[0] < by_payload[1] < by_payload[2]
-
-    plan = plans.formatted_plan(filled)
-    assert "Window" not in plan, plan
-    assert "Exchange" not in plan, plan
+    for batch in (base, _materialize(base)):
+        filled = _in_order_ids(batch, "id", 100, "bigint")
+        rows = filled.collect()
+        # dense, gap-free, offset by start, and in (partition, local
+        # position) order: payload p is the p-th row
+        assert {r.payload: r.id for r in rows} == {
+            p: 101 + p for p in range(1000)
+        }
+        plan = plans.formatted_plan(filled)
+        assert "Window" not in plan, plan
+        assert "Exchange" not in plan, plan

@@ -1313,9 +1313,13 @@ def test_literal_batches_keep_their_types(glue, tmp_path):
     DECIMAL, DATE and TIMESTAMP values (into managed FLOAT and TIMESTAMP
     columns and into an attached file's decimal, date and timestamp
     columns), all-NULL columns, integers beyond int64, ANY columns, a
-    UNIQUE one among them (whose keys UPDATE checks too), and batches
-    that mix explicit and NULL AUTO_INCREMENT ids."""
+    UNIQUE one among them (whose keys UPDATE checks too), batches that
+    mix explicit and NULL AUTO_INCREMENT ids, and UNIQUE TIMESTAMP keys
+    from the hour a daylight-saving zone repeats, in a driver process
+    running in that zone."""
     import datetime as dt
+    import os
+    import time
     from decimal import Decimal
 
     import pyarrow as pa
@@ -1323,12 +1327,13 @@ def test_literal_batches_keep_their_types(glue, tmp_path):
 
     from multisql_spark.session import UniqueViolation
 
-    for t in ("lt", "lva", "lai"):
+    for t in ("lt", "lva", "lai", "ldst"):
         _fresh(glue, t)
     glue.execute("CREATE TABLE lt (k INTEGER, f FLOAT NULL, ts TIMESTAMP NULL,"
                  " n TEXT NULL)")
     glue.execute("CREATE TABLE lva (k INTEGER, a ANY NULL, u ANY NULL UNIQUE)")
     glue.execute("CREATE TABLE lai (id INTEGER AUTO_INCREMENT, v TEXT)")
+    glue.execute("CREATE TABLE ldst (t TIMESTAMP UNIQUE)")
     (tmp_path / "ltdb").mkdir()
     pq.write_table(pa.table({
         "k": pa.array([1], pa.int64()),
@@ -1403,6 +1408,32 @@ def test_literal_batches_keep_their_types(glue, tmp_path):
             (10, "a"), (1, "b"), (2, "c"), (30, "e"), (3, "d"), (4, "f"),
         ]
         assert glue.tables["lai"].auto_counter == {"id": 4}
+        # 05:30 and 06:30 UTC are both 01:30 in New York on its fall-back
+        # day: two instants, and two keys, that a naive local-time
+        # datetime would make one
+        fall_back = ("TIMESTAMP '2026-11-01 05:30:00'",
+                     "TIMESTAMP '2026-11-01 06:30:00'")
+        zone = os.environ.get("TZ")
+        os.environ["TZ"] = "America/New_York"
+        time.tzset()
+        try:
+            glue.execute(f"INSERT INTO ldst VALUES ({fall_back[0]}),"
+                         f" ({fall_back[1]})")
+            for stmt in (f"INSERT INTO ldst VALUES ({fall_back[0]})",
+                         "INSERT INTO ldst VALUES (TIMESTAMP"
+                         " '2026-11-01 07:30:00'), (TIMESTAMP"
+                         " '2026-11-01 07:30:00')"):
+                with pytest.raises(UniqueViolation):
+                    glue.execute(stmt)
+        finally:
+            if zone is None:
+                del os.environ["TZ"]
+            else:
+                os.environ["TZ"] = zone
+            time.tzset()
+        assert sorted(glue.execute(
+            "SELECT unix_micros(t) FROM ldst"
+        ).rows) == [(1793511000000000,), (1793514600000000,)]
     finally:
         glue.execute("DROP DATABASE ltdb")
 
