@@ -32,7 +32,10 @@ differences at the token level so the rest of the engine can just call
 
 from __future__ import annotations
 
+import functools
+import itertools
 import re
+from dataclasses import dataclass, field
 
 # --- tokenizer -------------------------------------------------------------
 
@@ -232,45 +235,293 @@ def _split_args(tokens: list[tuple[str, str]]) -> list[list[tuple[str, str]]]:
     return [a for a in args if a or len(args) == 1]
 
 
-def _split_source(sql: str, *at: str) -> list[str]:
-    """Split ``sql`` at its depth-0 separators ``at`` into slices of its
-    source text, stripped and with comments removed (sqlparser drops
-    them too).
+def _split_source(sql: str, sep: str) -> list[str]:
+    """Split ``sql`` at its depth-0 ``sep`` tokens (``;``, ``,``, ``=``)
+    into slices of its source text, stripped and with comments removed
+    (sqlparser drops them too).  Strings, quoted identifiers and
+    comments are lexed by ``_TOKEN_RE``, so a separator inside one is
+    text; a character it cannot lex passes through as text of its own
+    (``tokenize`` is the one that raises)."""
+    texts, words, _ = _lex(sql)
+    pieces: list[str] = []
+    start = depth = 0
+    for i, _, word in words:
+        depth -= word == ")"
+        if depth == 0 and word == sep:
+            pieces.append("".join(texts[start:i]).strip())
+            start = i + 1
+        depth += word == "("
+    pieces.append("".join(texts[start:]).strip())
+    return pieces
 
-    A separator is one punctuation token (``;``, ``,``, ``)``), which is
-    dropped, or a keyword sequence (``WHERE``, ``WHEN NOT MATCHED
-    THEN``), which begins the slice it introduces.  A paren stands at
-    the depth outside it, so ``)`` splits where a top-level group
-    closes.  Strings, quoted identifiers and comments are lexed by
-    ``_TOKEN_RE``, so a separator inside one is text; a character it
-    cannot lex passes through as text of its own (``tokenize`` is the
-    one that raises)."""
-    seps = [s.split() for s in at]
-    # every token's text (a comment is a space), and the position and
-    # upper-cased text of each one that is not blank
+
+def _lex(sql: str) -> tuple[list[str], list[tuple[int, str, str]], list]:
+    """Every token of ``sql`` as its source text (a comment as one
+    space); ``(index, kind, upper-cased text)`` of each one that is not
+    blank, a word; and where each word's unit ends: a group's after its
+    ``)``, an unclosed one's past the last word, any other word's after
+    it.  A character ``_TOKEN_RE`` cannot lex is a word of kind ``op``."""
     texts: list[str] = []
-    words: list[tuple[int, str]] = []
+    words: list[tuple[int, str, str]] = []
+    ends, opened = [], []
     pos = 0
     while pos < len(sql):
         m = _TOKEN_RE.match(sql, pos)
         end = m.end() if m else pos + 1
         kind = m.lastgroup if m else "op"
         if kind not in ("space", "comment"):
-            words.append((len(texts), sql[pos:end].upper()))
+            word = sql[pos:end].upper()
+            if word == "(":
+                opened.append(len(words))
+            elif word == ")" and opened:
+                ends[opened.pop()] = len(words) + 1
+            ends.append(len(words) + 1)
+            words.append((len(texts), kind, word))
         texts.append(" " if kind == "comment" else sql[pos:end])
         pos = end
-    pieces: list[str] = []
-    start = depth = 0
-    for n, (i, word) in enumerate(words):
-        depth -= word == ")"
-        for sep in seps if depth == 0 else ():
-            if [w for _, w in words[n:n + len(sep)]] == sep:
-                pieces.append("".join(texts[start:i]).strip())
-                start = i if sep[0].isalpha() else i + 1
-                break
-        depth += word == "("
-    pieces.append("".join(texts[start:]).strip())
-    return pieces
+    for i in opened:
+        ends[i] = len(words) + 1
+    return texts, words, ends
+
+
+# --- statement heads (reference src/parse_sql.rs:6-17) ---------------------
+
+
+@dataclass
+class Statement:
+    """One statement, parsed as sqlparser parses a ``Statement`` for the
+    reference's executors: its ``kind``, the words it took where its form
+    offers a choice (``flags``: ``IF EXISTS``, ``OVERWRITE``, …), its
+    target table unquoted as ``db`` and ``table``, and its ``parts``:
+    names and paths unquoted, clauses as source text."""
+
+    kind: str
+    flags: frozenset[str] = frozenset()
+    db: str | None = None
+    table: str | None = None
+    parts: dict[str, str] = field(default_factory=dict)
+
+    @property
+    def name(self) -> str:
+        return f"{self.db}.{self.table}" if self.db else self.table
+
+
+# One line per statement form, tried in order.  In a pattern a WORD is a
+# keyword and ``A|B`` either one; ``[…]`` is optional, ``{… | …}`` takes
+# the first branch that matches, ``(…)`` is a parenthesized group, and
+# ``.`` and ``=`` stand for themselves.  A statement's flags are the word
+# it took of each ``A|B`` and each optional part or branch of keywords
+# alone that it took.  A ``<slot>`` is a part: ``<path>`` a string;
+# ``<x*>`` a clause, one or more tokens (a group is one) of source text,
+# as few as let the rest of the line match, and ``<query*>`` one that
+# starts as a query does; any other ``<x>`` one name, plain or quoted.
+# ``<name>``, the target table, is ``[<db> .] <table>``.
+_GRAMMAR = [
+    ("CREATE TABLE",
+     "CREATE TABLE [IF NOT EXISTS] <name> {(<columns*>) | AS <query*>}"),
+    # the reference accepts a parenthesized view body
+    # (tests/ability/alter/view/create_view.rs)
+    ("CREATE VIEW",
+     "CREATE [OR REPLACE] VIEW <view> AS {(<query*>) | <query*>}"),
+    ("CREATE MATERIALIZED VIEW",
+     "CREATE [OR REPLACE] MATERIALIZED VIEW <view> AS <query*>"),
+    ("CREATE INDEX", "CREATE [UNIQUE] INDEX <index> ON <name> (<column>)"),
+    ("CREATE DATABASE",
+     "CREATE DATABASE [IF NOT EXISTS] <database> LOCATION <path>"),
+    ("REFRESH MATERIALIZED VIEW", "REFRESH MATERIALIZED VIEW <view>"),
+    ("INSERT", "INSERT INTO|OVERWRITE [TABLE] <name> [(<columns*>)]"
+               " {VALUES <rows*> | <query*>}"),
+    ("UPDATE", "UPDATE <name> SET <sets*> [WHERE <where*>]"),
+    ("DELETE", "DELETE FROM <name> [WHERE <where*>]"),
+    ("MERGE", "MERGE INTO <name> [[AS] <alias>]"
+              " USING {(<query*>) | [<source_db> .] <source_table>}"
+              " [[AS] <source_alias>] ON <on*>"
+              " [WHEN MATCHED THEN {UPDATE SET <sets*> | DELETE}]"
+              " [WHEN NOT MATCHED THEN INSERT [(<columns*>)]"
+              " VALUES (<values*>)]"
+              " [WHEN MATCHED THEN {UPDATE SET <sets*> | DELETE}]"),
+    ("TRUNCATE", "TRUNCATE [TABLE] <name>"),
+    ("DROP TABLE", "DROP TABLE [IF EXISTS] <name>"),
+    ("DROP VIEW", "DROP VIEW [IF EXISTS] <view>"),
+    ("DROP MATERIALIZED VIEW", "DROP MATERIALIZED VIEW [IF EXISTS] <view>"),
+    ("DROP INDEX", "DROP INDEX [IF EXISTS] [<on> .] <index>"),
+    ("DROP DATABASE", "DROP DATABASE|SCHEMA [IF EXISTS] <database>"),
+    ("ALTER TABLE RENAME", "ALTER TABLE <name> RENAME TO <new>"),
+    ("ALTER TABLE RENAME COLUMN",
+     "ALTER TABLE <name> RENAME COLUMN <column> TO <new>"),
+    ("ALTER TABLE ADD COLUMN", "ALTER TABLE <name> ADD [COLUMN] <columns*>"),
+    ("ALTER TABLE DROP COLUMN",
+     "ALTER TABLE <name> DROP [COLUMN] [IF EXISTS] <column>"),
+    ("ALTER TABLE", "ALTER TABLE <name> <action*>"),
+    ("SET", "SET <variable> = <value*>"),
+    ("EXPLAIN", "EXPLAIN [ANALYZE] <query*>"),
+    ("EXPLAIN", "EXPLAIN [<name>]"),
+    # SHOW and DESCRIBE are sugar over EXPLAIN's metadata
+    ("EXPLAIN", "SHOW DATABASES"),
+    ("SHOW TABLES", "SHOW TABLES [FROM|IN <name>]"),
+    ("EXPLAIN", "SHOW COLUMNS FROM|IN <name>"),
+    ("EXPLAIN", "DESCRIBE|DESC <name>"),
+    ("EXECUTE FILE", "EXECUTE FILE (<path>)"),
+    ("EXPORT DATABASE", "EXPORT DATABASE TO <path>"),
+    ("IMPORT DATABASE", "IMPORT DATABASE FROM <path>"),
+]
+
+_PATTERN_TOKEN_RE = re.compile(r"<[^>]+>|\w+(?:\|\w+)*|\S")
+_QUERY_HEADS = ("SELECT", "WITH", "VALUES", "(")
+
+
+@functools.lru_cache(maxsize=None)
+def _compile(pattern: str) -> list[tuple]:
+    """A pattern as a list of elements: ``("kw", words)`` (``.`` and
+    ``=`` too), ``("slot", name)``, ``("group", elements)`` and ``("alt",
+    [(flag, elements), …])``, an optional part being an ``alt`` with an
+    empty last branch."""
+    toks = _PATTERN_TOKEN_RE.findall(
+        pattern.replace("<name>", "[<db> .] <table>"))[::-1]
+
+    def seq() -> list[tuple]:
+        out: list[tuple] = []
+        while toks and toks[-1] not in (")", "]", "}", "|"):
+            tok = toks.pop()
+            if tok in ("(", "[", "{"):
+                branches = [seq()]
+                while toks.pop() == "|":  # the last one popped closes
+                    branches.append(seq())
+                if tok == "(":
+                    out.append(("group", branches[0]))
+                    continue
+                branches += [[]] if tok == "[" else []
+                out.append(("alt", [(_flag(b), b) for b in branches]))
+            elif tok.startswith("<"):
+                out.append(("slot", tok[1:-1]))
+            else:
+                out.append(("kw", frozenset(tok.split("|"))))
+        return out
+
+    return seq()
+
+
+def _flag(branch: list[tuple]) -> str:
+    """The flag a branch sets: its keywords, if it is keywords alone."""
+    if all(k == "kw" and len(a) == 1 for k, a in branch):
+        return " ".join(next(iter(a)) for _, a in branch)
+    return ""
+
+
+def unquote(name: str) -> str:
+    """A name or string as written but for its quotes, if it is quoted
+    with backticks, double or single quotes (a doubled quote inside is
+    one)."""
+    if len(name) > 1 and name[0] in "`\"'" and name[-1] == name[0]:
+        return name[1:-1].replace(name[0] * 2, name[0])
+    return name
+
+
+def _match(
+    elements: list[tuple], p: int, end: int, lexed: tuple, got: tuple
+) -> tuple | None:
+    """``got``, the ``(key, value)`` pairs matched so far, extended by
+    what ``elements`` match of the words ``p`` to ``end`` (a group is
+    one); None if they do not match all of them.  A clause's value is
+    the slice of its words; a flag's key is None."""
+    if not elements:
+        return got if p == end else None
+    (op, arg), rest = elements[0], elements[1:]
+    texts, words, ends = lexed
+    if op == "alt":
+        for flag, branch in arg:
+            found = _match(branch + rest, p, end, lexed,
+                           got + ((None, flag),) if flag else got)
+            if found is not None:
+                return found
+        return None
+    if p >= end:
+        return None
+    i, kind, word = words[p]
+    if op == "kw":
+        if word not in arg:  # a quoted word keeps its quotes
+            return None
+        if len(arg) > 1:
+            got += ((None, word),)
+        return _match(rest, p + 1, end, lexed, got)
+    if op == "group":
+        close = ends[p] - 1
+        if word != "(" or close >= end:
+            return None
+        inner = _match(arg, p + 1, close, lexed, got)
+        return None if inner is None else _match(
+            rest, close + 1, end, lexed, inner)
+    if arg.endswith("*"):
+        if arg == "query*" and word not in _QUERY_HEADS:
+            return None
+        q = p
+        while q < end:
+            q = min(ends[q], end)  # an unclosed group runs to the end
+            found = _match(rest, q, end, lexed,
+                           got + ((arg[:-1], slice(p, q)),))
+            if found is not None:
+                return found
+        return None
+    if kind not in (("string",) if arg == "path" else ("ident", "qident")):
+        return None
+    return _match(rest, p + 1, end, lexed,
+                  got + ((arg, unquote(texts[i])),))
+
+
+def _read(elements: list[tuple], lexed: tuple) -> dict | None:
+    """The parts of a statement that ``elements`` match, clauses as
+    their source text, and its ``flags``; None if they do not match."""
+    got = _match(elements, 0, len(lexed[1]), lexed, ())
+    if got is None:
+        return None
+    texts, words, _ = lexed
+    parts: dict = {"flags": set()}
+    for key, value in got:
+        if key is None:
+            parts["flags"].add(value)
+        elif isinstance(value, slice):
+            first, last = words[value.start][0], words[value.stop - 1][0]
+            parts[key] = "".join(texts[first:last + 1]).strip()
+        else:
+            parts[key] = value
+    return parts
+
+
+def match(pattern: str, text: str) -> dict | None:
+    """The parts that ``pattern``, written as the ``_GRAMMAR`` patterns
+    are, names in ``text``; None if it does not match all of ``text``."""
+    return _read(_compile(pattern), _lex(text))
+
+
+def parse(stmt: str) -> Statement | None:
+    """``stmt``'s kind and parts, by the first ``_GRAMMAR`` line that
+    matches all of it.  A query (SELECT, WITH, VALUES or a parenthesized
+    one) is kind ``QUERY`` from its first token alone.  A statement that
+    starts as a form does but matches none raises ``ValueError``; one
+    that starts as none does is None."""
+    first = _TOKEN_RE.match(stmt)
+    head = first.group().upper() if first else ""
+    if head in _QUERY_HEADS:
+        return Statement("QUERY")
+    lexed = _lex(stmt)
+    for kind, pattern in _GRAMMAR:
+        parts = _read(_compile(pattern), lexed)
+        if parts is not None:
+            return Statement(kind, frozenset(parts.pop("flags")),
+                             parts.pop("db", None), parts.pop("table", None),
+                             parts)
+    for kind, pattern in _GRAMMAR:
+        # the keywords the form starts with, as many as the statement
+        # holds, then anything
+        first, *start = itertools.takewhile(
+            lambda e: e[0] in ("kw", "alt"), _compile(pattern))
+        elements = _compile("[<rest*>]")
+        for e in reversed(start):
+            elements = [("alt", [("", [e, *elements]), ("", [])])]
+        if _match([first, *elements], 0, len(lexed[1]), lexed,
+                  ()) is not None:
+            raise ValueError(f"cannot parse {kind}: {stmt[:80]}")
+    return None
 
 
 # --- call transforms -------------------------------------------------------

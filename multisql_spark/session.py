@@ -14,12 +14,12 @@ the reference's ``execute_parsed`` does (``src/executor/execute.rs:55-177``):
 - ``EXPLAIN`` metadata introspection (``src/executor/other/explain.rs``)
 - ``EXECUTE FILE('x.sql')`` scripts (``src/executor/procedure.rs``)
 
-Statement text is lexed once, by the dialect's tokenizer, as the reference
-lexes it with sqlparser (``src/parse_sql.rs:6-17``): scripts split into
-statements, and statements into the clauses parsed here (column and SET
-lists, VALUES rows, WHERE, MERGE's source, ON and WHEN clauses), only at
-separators outside strings, quoted values, comments and parentheses
-(``dialect._split_source``).  Comments are dropped.
+Statements are parsed once, as the reference parses them with sqlparser
+(``src/parse_sql.rs:6-17``): a script splits at the ``;`` outside
+strings, quoted values, comments and parentheses, and ``dialect.parse``
+reads each statement into its kind, flags, target table (``db.table``,
+names plain or quoted) and clauses as source text, without comments, for
+the handler of its kind.
 
 Managed tables are materialized on commit, as the reference's storages
 rewrite a table on write: every INSERT, UPDATE, DELETE, MERGE and TRUNCATE
@@ -101,9 +101,11 @@ class UnsupportedError(EngineError):
 
 # --- schema model (reference src/data/column.rs:13-20) ----------------------
 
-# column options that end a DEFAULT expression
-_COLUMN_OPTIONS = ("NOT NULL", "NULL", "UNIQUE", "PRIMARY KEY",
-                   "AUTO_INCREMENT", "AUTOINCREMENT", "CHECK", "DEFAULT")
+# a column definition's DEFAULT expression: its source text up to the
+# next column option
+_COLUMN_DEFAULT = ("<column> [<type*>] DEFAULT <default*> [{NOT NULL | NULL"
+                   " | UNIQUE | PRIMARY KEY | AUTO_INCREMENT | AUTOINCREMENT"
+                   " | CHECK | DEFAULT} [<options*>]]")
 
 _TYPE_MAP = {
     "BOOLEAN": "boolean",
@@ -318,6 +320,19 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _names(src: str | None) -> list[str]:
+    """The names a column list's source text holds, unquoted."""
+    if src is None:
+        return []
+    return [dialect.unquote(c) for c in dialect._split_source(src, ",")]
+
+
+def _as_view(df: DataFrame, name: str) -> None:
+    """Register ``df`` as temp view ``name``.  Spark parses the name as
+    SQL text, so it is quoted; ``dropTempView`` takes it as it is."""
+    df.createOrReplaceTempView(_quote(name))
+
+
 def _uq_key(cdef: ColumnDef) -> str:
     """SQL text of the equality key for UNIQUE checks: variant
     (declared-Any) columns are not comparable/groupable in Spark, but
@@ -452,7 +467,6 @@ class MultiSQLSession:
         )
         self.variables: dict[str, str] = {}
         self.tables: dict[str, TableState] = {}
-        self.views: dict[str, str] = {}
         self.matviews: dict[str, str] = {}
         self.databases: dict[str, object] = {}
 
@@ -490,7 +504,9 @@ class MultiSQLSession:
 
     def sql(self, sql: str) -> DataFrame:
         """Query path only — returns the lazy DataFrame."""
-        rewritten = self._rewrite(sql)
+        rewritten = self._rewrite(sql, {
+            name: _dtypes(state.schema) for name, state in self.tables.items()
+        })
         self._resolve_jdbc_views(rewritten)
         return self.spark.sql(rewritten)
 
@@ -532,11 +548,18 @@ class MultiSQLSession:
             None,
         )
 
-    def _jdbc_target(self, name: str):
-        """(SourceDatabase, table) when name addresses a jdbc database."""
-        dbname, dot, tbl = name.partition(".")
-        db = self._database(dbname) if dot else None
-        return (db, tbl) if db is not None and db.kind == "jdbc" else None
+    def _name(
+        self, db: str | None, table: str
+    ) -> tuple[str | None, SourceDatabase | None]:
+        """The session's name for table ``[db.]table`` and the attached
+        database that holds it: a table of the primary namespace (no
+        database, or the reference's default ``main``) is named as
+        written, a table of an attached database ``db__table``;
+        ``(None, None)`` for a database that is not attached."""
+        if db is None or db.lower() == "main":
+            return table, None
+        src = self._database(db)
+        return (None, None) if src is None else (f"{src.name}__{table}", src)
 
     # -- SELECT-only converters (reference src/glue/select.rs:14-82) -------
 
@@ -563,10 +586,10 @@ class MultiSQLSession:
         the name is already attached."""
         if self._database(database_name) is not None:
             return False
-        self._create_database(
-            f"CREATE DATABASE {database_name}"
-            f" LOCATION '{database_path}'"
-        )
+        self._create_database(dialect.Statement(
+            "CREATE DATABASE",
+            parts={"database": database_name, "path": database_path},
+        ))
         return True
 
     def reduce(self, database_name: str) -> bool:
@@ -581,7 +604,8 @@ class MultiSQLSession:
         The rows become an Arrow table in the named columns' types (a
         value that type cannot hold raises :class:`EngineError`), which
         the driver counts and the commit reads as a sized batch."""
-        state = self._table(table)
+        db, dot, tbl = table.partition(".")
+        state = self._table(db, tbl) if dot else self._table(None, table)
         fields = []
         for c in columns:
             cdef = state.column(c)
@@ -640,42 +664,42 @@ class MultiSQLSession:
 
     # -- internals ----------------------------------------------------------
 
-    def _rewrite(self, sql: str) -> str:
+    def _rewrite(self, sql: str, schema: dict | None = None) -> str:
+        """``sql`` in Spark SQL.  ``schema``, ``{table: {col: type}}``,
+        types its columns (reference labels of bare columns, static I64
+        int division — DIVERGENCES #3/#21): a query's is the catalog, an
+        UPDATE fragment's its table's columns under ``""`` (no FROM)."""
         return dialect.rewrite(
             sql,
             variables=self.variables,
             db_names=set(self.databases),
             int_division=True,
-            schema=self._schema_snapshot(),
+            schema=schema,
         )
 
-    def _schema_snapshot(self) -> dict[str, dict[str, str]]:
-        """Catalog snapshot {table: {col: spark_type}} for the dialect's
-        schema-aware rewrites (reference label parity for bare columns,
-        static I64 int-division typing — DIVERGENCES #3/#21)."""
-        return {name: _dtypes(state.schema)
-                for name, state in self.tables.items()}
-
-    def _table(self, name: str) -> TableState:
-        key = name.lower()
-        if key not in self.tables and "." in key:
-            db, _, tbl = key.partition(".")
-            if self._database(db) is not None:
-                key = f"{db}__{tbl}"
-        if key not in self.tables:
-            raise TableNotFoundError(f"table not found: {name}")
-        return self.tables[key]
+    def _table(self, db: str | None, table: str) -> TableState:
+        name, source = self._name(db, table)
+        if source is not None and source.kind == "jdbc":
+            # reference ODBC DBMut implements insert only
+            # (src/databases/odbc/mutable.rs)
+            raise EngineError("jdbc databases are insert-only")
+        state = self.tables.get(name.lower()) if name is not None else None
+        if state is None:
+            raise TableNotFoundError(
+                f"table not found: {f'{db}.{table}' if db else table}"
+            )
+        return state
 
     def _register(self, state: TableState) -> None:
         self.tables[state.name.lower()] = state
-        state.df.createOrReplaceTempView(state.name)
+        _as_view(state.df, state.name)
         if state.source is not None:
             # the file's reader may type the rows it reads back anew
             state.df = state.source.write(
                 self.spark, state.source_table, state.df
             )
             state.schema = state.df.schema
-            state.df.createOrReplaceTempView(state.name)
+            _as_view(state.df, state.name)
 
     def _reshape(self, state: TableState, df: DataFrame) -> None:
         """ALTER TABLE's new shape of the table: ``df``, with its schema."""
@@ -714,92 +738,38 @@ class MultiSQLSession:
             self._register(state)
         except BaseException:
             state.df = prev
-            prev.createOrReplaceTempView(state.name)
+            _as_view(prev, state.name)
             raise
 
     def _execute_one(self, stmt: str) -> Payload:
-        first = dialect._TOKEN_RE.match(stmt)
-        kw = first.group().upper() if first else ""
-        if kw in ("SELECT", "WITH", "VALUES", "("):
+        st = dialect.parse(stmt)
+        if st is None:
+            raise UnsupportedError(f"unsupported statement: {stmt[:60]}")
+        if st.kind == "QUERY":
             return Payload.select(self.sql(stmt))
-        if kw == "CREATE":
-            return self._create(stmt)
-        if kw == "INSERT":
-            return self._insert(stmt)
-        if kw == "UPDATE":
-            return self._update(stmt)
-        if kw == "MERGE":
-            return self._merge(stmt)
-        if kw == "DELETE":
-            return self._delete(stmt)
-        if kw == "TRUNCATE":
-            return self._truncate(stmt)
-        if kw == "DROP":
-            return self._drop(stmt)
-        if kw == "ALTER":
-            return self._alter(stmt)
-        if kw == "SET":
-            return self._set_variable(stmt)
-        if kw == "EXPLAIN":
-            return self._explain(stmt)
-        if kw in ("SHOW", "DESCRIBE", "DESC"):
-            return self._show(stmt)
-        if kw == "EXECUTE":
-            return self._execute_file(stmt)
-        if kw == "EXPORT":
-            return self._export_database(stmt)
-        if kw == "IMPORT":
-            return self._import_database(stmt)
-        if kw == "REFRESH":
-            return self._refresh_matview(stmt)
-        raise UnsupportedError(f"unsupported statement: {stmt[:60]}")
+        handler = (self._HANDLERS.get(st.kind)
+                   or self._HANDLERS[st.kind.split()[0]])
+        return handler(self, st)
 
     # -- CREATE -------------------------------------------------------------
 
-    _CREATE_TABLE_RE = re.compile(
-        r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
-        r"(?:\((.*)\)\s*|AS\s+(.*))$",
-        re.IGNORECASE | re.DOTALL,
-    )
-
-    def _create(self, stmt: str) -> Payload:
-        upper = stmt.upper()
-        if re.match(r"\s*CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW", upper):
-            return self._create_matview(stmt)
-        if re.match(r"\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW", upper):
-            return self._create_view(stmt)
-        if re.match(r"\s*CREATE\s+(UNIQUE\s+)?INDEX", upper):
-            return self._create_index(stmt)
-        if re.match(r"\s*CREATE\s+DATABASE", upper):
-            return self._create_database(stmt)
-        m = self._CREATE_TABLE_RE.match(stmt)
-        if not m:
-            raise EngineError(f"cannot parse CREATE: {stmt[:80]}")
-        if_not_exists, name, cols_src, as_select = m.groups()
-        source = source_table = None
-        if "." in name:
-            # CREATE TABLE db.tbl targets an attached database (reference
-            # create/table.rs resolves ComplexTableName.database); `main.`
-            # is the primary namespace
-            dbname, _, tbl = name.partition(".")
-            if dbname.lower() == "main":
-                name = tbl
-            else:
-                db = self._database(dbname)
-                if db is None:
-                    raise EngineError(f"database not found: {dbname}")
-                if not db.creates_tables:
-                    raise EngineError(
-                        f"cannot create tables in a {db.kind} database"
-                    )
-                name = f"{dbname}__{tbl}"
-                source, source_table = db, tbl
+    def _create(self, st: dialect.Statement) -> Payload:
+        # CREATE TABLE db.tbl targets an attached database (reference
+        # create/table.rs resolves ComplexTableName.database)
+        name, source = self._name(st.db, st.table)
+        if name is None:
+            raise EngineError(f"database not found: {st.db}")
+        if source is not None and not source.creates_tables:
+            raise EngineError(
+                f"cannot create tables in a {source.kind} database"
+            )
+        source_table = st.table if source is not None else None
         if name.lower() in self.tables:
-            if if_not_exists:
+            if "IF NOT EXISTS" in st.flags:
                 return Payload.success("Create")
             raise AlreadyExistsError(f"table exists: {name}")
-        if as_select:  # CREATE TABLE .. AS SELECT
-            df = self.sql(as_select)
+        if "query" in st.parts:  # CREATE TABLE .. AS SELECT
+            df = self.sql(st.parts["query"])
             columns = [
                 ColumnDef(f.name, f.dataType.simpleString())
                 for f in df.schema.fields
@@ -809,7 +779,7 @@ class MultiSQLSession:
             )
             self._commit(state, df)
             return Payload.success("Create")
-        columns = self._parse_columns(cols_src)
+        columns = self._parse_columns(st.parts["columns"])
         schema = T.StructType(
             [
                 T.StructField(c.name, _spark_type(c.type_str), not c.not_null)
@@ -833,13 +803,10 @@ class MultiSQLSession:
         for part in dialect._split_source(src, ","):
             if not part:
                 continue
-            name, rest = (part.split(None, 1) + [""])[:2]
-            col = ColumnDef(name=name.strip('`"'))
-            words = [
-                text.upper()
-                for _, kind, text in dialect._top(dialect.tokenize(rest))
-                if kind != "string"
-            ]
+            (_, _, name), *options = dialect._top(dialect.tokenize(part))
+            col = ColumnDef(name=dialect.unquote(name))
+            words = [text.upper() for _, kind, text in options
+                     if kind != "string"]
             pairs = list(zip([""] + words, words))
             # reference AlterError::UnsupportedColumnOption
             # (tests/ability/alter/table/create_table.rs CHECK case)
@@ -864,112 +831,57 @@ class MultiSQLSession:
             col.auto_increment = (
                 "AUTO_INCREMENT" in words or "AUTOINCREMENT" in words)
             if "DEFAULT" in words:
-                tail = dialect._split_source(rest, "DEFAULT")[1][len("DEFAULT"):]
-                # the expression is at least one token (`DEFAULT NULL`)
-                col.default = next(
-                    (p for p in dialect._split_source(tail, *_COLUMN_OPTIONS)
-                     if p),
-                    None,
-                )
+                found = dialect.match(_COLUMN_DEFAULT, part)
+                col.default = found and found["default"]
             out.append(col)
         return out
 
-    def _create_view(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+([\w.]+)\s+AS\s+(.*)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise EngineError(f"cannot parse CREATE VIEW: {stmt[:80]}")
-        name, query = m.groups()
-        # reference accepts a parenthesized view body
-        # (tests/ability/alter/view/create_view.rs).  A body that is one
-        # group closes its first top-level paren at its end: split there,
-        # `((q))` is ["((q)", ""] and `(a) UNION (b)` is ["(a", "UNION (b", ""]
-        while True:
-            group, *rest = dialect._split_source(query, ")")
-            if rest != [""] or not group.startswith("("):
-                break
-            query = group[1:].strip()
-        df = self.sql(query)
-        df.createOrReplaceTempView(name)
-        self.views[name.lower()] = query
+    def _create_view(self, st: dialect.Statement) -> Payload:
+        name, query = st.parts["view"], st.parts["query"]
+        _as_view(self.sql(query), name)
         return Payload.success("CreateView")
 
-    def _create_matview(self, stmt: str) -> Payload:
+    def _create_matview(self, st: dialect.Statement) -> Payload:
         """CREATE MATERIALIZED VIEW (beyond reference): the defining query
         is evaluated ONCE and pinned (_materialize), so readers scan the
         materialized result instead of re-running the plan — the batch
         face of a continuous aggregate (`stream_rollup_sink` is the
         streaming face).  `REFRESH MATERIALIZED VIEW` re-evaluates; reads
         between refreshes see the stale snapshot, which a test pins."""
-        m = re.match(
-            r"\s*CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+([\w.]+)"
-            r"\s+AS\s+(.*)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise EngineError(f"cannot parse CREATE MATERIALIZED VIEW: {stmt[:80]}")
-        replace, name, query = m.groups()
-        if name.lower() in self.matviews and not replace:
+        name, query = st.parts["view"], st.parts["query"]
+        if name.lower() in self.matviews and "OR REPLACE" not in st.flags:
             raise AlreadyExistsError(f"materialized view exists: {name}")
-        df = _materialize(self.sql(query))
-        df.createOrReplaceTempView(name)
+        _as_view(_materialize(self.sql(query)), name)
         self.matviews[name.lower()] = query
         return Payload.success("CreateMaterializedView")
 
-    def _refresh_matview(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*REFRESH\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s*$",
-            stmt,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise EngineError(f"cannot parse REFRESH: {stmt[:80]}")
-        name = m.group(1)
+    def _refresh_matview(self, st: dialect.Statement) -> Payload:
+        name = st.parts["view"]
         query = self.matviews.get(name.lower())
         if query is None:
             raise TableNotFoundError(f"materialized view not found: {name}")
-        df = _materialize(self.sql(query))
-        df.createOrReplaceTempView(name)
+        _as_view(_materialize(self.sql(query)), name)
         return Payload.success("RefreshMaterializedView")
 
-    def _create_index(self, stmt: str) -> Payload:
+    def _create_index(self, st: dialect.Statement) -> Payload:
         """CREATE [UNIQUE] INDEX — metadata no-op: parquet min/max pushdown
         and partition pruning replace the reference's IndexFilter machinery
         (SURVEY §4)."""
-        m = re.match(
-            r"\s*CREATE\s+(UNIQUE\s+)?INDEX\s+(\w+)\s+ON\s+([\w.]+)\s*\((\w+)\)",
-            stmt,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise EngineError(f"cannot parse CREATE INDEX: {stmt[:80]}")
-        unique, iname, tname, col = m.groups()
-        state = self._table(tname)
-        state.indexes[iname] = {"column": col, "unique": bool(unique)}
+        state = self._table(st.db, st.table)
+        col, unique = st.parts["column"], "UNIQUE" in st.flags
+        state.indexes[st.parts["index"]] = {"column": col, "unique": unique}
         if unique:
             cdef = state.column(col)
             if cdef:
                 cdef.unique = True
         return Payload.success("CreateIndex")
 
-    def _create_database(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*CREATE\s+DATABASE\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)"
-            r"\s+LOCATION\s+'([^']+)'",
-            stmt,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise EngineError(f"cannot parse CREATE DATABASE: {stmt[:80]}")
-        if_not_exists, name, path = m.groups()
+    def _create_database(self, st: dialect.Statement) -> Payload:
+        name, path = st.parts["database"], st.parts["path"]
         if self._database(name) is not None:
             # reference create/database error shape
             # (tests/ability/alter/database/create_database.rs)
-            if if_not_exists:
+            if "IF NOT EXISTS" in st.flags:
                 return Payload.success("CreateDatabase")
             raise AlreadyExistsError(f"database exists: {name}")
         db = attach_database(self.spark, name, path)
@@ -992,39 +904,23 @@ class MultiSQLSession:
 
     # -- INSERT (reference src/executor/alter_row/insert.rs) ----------------
 
-    _INSERT_RE = re.compile(
-        r"\s*INSERT\s+(INTO|OVERWRITE(?:\s+TABLE)?)\s+([\w.]+)\s*"
-        r"(?:\(([^)]*)\))?\s*(.*)$",
-        re.IGNORECASE | re.DOTALL,
-    )
-
-    def _insert(self, stmt: str) -> Payload:
-        m = self._INSERT_RE.match(stmt)
-        if not m:
-            raise EngineError(f"cannot parse INSERT: {stmt[:80]}")
-        mode, name, cols_src, source = m.groups()
-        overwrite = mode.upper().startswith("OVERWRITE")
-        jt = self._jdbc_target(name)
-        if jt is None:
-            state = self._table(name)
+    def _insert(self, st: dialect.Statement) -> Payload:
+        overwrite = "OVERWRITE" in st.flags
+        jdbc = self._name(st.db, st.table)[1]
+        if jdbc is None or jdbc.kind != "jdbc":
+            state = self._table(st.db, st.table)
             declared = [c.name for c in state.columns]
         elif overwrite:
             raise EngineError("jdbc databases are insert-only (append)")
         else:
             # a JDBC target's default column list is the remote table's
             state = None
-            remote = self._jdbc_relation(*jt)
+            remote = self._jdbc_relation(jdbc, st.table)
             declared = remote.columns
-        stated = (
-            [c.strip().strip('`"') for c in cols_src.split(",")]
-            if cols_src
-            else declared
-        )
-        src = source.strip()
-        if src.upper().startswith("VALUES"):
-            body = src[len("VALUES"):].strip()
-            alias_cols = ", ".join(stated)
-            body = self._rewrite_fragment(body)
+        stated = _names(st.parts.get("columns")) or declared
+        if "rows" in st.parts:
+            alias_cols = ", ".join(map(_quote, stated))
+            body = self._rewrite(st.parts["rows"])
             # Declared-Any targets: Spark's VALUES unifies mixed literal
             # types to a common type (string), which would erase per-row
             # kinds before the variant conversion — wrap each Any-bound
@@ -1043,10 +939,9 @@ class MultiSQLSession:
                 f"SELECT * FROM VALUES {body} AS __v({alias_cols})"
             )
         else:
-            df = self.sql(src)
-            df = df.toDF(*stated)
+            df = self.sql(st.parts["query"]).toDF(*stated)
         if state is None:
-            return self._insert_jdbc(jt[0], jt[1], remote, df, stated)
+            return self._insert_jdbc(jdbc, st.table, remote, df, stated)
         # OVERWRITE replaces the data only: schema, constraints and the
         # auto-increment counter keep (TRUNCATE is the counter reset)
         return self._insert_df(
@@ -1063,15 +958,11 @@ class MultiSQLSession:
         there too).  Rows are written in driver-side batches by Spark's
         JDBC writer (numPartitions × batchsize inserts)."""
         # align to the reflected remote schema; unstated columns get NULL
-        stated_lower = [s.lower() for s in stated]
-        cols = []
-        for f in remote.schema.fields:
-            if f.name.lower() in stated_lower:
-                src_col = F.col(stated[stated_lower.index(f.name.lower())])
-            else:
-                src_col = F.lit(None)
-            cols.append(src_col.cast(f.dataType).alias(f.name))
-        aligned = df.select(*cols)
+        named = {s.lower(): F.col(s) for s in reversed(stated)}
+        aligned = df.select(*[
+            named.get(f.name.lower(), F.lit(None)).cast(f.dataType)
+            .alias(f.name) for f in remote.schema.fields
+        ])
         n = aligned.count()
         (
             aligned.write.format("jdbc")
@@ -1081,21 +972,6 @@ class MultiSQLSession:
             .save()
         )
         return Payload.affected("Insert", n)
-
-    def _rewrite_fragment(
-        self, fragment: str, table: TableState | None = None
-    ) -> str:
-        # "" = ambient fragment columns (no FROM clause): lets the
-        # division rewrite type int columns statically in UPDATE
-        # SET / WHERE expressions (reference binary.rs int-`/`)
-        schema = {"": _dtypes(table.schema)} if table is not None else None
-        return dialect.rewrite(
-            fragment,
-            variables=self.variables,
-            db_names=set(self.databases),
-            int_division=True,
-            schema=schema,
-        )
 
     def _insert_df(
         self,
@@ -1145,7 +1021,7 @@ class MultiSQLSession:
             if s is not None:
                 src = _quote(s)
             elif cdef.default is not None and not cdef.auto_increment:
-                src = f"({self._rewrite_fragment(cdef.default)})"
+                src = f"({self._rewrite(cdef.default)})"
             else:
                 src = "NULL"
             dtype = state.schema[cdef.name].dataType.simpleString()
@@ -1275,26 +1151,14 @@ class MultiSQLSession:
 
     # -- UPDATE / DELETE / TRUNCATE ----------------------------------------
 
-    def _update(self, stmt: str) -> Payload:
+    def _update(self, st: dialect.Statement) -> Payload:
         """UPDATE … SET … [WHERE …]: the table's rows with the predicate
         as the ``__hit`` column, through :meth:`_assign`, committed in one
         pass that observes the updated-row count and the checks."""
-        head, *where = dialect._split_source(stmt, "WHERE")
-        m = re.match(
-            r"\s*UPDATE\s+([\w.]+)\s+SET\s+(.*)$",
-            head,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m or len(where) > 1:
-            raise EngineError(f"cannot parse UPDATE: {stmt[:80]}")
-        name, sets_src = m.groups()
-        if self._jdbc_target(name) is not None:
-            # reference ODBC DBMut implements insert only
-            # (src/databases/odbc/mutable.rs)
-            raise EngineError("jdbc databases are insert-only")
-        state = self._table(name)
+        state = self._table(st.db, st.table)
+        where = st.parts.get("where")
         cond = (
-            F.expr(self._rewrite_fragment(where[0][len("WHERE"):], state))
+            F.expr(self._rewrite(where, {"": _dtypes(state.schema)}))
             if where else F.lit(True)
         )
         # the predicate is evaluated once per row, as a column that the
@@ -1302,7 +1166,9 @@ class MultiSQLSession:
         rows = state.df.alias(state.name).select(
             "*", F.coalesce(cond, F.lit(False)).alias("__hit")
         )
-        new, seen, check = self._assign(state, rows, state.name, sets_src)
+        new, seen, check = self._assign(
+            state, rows, state.name, st.parts["sets"]
+        )
         self._commit(state, new.drop("__hit"), check)
         return Payload.affected("Update", seen.get["n"])
 
@@ -1328,21 +1194,26 @@ class MultiSQLSession:
         version, only when a row was hit."""
         assignments = {}
         for part in dialect._split_source(sets_src, ",") if sets_src else ():
-            col, expr = part.split("=", 1)
-            col = col.strip().strip('`"').lower()
+            # the column, then the expression, whose own `=` it rejoins
+            col, *expr = dialect._split_source(part, "=")
+            col = col.lower()
             if col.startswith(alias.lower() + "."):
                 col = col[len(alias) + 1:]
-            assignments[col] = F.expr(
-                self._rewrite_fragment(expr.strip(), state)
-            )
-        hit = F.col("__hit")
-        probe = rows.limit(0)
-        fractional = {}  # flag column → (its value, the error it raises)
-        for col, expr in assignments.items():
-            cdef = state.column(col)
-            if cdef is None:
+            col = dialect.unquote(col)
+            if state.column(col) is None:
                 raise ColumnNotFoundError(f"column not found: {col}")
-            ptype = probe.select(expr.alias("_p")).schema[0].dataType
+            assignments[col] = F.expr(
+                self._rewrite(" = ".join(expr), {"": _dtypes(state.schema)})
+            )
+        # every assigned expression's type, from one analysis of them all
+        types = rows.limit(0).select(*[
+            e.alias(f"_p{i}") for i, e in enumerate(assignments.values())
+        ]).schema if assignments else []
+        hit = F.col("__hit")
+        fractional = {}  # flag column → (its value, the error it raises)
+        for (col, expr), typed in zip(assignments.items(), types):
+            cdef = state.column(col)
+            ptype = typed.dataType
             try:
                 _check_write_type(cdef, ptype, state.name)
             except EngineError as err:
@@ -1433,7 +1304,7 @@ class MultiSQLSession:
             out_tuples.append("(" + ", ".join(exprs) + ")")
         return ", ".join(out_tuples)
 
-    def _merge(self, stmt: str) -> Payload:
+    def _merge(self, st: dialect.Statement) -> Payload:
         """MERGE INTO (upsert) — beyond-reference DML the ingestion
         pipelines need (dedup upserts, dimension refresh):
 
@@ -1453,65 +1324,29 @@ class MultiSQLSession:
         requires.  The affected count is the rows updated, deleted or
         inserted.
         """
-        head, *clauses = dialect._split_source(
-            stmt, "ON", "WHEN MATCHED THEN", "WHEN NOT MATCHED THEN"
-        )
-        m = re.match(
-            r"\s*MERGE\s+INTO\s+([\w.]+)(?:\s+AS\s+(\w+))?\s+USING\s+"
-            r"(.+?)(?:\s+(?:AS\s+)?(\w+))?$",
-            head,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise EngineError(f"cannot parse MERGE: {stmt[:80]}")
-        tname, talias, source, salias = m.groups()
-        if source.startswith("("):
-            if not source.endswith(")"):
-                raise EngineError("MERGE: unbalanced USING subquery")
-            src_df = self.sql(source[1:-1])
-            salias = salias or "s"
+        if "query" in st.parts:
+            src_df, salias = self.sql(st.parts["query"]), "s"
         else:
-            src_df = self._table(source).df
-            salias = salias or source.split(".")[-1]
-        if not clauses or not re.match(r"(?i)ON\b", clauses[0]):
-            raise EngineError("MERGE: missing ON condition")
-        on_src = clauses[0][len("ON"):]
-        upd_sets: str | None = None
-        matched_delete = False
-        ins_clause: str | None = None
-        for clause in clauses[1:]:
-            w = re.match(
-                r"(?i)WHEN\s+(NOT\s+)?MATCHED\s+THEN\s*(.*)$", clause,
-                re.DOTALL,
+            salias = st.parts["source_table"]
+            src_df = self._table(st.parts.get("source_db"), salias).df
+        salias = st.parts.get("source_alias", salias)
+        upd_sets = st.parts.get("sets")
+        matched_delete = "DELETE" in st.flags
+        inserts = "values" in st.parts
+        if upd_sets is None and not matched_delete and not inserts:
+            # an unsupported WHEN clause is read as part of the ON clause
+            raise EngineError(
+                f"MERGE: no supported WHEN clause after ON {st.parts['on']}"
             )
-            if not w:
-                raise EngineError(f"cannot parse MERGE: {stmt[:80]}")
-            neg, action = w.groups()
-            if neg:
-                if not re.match(r"(?i)INSERT\b", action):
-                    raise EngineError("MERGE: NOT MATCHED supports INSERT only")
-                ins_clause = action
-            elif re.match(r"(?i)UPDATE\s+SET\b", action):
-                upd_sets = re.sub(r"(?i)^UPDATE\s+SET\s+", "", action)
-            elif re.match(r"(?i)DELETE\b", action):
-                matched_delete = True
-            else:
-                raise EngineError(
-                    "MERGE: MATCHED supports UPDATE SET or DELETE"
-                )
-        if upd_sets is None and not matched_delete and ins_clause is None:
-            raise EngineError("MERGE: no WHEN clause")
-        if self._jdbc_target(tname) is not None:
-            raise EngineError("jdbc databases are insert-only")
-        state = self._table(tname)
+        state = self._table(st.db, st.table)
         # default alias = the resolved internal name: the dialect rewrites
         # dotted refs (`db.t.col` -> `db__t.col`), so aliasing the target
         # the same way keeps qualified ON/SET references resolvable
-        talias = talias or state.name
+        talias = st.parts.get("alias", state.name)
         target = Observation()
         t = state.df.observe(target, F.count(F.lit(1)).alias("n"))
         s = src_df.withColumn("__m", F.lit(1)).alias(salias)
-        cond = F.expr(self._rewrite_fragment(on_src))
+        cond = F.expr(self._rewrite(st.parts["on"]))
         rows = t.alias(talias).join(s, cond, "left").select(
             "*", F.col(f"{salias}.__m").isNotNull().alias("__hit")
         )
@@ -1537,30 +1372,20 @@ class MultiSQLSession:
                 # deleted, plus the inserted
                 rows = seen.get["rows"] - (hit if matched_delete else 0)
                 state.df = _sized(state.df, rows + n_inserted)
-                state.df.createOrReplaceTempView(state.name)
+                _as_view(state.df, state.name)
             matched = upd_sets is not None or matched_delete
             return Payload.affected(
                 "Merge", (hit if matched else 0) + n_inserted
             )
 
-        if ins_clause is None:
+        if not inserts:
             self._commit(state, candidate, check)
             return done(0)
 
-        mi = re.match(
-            r"(?i)INSERT\s*(?:\(([^)]*)\)\s*)?VALUES\s*\((.*)\)\s*$",
-            ins_clause.strip(),
-            re.DOTALL,
-        )
-        if not mi:
-            raise EngineError(f"cannot parse MERGE INSERT: {ins_clause[:60]}")
-        cols_src, vals_src = mi.groups()
-        stated = (
-            [c.strip().strip('`"') for c in cols_src.split(",")]
-            if cols_src
-            else [c.name for c in state.columns]
-        )
-        exprs = dialect._split_source(vals_src, ",")
+        stated = _names(st.parts.get("columns")) or [
+            c.name for c in state.columns
+        ]
+        exprs = dialect._split_source(st.parts["values"], ",")
         if len(exprs) != len(stated):
             raise EngineError("MERGE INSERT: column/value count mismatch")
         anti = src_df.alias(salias).join(
@@ -1568,7 +1393,7 @@ class MultiSQLSession:
         )
         ins_df = anti.select(
             *[
-                F.expr(self._rewrite_fragment(e)).alias(c)
+                F.expr(self._rewrite(e)).alias(c)
                 for c, e in zip(stated, exprs)
             ]
         )
@@ -1579,20 +1404,11 @@ class MultiSQLSession:
             state, ins_df, stated, existing=candidate, check=check
         ).count)
 
-    def _delete(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*DELETE\s+FROM\s+([\w.]+)(?:\s+WHERE\s+(.*))?$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise EngineError(f"cannot parse DELETE: {stmt[:80]}")
-        name, where = m.groups()
-        if self._jdbc_target(name) is not None:
-            raise EngineError("jdbc databases are insert-only")
-        state = self._table(name)
+    def _delete(self, st: dialect.Statement) -> Payload:
+        state = self._table(st.db, st.table)
+        where = st.parts.get("where")
         cond = (
-            F.coalesce(F.expr(self._rewrite_fragment(where)), F.lit(False))
+            F.coalesce(F.expr(self._rewrite(where)), F.lit(False))
             if where else F.lit(True)
         )
         # the deleted count is observed on the commit pass.  The predicate
@@ -1609,45 +1425,37 @@ class MultiSQLSession:
         self._commit(state, kept)
         return Payload.affected("Delete", seen.get["n"])
 
-    def _truncate(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*TRUNCATE\s+(?:TABLE\s+)?([\w.]+)", stmt, re.IGNORECASE
-        )
-        state = self._table(m.group(1))
+    def _truncate(self, st: dialect.Statement) -> Payload:
+        state = self._table(st.db, st.table)
         self._commit(state, state.df.limit(0))
         state.auto_counter = {}
         return Payload.success("TruncateTable")
 
-    def _drop(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*DROP\s+(TABLE|MATERIALIZED\s+VIEW|VIEW|INDEX|SCHEMA|DATABASE)"
-            r"\s+(IF\s+EXISTS\s+)?([\w.]+)",
-            stmt,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise EngineError(f"cannot parse DROP: {stmt[:80]}")
-        kind, if_exists, name = m.groups()
-        kind = re.sub(r"\s+", " ", kind.upper())
-        key = name.lower()
-        if kind == "MATERIALIZED VIEW":
-            if key not in self.matviews and not if_exists:
-                raise TableNotFoundError(f"materialized view not found: {name}")
-            self.matviews.pop(key, None)
-            self.spark.catalog.dropTempView(name)
-            return Payload.success("DropMaterializedView")
-        if kind == "TABLE":
-            if key not in self.tables and not if_exists:
-                raise TableNotFoundError(f"table not found: {name}")
-            self.tables.pop(key, None)
+    def _drop(self, st: dialect.Statement) -> Payload:
+        if_exists = "IF EXISTS" in st.flags
+        if st.kind == "DROP TABLE":
+            name, source = self._name(st.db, st.table)
+            # an attached database's tables go only with the database
+            if source is not None or name is None \
+                    or name.lower() not in self.tables:
+                if not if_exists:
+                    raise TableNotFoundError(f"table not found: {st.name}")
+                return Payload.success("DropTable")
+            self.tables.pop(name.lower())
             self.spark.catalog.dropTempView(name)
             return Payload.success("DropTable")
-        if kind == "VIEW":
-            self.views.pop(key, None)
+        if st.kind == "DROP MATERIALIZED VIEW":
+            name = st.parts["view"]
+            if name.lower() not in self.matviews and not if_exists:
+                raise TableNotFoundError(f"materialized view not found: {name}")
+            self.matviews.pop(name.lower(), None)
             self.spark.catalog.dropTempView(name)
+            return Payload.success("DropMaterializedView")
+        if st.kind == "DROP VIEW":
+            self.spark.catalog.dropTempView(st.parts["view"])
             return Payload.success("DropView")
-        if kind in ("SCHEMA", "DATABASE"):
-            self._detach_database(name)
+        if st.kind == "DROP DATABASE":
+            self._detach_database(st.parts["database"])
             return Payload.success("DropDatabase")
         return Payload.success("DropIndex")
 
@@ -1665,42 +1473,26 @@ class MultiSQLSession:
 
     # -- ALTER TABLE (reference src/executor/alter_table/) ------------------
 
-    def _alter(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*ALTER\s+TABLE\s+([\w.]+)\s+(.*)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise EngineError(f"cannot parse ALTER: {stmt[:80]}")
-        name, action = m.groups()
-        state = self._table(name)
-        au = action.strip()
-        m2 = re.match(r"RENAME\s+TO\s+([\w.]+)", au, re.IGNORECASE)
-        if m2:
-            new_name = m2.group(1)
+    def _alter(self, st: dialect.Statement) -> Payload:
+        state = self._table(st.db, st.table)
+        if st.kind == "ALTER TABLE RENAME":
             self.tables.pop(state.name.lower())
             self.spark.catalog.dropTempView(state.name)
-            state.name = new_name
+            state.name = st.parts["new"]
             self._register(state)
             return Payload.success("AlterTable")
-        m2 = re.match(
-            r"RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)", au, re.IGNORECASE
-        )
-        if m2:
-            old, new = m2.groups()
+        if st.kind == "ALTER TABLE RENAME COLUMN":
+            old, new = st.parts["column"], st.parts["new"]
             cdef = state.column(old)
             if not cdef:
                 raise ColumnNotFoundError(f"column not found: {old}")
             cdef.name = new
             self._reshape(state, state.df.withColumnRenamed(old, new))
             return Payload.success("AlterTable")
-        m2 = re.match(r"ADD\s+(?:COLUMN\s+)?(.*)$", au, re.IGNORECASE | re.DOTALL)
-        if m2 and not au.upper().startswith("ADD CONSTRAINT"):
-            cdefs = self._parse_columns(m2.group(1))
-            if not cdefs:
-                raise EngineError(f"cannot parse ALTER: {stmt[:80]}")
-            cdef = cdefs[0]
+        if st.kind == "ALTER TABLE ADD COLUMN":
+            cdef, *more = self._parse_columns(st.parts["columns"])
+            if more:
+                raise UnsupportedError("ALTER TABLE adds one column")
             # reference AlterTableError::AddingColumnAlreadyExists
             if state.column(cdef.name) is not None:
                 raise AlreadyExistsError(f"column already exists: {cdef.name}")
@@ -1716,7 +1508,7 @@ class MultiSQLSession:
                     f"default value required to add column {cdef.name}"
                 )
             default = (
-                F.expr(self._rewrite_fragment(cdef.default))
+                F.expr(self._rewrite(cdef.default))
                 if cdef.default is not None
                 else F.lit(None)
             )
@@ -1725,13 +1517,10 @@ class MultiSQLSession:
                 cdef.name, default.cast(_spark_type(cdef.type_str))
             ))
             return Payload.success("AlterTable")
-        m2 = re.match(
-            r"DROP\s+(?:COLUMN\s+)?(IF\s+EXISTS\s+)?(\w+)", au, re.IGNORECASE
-        )
-        if m2:
-            if_exists, col = m2.groups()
+        if st.kind == "ALTER TABLE DROP COLUMN":
+            col = st.parts["column"]
             if state.column(col) is None:
-                if if_exists:
+                if "IF EXISTS" in st.flags:
                     return Payload.success("AlterTable")
                 # reference AlterTableError::DroppingColumnNotFound
                 raise ColumnNotFoundError(f"column not found: {col}")
@@ -1740,75 +1529,48 @@ class MultiSQLSession:
             ]
             self._reshape(state, state.df.drop(col))
             return Payload.success("AlterTable")
-        raise UnsupportedError(f"unsupported ALTER action: {au[:60]}")
+        raise UnsupportedError(
+            f"unsupported ALTER action: {st.parts['action'][:60]}"
+        )
 
     # -- SET / EXPLAIN / EXECUTE FILE ---------------------------------------
 
-    def _set_variable(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*SET\s+([@$]?\w+)\s*=\s*(.+)$", stmt, re.IGNORECASE | re.DOTALL
-        )
-        if not m:
-            raise EngineError(f"cannot parse SET: {stmt[:80]}")
-        name, literal = m.groups()
-        self.variables[name.lstrip("@$").lower()] = literal.strip()
+    def _set_variable(self, st: dialect.Statement) -> Payload:
+        name = st.parts["variable"].lstrip("@$").lower()
+        self.variables[name] = st.parts["value"]
         return Payload.success("SetVariable")
 
-    def _show(self, stmt: str) -> Payload:
-        """SHOW DATABASES / SHOW TABLES [FROM db] / SHOW COLUMNS FROM t /
-        DESCRIBE t — beyond-reference introspection sugar over the same
-        metadata surface EXPLAIN exposes (explain.rs:6-89 shapes), so
-        host code ported from conventional SQL tooling works unchanged."""
-        s = stmt.strip().rstrip(";").strip()
-        m = re.match(r"(?i)SHOW\s+DATABASES$", s)
-        if m:
-            return self._explain("EXPLAIN ALL")
-        m = re.match(r"(?i)SHOW\s+TABLES(?:\s+(?:FROM|IN)\s+([\w.]+))?$", s)
-        if m:
-            return self._explain(f"EXPLAIN {m.group(1) or 'main'}")
-        m = re.match(r"(?i)SHOW\s+COLUMNS\s+(?:FROM|IN)\s+([\w.]+)$", s)
-        if m:
-            return self._explain(f"EXPLAIN {m.group(1)}")
-        m = re.match(r"(?i)(?:DESCRIBE|DESC)\s+([\w.]+)$", s)
-        if m:
-            return self._explain(f"EXPLAIN {m.group(1)}")
-        raise UnsupportedError(f"unsupported SHOW statement: {stmt[:60]}")
-
-    def _explain(self, stmt: str) -> Payload:
+    def _explain(self, st: dialect.Statement) -> Payload:
         """Metadata introspection, not query plans (reference
-        src/executor/other/explain.rs:6-89)."""
-        m = re.match(r"\s*EXPLAIN\s+(\S+)", stmt, re.IGNORECASE)
-        target = m.group(1) if m else "ALL"
-        tl = target.lower()
-        if target.upper() in ("SELECT", "WITH", "VALUES"):
-            # beyond-reference: EXPLAIN <query> returns the Spark physical
-            # plan (the reference has no plan introspection at all)
-            body = re.sub(r"\s*EXPLAIN\s+", "", stmt, count=1,
-                          flags=re.IGNORECASE)
+        src/executor/other/explain.rs:6-89): ``ALL`` lists the databases,
+        ``ALL_TABLE`` every table, ``main`` or an attached database's
+        name its tables, and a table its columns.  SHOW and DESCRIBE are
+        beyond-reference sugar over it, so host code ported from
+        conventional SQL tooling works unchanged."""
+        if "query" in st.parts:
             from multisql_spark.plans import formatted_plan
 
-            plan = formatted_plan(self.sql(body))
+            df = self.sql(st.parts["query"])
+            if "ANALYZE" in st.flags:
+                # beyond-reference: EXPLAIN ANALYZE <query> executes the
+                # query and returns the final (AQE-resolved) physical plan
+                # with runtime metrics — what ran, not what was planned
+                df.collect()
+                plan = df._jdf.queryExecution().executedPlan().toString()
+            else:
+                # beyond-reference: EXPLAIN <query> returns the Spark
+                # physical plan (the reference has no plan introspection)
+                plan = formatted_plan(df)
             rows = [(line,) for line in plan.splitlines() if line.strip()]
             return Payload(kind="Select", labels=["plan"], rows=rows)
-        if target.upper() == "ANALYZE":
-            # beyond-reference: EXPLAIN ANALYZE <query> executes the query
-            # and returns the final (AQE-resolved) physical plan with
-            # runtime metrics — what actually ran, not what was planned
-            body = re.sub(r"\s*EXPLAIN\s+ANALYZE\s+", "", stmt, count=1,
-                          flags=re.IGNORECASE)
-            df = self.sql(body)
-            df.collect()
-            executed = df._jdf.queryExecution().executedPlan().toString()
-            rows = [
-                (line,) for line in executed.splitlines() if line.strip()
-            ]
-            return Payload(kind="Select", labels=["plan"], rows=rows)
-        if target.upper() == "ALL":
+        db, target = st.db, st.table or (
+            "main" if st.kind == "SHOW TABLES" else "ALL")
+        if db is None and target.upper() == "ALL":
             # the managed (temp-view) store is the reference's default
             # database, named "main" (tests/databases/sled.rs Glue::new)
             rows = [("main",)] + [(d,) for d in sorted(self.databases)]
             return Payload(kind="Select", labels=["database"], rows=rows)
-        if target.upper() == "ALL_TABLE":
+        if db is None and target.upper() == "ALL_TABLE":
             rows = [
                 ("main", t) for t in sorted(self.tables) if "__" not in t
             ]
@@ -1820,63 +1582,35 @@ class MultiSQLSession:
             return Payload(
                 kind="Select", labels=["database", "table"], rows=rows
             )
-        if tl == "main" and tl not in self.tables:
+        name, source = self._name(db, target)
+        tl = (name or "").lower()
+        if db is None and tl == "main" and tl not in self.tables:
             rows = [(t,) for t in sorted(self.tables) if "__" not in t]
             return Payload(kind="Select", labels=["table"], rows=rows)
-        if tl.startswith("main.") and tl[5:] in self.tables:
-            tl = tl[5:]
-        if "." in tl:
+        if source is not None and source.kind == "jdbc":
             # EXPLAIN db.table (reference explain.rs:9-12 2-element name):
-            # managed-state tables use declared columns; adapter-only
-            # tables (e.g. jdbc) reflect the Spark schema
-            dbname, _, tbl = tl.partition(".")
-            if f"{dbname}__{tbl}" in self.tables:
-                tl = f"{dbname}__{tbl}"
-            else:
-                db = self._database(dbname)
-                if db is not None:
-                    if db.kind == "jdbc" and tbl not in db.tables:
-                        self._resolve_jdbc_views(f"{dbname}__{tbl}")
-                    if tbl in db.tables:
-                        rows = [
-                            (
-                                f,
-                                _VALUETYPE_DISPLAY.get(t, t),
-                            )
-                            for f, t in db.tables[tbl].dtypes
-                        ]
-                        return Payload(
-                            kind="Select",
-                            labels=["column", "data_type"],
-                            rows=rows,
-                        )
-        if tl in self.tables:
-            state = self.tables[tl]
-            # reference ValueType display names (value_type/cast.rs:31-44)
-            rows = [
-                (c.name, _VALUETYPE_DISPLAY.get(c.type_str, c.type_str))
-                for c in state.columns
-            ]
-            return Payload(
-                kind="Select", labels=["column", "data_type"], rows=rows
-            )
-        if target in self.databases:
+            # a jdbc table reflects the remote schema
+            columns = self._jdbc_relation(source, target).dtypes
+        elif tl in self.tables:
+            columns = [(c.name, c.type_str) for c in self.tables[tl].columns]
+        elif db is None and target in self.databases:
             adapter = self.databases[target]
             rows = [(t,) for t in sorted(adapter.table_names())]
             return Payload(kind="Select", labels=["table"], rows=rows)
-        raise EngineError(f"EXPLAIN target not found: {target}")
+        else:
+            raise EngineError(
+                f"EXPLAIN target not found: {st.name or target}"
+            )
+        # reference ValueType display names (value_type/cast.rs:31-44)
+        rows = [(c, _VALUETYPE_DISPLAY.get(t, t)) for c, t in columns]
+        return Payload(kind="Select", labels=["column", "data_type"], rows=rows)
 
-    def _execute_file(self, stmt: str) -> Payload:
-        m = re.match(
-            r"\s*EXECUTE\s+FILE\s*\(\s*'([^']+)'\s*\)", stmt, re.IGNORECASE
-        )
-        if not m:
-            raise EngineError(f"cannot parse EXECUTE FILE: {stmt[:80]}")
-        with open(m.group(1)) as fh:
+    def _execute_file(self, st: dialect.Statement) -> Payload:
+        with open(st.parts["path"]) as fh:
             payloads = self.execute_many(fh.read())
         return payloads[-1] if payloads else Payload.success()
 
-    def _export_database(self, stmt: str) -> Payload:
+    def _export_database(self, st: dialect.Statement) -> Payload:
         """EXPORT DATABASE TO '<dir>' (beyond ref): dump every managed
         table as parquet plus a schema manifest (column options and
         auto-increment counters), so the session's managed-table state
@@ -1887,13 +1621,7 @@ class MultiSQLSession:
         table export is a parallel parquet write."""
         import json as _json
 
-        m = re.match(
-            r"\s*EXPORT\s+DATABASE\s+TO\s+'([^']+)'\s*$", stmt,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise EngineError(f"cannot parse EXPORT DATABASE: {stmt[:80]}")
-        root = m.group(1)
+        root = st.parts["path"]
         os.makedirs(root, exist_ok=True)
         manifest = {}
         n = 0
@@ -1926,20 +1654,14 @@ class MultiSQLSession:
             _json.dump(manifest, fh, indent=1, sort_keys=True)
         return Payload(kind="Select", labels=["exported"], rows=[(n,)])
 
-    def _import_database(self, stmt: str) -> Payload:
+    def _import_database(self, st: dialect.Statement) -> Payload:
         """IMPORT DATABASE FROM '<dir>': restore every table exported by
         EXPORT DATABASE — schema options, auto-increment counters and
         rows — into the current session (existing same-named tables are
         replaced)."""
         import json as _json
 
-        m = re.match(
-            r"\s*IMPORT\s+DATABASE\s+FROM\s+'([^']+)'\s*$", stmt,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise EngineError(f"cannot parse IMPORT DATABASE: {stmt[:80]}")
-        root = m.group(1)
+        root = st.parts["path"]
         mpath = os.path.join(root, "_manifest.json")
         if not os.path.exists(mpath):
             raise EngineError(f"no database manifest at {root}")
@@ -1959,7 +1681,7 @@ class MultiSQLSession:
                 for c in meta["columns"]
             ]
             df = _materialize(df)
-            df.createOrReplaceTempView(name)
+            _as_view(df, name)
             self.tables[name] = TableState(
                 name=name,
                 columns=cols,
@@ -1971,3 +1693,27 @@ class MultiSQLSession:
         return Payload(
             kind="Select", labels=["imported"], rows=[(len(manifest),)]
         )
+
+    # the handler of each statement kind ``dialect.parse`` returns, or of
+    # each kind that starts with a word that all of its kinds share
+    _HANDLERS = {
+        "CREATE TABLE": _create,
+        "CREATE VIEW": _create_view,
+        "CREATE MATERIALIZED VIEW": _create_matview,
+        "CREATE INDEX": _create_index,
+        "CREATE DATABASE": _create_database,
+        "REFRESH": _refresh_matview,
+        "INSERT": _insert,
+        "UPDATE": _update,
+        "DELETE": _delete,
+        "MERGE": _merge,
+        "TRUNCATE": _truncate,
+        "DROP": _drop,
+        "ALTER": _alter,
+        "SET": _set_variable,
+        "EXPLAIN": _explain,
+        "SHOW": _explain,
+        "EXECUTE": _execute_file,
+        "EXPORT": _export_database,
+        "IMPORT": _import_database,
+    }

@@ -562,3 +562,86 @@ def test_split_keeps_literals_whole(literals):
 
     stmts = [f"SELECT {_quote(t, q)} AS c" for t, q in literals]
     assert _split_source(";\n".join(stmts), ";") == stmts
+
+
+# --- cluster 8: statement heads (pure parsing, no Spark) -------------------
+
+_KEYWORDS = {"AS", "SET", "WHERE", "FROM", "TABLE", "INTO", "VALUES", "ON",
+             "USING", "WHEN", "IF", "EXISTS", "NOT", "SELECT", "INDEX"}
+
+_PLAIN_NAME = st.from_regex(r"[a-z_][a-z0-9_]{0,7}", fullmatch=True).filter(
+    lambda n: n.upper() not in _KEYWORDS
+)
+# a backticked name holds spaces, keywords, separators and backticks
+_QUOTED_NAME = st.lists(
+    st.sampled_from(["q", " ", "`", "SELECT", "WHERE", "AS", ".", ",", ";",
+                     "(", ")", "'", "t 1"]),
+    min_size=1,
+    max_size=6,
+).map("".join)
+_NAME = st.one_of(
+    _PLAIN_NAME.map(lambda n: (n, n)),
+    _QUOTED_NAME.map(lambda n: (_quote(n, "`"), n)),
+)
+
+_CLAUSES = {
+    "where": ["a = 1", "s = 'p WHERE q'", "b IN (SELECT c FROM t WHERE d)",
+              "`w h` IS NULL -- x"],
+    "sets": ["a = 1", "`b c` = 'x, y', a = a + 1",
+             "a = CASE WHEN a = 1 THEN 2 ELSE 3 END"],
+    "query": ["SELECT 1 AS a", "SELECT a FROM t WHERE b = 'AS'",
+              "(SELECT 1) UNION (SELECT 2)"],
+    "columns": ["id INTEGER, `a b` TEXT DEFAULT 'x, y'",
+                "k INTEGER PRIMARY KEY"],
+    "rows": ["(1, 'a')", "(1, 'a;b'), (2, \"c)d\")"],
+    "on": ["t.k = s.k", "t.k = s.k AND s.v <> 'WHEN'"],
+}
+
+# (statement with {name}, {db}-free forms, and {clause} fields, its kind)
+_FORMS = [
+    ("CREATE TABLE {name} ({columns})", "CREATE TABLE"),
+    ("CREATE TABLE IF NOT EXISTS {name} AS {query}", "CREATE TABLE"),
+    ("INSERT INTO {name} (a, `b c`) VALUES {rows}", "INSERT"),
+    ("INSERT INTO {name} {query}", "INSERT"),
+    ("UPDATE {name} SET {sets} WHERE {where}", "UPDATE"),
+    ("UPDATE {name} SET {sets}", "UPDATE"),
+    ("DELETE FROM {name} WHERE {where}", "DELETE"),
+    ("DELETE FROM {name}", "DELETE"),
+    ("MERGE INTO {name} USING ({query}) AS s ON {on}"
+     " WHEN MATCHED THEN UPDATE SET {sets}", "MERGE"),
+    ("TRUNCATE TABLE {name}", "TRUNCATE"),
+    ("TRUNCATE {name}", "TRUNCATE"),
+    ("DROP TABLE IF EXISTS {name}", "DROP TABLE"),
+    ("DROP TABLE {name}", "DROP TABLE"),
+    ("CREATE UNIQUE INDEX ix ON {name} (k)", "CREATE INDEX"),
+    ("ALTER TABLE {name} ADD COLUMN {columns}", "ALTER TABLE ADD COLUMN"),
+    ("EXPLAIN {name}", "EXPLAIN"),
+]
+
+
+@settings(max_examples=300, **SETTINGS)
+@given(
+    form=st.sampled_from(_FORMS),
+    table=_NAME,
+    db=st.one_of(st.none(), _NAME),
+    picks=st.fixed_dictionaries(
+        {k: st.sampled_from(v) for k, v in _CLAUSES.items()}
+    ),
+)
+def test_parse_reads_names_and_clauses(form, table, db, picks):
+    """A statement of each form parses to its kind, its target unquoted
+    and split into ``(db, table)``, and its clauses as written, whatever
+    the name holds when backtick-quoted (spaces, keywords, dots,
+    separators, doubled backticks) and whether it is ``db.``-qualified."""
+    from multisql_spark.dialect import parse
+
+    pattern, kind = form
+    name = table[0] if db is None else f"{db[0]}.{table[0]}"
+    stmt = pattern.format(name=name, **picks)
+    parsed = parse(stmt)
+    assert parsed.kind == kind, stmt
+    assert (parsed.db, parsed.table) == (db and db[1], table[1]), stmt
+    for clause, text in picks.items():
+        if "{" + clause + "}" in pattern:
+            # a comment is no part of a clause
+            assert parsed.parts[clause] == text.split(" --")[0], stmt

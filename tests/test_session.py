@@ -36,9 +36,19 @@ def test_basic_select(glue):
 
 
 def test_insert_select_and_update(glue):
+    _fresh(glue, "basic_1_src")
     _fresh(glue, "basic_1")
+    glue.execute(
+        "CREATE TABLE basic_1_src (id INTEGER, num INTEGER, name TEXT)"
+    )
+    glue.execute(
+        "INSERT INTO basic_1_src (id, num, name) VALUES (1, 2, 'Hello'),"
+        " (1, 9, 'World'), (3, 4, 'Great'), (4, 7, 'Job')"
+    )
     glue.execute("CREATE TABLE basic_1 (id INTEGER, num INTEGER, name TEXT)")
-    p = glue.execute("INSERT INTO basic_1 SELECT id, num, name FROM basic_0")
+    p = glue.execute(
+        "INSERT INTO basic_1 SELECT id, num, name FROM basic_1_src"
+    )
     assert p.kind == "Insert" and p.count == 4
     p = glue.execute("UPDATE basic_1 SET id = 2")
     assert p.kind == "Update" and p.count == 4
@@ -239,6 +249,63 @@ def test_statements_lex_like_the_reference(glue, script, labels, rows):
     assert (out.labels, sorted(out.rows)) == (labels, rows)
 
 
+def test_backtick_quoted_names_in_ddl_and_dml(glue):
+    """A backtick-quoted table or column name, here holding a space, is
+    one name in every statement that names a table, as in the
+    reference's sqlparser and in Spark's own SELECT."""
+    from multisql_spark.session import TableNotFoundError
+
+    glue.execute("DROP TABLE IF EXISTS `q t`")
+    glue.execute("CREATE TABLE `q t` (id INTEGER, `a b` TEXT)")
+    p = glue.execute(
+        "INSERT INTO `q t` (id, `a b`) VALUES (1, 'x'), (2, 'y'), (3, 'z')"
+    )
+    assert (p.kind, p.count) == ("Insert", 3)
+    p = glue.execute("UPDATE `q t` SET `a b` = 'w' WHERE id >= 2")
+    assert (p.kind, p.count) == ("Update", 2)
+    p = glue.execute("DELETE FROM `q t` WHERE id = 3")
+    assert (p.kind, p.count) == ("Delete", 1)
+    out = glue.execute("SELECT id, `a b` FROM `q t` ORDER BY id")
+    assert out.rows == [(1, "x"), (2, "w")]
+    glue.execute("TRUNCATE TABLE `q t`")
+    assert glue.execute("SELECT count(*) FROM `q t`").rows == [(0,)]
+    glue.execute("DROP TABLE `q t`")
+    with pytest.raises(TableNotFoundError):
+        glue.execute("SELECT * FROM `q t`")
+
+
+# (statement, whether it raises, a table and the rows it keeps after)
+_HEADS = [
+    ("TRUNCATE", True, "mh_a", 1),
+    ("TRUNCATE TABLE `mh q`", False, "`mh q`", 0),
+    ("DROP TABLE IF EXISTS `mh gone`", False, "mh_a", 1),
+    ("DROP TABLE mh_a mh_b", True, "mh_a", 1),
+    ("TRUNCATE mh_a extra", True, "mh_a", 1),
+]
+
+
+@pytest.mark.parametrize(
+    "stmt, raises, table, rows", _HEADS,
+    ids=["bare", "quoted", "if_exists_quoted", "two_names", "extra"],
+)
+def test_malformed_heads_raise_typed_errors(glue, stmt, raises, table, rows):
+    """A statement acts on the name it gives, quoted or not, or raises
+    an EngineError: never a raw Python error, and never an action on
+    another name or on the first of several."""
+    glue.execute("DROP TABLE IF EXISTS mh_a; CREATE TABLE mh_a (k INTEGER);"
+                 " INSERT INTO mh_a VALUES (1)")
+    if "`mh q`" in stmt:
+        glue.execute("DROP TABLE IF EXISTS `mh q`;"
+                     " CREATE TABLE `mh q` (k INTEGER);"
+                     " INSERT INTO `mh q` VALUES (1)")
+    if raises:
+        with pytest.raises(EngineError):
+            glue.execute(stmt)
+    else:
+        glue.execute(stmt)
+    assert glue.execute(f"SELECT count(*) FROM {table}").rows == [(rows,)]
+
+
 @pytest.mark.parametrize("coldef, not_null, unique, default", [
     ("s TEXT NULL DEFAULT 'unique  key'", False, False, "'unique  key'"),
     ("t TEXT DEFAULT 'x NOT NULL y'", True, False, "'x NOT NULL y'"),
@@ -325,7 +392,9 @@ def test_insert_action_budget(glue, spark, tmp_path):
     A warm single-row managed INSERT also sends at most half the py4j
     commands it sent when the batch was stored and its plan built one
     ``Column`` per column per check: 477 from the calling thread then
-    (on this table, with Spark 4.1.2), 81 now."""
+    (on this table, with Spark 4.1.2), 81 now.  A warm two-column UPDATE
+    analyzes its assigned expressions' types in one probe: 374 commands
+    when it probed each column on its own, 367 now."""
     from multisql_spark.session import UniqueViolation
 
     _fresh(glue, "jb")
@@ -382,6 +451,9 @@ def test_insert_action_budget(glue, spark, tmp_path):
         calls, out = _py4j_calls_of(lambda: glue.execute(
             "INSERT INTO jb (pk, fk, val) VALUES (9002, 1, 0.5)"))
         assert out.count == 1 and calls <= 477 // 2, calls
+        calls, out = _py4j_calls_of(lambda: glue.execute(
+            "UPDATE jb SET fk = 3, val = 0.25 WHERE pk = 9002"))
+        assert out.count == 1 and calls <= 367, calls
         glue.execute("DELETE FROM jb WHERE pk = 9002")
         assert glue.execute("SELECT count(*) FROM jb").rows == [(2000,)]
         assert glue.execute("SELECT count(*) FROM jbatt.t").rows == [(500,)]
