@@ -313,9 +313,11 @@ class Statement:
 # it took of each ``A|B`` and each optional part or branch of keywords
 # alone that it took.  A ``<slot>`` is a part: ``<path>`` a string;
 # ``<x*>`` a clause, one or more tokens (a group is one) of source text,
-# as few as let the rest of the line match, and ``<query*>`` one that
-# starts as a query does; any other ``<x>`` one name, plain or quoted.
-# ``<name>``, the target table, is ``[<db> .] <table>``.
+# as few as let the rest of the line match, none after the first a word
+# that starts the optional part it is in or what follows it (but inside
+# CASE … END), and ``<query*>`` one that starts as a query does; any
+# other ``<x>`` one name, plain or quoted.  ``<name>``, the target table,
+# is ``[<db> .] <table>``, and the table may be dotted after a ``db.``.
 _GRAMMAR = [
     ("CREATE TABLE",
      "CREATE TABLE [IF NOT EXISTS] <name> {(<columns*>) | AS <query*>}"),
@@ -373,25 +375,32 @@ _QUERY_HEADS = ("SELECT", "WITH", "VALUES", "(")
 @functools.lru_cache(maxsize=None)
 def _compile(pattern: str) -> list[tuple]:
     """A pattern as a list of elements: ``("kw", words)`` (``.`` and
-    ``=`` too), ``("slot", name)``, ``("group", elements)`` and ``("alt",
-    [(flag, elements), …])``, an optional part being an ``alt`` with an
-    empty last branch."""
+    ``=`` too), ``("slot", name)``, ``("clause", (name, stops))``,
+    ``("group", elements)`` and ``("alt", [(flag, elements), …])``, an
+    optional part being an ``alt`` with an empty last branch.  A
+    clause's ``stops`` are the words that start the optional parts it
+    is in: ``WHEN`` for a MERGE ``WHEN`` clause's SET list."""
     toks = _PATTERN_TOKEN_RE.findall(
         pattern.replace("<name>", "[<db> .] <table>"))[::-1]
 
-    def seq() -> list[tuple]:
+    def seq(stops: frozenset = frozenset()) -> list[tuple]:
         out: list[tuple] = []
         while toks and toks[-1] not in (")", "]", "}", "|"):
             tok = toks.pop()
             if tok in ("(", "[", "{"):
-                branches = [seq()]
+                inner = stops | (frozenset(toks[-1].split("|"))
+                                 if tok == "[" and toks[-1][0].isalpha()
+                                 else frozenset())
+                branches = [seq(inner)]
                 while toks.pop() == "|":  # the last one popped closes
-                    branches.append(seq())
+                    branches.append(seq(inner))
                 if tok == "(":
                     out.append(("group", branches[0]))
                     continue
                 branches += [[]] if tok == "[" else []
                 out.append(("alt", [(_flag(b), b) for b in branches]))
+            elif tok.endswith("*>"):
+                out.append(("clause", (tok[1:-2], stops)))
             elif tok.startswith("<"):
                 out.append(("slot", tok[1:-1]))
             else:
@@ -406,6 +415,21 @@ def _flag(branch: list[tuple]) -> str:
     if all(k == "kw" and len(a) == 1 for k, a in branch):
         return " ".join(next(iter(a)) for _, a in branch)
     return ""
+
+
+def _firsts(elements: list[tuple]) -> set[str]:
+    """The keywords that ``elements`` can start with."""
+    out: set[str] = set()
+    for op, arg in elements:
+        if op == "kw":
+            return out | arg
+        if op != "alt":
+            return out
+        for _, branch in arg:
+            out |= _firsts(branch)
+        if all(branch for _, branch in arg):
+            return out
+    return out
 
 
 def unquote(name: str) -> str:
@@ -451,21 +475,33 @@ def _match(
         inner = _match(arg, p + 1, close, lexed, got)
         return None if inner is None else _match(
             rest, close + 1, end, lexed, inner)
-    if arg.endswith("*"):
-        if arg == "query*" and word not in _QUERY_HEADS:
+    if op == "clause":
+        name, stops = arg
+        if name == "query" and word not in _QUERY_HEADS:
             return None
-        q = p
+        # after its first word, a clause takes no word that starts its
+        # part or what follows it, but for one inside CASE … END
+        # (`SET v = CASE WHEN …`; `DEFAULT NULL` is a default)
+        stops, case, q = stops | _firsts(rest), 0, p
         while q < end:
+            case += (words[q][2] == "CASE") - (words[q][2] == "END")
+            if q > p and case <= 0 and words[q][2] in stops:
+                return None
             q = min(ends[q], end)  # an unclosed group runs to the end
             found = _match(rest, q, end, lexed,
-                           got + ((arg[:-1], slice(p, q)),))
+                           got + ((name, slice(p, q)),))
             if found is not None:
                 return found
         return None
     if kind not in (("string",) if arg == "path" else ("ident", "qident")):
         return None
-    return _match(rest, p + 1, end, lexed,
-                  got + ((arg, unquote(texts[i])),))
+    name, q = unquote(texts[i]), p + 1
+    # a table of an attached database may be dotted (jdbc `db.APP.t`)
+    while arg == "table" and q + 1 < end and words[q][2] == "." \
+            and words[q + 1][1] in ("ident", "qident"):
+        name += "." + unquote(texts[words[q + 1][0]])
+        q += 2
+    return _match(rest, q, end, lexed, got + ((arg, name),))
 
 
 def _read(elements: list[tuple], lexed: tuple) -> dict | None:

@@ -838,7 +838,8 @@ class MultiSQLSession:
 
     def _create_view(self, st: dialect.Statement) -> Payload:
         name, query = st.parts["view"], st.parts["query"]
-        _as_view(self.sql(query), name)
+        df = self.sql(query)
+        _as_view(df, name)
         return Payload.success("CreateView")
 
     def _create_matview(self, st: dialect.Statement) -> Payload:
@@ -851,7 +852,8 @@ class MultiSQLSession:
         name, query = st.parts["view"], st.parts["query"]
         if name.lower() in self.matviews and "OR REPLACE" not in st.flags:
             raise AlreadyExistsError(f"materialized view exists: {name}")
-        _as_view(_materialize(self.sql(query)), name)
+        df = _materialize(self.sql(query))
+        _as_view(df, name)
         self.matviews[name.lower()] = query
         return Payload.success("CreateMaterializedView")
 
@@ -860,7 +862,8 @@ class MultiSQLSession:
         query = self.matviews.get(name.lower())
         if query is None:
             raise TableNotFoundError(f"materialized view not found: {name}")
-        _as_view(_materialize(self.sql(query)), name)
+        df = _materialize(self.sql(query))
+        _as_view(df, name)
         return Payload.success("RefreshMaterializedView")
 
     def _create_index(self, st: dialect.Statement) -> Payload:
@@ -939,7 +942,8 @@ class MultiSQLSession:
                 f"SELECT * FROM VALUES {body} AS __v({alias_cols})"
             )
         else:
-            df = self.sql(st.parts["query"]).toDF(*stated)
+            df = self.sql(st.parts["query"])
+            df = df.toDF(*stated)
         if state is None:
             return self._insert_jdbc(jdbc, st.table, remote, df, stated)
         # OVERWRITE replaces the data only: schema, constraints and the
@@ -958,11 +962,15 @@ class MultiSQLSession:
         there too).  Rows are written in driver-side batches by Spark's
         JDBC writer (numPartitions × batchsize inserts)."""
         # align to the reflected remote schema; unstated columns get NULL
-        named = {s.lower(): F.col(s) for s in reversed(stated)}
-        aligned = df.select(*[
-            named.get(f.name.lower(), F.lit(None)).cast(f.dataType)
-            .alias(f.name) for f in remote.schema.fields
-        ])
+        stated_lower = [s.lower() for s in stated]
+        cols = []
+        for f in remote.schema.fields:
+            if f.name.lower() in stated_lower:
+                src_col = F.col(stated[stated_lower.index(f.name.lower())])
+            else:
+                src_col = F.lit(None)
+            cols.append(src_col.cast(f.dataType).alias(f.name))
+        aligned = df.select(*cols)
         n = aligned.count()
         (
             aligned.write.format("jdbc")
@@ -1334,10 +1342,7 @@ class MultiSQLSession:
         matched_delete = "DELETE" in st.flags
         inserts = "values" in st.parts
         if upd_sets is None and not matched_delete and not inserts:
-            # an unsupported WHEN clause is read as part of the ON clause
-            raise EngineError(
-                f"MERGE: no supported WHEN clause after ON {st.parts['on']}"
-            )
+            raise EngineError("MERGE: no WHEN clause")
         state = self._table(st.db, st.table)
         # default alias = the resolved internal name: the dialect rewrites
         # dotted refs (`db.t.col` -> `db__t.col`), so aliasing the target

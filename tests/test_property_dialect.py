@@ -609,6 +609,9 @@ _FORMS = [
     ("DELETE FROM {name}", "DELETE"),
     ("MERGE INTO {name} USING ({query}) AS s ON {on}"
      " WHEN MATCHED THEN UPDATE SET {sets}", "MERGE"),
+    ("MERGE INTO {name} USING ({query}) AS s ON {on}"
+     " WHEN MATCHED THEN UPDATE SET {sets}"
+     " WHEN NOT MATCHED THEN INSERT (a) VALUES (s.a)", "MERGE"),
     ("TRUNCATE TABLE {name}", "TRUNCATE"),
     ("TRUNCATE {name}", "TRUNCATE"),
     ("DROP TABLE IF EXISTS {name}", "DROP TABLE"),
@@ -645,3 +648,29 @@ def test_parse_reads_names_and_clauses(form, table, db, picks):
         if "{" + clause + "}" in pattern:
             # a comment is no part of a clause
             assert parsed.parts[clause] == text.split(" --")[0], stmt
+
+
+@settings(max_examples=100, **SETTINGS)
+@given(
+    table=_NAME,
+    sets=st.sampled_from(_CLAUSES["sets"]),
+    on=st.sampled_from(_CLAUSES["on"]),
+)
+def test_parse_rejects_a_clause_cut_short(table, sets, on):
+    """The word that starts a clause, with nothing after it or followed
+    by a clause no form reads, is no part of the clause before it: the
+    statement raises, and is not read with that word in the SET list or
+    the ON condition."""
+    from multisql_spark.dialect import parse
+
+    name = table[0]
+    for stmt in (
+        f"UPDATE {name} SET {sets} WHERE",
+        f"DELETE FROM {name} WHERE",
+        f"MERGE INTO {name} USING s ON {on} WHEN",
+        f"MERGE INTO {name} USING s ON {on} WHEN NOT MATCHED THEN DELETE",
+        f"MERGE INTO {name} USING s ON {on} WHEN MATCHED THEN UPDATE SET"
+        f" {sets} WHEN NOT MATCHED THEN DELETE",
+    ):
+        with pytest.raises(ValueError, match="cannot parse"):
+            parse(stmt)

@@ -281,17 +281,24 @@ _HEADS = [
     ("DROP TABLE IF EXISTS `mh gone`", False, "mh_a", 1),
     ("DROP TABLE mh_a mh_b", True, "mh_a", 1),
     ("TRUNCATE mh_a extra", True, "mh_a", 1),
+    # a clause ends before the word that starts the next one: an empty
+    # WHERE is not read as part of the SET list
+    ("UPDATE mh_a SET k = 2 WHERE", True, "mh_a", 1),
+    ("MERGE INTO mh_a USING mh_a AS s ON mh_a.k = s.k"
+     " WHEN MATCHED THEN UPDATE SET k = 2 WHEN NOT MATCHED THEN DELETE",
+     True, "mh_a", 1),
 ]
 
 
 @pytest.mark.parametrize(
     "stmt, raises, table, rows", _HEADS,
-    ids=["bare", "quoted", "if_exists_quoted", "two_names", "extra"],
+    ids=["bare", "quoted", "if_exists_quoted", "two_names", "extra",
+         "empty_where", "unread_when"],
 )
 def test_malformed_heads_raise_typed_errors(glue, stmt, raises, table, rows):
     """A statement acts on the name it gives, quoted or not, or raises
     an EngineError: never a raw Python error, and never an action on
-    another name or on the first of several."""
+    another name, on the first of several, or on a clause cut short."""
     glue.execute("DROP TABLE IF EXISTS mh_a; CREATE TABLE mh_a (k INTEGER);"
                  " INSERT INTO mh_a VALUES (1)")
     if "`mh q`" in stmt:
@@ -303,7 +310,7 @@ def test_malformed_heads_raise_typed_errors(glue, stmt, raises, table, rows):
             glue.execute(stmt)
     else:
         glue.execute(stmt)
-    assert glue.execute(f"SELECT count(*) FROM {table}").rows == [(rows,)]
+    assert glue.execute(f"SELECT k FROM {table}").rows == [(1,)] * rows
 
 
 @pytest.mark.parametrize("coldef, not_null, unique, default", [
@@ -311,12 +318,13 @@ def test_malformed_heads_raise_typed_errors(glue, stmt, raises, table, rows):
     ("t TEXT DEFAULT 'x NOT NULL y'", True, False, "'x NOT NULL y'"),
     ("u TEXT DEFAULT 'check'", True, False, "'check'"),
     ("w TEXT NULL DEFAULT 'primary key'", False, False, "'primary key'"),
-], ids=["unique", "not_null", "check", "primary_key"])
+    ("v INTEGER DEFAULT NULL NOT NULL", True, False, "NULL"),
+], ids=["unique", "not_null", "check", "primary_key", "default_null"])
 def test_column_options_skip_string_literals(
     glue, coldef, not_null, unique, default
 ):
     """A column option inside a DEFAULT string literal is text, and the
-    literal keeps its own spacing."""
+    literal keeps its own spacing; a DEFAULT may be the word NULL."""
     glue.execute(f"DROP TABLE IF EXISTS co; CREATE TABLE co ({coldef})")
     c = glue.tables["co"].columns[0]
     assert (c.not_null, c.unique, c.default) == (not_null, unique, default)

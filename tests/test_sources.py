@@ -493,6 +493,56 @@ def test_jdbc_scan_and_insert_roundtrip(spark, tmp_path):
         g.execute("DELETE FROM remote.rt")
 
 
+def test_jdbc_statements_reach_the_remote_table(spark, monkeypatch):
+    """The statement paths of a jdbc database, with its remote reads and
+    writes stubbed (no JDBC driver is needed): INSERT and EXPLAIN reach
+    the remote table by the name as written, a schema-qualified
+    ``remote.APP.rt`` included; UPDATE, DELETE, TRUNCATE, INSERT
+    OVERWRITE and a MERGE into it or from it raise."""
+    from multisql_spark.session import EngineError, MultiSQLSession, Payload
+
+    g = MultiSQLSession(spark)
+    g.execute("CREATE DATABASE remote LOCATION 'jdbc:derby:memory:rdb'")
+    # a relation the driver does not hold, as a jdbc read is
+    remote = spark.range(1).selectExpr("CAST(id + 1 AS INT) AS A", "'x' AS B")
+    read, written = [], []
+
+    def relation(db, tbl):
+        read.append((db.name, tbl))
+        return remote
+
+    def insert(db, tbl, rel, df, stated):
+        written.append((db.name, tbl, stated, [tuple(r) for r in df.collect()]))
+        return Payload.affected("Insert", len(written[-1][3]))
+
+    monkeypatch.setattr(g, "_jdbc_relation", relation)
+    monkeypatch.setattr(g, "_insert_jdbc", insert)
+    p = g.execute("INSERT INTO remote.rt (a, b) VALUES (3, 'z')")
+    assert (p.kind, p.count) == ("Insert", 1)
+    assert written[-1] == ("remote", "rt", ["a", "b"], [(3, "z")])
+    # the default column list is the remote table's
+    g.execute("INSERT INTO remote.APP.rt SELECT 4, 'w'")
+    assert written[-1] == ("remote", "APP.rt", ["A", "B"], [(4, "w")])
+    out = g.execute("EXPLAIN remote.APP.rt")
+    assert out.labels == ["column", "data_type"]
+    assert [r[0] for r in out.rows] == ["A", "B"]
+    assert read == [("remote", "rt")] + [("remote", "APP.rt")] * 2
+    g.execute("CREATE TABLE loc (a INTEGER, b TEXT)")
+    for stmt in (
+        "UPDATE remote.rt SET b = 'q'",
+        "DELETE FROM remote.APP.rt WHERE a = 1",
+        "TRUNCATE TABLE remote.rt",
+        "INSERT OVERWRITE remote.rt VALUES (5, 'v')",
+        "MERGE INTO remote.rt USING loc ON rt.a = loc.a"
+        " WHEN MATCHED THEN DELETE",
+        "MERGE INTO loc USING remote.rt ON loc.a = rt.a"
+        " WHEN NOT MATCHED THEN INSERT (a, b) VALUES (rt.a, rt.b)",
+    ):
+        with pytest.raises(EngineError, match="insert-only"):
+            g.execute(stmt)
+    assert len(written) == 2
+
+
 def test_csv_mixed_column_discerns_any(spark, tmp_path):
     """Reference CSV type discernment (discern.rs:80-100 +
     record.rs:7-15): a sampled column whose cells parse to different
