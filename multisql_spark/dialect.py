@@ -432,6 +432,11 @@ def _firsts(elements: list[tuple]) -> set[str]:
     return out
 
 
+def _backtick(name: str) -> str:
+    """``name`` as a backtick-quoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def unquote(name: str) -> str:
     """A name or string as written but for its quotes, if it is quoted
     with backticks, double or single quotes (a doubled quote inside is
@@ -1747,15 +1752,17 @@ def _label_select_items(
         if has_alias:
             rebuilt.extend(item)
             continue
-        bare = all(t[0] == "ident" or t[1] == "." for t in item)
+        # a name is a word, quoted or not: its label is the name unquoted
+        bare = all(t[0] in ("ident", "qident") or t[1] == "." for t in item)
+        names = [unquote(t[1]) for t in item]
         if bare and len(item) == 1:
-            owner = (unique_owner or {}).get(item[0][1].lower())
+            owner = (unique_owner or {}).get(names[0].lower())
             if multi_table and owner:
                 # reference labels bare columns table.column whenever the
                 # query reads >1 table — resolve the owner from schema
                 rebuilt.extend(item)
                 rebuilt.append(("ident", "AS"))
-                rebuilt.append(("qident", f"`{owner}.{item[0][1]}`"))
+                rebuilt.append(("qident", _backtick(f"{owner}.{names[0]}")))
                 changed = True
             else:
                 rebuilt.extend(item)  # plain column: Spark label == name
@@ -1764,12 +1771,10 @@ def _label_select_items(
                 # reference labels with the real table name even when the
                 # query references the column through an alias
                 # (ColumnInfo.table keeps alias separate from name)
-                owner = (alias_real or {}).get(
-                    item[0][1].lower(), item[0][1]
-                )
+                owner = (alias_real or {}).get(names[0].lower(), names[0])
                 rebuilt.extend(item)
                 rebuilt.append(("ident", "AS"))
-                rebuilt.append(("qident", f"`{owner}.{item[2][1]}`"))
+                rebuilt.append(("qident", _backtick(f"{owner}.{names[2]}")))
                 changed = True
             else:
                 rebuilt.extend(item)  # single table: bare column name

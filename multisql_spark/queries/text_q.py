@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from multisql_spark.operators import textan
 from multisql_spark.queries import register
-from multisql_spark.tables import load_tables
+from multisql_spark.tables import load_tables, read_parquet
 
 # repo-relative fixture path (ADVICE r6: the only oracle with an
 # environment-dependent absolute path — build it from __file__ so any
@@ -954,7 +954,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason production tokenizers memoize word→pieces."""
     t = load_tables(spark, sf_dir, ["documents"])
     merges_rows = sorted(
-        spark.read.parquet(_BPE_MERGES).collect(), key=lambda r: r["rank"]
+        read_parquet(spark, _BPE_MERGES).collect(), key=lambda r: r["rank"]
     )
     merges = [(r["left"], r["right"]) for r in merges_rows]
     words = t["documents"].select(

@@ -146,6 +146,10 @@ class TableState:
     columns: list[ColumnDef]
     df: DataFrame
     auto_counter: dict[str, int] = field(default_factory=dict)
+    # the largest value of each AUTO_INCREMENT UNIQUE column in df, as the
+    # last commit pass observed it (None: the column holds no value); a
+    # column missing here may hold any value
+    ai_top: dict[str, int | None] = field(default_factory=dict)
     indexes: dict[str, dict] = field(default_factory=dict)
     # an attached table's database and its name there: every write goes
     # back to its file through ``source.write`` (reference DBMut)
@@ -375,7 +379,9 @@ def _literal_counts(
     """The batch counts of a literal batch, read from the rows the driver
     holds, with no job: the row count ``n``, NOT NULL violations
     ``nn_<c>``, AUTO_INCREMENT NULLs ``ai_<c>``, non-NULL UNIQUE keys
-    ``uk_<c>``, and per UNIQUE column the keys the batch repeats.
+    ``uk_<c>``, the least stated id above an AUTO_INCREMENT UNIQUE
+    column's counter ``gt_<c>``, and per UNIQUE column the keys the batch
+    repeats.
 
     ``stated`` maps a lower-cased column name to its stated name.  A
     column stated in ``held``, the Arrow table ``insert_vec`` built, is
@@ -423,6 +429,11 @@ def _literal_counts(
         nulls = n if arr is None else arr.null_count
         if cdef.auto_increment:
             stats[f"ai_{cdef.name}"] = nulls
+            if cdef.unique:
+                start = state.auto_counter.get(cdef.name, 0)
+                stats[f"gt_{cdef.name}"] = None if arr is None else pc.min(
+                    pc.filter(arr, pc.greater(arr, start))
+                ).as_py()
         elif cdef.not_null:
             stats[f"nn_{cdef.name}"] = nulls
         if cdef.unique:
@@ -703,7 +714,7 @@ class MultiSQLSession:
 
     def _reshape(self, state: TableState, df: DataFrame) -> None:
         """ALTER TABLE's new shape of the table: ``df``, with its schema."""
-        state.df, state.schema = df, df.schema
+        state.df, state.schema, state.ai_top = df, df.schema, {}
         self._register(state)
 
     def _commit(
@@ -723,7 +734,17 @@ class MultiSQLSession:
         a rejected version is unpersisted.  Without one an attached table
         is written back straight from ``df``, and the caller reads the
         counts observed on the write once this returns.  A failed write-back
-        leaves ``state.df`` and its view as they were."""
+        leaves ``state.df`` and its view as they were.
+
+        The same pass observes each AUTO_INCREMENT UNIQUE column's largest
+        value, which the table keeps (``TableState.ai_top``)."""
+        tops = [c.name for c in state.columns
+                if c.auto_increment and c.unique]
+        if tops:
+            top = Observation()
+            df = df.observe(
+                top, *[F.expr(f"max({_quote(c)})").alias(c) for c in tops]
+            )
         if check is not None or state.source is None:
             version = _materialize(df)
             if check is not None:
@@ -740,6 +761,8 @@ class MultiSQLSession:
             state.df = prev
             _as_view(prev, state.name)
             raise
+        if tops:
+            state.ai_top = dict(top.get)
 
     def _execute_one(self, stmt: str) -> Payload:
         st = dialect.parse(stmt)
@@ -789,7 +812,9 @@ class MultiSQLSession:
         df = self.spark.createDataFrame(_arrow_batch(schema), schema)
         self._register(
             TableState(
-                name, columns, df, source=source, source_table=source_table
+                name, columns, df, source=source, source_table=source_table,
+                ai_top={c.name: None for c in columns
+                        if c.auto_increment and c.unique},
             )
         )
         return Payload.success("Create")
@@ -1049,6 +1074,11 @@ class MultiSQLSession:
                 if cdef.auto_increment:
                     metrics.append(f"count_if({q} IS NULL)"
                                    f" AS {_quote('ai_' + cdef.name)}")
+                    if cdef.unique:
+                        start = state.auto_counter.get(cdef.name, 0)
+                        metrics.append(f"min(CASE WHEN {q} > {start} THEN"
+                                       f" {q} END) AS"
+                                       f" {_quote('gt_' + cdef.name)}")
                 elif cdef.not_null:
                     metrics.append(f"count_if({q} IS NULL)"
                                    f" AS {_quote('nn_' + cdef.name)}")
@@ -1068,8 +1098,49 @@ class MultiSQLSession:
                     raise NotNullViolation(
                         f"NOT NULL violated for {state.name}.{cdef.name}"
                     )
+            # AUTO_INCREMENT ids are assigned before the UNIQUE checks, so a
+            # filled id is checked as a stated one is; the counters advance
+            # only once the commit succeeded, so a rejected insert doesn't
+            # burn counter values
+            counters, unsure = {}, []
+            for cdef in state.columns:
+                if cdef.auto_increment:
+                    start = state.auto_counter.get(cdef.name, 0)
+                    # only NULL ids are filled and only they advance the
+                    # counter — explicit values don't consume it (reference
+                    # sled/auto_increment.rs semantics, see the corpus test:
+                    # explicit 6 then auto gives 5, then 6 again)
+                    n_fill = stats[f"ai_{cdef.name}"]
+                    dtype = state.schema[cdef.name].dataType.simpleString()
+                    null = f"{_quote(cdef.name)} IS NULL"
+                    # dense ids in row order; a batch with no explicit ids
+                    # is filled in place, as a union would add a partition
+                    if n_fill and n_fill == n_in:
+                        aligned = _in_order_ids(aligned, cdef.name, start,
+                                                dtype)
+                    elif n_fill:
+                        aligned = aligned.filter(f"NOT ({null})").unionByName(
+                            _in_order_ids(aligned.filter(null), cdef.name,
+                                          start, dtype)
+                        )
+                    counters[cdef.name] = start + n_fill
+                    if not (n_fill and cdef.unique):
+                        continue
+                    # the filled ids start+1 .. start+n_fill repeat a stated
+                    # id of the batch if the least one above start is in
+                    # range, and may repeat an existing id unless the
+                    # table's largest is known to be at most start
+                    least = stats[f"gt_{cdef.name}"]
+                    if least is not None and least <= start + n_fill:
+                        raise UniqueViolation(
+                            f"UNIQUE violated for {state.name}.{cdef.name}"
+                        )
+                    top = state.ai_top.get(cdef.name, start + 1)
+                    if top is not None and top > start:
+                        unsure.append(cdef.name)
             keyed = [
-                c for c in state.columns if c.unique and stats[f"uk_{c.name}"]
+                c for c in state.columns
+                if c.unique and (stats[f"uk_{c.name}"] or c.name in unsure)
             ]
             # duplicates within the batch, only where a column carries more
             # than one key
@@ -1118,34 +1189,6 @@ class MultiSQLSession:
                         raise UniqueViolation(
                             f"UNIQUE violated for {state.name}.{cdef.name}"
                         )
-
-            # assign AUTO_INCREMENT ids only after validation passed, and
-            # advance the counters only once the commit succeeded, so a
-            # rejected insert doesn't burn counter values
-            counters = {}
-            for cdef in state.columns:
-                if cdef.auto_increment:
-                    start = state.auto_counter.get(cdef.name, 0)
-                    # only NULL ids are filled and only they advance the
-                    # counter — explicit values don't consume it (reference
-                    # sled/auto_increment.rs semantics, see the corpus test:
-                    # explicit 6 then auto gives 5, then 6 again)
-                    n_fill = stats[f"ai_{cdef.name}"]
-                    dtype = state.schema[cdef.name].dataType.simpleString()
-                    null = f"{_quote(cdef.name)} IS NULL"
-                    # dense ids in row order; a batch with no explicit ids
-                    # is filled in place, as a union would add a partition
-                    if n_fill and n_fill == n_in:
-                        aligned = _in_order_ids(aligned, cdef.name, start,
-                                                dtype)
-                    elif n_fill:
-                        filled = _in_order_ids(
-                            aligned.filter(null), cdef.name, start, dtype
-                        )
-                        aligned = aligned.filter(f"NOT ({null})").unionByName(
-                            filled
-                        )
-                    counters[cdef.name] = start + n_fill
 
             self._commit(state, existing.unionByName(aligned),
                          check_all if check or keyed else None)

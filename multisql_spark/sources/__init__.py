@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from multisql_spark.sources import xls, xlsx
-from multisql_spark.tables import _micros
+from multisql_spark.tables import read_parquet
 
 # the backend of a single-file database, by extension
 _FILE_KINDS = {
@@ -158,7 +158,7 @@ class SourceDatabase:
         text) skips inference."""
         path = self.file(table)
         if self.kind == "parquet" and schema is None:
-            return _read_parquet(spark, path)
+            return read_parquet(spark, path)
         reader = spark.read.format(self.kind).options(**self._options())
         if schema is not None:
             reader = reader.schema(schema)
@@ -229,24 +229,6 @@ def _beside(target: str):
         yield tmp
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _read_parquet(spark: SparkSession, fpath: str):
-    """Parquet read that tolerates TIMESTAMP(NANOS) columns: a tuned
-    session (``tables._SESSION_CONFS``) reads them as long, and they are
-    converted here to microsecond timestamps."""
-    import pyarrow.parquet as pq
-
-    df = spark.read.parquet(fpath)
-    try:
-        arrow_schema = pq.read_schema(fpath)
-    except OSError:
-        # files carrying logical types pyarrow doesn't know (e.g. the
-        # VARIANT type our Any columns persist) can't be probed for the
-        # nanos fixup — those are our own writes, never TIMESTAMP(NANOS)
-        return df
-    nanos = [f.name for f in arrow_schema if str(f.type) == "timestamp[ns]"]
-    return df.withColumns({c: _micros(c) for c in nanos}) if nanos else df
 
 
 # the reference's CSV cell parse chain (src/databases/csv/record.rs:7-15):

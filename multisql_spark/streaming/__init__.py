@@ -10,8 +10,8 @@ watermarking, proving the streaming plumbing.
 Every stream runs through three helpers:
 
 - :func:`_read_stream` opens a parquet file stream (tuned session, the
-  source's batch schema, optional ``maxFilesPerTrigger``, nanos-as-long
-  ``ts`` converted by :func:`multisql_spark.tables.ts_micros`);
+  source's batch schema from its footer, optional ``maxFilesPerTrigger``,
+  TIMESTAMP(NANOS) columns converted by :func:`multisql_spark.tables.micros`);
 - :func:`_run` is the one ``writeStream``: a memory table, a parquet
   directory or a ``foreachBatch`` body, run to completion by
   :func:`_drain`;
@@ -36,7 +36,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multisql_spark.statedir import init_state_dir, swap_state_dir
-from multisql_spark.tables import ts_micros, tune_session
+from multisql_spark.tables import (
+    micros,
+    parquet_schema,
+    read_parquet,
+    tune_session,
+)
 
 DEC = "decimal(18,2)"
 
@@ -146,10 +151,11 @@ def _read_stream(
     schema.  Tunes ``spark`` first (nanos-as-long + UTC): the operators
     own their confs."""
     tune_session(spark)
-    reader = spark.readStream.schema(spark.read.parquet(src).schema)
+    schema, nanos = parquet_schema(spark, src)
+    reader = spark.readStream.schema(schema)
     if files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    return ts_micros(reader.parquet(stream_dir))
+    return micros(reader.parquet(stream_dir), nanos)
 
 
 def _run(
@@ -320,7 +326,7 @@ def stateful_sessionize(
     if os.path.isdir(src):
         schema_src = os.path.join(src, _parts(src)[0])
     arrow_schema = pq.read_schema(schema_src)
-    ts_type = spark.read.parquet(src).schema["ts"].dataType
+    ts_type = parquet_schema(spark, src)[0]["ts"].dataType
     if isinstance(ts_type, T.TimestampType):
         # Spark expects a true timestamp column: write MICROS so the
         # nanosAsLong session conf cannot re-type the sentinel as LONG
@@ -561,7 +567,7 @@ def stream_static_incremental_dedup(
     src = f"{sf_dir}/documents.parquet"
     stream = _read_stream(spark, src, _staged(src, "docs_ingest_", "batch1"))
     content_hash = F.md5(F.lower(F.trim(F.col("text"))))
-    corpus = spark.read.parquet(src).filter(F.col("doc_id") % 10 != 0)
+    corpus = read_parquet(spark, src).filter(F.col("doc_id") % 10 != 0)
     index = (
         corpus.select(content_hash.alias("h"), "doc_id")
         .groupBy("h")
@@ -669,9 +675,11 @@ def stream_upsert_to_table(
         # the foreachBatch merge, not within one aggregation
         tune_session(spark)  # nanos-as-long before the batch read
         stream_dir = _scratch_dir("events_upsert_src_")
-        spark.read.parquet(src).repartition(n_source_files).write.mode(
+        read_parquet(spark, src).repartition(n_source_files).write.mode(
             "overwrite"
         ).parquet(stream_dir)
+        # the split holds microsecond timestamps: its own footer types it
+        src = os.path.join(stream_dir, _parts(stream_dir)[0])
     stream = _read_stream(spark, src, stream_dir, max_files_per_trigger)
     ord_struct = F.struct(
         F.unix_timestamp("ts").cast("long").alias("ts_sec"),
@@ -792,7 +800,7 @@ def stream_cms_heavy_hitters(
     sketch = spark.read.parquet(state_dir).filter(
         F.col("bid").isNull()
     ).select("r", "bucket", "cell")
-    docs = spark.read.parquet(src)
+    docs = read_parquet(spark, src)
     toks = docs.select(F.explode(F.split("text", " ")).alias("tok"))
     rows_ = F.array([F.lit(r) for r in range(4)])
     exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_count"))
@@ -840,7 +848,7 @@ def stream_minhash_ingest(
 
     tune_session(spark)
     src = f"{sf_dir}/documents.parquet"
-    docs = spark.read.parquet(src)
+    docs = read_parquet(spark, src)
     corpus = docs.filter(~(F.col("doc_id") % 10 == 0))
     stream_dir = stream_src_dir
     if stream_dir is None:
@@ -926,7 +934,7 @@ def stream_hll_sink(
     )
     registers = spark.read.parquet(state_dir)
     est = sk.hll_estimate(registers)
-    events = spark.read.parquet(src)
+    events = read_parquet(spark, src)
     exact = (
         events.agg(
             F.count_distinct("user_id").alias("user_id"),
@@ -1001,7 +1009,7 @@ def stream_quantile_sink(
         "value DOUBLE, event_id LONG, h STRING",
         bottomk_merge_batch,
     )
-    events = spark.read.parquet(src)
+    events = read_parquet(spark, src)
     n_rows = events.count()
     k_eff = min(1024, n_rows)
     # the rank-within-sample window runs over the <=1024-row standing

@@ -7,16 +7,25 @@ these are runtime-settable, and :func:`load_tables` and
 ``MultiSQLSession(spark)`` set them on the session they are given.  Sessions this repo starts itself (tests,
 tools, ``bench.py``, ``MultiSQLSession()``) come from :func:`local_session`,
 which adds the start-up confs and then applies the same runtime confs.
+
+Every parquet file the engine opens goes through :func:`read_parquet`.  For
+a single file it reads the footer on the driver and converts it with
+Spark's own schema converter, so opening a table runs no Spark job (Spark's
+schema inference runs one per read); the TIMESTAMP(NANOS) columns that
+footer marks, which a tuned session reads as nanos-as-long, come back as
+microsecond timestamps.  A directory keeps Spark's inference.
 """
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 log = logging.getLogger("multisql_spark")
 
@@ -161,21 +170,70 @@ def load_tables(
     tune_session(spark)
     out: dict[str, DataFrame] = {}
     for name in names or TABLE_NAMES:
-        df = ts_micros(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
 
 
-def ts_micros(df: DataFrame) -> DataFrame:
-    """``df`` with a ``ts`` read as nanos-as-long converted to a
-    microsecond timestamp; any other ``df`` unchanged."""
-    if dict(df.dtypes).get("ts") != "bigint":
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``path`` read as Spark reads it, with its TIMESTAMP(NANOS) columns
+    as microsecond timestamps; a single file is opened without a Spark
+    job (see :func:`parquet_schema`)."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    # the file this process sees, wherever the JVM's working directory is
+    path = os.path.abspath(path)
+    schema, nanos = parquet_schema(spark, path)
+    return micros(spark.read.schema(schema).parquet(path), nanos)
+
+
+def parquet_schema(
+    spark: SparkSession, path: str
+) -> tuple[T.StructType, list[str]]:
+    """The schema Spark reads parquet ``path`` with, and the top-level
+    columns its footer marks TIMESTAMP(NANOS) (read as long under
+    ``nanosAsLong``).
+
+    A file's footer is read on the driver and converted as Spark's
+    inference job converts it (``readSchemaFromFooter`` with the
+    session's SQLConf: INT96, ``nanosAsLong``, ``inferTimestampNTZ`` and
+    the schema Spark stores in its own files).  A directory keeps
+    Spark's inference: which of its footers counts is Spark's rule."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path).schema, []
+    jvm, jspark = spark._jvm, spark._jsparkSession
+    hadoop = jvm.org.apache.parquet.hadoop
+    jpath = jvm.org.apache.hadoop.fs.Path(os.path.abspath(path))
+    reader = hadoop.ParquetFileReader.open(
+        hadoop.util.HadoopInputFile.fromPath(
+            jpath, jspark.sessionState().newHadoopConf()
+        )
+    )
+    try:
+        footer = reader.getFooter()
+    finally:
+        reader.close()
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        hadoop.Footer(jpath, footer),
+        parquet.ParquetToSparkSchemaConverter(jspark.sessionState().conf()),
+    )
+    nanos = [
+        f.getName()
+        for f in footer.getFileMetaData().getSchema().getFields()
+        if str(f.getLogicalTypeAnnotation()).startswith("TIMESTAMP(NANOS,")
+    ]
+    return T.StructType.fromJson(json.loads(schema.json())), nanos
+
+
+def micros(df: DataFrame, nanos: list[str]) -> DataFrame:
+    """``df`` with its nanos-as-long columns ``nanos`` as microsecond
+    timestamps (truncation matches DuckDB's TIMESTAMP_NS → TIMESTAMP
+    cast)."""
+    if not nanos:
         return df
-    return df.withColumn("ts", _micros("ts"))
-
-
-def _micros(col: str) -> Column:
-    """Nanos-as-long column ``col`` as a microsecond timestamp (truncation
-    matches DuckDB's TIMESTAMP_NS → TIMESTAMP cast)."""
-    return F.expr(f"timestamp_micros(`{col}` div 1000)")
+    return df.withColumns({
+        c: F.expr(f"timestamp_micros(`{c.replace('`', '``')}` div 1000)")
+        for c in nanos
+    })

@@ -253,6 +253,7 @@ def test_backtick_quoted_names_in_ddl_and_dml(glue):
     """A backtick-quoted table or column name, here holding a space, is
     one name in every statement that names a table, as in the
     reference's sqlparser and in Spark's own SELECT."""
+    from multisql_spark import dialect
     from multisql_spark.session import TableNotFoundError
 
     glue.execute("DROP TABLE IF EXISTS `q t`")
@@ -267,6 +268,13 @@ def test_backtick_quoted_names_in_ddl_and_dml(glue):
     assert (p.kind, p.count) == ("Delete", 1)
     out = glue.execute("SELECT id, `a b` FROM `q t` ORDER BY id")
     assert out.rows == [(1, "x"), (2, "w")]
+    assert out.labels == ["id", "a b"]
+    # over two tables a quoted column is labelled table.column, unquoted
+    two = {"t": {"id": "int", "a b": "string"}, "u": {"k": "int"}}
+    assert dialect.rewrite(
+        "SELECT `a b`, t.`id` FROM t JOIN u ON t.id = u.k", schema=two
+    ) == ("SELECT `a b` AS `t.a b`, t.`id` AS `t.id`"
+          " FROM t JOIN u ON t.id = u.k")
     glue.execute("TRUNCATE TABLE `q t`")
     assert glue.execute("SELECT count(*) FROM `q t`").rows == [(0,)]
     glue.execute("DROP TABLE `q t`")
@@ -483,6 +491,26 @@ def test_insert_vec_load_budget(glue, spark):
     assert glue.execute("SELECT count(*), max(pk) FROM lb").rows == [
         (20_000, 19_999)
     ]
+
+
+def test_opening_parquet_runs_no_job(glue, spark, sf_dir):
+    """A single-file parquet table opens from its footer, read on the
+    driver: ``load_tables`` of the ten test tables and an attach of
+    their directory run no Spark job, where Spark's schema inference ran
+    one per file."""
+    from multisql_spark.tables import TABLE_NAMES, load_tables
+
+    n, tables = _jobs_of(spark, lambda: load_tables(spark, sf_dir))
+    assert n == 0 and sorted(tables) == sorted(TABLE_NAMES)
+    n, _ = _jobs_of(spark, lambda: glue.execute(
+        f"CREATE DATABASE nojob LOCATION '{sf_dir}/'"))
+    try:
+        assert n == 0
+        assert glue.execute("SELECT count(*) FROM nojob.region").rows == [
+            (5,)
+        ]
+    finally:
+        glue.execute("DROP DATABASE nojob")
 
 
 def test_extend_reduce_api(glue, sf_dir):
@@ -1049,6 +1077,55 @@ def test_committed_version_is_one_leaf(glue):
         assert plan.collectLeaves().length() == 1, i
     got = sorted(glue.execute("SELECT id, v FROM flat").rows)
     assert got == sorted(model.items())
+
+
+def test_auto_increment_unique_checks_filled_ids(glue, spark):
+    """A filled AUTO_INCREMENT id goes through the UNIQUE checks a stated
+    id goes through: one that repeats a stated id of its batch, or an id
+    the table holds, rejects the statement and leaves the table and its
+    counter unchanged.  Fills that cannot collide (the table's largest id,
+    observed on the last commit, is at most the counter) run no anti
+    join: a fill-only load is one job."""
+    from multisql_spark.session import UniqueViolation
+
+    for t in ("aiu", "aiu_src"):
+        _fresh(glue, t)
+    glue.execute("CREATE TABLE aiu (id INTEGER AUTO_INCREMENT PRIMARY KEY,"
+                 " v TEXT)")
+    glue.execute("CREATE TABLE aiu_src (id INTEGER NULL, v TEXT)")
+    glue.execute("INSERT INTO aiu_src VALUES (2, 'a'), (NULL, 'b'),"
+                 " (NULL, 'c')")
+    # a stated 2 and the fills 1, 2: VALUES, insert_vec and a stored batch
+    for bad in (
+        lambda: glue.execute(
+            "INSERT INTO aiu VALUES (2, 'a'), (NULL, 'b'), (NULL, 'c')"),
+        lambda: glue.insert_vec(
+            "aiu", ["id", "v"], [(2, "a"), (None, "b"), (None, "c")]),
+        lambda: glue.execute("INSERT INTO aiu SELECT id, v FROM aiu_src"),
+    ):
+        with pytest.raises(UniqueViolation):
+            bad()
+        assert glue.execute("SELECT count(*) FROM aiu").rows == [(0,)]
+    glue.execute("INSERT INTO aiu VALUES (5, 'a'), (NULL, 'b')")
+    # the fills 2 .. 5 would repeat the stored 5
+    with pytest.raises(UniqueViolation):
+        glue.execute("INSERT INTO aiu (v) VALUES ('c'), ('d'), ('e'), ('f')")
+    glue.execute("DELETE FROM aiu WHERE id = 5")
+    glue.execute("INSERT INTO aiu (v) VALUES ('c'), ('d'), ('e'), ('f')")
+    assert sorted(glue.execute("SELECT id, v FROM aiu").rows) == [
+        (1, "b"), (2, "c"), (3, "d"), (4, "e"), (5, "f"),
+    ]
+    n, out = _jobs_of(spark, lambda: glue.insert_vec(
+        "aiu", ["v"], [(str(i),) for i in range(3)]))
+    assert out.count == 3 and n == 1, n
+    glue.execute("INSERT INTO aiu VALUES (10, 'j')")
+    # the fills 9, 10 would repeat the stated 10
+    with pytest.raises(UniqueViolation):
+        glue.execute("INSERT INTO aiu (v) VALUES ('h'), ('i')")
+    assert glue.execute("SELECT max(id), count(*) FROM aiu").rows == [
+        (10, 9)
+    ]
+    glue.execute("DROP TABLE aiu_src")
 
 
 def test_rejected_statements_leave_table_unchanged(glue):

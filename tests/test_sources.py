@@ -125,9 +125,9 @@ def test_orc_database_roundtrip(spark, sf_dir, tmp_path_factory):
     """ORC backend (attach-by-extension, Spark-native columnar): scan,
     cross-source join, and DML write-back surviving a fresh attach."""
     orc_path = str(tmp_path_factory.mktemp("orcdb") / "nation_orc.orc")
-    from multisql_spark.sources import _read_parquet
+    from multisql_spark.tables import read_parquet
 
-    _read_parquet(spark, f"{sf_dir}/nation.parquet").coalesce(
+    read_parquet(spark, f"{sf_dir}/nation.parquet").coalesce(
         1
     ).toPandas().to_orc(orc_path)
     g1 = MultiSQLSession(spark)
@@ -409,6 +409,75 @@ def test_attached_nanos_column_reads_as_micros(spark, tmp_path):
         (dt.datetime(2023, 11, 14, 22, 13, 20, 123456),)
     ]
     g.execute("DROP DATABASE nsdb")
+
+
+def test_read_parquet_matches_spark_inference(spark, sf_dir, tmp_path):
+    """``tables.read_parquet`` takes a file's schema from its footer, and
+    reads the schema and rows Spark's own inference reads: for every
+    test-data table and for files holding a REQUIRED column, timestamps
+    in nanos and in micros with and without UTC, DECIMAL, uint32, a
+    list, INT96, and a Spark-written VARIANT.  Only the TIMESTAMP(NANOS)
+    column differs, by design: it reads as microsecond timestamps."""
+    import datetime as dt
+    import decimal
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from multisql_spark.tables import micros, read_parquet
+
+    ts = [dt.datetime(2001, 2, 3, 4, 5, 6, 789012), None]
+    typed = tmp_path / "typed.parquet"
+    pq.write_table(
+        pa.Table.from_pydict(
+            {
+                "id": [1, 2],
+                "ns": [981173100_123456789, None],
+                "us": ts,
+                "us_utc": ts,
+                "dec": [None, decimal.Decimal("12.50")],
+                "u32": [4_000_000_000, 0],
+                "xs": [[1, 2], None],
+            },
+            schema=pa.schema([
+                pa.field("id", pa.int64(), nullable=False),
+                ("ns", pa.timestamp("ns")),
+                ("us", pa.timestamp("us")),
+                ("us_utc", pa.timestamp("us", tz="UTC")),
+                ("dec", pa.decimal128(10, 2)),
+                ("u32", pa.uint32()),
+                ("xs", pa.list_(pa.int64())),
+            ]),
+        ),
+        typed,
+    )
+    int96 = tmp_path / "int96.parquet"
+    pq.write_table(
+        pa.table({"t": pa.array(ts, pa.timestamp("us"))}), int96,
+        use_deprecated_int96_timestamps=True,
+    )
+    vdir = str(tmp_path / "variant")
+    spark.sql(
+        """SELECT 1 AS id, parse_json('{"a": [1, "x"]}') AS v"""
+    ).coalesce(1).write.parquet(vdir)
+    (part,) = [f for f in os.listdir(vdir) if f.startswith("part-")]
+    files = {str(typed): ["ns"], str(int96): [], f"{vdir}/{part}": []}
+    files.update({
+        f"{sf_dir}/{f}": [] for f in sorted(os.listdir(sf_dir))
+        if f.endswith(".parquet")
+    })
+    assert len(files) == 13
+    for path, nanos in files.items():
+        want = micros(spark.read.parquet(path), nanos)
+        got = read_parquet(spark, path)
+        assert got.schema == want.schema, path
+        assert [str(r) for r in got.collect()] == [
+            str(r) for r in want.collect()
+        ], path
+    got = read_parquet(spark, str(typed)).collect()
+    assert got[0]["ns"] == dt.datetime(2001, 2, 3, 4, 5, 0, 123456)
+    assert got[0]["u32"] == 4_000_000_000
 
 
 def test_xlsx_shared_strings_and_mixed_types(spark, tmp_path_factory):
@@ -694,12 +763,12 @@ def test_zorder_layout_skips_on_both_dimensions(spark, sf_dir, tmp_path_factory)
     only prune on its sort column."""
     from pyspark.sql import functions as F
 
-    from multisql_spark.sources import _read_parquet
+    from multisql_spark.tables import read_parquet
     from multisql_spark.sources.layout import skipped_fraction, write_zordered
 
     # sf0.01 for realistic user-id cardinality (sf0.001 has only 15 users,
     # which can't produce narrow per-file envelopes)
-    ev = _read_parquet(
+    ev = read_parquet(
         spark, "/root/testdata/sf0.01/events.parquet"
     ).select(
         "event_id", "user_id", F.unix_timestamp("ts").alias("epoch"), "value"
@@ -738,11 +807,11 @@ def test_zorder_layout_skips_on_both_dimensions(spark, sf_dir, tmp_path_factory)
 
 
 def test_compact_dir_reduces_files_preserves_rows(spark, sf_dir, tmp_path_factory):
-    from multisql_spark.sources import _read_parquet
+    from multisql_spark.tables import read_parquet
     from multisql_spark.sources.layout import compact_dir
 
     d = str(tmp_path_factory.mktemp("compact") / "many")
-    ev = _read_parquet(spark, f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     ev.repartition(32).write.parquet(d)
     before = ev.count()
     n = compact_dir(spark, d, n_files=2)

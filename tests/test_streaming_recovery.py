@@ -514,15 +514,15 @@ def test_fold_keeps_state_versions_in_its_scratch_dir(spark, tmp_path):
 
 def test_nanos_ts_reads_as_micros_in_batch_and_stream(spark, tmp_path):
     """A TIMESTAMP(NANOS) ``ts``, as an ``events`` file may store it,
-    reads as nanos-as-long and is converted by one helper,
-    ``tables.ts_micros``, on the batch path and on the stream path
-    alike: truncated to microseconds, as DuckDB casts TIMESTAMP_NS to
-    TIMESTAMP."""
+    reads as nanos-as-long and is converted by one rule, the columns the
+    file's footer marks NANOS (``tables.parquet_schema``), on the batch
+    path and on the stream path alike: truncated to microseconds, as
+    DuckDB casts TIMESTAMP_NS to TIMESTAMP."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from multisql_spark.streaming import _read_stream, _run, _staged
-    from multisql_spark.tables import ts_micros
+    from multisql_spark.tables import read_parquet
 
     src = str(tmp_path / "events.parquet")
     ts_ns = [981173100_123456789, 981173160_000000999]
@@ -531,7 +531,7 @@ def test_nanos_ts_reads_as_micros_in_batch_and_stream(spark, tmp_path):
         src,
     )
     tune_session(spark)
-    batch = ts_micros(spark.read.parquet(src))
+    batch = read_parquet(spark, src)
     _run(
         _read_stream(spark, src, _staged(src, "nanos_", "events")),
         "append",

@@ -7,6 +7,10 @@ sorted, and the value matrix is hashed via string repr.  This is the
 trailing-zero-sensitive path that produced round 1's HASHFAILs, so a
 green run here is the strongest local predictor of a green driver row.
 
+Each name's Spark jobs carry a job tag of its own, so its artifact row
+records ``jobs`` beside ``wall_sec``.  (A tag, not a job group: a stream
+runs its micro-batches under its own job group, but it inherits the tag.)
+
 Usage: python tools/driver_sim.py [sf_dir] [query ...]
 """
 
@@ -145,6 +149,14 @@ def _warm_up(spark, sf_dir: str) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
+def _jobs(ctx, tag: str) -> int:
+    """The number of Spark jobs tagged ``tag``, once the listener bus
+    has seen them all; the tag is removed."""
+    ctx.removeJobTag(tag)
+    ctx._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(ctx._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -168,16 +180,19 @@ def main() -> int:
     names = [n for n in registry if not only or n in only]
     warmup_sec = _warm_up(spark, sf_dir)
     print(f"warm-up {warmup_sec} s (not in any name's wall_sec)", flush=True)
+    ctx = spark.sparkContext
     report: dict[str, dict] = {}
     n_red = 0
     for i, name in enumerate(names):
         spec = registry[name]
         row: dict = {}
+        ctx.addJobTag(name)
         t0 = time.perf_counter()
         try:
             if name in big and spec.oracle is not None:
                 row = _big_compare(spark, con, spec, name, sf_dir)
                 row["wall_sec"] = round(time.perf_counter() - t0, 3)
+                row["jobs"] = _jobs(ctx, name)
                 ok = row.get("hash_match") and not row.get("err")
                 if not ok:
                     n_red += 1
@@ -195,13 +210,17 @@ def main() -> int:
             else:
                 odf = con.execute(spec.oracle).df()
                 sc, oc = _canon(sdf), _canon(odf)
+                # the result's own hash too, to compare runs over two
+                # copies of the data
+                spark_hash = _hash(sc)
                 row = {
                     "rows_match": len(sc) == len(oc),
                     "schema_match": list(sc.columns)
                     == [c.lower() for c in oc.columns]
                     or sorted(c.lower() for c in sc.columns)
                     == sorted(c.lower() for c in oc.columns),
-                    "hash_match": _hash(sc) == _hash(oc),
+                    "hash_match": spark_hash == _hash(oc),
+                    "hash": spark_hash,
                     "spark_rows": len(sc),
                     "oracle_rows": len(oc),
                 }
@@ -245,6 +264,7 @@ def main() -> int:
             row = {"err": f"{type(exc).__name__}: {str(exc)[:500]}\n"
                           + tb[-800:]}
         row["wall_sec"] = round(time.perf_counter() - t0, 3)
+        row["jobs"] = _jobs(ctx, name)
         ok = row.get("hash_match", row.get("rows_only", False)) and not row.get("err")
         if not ok:
             n_red += 1
@@ -256,7 +276,10 @@ def main() -> int:
             # OOM kill mid-chunk — hard exit, no artifact, no cleanup
             os._exit(137)
 
-    print(f"\n{len(names) - n_red}/{len(names)} green")
+    total_jobs = sum(r["jobs"] for r in report.values())
+    total_sec = round(sum(r["wall_sec"] for r in report.values()), 3)
+    print(f"\n{len(names) - n_red}/{len(names)} green; {total_jobs} jobs,"
+          f" {total_sec} s over the names")
     tag = os.path.basename(sf_dir.rstrip("/"))
     with open(f"/tmp/driver_sim_{tag}.json", "w") as f:
         json.dump(report, f, indent=1, default=str)
@@ -284,6 +307,8 @@ def main() -> int:
                 "n_queries": len(names),
                 "n_green": len(names) - n_red,
                 "warmup_sec": warmup_sec,
+                "total_jobs": total_jobs,
+                "total_wall_sec": total_sec,
                 "queries": report,
             },
             f,
